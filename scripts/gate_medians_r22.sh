@@ -15,7 +15,6 @@ for i in 1 2 3; do
   echo "== [gate r22 $(date +%T)] bench session $i/3 =="
   env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
       SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g \
-      SPARK_GRAFT_ROUND_WATCH=0 \
       SPARK_GRAFT_BENCH_OUT="scratch/gate_r22_s$i.json" \
       sbt -batch "runMain graft.Bench" \
       > "scratch/gate_r22_s$i.log" 2>&1 || {

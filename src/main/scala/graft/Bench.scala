@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Execute a declared query FULLY and return its row count — the one
-    * timed action both Bench and BenchOne use.
+    * timed action of Bench and of the benchmark harness.
     *
     * NOT `df.count()`: count() re-optimizes the plan under an
     * Aggregate[count(1)], and Catalyst then legitimately deletes every
@@ -116,9 +116,7 @@ object Bench {
       System.err.println(f"[bench] disk barrier released after ${(System.nanoTime() - t0) / 1e9}%.0f s (${tmp.getUsableSpace / 1e9}%.1f GB free)")
   }
 
-  /** Median of wall times — the one definition both Bench and BenchOne
-    * report, so the dev tool can't disagree with the published line.
-    */
+  /** Median of wall times — the statistic each Bench line reports. */
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2)
@@ -126,11 +124,11 @@ object Bench {
   }
 
   /** Total bytes of the sf dir's `*.parquet` tables — the one corpus
-    * probe both Bench and BenchOne size their session from. A table may
-    * be a parquet DIRECTORY of part files (standard Spark output
-    * layout): directories are summed recursively, because a dir's own
-    * entry length (~4 KB) would silently flip a large corpus into the
-    * tiny-session config (AQE off, 4 shuffle partitions).
+    * probe the session is sized from. A table may be a parquet DIRECTORY
+    * of part files (standard Spark output layout): directories are
+    * summed recursively, because a dir's own entry length (~4 KB) would
+    * silently flip a large corpus into the tiny-session config (AQE off,
+    * 4 shuffle partitions).
     */
   def corpusBytes(sfDir: String): Long = {
     def sz(f: java.io.File): Long =
@@ -170,12 +168,11 @@ object Bench {
     * sf30->sf100 trend step while DuckDB scaled linearly. The clamp
     * keeps every <=sf10 point at exactly the old 16 MB (committed
     * records stay comparable) and converges to the Spark default at
-    * scale. Env override: SPARK_GRAFT_MAX_PARTITION_BYTES.
+    * scale.
     */
   def sizedMaxPartitionBytes(sfDir: String, cpus: Int): Long =
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").map(_.toLong).getOrElse(
-      (corpusMaxFileBytes(sfDir) / (4L * cpus.max(1)))
-        .max(16L << 20).min(128L << 20))
+    (corpusMaxFileBytes(sfDir) / (4L * cpus.max(1)))
+      .max(16L << 20).min(128L << 20)
 
   /** Size the shuffle width to the corpus: `cpus` partitions up to a
     * ~64 MB-per-partition corpus, then grow with the data, capped at
@@ -198,6 +195,67 @@ object Bench {
     // `.toInt.max(c)` only masked it by evaluation order
     ((corpusBytes(sfDir) / (64L << 20)).min(8L * c).max(c.toLong)).toInt
   }
+
+  /** A corpus under 64 MB of parquet gets the tiny-session shape (see
+    * [[sessionConf]]). A missing dir reads as Long.MaxValue bytes, i.e.
+    * as a scale corpus: callers without parquet input must pass a dir
+    * that exists.
+    */
+  def tinyCorpus(sfDir: String): Boolean = corpusBytes(sfDir) < (64L << 20)
+
+  /** The conf of the one session every entry point runs on, sized to the
+    * corpus — same spirit as DuckDB choosing parallelism from table size:
+    *  - AQE pays a fixed per-stage replan round trip, worth it exactly
+    *    when there is data to re-plan over (runtime coalescing, skew
+    *    splitting). Below 64 MB the static plan is already right and the
+    *    latency is pure floor on sub-second queries → disabled.
+    *  - 32 shuffle partitions on a KB-scale shuffle is 32 tiny tasks of
+    *    pure scheduling; a tiny corpus gets 4 (still parallel for the
+    *    MB-scale shuffles it can produce). At/above 64 MB both revert to
+    *    the scale shape (AQE on, corpus-sized width, see
+    *    sizedShufflePartitions), measured unchanged at the committed
+    *    sf1/sf3/sf10 points.
+    */
+  private[graft] def sessionConf(sfDir: String, cpus: Int): Seq[(String, String)] = {
+    val tiny = tinyCorpus(sfDir)
+    Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" ->
+        (if (tiny) 4 else sizedShufflePartitions(sfDir, cpus)).toString,
+      "spark.sql.adaptive.enabled" -> (!tiny).toString,
+      // sf10-class runs saturate all cores for minutes; the default 120 s
+      // heartbeat window logged spurious RPC timeout warnings there
+      "spark.network.timeout" -> "600s",
+      // corpus-sized scan splits — rationale on sizedMaxPartitionBytes
+      "spark.sql.files.maxPartitionBytes" ->
+        sizedMaxPartitionBytes(sfDir, cpus).toString,
+      // declared time queries are zone-independent by construction
+      // (ops/Tables.scala normalizes ts to epoch-nanos), but the session
+      // states the precondition rather than assuming it
+      "spark.sql.session.timeZone" -> "UTC",
+      // precondition of graft.ops.Tables (asserted there, set here)
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      // Spark's default codec, pinned: zstd shuffles 1.35x fewer bytes on
+      // the declared row shapes, but local wall time is within noise and
+      // lz4 keeps the bench records comparable across rounds
+      "spark.io.compression.codec" -> "lz4",
+      "spark.ui.enabled" -> "false")
+  }
+
+  /** The one SparkSession builder: Bench, Verify, StreamBench and the
+    * test suites all run on it, so the plans verified are the plans timed.
+    */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val spark = sessionConf(sfDir, cpus)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Local[n] width of every main: SPARK_GRAFT_CPUS, default 4. */
+  private[graft] def envCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
   /** Baseline "queries" map, if the file exists for this sf. The file
     * defaults to BASELINE_local.json (sf0.1, the driver's round loop) and
@@ -233,61 +291,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Size the session to the corpus — same spirit as DuckDB choosing
-    // parallelism from table size:
-    //  - AQE pays a fixed per-stage replan round trip, worth it exactly
-    //    when there is data to re-plan over (runtime coalescing, skew
-    //    splitting). Below 64 MB the static plan is already right and the
-    //    latency is pure floor on sub-second queries → disabled.
-    //  - 32 shuffle partitions on a KB-scale shuffle is 32 tiny tasks of
-    //    pure scheduling; a tiny corpus gets 4 (still parallel for the
-    //    MB-scale shuffles it can produce). At/above 64 MB both revert to
-    //    the scale shape (AQE on, partitions = cores), measured unchanged
-    //    at the committed sf1/sf3/sf10 points.
-    val tiny = corpusBytes(sfDir) < (64L << 20)
-    // dev knob for floor experiments; default = the size-aware choice
-    // (tiny -> 4; scale -> corpus-sized width, see sizedShufflePartitions)
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      if (tiny) "4"
-      else String.valueOf(sizedShufflePartitions(sfDir, cpus.toInt)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.adaptive.enabled", String.valueOf(!tiny))
-      // sf10-class runs saturate all cores for minutes; the default 120 s
-      // heartbeat window logged spurious RPC timeout warnings there
-      .config("spark.network.timeout", "600s")
-      // corpus-sized scan splits (sizedMaxPartitionBytes): small points
-      // need sub-default splits for parallelism, huge single files need
-      // bigger splits or per-task footer decode dominates — rationale on
-      // the method.
-      .config("spark.sql.files.maxPartitionBytes",
-        String.valueOf(sizedMaxPartitionBytes(sfDir, cpus.toInt)))
-      // same pin as Verify: declared time queries are zone-independent by
-      // construction (ops/Tables.scala normalizes ts to epoch-nanos), but
-      // the harness states the precondition rather than assuming it
-      .config("spark.sql.session.timeZone", "UTC")
-      // precondition of graft.ops.Tables (asserted there, set here)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle codec, parameterised (guide §2.3 "measure both"): local
-      // default stays lz4 (Spark's default — keeps the driver's bench
-      // comparable across rounds; measured wall delta on local[32] is
-      // within box noise in both directions). zstd shuffles 1.35x fewer
-      // bytes on the declared row shapes (260.4 -> 192.5 MB on a 6M-row
-      // wide sort, scratch/codec_bytes.scala) — at real NIC-bound scale
-      // set SPARK_GRAFT_IO_CODEC=zstd so the exchange moves 26% less.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sfDir, envCpus)
     // warm up JVM/codegen so the alphabetically-first query doesn't absorb
     // several seconds of one-time startup in its reported time
     spark.range(1000).selectExpr("sum(id)").collect()
     // ...and the heavier machinery (parquet reader/writer init, janino
     // codegen of real plan shapes, persist paths) that the range-sum
-    // does not touch. Measured attribution (scratch/profidx_*.log, r22):
+    // does not touch. Measured attribution (r22):
     // sim3_index_build — the first timed line of every session — read
     // 3.8 s cold of which ~2.1 s was this one-time warmup; with the
     // machinery warmed it reads ~1.7 s (warm rebuilds ~0.8 s either
@@ -373,7 +383,7 @@ object Bench {
     // never spill GBs, and a GC-wait there would perturb floor timings).
     val minFreeBytes =
       (sys.env.get("SPARK_GRAFT_MIN_FREE_GB").map(_.toDouble)
-        .getOrElse(if (tiny) 0.0 else 24.0) * (1L << 30)).toLong
+        .getOrElse(if (tinyCorpus(sfDir)) 0.0 else 24.0) * (1L << 30)).toLong
     val startupFree = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp")).getUsableSpace
     val results = (SparkEntry.queries.toSeq.sortBy(_._1)
@@ -479,71 +489,6 @@ object Bench {
         System.err.println(s"[bench] could not write $outPath: $e")
     }
     spark.stop()
-    // Round-artifact hygiene, wired into the bench itself (not a separate
-    // step someone must remember): the driver's round order is verify →
-    // bench → judge, so by now this round's CORRECTNESS_r{N}.json exists
-    // untracked; roundend.sh commits it (plus LEAKCHECK and the full
-    // bench JSON as BENCH_full_r{N}.json) before the judge reads the
-    // tree. Best-effort — a missing script/git must never fail a bench,
-    // and a HUNG git (stale index.lock, credential prompt) must not wedge
-    // the driver either: output goes to a file (no unbounded pipe read)
-    // and the child is force-killed after 60 s.
-    try {
-      val script = new java.io.File("scripts/roundend.sh")
-      if (script.isFile) {
-        val logF = new java.io.File("scratch/roundend_last.log")
-        Option(logF.getParentFile).foreach(_.mkdirs())
-        val p = new ProcessBuilder("bash", script.getPath)
-          .redirectErrorStream(true)
-          .redirectOutput(logF)
-          .start()
-        val done = p.waitFor(60, java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) {
-          p.destroyForcibly()
-          System.err.println("[bench] roundend.sh timed out after 60s (killed)")
-        } else {
-          val out = new String(
-            java.nio.file.Files.readAllBytes(logF.toPath), "UTF-8")
-          System.err.println(s"[bench] roundend.sh: ${out.trim}")
-        }
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] roundend.sh failed (ignored): $e")
-    }
-    // The driver writes BENCH_r{N}.json + the LEAKCHECK round bump AFTER
-    // this process exits, so the synchronous roundend.sh above can never
-    // commit THEM (judge-flagged three rounds running). Spawn a detached
-    // watcher (setsid survives sbt's exit) that commits them the moment
-    // they appear — see scripts/artifactwatch.sh. Best-effort.
-    //
-    // Spawn ONLY for the driver's round corpus (sf0.1) — a dev run at a
-    // scratch scale point must not leave a 15-minute background
-    // auto-committer racing interactive work (git adds mid-edit). A dev
-    // run that WANTS the watcher can force it with
-    // SPARK_GRAFT_ROUND_WATCH=1.
-    val watchWanted = sys.env.get("SPARK_GRAFT_ROUND_WATCH") match {
-      case Some(v) => v == "1"
-      case None    => sfDir.contains("sf0.1")
-    }
-    try {
-      val watch = new java.io.File("scripts/artifactwatch.sh")
-      if (!watchWanted)
-        System.err.println("[bench] artifactwatch not spawned (dev corpus; " +
-          "SPARK_GRAFT_ROUND_WATCH=1 forces it)")
-      else if (watch.isFile) {
-        val logF = new java.io.File("scratch/artifactwatch.log")
-        Option(logF.getParentFile).foreach(_.mkdirs())
-        new ProcessBuilder("setsid", "bash", watch.getPath)
-          .redirectErrorStream(true)
-          .redirectOutput(java.lang.ProcessBuilder.Redirect.appendTo(logF))
-          .start() // deliberately not waited on
-        System.err.println("[bench] artifactwatch.sh spawned (detached)")
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] artifactwatch spawn failed (ignored): $e")
-    }
     // LAST stdout line, deliberately short: the driver's round capture
     // keeps only the TAIL of stdout, which on big query counts truncates
     // the full JSON line above from the FRONT — exactly where its

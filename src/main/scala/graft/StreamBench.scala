@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput record (dev tooling, like Bench): drive the
@@ -53,7 +52,7 @@ object StreamBench {
 
   /** The listener bus is async; wait until the tally stops moving (or a
     * bounded dwell) before reading it. Dev tooling, never a timed
-    * section — same rationale as TaskStats' drain sleep.
+    * section.
     */
   private def drain(t: ProgressTally): Unit = {
     var last = -1L
@@ -97,7 +96,7 @@ object StreamBench {
     val perTrigger = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "5000").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_STREAM_DIR",
       "scratch/streambench_src")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.envCpus
     sys.env.getOrElse("SPARK_GRAFT_STREAM_SOURCE", "files") match {
       case "memory"   => runMemory(nFiles, perTrigger, cpus); return
       case "manifest" => runManifest(nFiles, perTrigger, cpus, dir); return
@@ -106,13 +105,8 @@ object StreamBench {
 
     ensureCorpus(dir, nFiles)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the corpus holds no parquet, so the session takes the tiny shape
+    val spark = Bench.session(dir, cpus)
     import spark.implicits._
 
     val ckpt = java.nio.file.Files
@@ -179,7 +173,7 @@ object StreamBench {
     * events per microbatch), so files/s here is directly comparable to
     * the binaryFile record and the MemoryStream operator ceiling.
     */
-  private def runManifest(nFiles: Int, perTrigger: Int, cpus: String,
+  private def runManifest(nFiles: Int, perTrigger: Int, cpus: Int,
       dir: String): Unit = {
     ensureCorpus(dir, nFiles)
     // the side-channel: one directory listing, chunked into
@@ -202,13 +196,7 @@ object StreamBench {
     }
     val manifestSec = (System.nanoTime() - tM0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(mDir.getPath, cpus)
     import spark.implicits._
 
     val ckpt = java.nio.file.Files
@@ -272,14 +260,11 @@ object StreamBench {
     * Event times spread ~0.1 ms apart like the file corpus's write-loop
     * mtimes, so the watermark/state lifecycle matches the file run.
     */
-  private def runMemory(nFiles: Int, perTrigger: Int, cpus: String): Unit = {
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def runMemory(nFiles: Int, perTrigger: Int, cpus: Int): Unit = {
+    // no input dir: size the session from the fresh (empty) checkpoint dir
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-streambench-mem-ckpt").toString
+    val spark = Bench.session(ckpt, cpus)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -297,8 +282,6 @@ object StreamBench {
       graft.streaming.Sessionize.dedupedEvents(input.toDS(),
         withinSeconds = 60),
       groupSize = 5, gapSeconds = 12, setWatermark = false)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-streambench-mem-ckpt").toString
     val tally = new ProgressTally
     spark.streams.addListener(tally)
     val q = groups.writeStream

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,8 @@ object Verify {
     // iterating on one query at a big sf without a 20-minute full sweep.
     // The driver always passes exactly two args → full sweep.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // precondition of graft.ops.Tables (asserted there, set here)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times, so the plans checked are the plans timed
+    val spark = Bench.session(sfDir, Bench.envCpus)
     new java.io.File(outDir).mkdirs()
     // Dumps default to one part file: the driver's sf0.01 gate compares
     // rows positionally, so the file must carry the query's ORDER BY.

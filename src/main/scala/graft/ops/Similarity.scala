@@ -395,10 +395,7 @@ object Similarity {
   def kmeansIndex(embeddings: DataFrame, vecCol: String, idCol: String,
       k: Int, cacheKey: String, iters: Int = 3): DataFrame = {
     val files = embeddings.inputFiles
-    // FNV-1a over paths with a NUL separator folded after each one, so
-    // distinct listings like ["ab","c"] and ["a","bc"] cannot collide
-    val fp = files.sorted.foldLeft(0xcbf29ce484222325L)((h, f) =>
-      (f + '\u0000').foldLeft(h)((a, c) => (a ^ c) * 0x100000001b3L))
+    val fp = Tables.fnv1a(files.sorted)
     val key = s"$cacheKey|$vecCol|$idCol|$k|$iters|${files.length}|$fp"
     val cached = indexCache.synchronized { Option(indexCache.get(key)) }
     val (rows, schema) = cached.getOrElse {

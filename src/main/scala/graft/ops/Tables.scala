@@ -102,10 +102,10 @@ object Tables {
     // nanosecond timestamp and refuses the file (PARQUET_TYPE_ILLEGAL);
     // with nanosAsLong they arrive as raw bigint epoch-nanos and
     // normalize() maps that to the logical type. The flag is a
-    // PRECONDITION set once at session construction (Verify, Bench,
-    // BenchOne, TestSpark all do) — asserted here, never mutated: a
-    // conf.set inside this resolution path could flip mid-query under a
-    // concurrent reader of the same session.
+    // PRECONDITION set once at session construction (Bench.session
+    // does) — asserted here, never mutated: a conf.set inside this
+    // resolution path could flip mid-query under a concurrent reader of
+    // the same session.
     require(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
         == "true",
       "set spark.sql.legacy.parquet.nanosAsLong=true at session " +
@@ -396,26 +396,34 @@ object Tables {
     * fails loudly instead of returning a constant: a constant meant any
     * future non-local corpus would silently reuse stale buckets.
     */
-  private def sourceFingerprint(path: String): String = {
+  private[graft] def sourceFingerprint(path: String): String = {
     val rootF = new java.io.File(path)
     require(rootF.exists,
       s"bucketed-layout source $path does not exist locally — " +
         "non-local sources cannot be fingerprinted (and must not " +
         "silently reuse a stale layout)")
-    var n = 0L
-    var mt = 0L
-    var h = 0xcbf29ce484222325L // FNV-1a over "name:size " entries
+    val files = Seq.newBuilder[(String, java.io.File)]
     def walk(f: java.io.File, rel: String): Unit =
-      if (f.isFile) {
-        n += 1; mt = mt.max(f.lastModified)
-        h = s"$rel:${f.length} ".foldLeft(h)((a, c) =>
-          (a ^ c) * 0x100000001b3L)
-      } else Option(f.listFiles()).getOrElse(Array.empty)
+      if (f.isFile) files += rel -> f
+      else Option(f.listFiles()).getOrElse(Array.empty)
         .sortBy(_.getName)
         .foreach(c => walk(c, s"$rel/${c.getName}"))
     walk(rootF, "")
-    s"$n:$mt:${java.lang.Long.toHexString(h)}"
+    val fs = files.result()
+    val mt = fs.foldLeft(0L)((m, f) => m.max(f._2.lastModified))
+    val h = fnv1a(fs.map { case (rel, f) => s"$rel:${f.length}" })
+    s"${fs.size}:$mt:${java.lang.Long.toHexString(h)}"
   }
+
+  /** 64-bit FNV-1a over each string's UTF-16 units plus a NUL after each
+    * one, so distinct listings like ["ab","c"] and ["a","bc"] cannot
+    * collide. The one listing hash behind the bucketed-layout tag and the
+    * IVF index key (Similarity.kmeansIndex): both persist across runs, so
+    * its output must never change.
+    */
+  private[graft] def fnv1a(parts: Iterable[String]): Long =
+    parts.foldLeft(0xcbf29ce484222325L)((h, p) =>
+      (p + '\u0000').foldLeft(h)((a, c) => (a ^ c) * 0x100000001b3L))
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

@@ -455,7 +455,7 @@ object GeoQueries {
         |ORDER BY i, j""") { (s, d) =>
       // single-partition ranges: the default parallelism split 9 and 11
       // constants across 32 partitions each — ~100 near-empty tasks for
-      // 99 output rows (pure scheduling; r21 ProfQ). Constant-size
+      // 99 output rows (pure scheduling; r21 job/task counts). Constant-size
       // inputs, so one partition is the scale-correct shape too.
       s.range(0, 9, 1, 1).select(col("id").as("i"))
         .crossJoin(s.range(0, 11, 1, 1).select(col("id").as("j")))
@@ -614,8 +614,8 @@ object GeoQueries {
       // TypedImperativeAggregate it runs in ObjectHashAggregateExec,
       // whose sort-based fallback (128-key default) re-serializes every
       // priority-queue buffer through an external sort at 1.5M keys —
-      // measured 50-110 s at sf1 vs 1.4-3.8 s for this window shape
-      // (ProfX17). The merge itself (Hdr.mergeExploded) is a plain
+      // measured 50-110 s at sf1 vs 1.4-3.8 s for this window shape.
+      // The merge itself (Hdr.mergeExploded) is a plain
       // codegen'd sum/sum hash aggregate on (l_orderkey, channel), which
       // the window's hashpartitioning(l_orderkey) already satisfies —
       // the whole query is ONE exchange.

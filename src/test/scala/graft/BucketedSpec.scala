@@ -78,6 +78,28 @@ class BucketedSpec extends SparkSpec {
       s"re-registered table lost its bucket spec:\n${p.take(1000)}")
   }
 
+  test("listing fingerprints keep their on-disk values") {
+    // both key state that outlives the JVM or the run (the bucketed
+    // layout's dir tag, the memoized IVF index): any change to the hash
+    // orphans every existing layout, so the values are pinned literally
+    val root = new java.io.File(tmpDir(), "lineitem.parquet")
+    root.mkdirs()
+    Seq(("part-00000.parquet", 5, 1700000000000L),
+      ("part-00001.parquet", 12, 1700000001000L),
+      ("_SUCCESS", 0, 1700000002000L)).foreach { case (n, size, mtime) =>
+      val f = new java.io.File(root, n)
+      java.nio.file.Files.write(f.toPath, Array.fill[Byte](size)(7))
+      f.setLastModified(mtime)
+    }
+    assert(Tables.sourceFingerprint(root.getPath) ==
+      "3:1700000002000:c58dd7b235c3773d")
+    // kmeansIndex keys on fnv1a of its sorted input listing
+    assert(Tables.fnv1a(Seq(
+      "file:///data/embeddings.parquet/part-00001-c0.snappy.parquet",
+      "file:///data/embeddings.parquet/part-00000-c0.snappy.parquet",
+      "file:///data/\u00e9mb.parquet").sorted) == -8693908762533161902L)
+  }
+
   test("a regenerated source abandons the stale layout (fingerprint)") {
     import spark.implicits._
     val src = tmpDir()

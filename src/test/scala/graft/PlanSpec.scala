@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Sinks, Skew, Tables}
+import graft.ops.{Sinks, Tables}
 
 /** Physical-plan regression guards: the properties that make these
   * queries survive a 100x scale-up must stay in the plan, not just in
@@ -57,26 +57,6 @@ class PlanSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("l_orderkey"),
       s"cheap filter not pushed below projection:\n${p.take(800)}")
-  }
-
-  test("salted join and salted aggregation match their plain forms") {
-    import spark.implicits._
-    // skewed fact: 90% of rows share key 1
-    val fact = ((1 to 900).map(i => (1L, i.toLong)) ++
-      (1 to 100).map(i => ((i % 7 + 2).toLong, i.toLong)))
-      .toDF("k", "v")
-    val dim = Seq((1L, "hot"), (2L, "a"), (3L, "b"), (4L, "c"), (5L, "d"),
-      (6L, "e"), (7L, "f"), (8L, "g")).toDF("k", "name")
-    val plainJoin = fact.join(dim, "k").select("k", "v", "name")
-    val salted = Skew.saltedJoin(fact, dim, "k", "v", 8)
-      .select("k", "v", "name")
-    assert(salted.exceptAll(plainJoin).isEmpty &&
-      plainJoin.exceptAll(salted).isEmpty)
-
-    val plainAgg = fact.groupBy("k").agg(sum("v").as("sum_v"))
-    val saltedAgg = Skew.saltedSum(fact, "k", "v", "v", 8)
-    assert(saltedAgg.exceptAll(plainAgg).isEmpty &&
-      plainAgg.exceptAll(saltedAgg).isEmpty)
   }
 
   test("sim2: IVF assignment is map-side — no window, no exchange") {

@@ -3,20 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, reused lazily). */
+/** Shared local session for all suites (one JVM, reused lazily): the one
+  * Bench.session, sized from the fixtures dir, a tiny corpus.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // precondition of graft.ops.Tables (asserted there, set here)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
+    // static conf, so it goes in before the session exists: a fresh
+    // warehouse per JVM keeps PlanSpec's managed tables from colliding
+    // with a previous run's files
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-wh").toString
+    val s = Bench.session("src/test/resources/fixtures", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
