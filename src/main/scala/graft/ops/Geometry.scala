@@ -200,52 +200,53 @@ object Geometry {
   }
 
   /** Solve the 3x3 homography mapping 4 source points onto 4 destination
-    * points (image_cut_warp.py:28-31 / cv2.getPerspectiveTransform).
-    *
-    * Pure Scala (driver- or executor-side) Gaussian elimination on the
-    * standard 8x8 DLT system; used by the homography UDF and tests. Row-major
-    * 9-vector result with h22 = 1.
+    * points (image_cut_warp.py:28-31 / cv2.getPerspectiveTransform):
+    * the standard 8x8 DLT system through `solveLinear`. Row-major 9-vector
+    * result with h22 = 1; a degenerate point configuration throws
+    * IllegalArgumentException.
     */
   def solveHomography(src: Seq[(Double, Double)], dst: Seq[(Double, Double)])
       : Array[Double] = {
     require(src.length == 4 && dst.length == 4)
     // A x = b, x = [h00..h21], h22 = 1
-    val a = Array.ofDim[Double](8, 9) // augmented
+    val a = new Array[Array[Double]](8)
+    val b = new Array[Double](8)
     for (i <- 0 until 4) {
       val (sx, sy) = src(i); val (dx, dy) = dst(i)
-      a(2 * i) = Array(sx, sy, 1, 0, 0, 0, -sx * dx, -sy * dx, dx)
-      a(2 * i + 1) = Array(0, 0, 0, sx, sy, 1, -sx * dy, -sy * dy, dy)
+      a(2 * i) = Array(sx, sy, 1, 0, 0, 0, -sx * dx, -sy * dx)
+      a(2 * i + 1) = Array(0, 0, 0, sx, sy, 1, -sx * dy, -sy * dy)
+      b(2 * i) = dx; b(2 * i + 1) = dy
     }
-    // partial-pivot gaussian elimination
-    for (col <- 0 until 8) {
-      val piv = (col until 8).maxBy(r => math.abs(a(r)(col)))
-      val tmp = a(col); a(col) = a(piv); a(piv) = tmp
-      require(math.abs(a(col)(col)) > 1e-12, "degenerate point configuration")
-      for (r <- col + 1 until 8) {
-        val f = a(r)(col) / a(col)(col)
-        for (c <- col until 9) a(r)(c) -= f * a(col)(c)
-      }
-    }
-    val x = new Array[Double](8)
-    for (r <- 7 to 0 by -1) {
-      var s = a(r)(8)
-      for (c <- r + 1 until 8) s -= a(r)(c) * x(c)
-      x(r) = s / a(r)(r)
-    }
-    x :+ 1.0
+    solveLinear(a, b) :+ 1.0
   }
 
-  /** solveHomography as a Spark UDF: (src array<array<double>> 4x2,
-    * dst 4x2) -> array<double> 9, so the solve is reachable from the engine
-    * (SQL surface / DataFrame) and not only from driver-side Scala. UDF
-    * rather than codegen Expression: it runs once per image group (3,108 in
-    * the reference), never per pixel — not a hot path.
+  /** Solve the square system A x = b by Gaussian elimination with partial
+    * pivoting — the one small dense solver (driver- or executor-side):
+    * the 8x8 homography, the 6-parameter extrinsic LM step and the
+    * intrinsic bundle's 9 + 6/view step. Throws IllegalArgumentException
+    * when a pivot's magnitude is <= 1e-12; Corners' grid assembly skips
+    * degenerate candidate quads by catching it.
     */
-  def solveHomographyUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (src: Seq[Seq[Double]], dst: Seq[Seq[Double]]) =>
-      solveHomography(
-        src.map(p => (p(0), p(1))), dst.map(p => (p(0), p(1)))).toSeq
+  def solveLinear(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+    val n = b.length
+    val m = Array.tabulate(n)(i => a(i) :+ b(i))
+    for (c0 <- 0 until n) {
+      val piv = (c0 until n).maxBy(r => math.abs(m(r)(c0)))
+      val tmp = m(c0); m(c0) = m(piv); m(piv) = tmp
+      require(math.abs(m(c0)(c0)) > 1e-12, "singular linear system")
+      for (r <- c0 + 1 until n) {
+        val f = m(r)(c0) / m(c0)(c0)
+        for (c <- c0 until n + 1) m(r)(c) -= f * m(c0)(c)
+      }
     }
+    val x = new Array[Double](n)
+    for (r <- n - 1 to 0 by -1) {
+      var s = m(r)(n)
+      for (c <- r + 1 until n) s -= m(r)(c) * x(c)
+      x(r) = s / m(r)(r)
+    }
+    x
+  }
 
   /** Elementwise luminance scale x0.9 on an array column
     * (lumiadjust.py:14: pcomb -s 0.9; the pure-Spark semantic form S10/X15).

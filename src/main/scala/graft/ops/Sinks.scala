@@ -21,16 +21,16 @@ object Sinks {
   def loadTable(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** S6: matrix sink — the npz equivalent (camera_calib.py:124-128,
+  /** S6: matrix table — the npz equivalent (camera_calib.py:124-128,
     * extrinsic_calibration.py:381-387): named row-major matrices as a
-    * 1-row table of array columns.
+    * 1-row table of array columns, persisted by saveTable or a Runner stage.
     */
-  def matrixSink(spark: SparkSession, dir: String, name: String,
-      matrices: Map[String, Seq[Double]]): Unit = {
+  def matrixTable(spark: SparkSession, matrices: Map[String, Seq[Double]])
+      : DataFrame = {
     val cols = matrices.toSeq.sortBy(_._1).map { case (n, m) =>
       array(m.map(lit): _*).as(n)
     }
-    saveTable(spark.range(1).select(cols: _*), dir, name)
+    spark.range(1).select(cols: _*)
   }
 
   /** S11: rename-key projection sink (file_rename_sort.py:7-18): the

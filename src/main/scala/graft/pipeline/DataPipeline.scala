@@ -9,12 +9,14 @@ import graft.ops.Sinks
   * as memoized Runner stages — each guard (`if pixel_coords is None`)
   * becomes a materialized-table existence check:
   *
+  *   camera_matrix   <- Zhang intrinsics (Intrinsic.calibrate), the first
+  *                      stage when chessboard views are given (S6)
   *   warp_matrices   <- per-pose homography (act_img.py:254-324)
   *   world_corners   <- pose grid + rigid transform (point3d_transformation)
   *   matched_corners <- positional join of detections onto the compacted
   *                      pose sequence (J4)
   *   extrinsic       <- PnP init + LM refine + reprojection stats,
-  *                      persisted as a matrix sink (S6)
+  *                      persisted as a matrix table (S6)
   */
 object DataPipeline {
 
@@ -29,14 +31,12 @@ object DataPipeline {
   def run(spark: SparkSession, pixelCorners: DataFrame,
       calibCorners: DataFrame, stateDir: String, maxIter: Int)
       : Map[String, DataFrame] = {
-    val runner = new Runner(spark, stateDir)
-    if (!runner.isMaterialized("camera_matrix")) {
+    val cam = new Runner(spark, stateDir).stage("camera_matrix") {
       val res = Intrinsic.calibrate(calibCorners)
-      Sinks.matrixSink(spark, stateDir, "camera_matrix", Map(
+      Sinks.matrixTable(spark, Map(
         "k" -> res.k, "dist" -> res.dist,
         "mean_error" -> Seq(res.meanReprojError)))
     }
-    val cam = Sinks.loadTable(spark, stateDir, "camera_matrix")
     val row = cam.collect()(0)
     def arr(n: String) = row.getAs[scala.collection.Seq[Double]](n).toSeq
     run(spark, pixelCorners, stateDir, arr("k"), arr("dist"), maxIter) +
@@ -71,16 +71,16 @@ object DataPipeline {
           col("wx").as("x"), col("wy").as("y"), col("wz").as("z"))
     }
 
-    if (!runner.isMaterialized("extrinsic")) {
+    val extrinsic = runner.stage("extrinsic") {
       // cached for the optimizer's repeated passes (each LM iteration
-      // aggregates over it), released once the stats are materialized
+      // aggregates over it), released once the stats are computed
       matched.cache()
       try {
         val init = Extrinsic.initPnp(matched, k)
         val (p, _) = Extrinsic.refine(matched, k, dist, init, maxIter)
         val t = Extrinsic.paramsToT(p)
         val stats = Extrinsic.reprojectionStats(matched, k, dist, t)
-        Sinks.matrixSink(spark, stateDir, "extrinsic", Map(
+        Sinks.matrixTable(spark, Map(
           "extrinsic" -> t,
           "rvec" -> p.take(3), "tvec" -> p.drop(3),
           "stats" -> Seq(stats("mean_error"), stats("std_error"),
@@ -88,7 +88,6 @@ object DataPipeline {
             stats("rmse"))))
       } finally matched.unpersist(false)
     }
-    val extrinsic = Sinks.loadTable(spark, stateDir, "extrinsic")
 
     Map("warp_matrices" -> warp, "world_corners" -> world,
       "matched_corners" -> matched, "extrinsic" -> extrinsic)

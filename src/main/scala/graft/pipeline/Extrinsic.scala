@@ -123,37 +123,17 @@ object Extrinsic {
       0.0, 0.0, 0.0, 1.0)
   }
 
-  /** Solve the symmetric 6x6 system A x = b (partial-pivot elimination). */
-  private def solve6(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
-    val n = 6
-    val m = Array.tabulate(n)(i => a(i) :+ b(i))
-    for (c0 <- 0 until n) {
-      val piv = (c0 until n).maxBy(r => math.abs(m(r)(c0)))
-      val tmp = m(c0); m(c0) = m(piv); m(piv) = tmp
-      require(math.abs(m(c0)(c0)) > 1e-15, "singular normal equations")
-      for (r <- c0 + 1 until n) {
-        val f = m(r)(c0) / m(c0)(c0)
-        for (c <- c0 until n + 1) m(r)(c) -= f * m(c0)(c)
-      }
-    }
-    val x = new Array[Double](n)
-    for (r <- n - 1 to 0 by -1) {
-      var s = m(r)(n)
-      for (c <- r + 1 until n) s -= m(r)(c) * x(c)
-      x(r) = s / m(r)(r)
-    }
-    x
-  }
-
-  /** Stage C: Levenberg-Marquardt over [rvec,tvec]. Each iteration
-    * projects the base + 6 finite-difference residual expressions to 14
+  /** Stage C: Levenberg-Marquardt (Lm.minimize) over [rvec,tvec]. Each
+    * iteration's normal equations come from one job that projects the
+    * base + 6 finite-difference residual expressions to 14
     * named columns (whole-stage codegen evaluates each residual tree
     * once per row) and folds them through ONE `normal_eq_agg` — a single
     * TypedImperativeAggregate whose 28-double buffer (cost, J^T J upper
     * triangle, J^T r) partial-aggregates map-side, so one iteration
     * shuffles #partitions x 28 doubles and exactly 28 doubles cross the
     * driver boundary (SURVEY §4's 100-TB accumulator form; previously 28
-    * separate sum() columns).
+    * separate sum() columns); each damping attempt is one sum() job.
+    * Returns the parameters and the sum of squared residuals at them.
     */
   def refine(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
       init: Seq[Double], maxIter: Int = 50, eps: Double = 1e-6)
@@ -167,57 +147,38 @@ object Extrinsic {
       (u - col("u"), v - col("v"))
     }
 
-    var p = init.toArray
-    var lambda = 1e-3
-    var cost = Double.MaxValue
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val (r0u, r0v) = residualCols(p.toSeq)
-      val diffs = (0 until 6).map { i =>
-        val pi = p.clone(); pi(i) += eps
-        val (ru, rv) = residualCols(pi.toSeq)
-        ((ru - r0u) / eps, (rv - r0v) / eps)
-      }
-      val named = corners.select(
-        Seq(r0u.as("_ru"), r0v.as("_rv")) ++
-          diffs.zipWithIndex.flatMap { case ((ju, jv), i) =>
-            Seq(ju.as(s"_j${i}u"), jv.as(s"_j${i}v"))
-          }: _*)
-      val args = (Seq("_ru", "_rv") ++
-        (0 until 6).flatMap(i => Seq(s"_j${i}u", s"_j${i}v"))).mkString(", ")
-      val row = named.agg(expr(s"normal_eq_agg($args)").as("ne")).collect()(0)
-      val ne = row.getSeq[Double](0)
-      val c0 = ne(0)
-      val jtj = Array.ofDim[Double](6, 6)
-      var idx = 1
-      for (i <- 0 until 6; j <- i until 6) {
-        jtj(i)(j) = ne(idx); jtj(j)(i) = jtj(i)(j); idx += 1
-      }
-      val jtr = Array.tabulate(6)(i => ne(idx + i))
-
-      // LM: (JtJ + lambda diag(JtJ)) step = -Jtr; accept if cost drops
-      var accepted = false
-      var tries = 0
-      while (!accepted && tries < 8) {
-        val damped = Array.tabulate(6, 6)((i, j) =>
-          jtj(i)(j) + (if (i == j) lambda * jtj(i)(i) else 0.0))
-        val step = solve6(damped, jtr.map(-_))
-        val cand = p.zip(step).map { case (a, b) => a + b }
-        val (cu, cv) = residualCols(cand.toSeq)
-        val cCand = corners.agg(sum(cu * cu + cv * cv)).collect()(0).getDouble(0)
-        if (cCand < c0) {
-          if (math.abs(c0 - cCand) < 1e-9 * c0) converged = true
-          p = cand; cost = cCand; lambda = (lambda / 3).max(1e-12)
-          accepted = true
-        } else {
-          lambda *= 10; tries += 1
+    // the job-running lambdas stay anonymous functions of refine, so their
+    // jobs' call sites read `Extrinsic$.$anonfun$refine$N` (per-layer
+    // attribution files a job under its innermost graft frame)
+    val (best, cost) = Lm.minimize(init.toArray, maxIter)(
+      p => {
+        val (r0u, r0v) = residualCols(p.toSeq)
+        val diffs = (0 until 6).map { i =>
+          val pi = p.clone(); pi(i) += eps
+          val (ru, rv) = residualCols(pi.toSeq)
+          ((ru - r0u) / eps, (rv - r0v) / eps)
         }
-      }
-      if (!accepted) converged = true
-      iter += 1
-    }
-    (p.toSeq, cost)
+        val named = corners.select(
+          Seq(r0u.as("_ru"), r0v.as("_rv")) ++
+            diffs.zipWithIndex.flatMap { case ((ju, jv), i) =>
+              Seq(ju.as(s"_j${i}u"), jv.as(s"_j${i}v"))
+            }: _*)
+        val args = (Seq("_ru", "_rv") ++
+          (0 until 6).flatMap(i => Seq(s"_j${i}u", s"_j${i}v"))).mkString(", ")
+        val ne = named.agg(expr(s"normal_eq_agg($args)").as("ne")).collect()(0)
+          .getSeq[Double](0)
+        val jtj = Array.ofDim[Double](6, 6)
+        var idx = 1
+        for (i <- 0 until 6; j <- i until 6) {
+          jtj(i)(j) = ne(idx); jtj(j)(i) = jtj(i)(j); idx += 1
+        }
+        (jtj, Array.tabulate(6)(i => ne(idx + i)), ne(0))
+      },
+      p => {
+        val (u, v) = residualCols(p.toSeq)
+        corners.agg(sum(u * u + v * v)).collect()(0).getDouble(0)
+      })
+    (best.toSeq, cost)
   }
 
   /** Stage B: per-pose planar PnP (the 4 sample corners are coplanar —
@@ -259,24 +220,12 @@ object Extrinsic {
       val plane2d = w.map(p => (dot3(sub(p, o), e1), dot3(sub(p, o), e2)))
       // homography plane2d -> normalized image
       val h = Geometry.solveHomography(plane2d, px)
-      val h1 = Array(h(0), h(3), h(6)); val h2 = Array(h(1), h(4), h(7))
-      val h3 = Array(h(2), h(5), h(8))
-      val lam = 2.0 / (math.sqrt(dot3(h1, h1)) + math.sqrt(dot3(h2, h2)))
-      var r1 = h1.map(_ * lam); var r2h = h2.map(_ * lam)
-      var tp = h3.map(_ * lam)
-      if (tp(2) < 0) { r1 = r1.map(-_); r2h = r2h.map(-_); tp = tp.map(-_) }
-      // Gram-Schmidt to SO(3)
-      r1 = norm(r1)
-      val r2o = sub(r2h, r1.map(_ * dot3(r1, r2h)))
-      val r2n = norm(r2o)
-      val r3 = cross(r1, r2n)
+      // pose of the plane in the camera; px is already K^-1-normalized
+      val (rcp, tp) = Intrinsic.poseFromH(h, 1.0, 1.0, 0.0, 0.0)
       // R_cam_plane * Q^T where Q = [e1 e2 n] (plane->BASE)
-      val rcp = Array(
-        Array(r1(0), r2n(0), r3(0)),
-        Array(r1(1), r2n(1), r3(1)),
-        Array(r1(2), r2n(2), r3(2)))
       val q = Array(e1, e2, n) // rows = plane axes in BASE => Q^T rows
-      val r = Array.tabulate(3, 3)((i, j) => dot3(rcp(i), Array(q(0)(j), q(1)(j), q(2)(j))))
+      val r = Array.tabulate(3, 3)((i, j) =>
+        dot3(rcp.slice(3 * i, 3 * i + 3), Array(q(0)(j), q(1)(j), q(2)(j))))
       val rflat = r.flatten
       val t = Array.tabulate(3)(i => tp(i) - dot3(r(i), o))
       val rvec = rodriguesInv(rflat.toSeq)

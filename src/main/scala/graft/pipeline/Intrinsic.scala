@@ -101,31 +101,6 @@ object Intrinsic {
     Array.tabulate(n)(k => v(k)(minIdx))
   }
 
-  /** Solve the symmetric positive-definite-ish system A x = b by Gaussian
-    * elimination with partial pivoting (generalizes Extrinsic's 6x6 solve
-    * to the bundle's 9 + 6V parameters).
-    */
-  private[graft] def solveN(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
-    val n = b.length
-    val m = Array.tabulate(n)(i => a(i) :+ b(i))
-    for (c0 <- 0 until n) {
-      val piv = (c0 until n).maxBy(r => math.abs(m(r)(c0)))
-      val tmp = m(c0); m(c0) = m(piv); m(piv) = tmp
-      require(math.abs(m(c0)(c0)) > 1e-300, "singular normal equations")
-      for (r <- c0 + 1 until n) {
-        val f = m(r)(c0) / m(c0)(c0)
-        for (c <- c0 until n + 1) m(r)(c) -= f * m(c0)(c)
-      }
-    }
-    val x = new Array[Double](n)
-    for (r <- n - 1 to 0 by -1) {
-      var s = m(r)(n)
-      for (c <- r + 1 until n) s -= m(r)(c) * x(c)
-      x(r) = s / m(r)(r)
-    }
-    x
-  }
-
   // ------------------------------------------------------------------
   // 1. per-view DLT homography (distributed)
   // ------------------------------------------------------------------
@@ -232,11 +207,14 @@ object Intrinsic {
     (alpha, beta, u0, v0)
   }
 
-  /** Per-view [R|t] init from its homography and K: r1 = l K^-1 h1,
-    * r2 = l K^-1 h2, r3 = r1 x r2, t = l K^-1 h3; Gram-Schmidt back to
-    * SO(3); sign chosen so the board sits in front of the camera (tz > 0).
+  /** Pose of a plane from its plane->image homography and K, the one
+    * homography -> [R|t] step: r1 = l K^-1 h1, r2 = l K^-1 h2,
+    * t = l K^-1 h3 with l = 2 / (|K^-1 h1| + |K^-1 h2|); sign chosen so
+    * the plane sits in front of the camera (tz > 0); Gram-Schmidt back to
+    * SO(3), r3 = r1 x r2. Returns (R row-major 9, t). Extrinsic.initPnp
+    * passes K = I for a homography onto normalized image coordinates.
     */
-  def extrinsicFromH(h: Array[Double], fx: Double, fy: Double,
+  def poseFromH(h: Array[Double], fx: Double, fy: Double,
       cx: Double, cy: Double): (Array[Double], Array[Double]) = {
     def kinv(x: Double, y: Double, w: Double) =
       Array((x - cx * w) / fx, (y - cy * w) / fy, w)
@@ -255,7 +233,13 @@ object Intrinsic {
       r1(1) * r2(2) - r1(2) * r2(1),
       r1(2) * r2(0) - r1(0) * r2(2),
       r1(0) * r2(1) - r1(1) * r2(0))
-    val r = Array(r1(0), r2(0), r3(0), r1(1), r2(1), r3(1), r1(2), r2(2), r3(2))
+    (Array(r1(0), r2(0), r3(0), r1(1), r2(1), r3(1), r1(2), r2(2), r3(2)), t)
+  }
+
+  /** Per-view [rvec, tvec] init from its homography and K (poseFromH). */
+  def extrinsicFromH(h: Array[Double], fx: Double, fy: Double,
+      cx: Double, cy: Double): (Array[Double], Array[Double]) = {
+    val (r, t) = poseFromH(h, fx, fy, cx, cy)
     (Extrinsic.rodriguesInv(r.toSeq), t)
   }
 
@@ -283,11 +267,11 @@ object Intrinsic {
     (fx * xd + cx, fy * yd + cy)
   }
 
-  /** LM over the bundle [fx,fy,cx,cy,k1,k2,p1,p2,k6] ++ 6/view.
-    * `viewPts(v)` = that view's (X, Y, u, v) corners. Pure-Scala numeric
-    * Jacobian (central differences) — at #views x #corners points this is
-    * microseconds per iteration, the same boundary the reference crosses
-    * when it hands its point lists to cv2.calibrateCamera.
+  /** LM (Lm.minimize) over the bundle [fx,fy,cx,cy,k1,k2,p1,p2,k6] ++
+    * 6/view. `viewPts(v)` = that view's (X, Y, u, v) corners. Pure-Scala
+    * numeric Jacobian (central differences) — at #views x #corners points
+    * this is microseconds per iteration, the same boundary the reference
+    * crosses when it hands its point lists to cv2.calibrateCamera.
     */
   def refineBundle(viewPts: IndexedSeq[Seq[(Double, Double, Double, Double)]],
       init: Array[Double], maxIter: Int = 80): Array[Double] = {
@@ -313,15 +297,11 @@ object Intrinsic {
       }
       out.result()
     }
+    def sumSq(r: Array[Double]) = r.map(x => x * x).sum
 
-    var p = init.clone()
-    var r = residuals(p)
-    var cost = r.map(x => x * x).sum
-    var lambda = 1e-3
-    var iter = 0
-    var converged = false
-    val nRes = r.length
-    while (iter < maxIter && !converged) {
+    def normalEq(p: Array[Double]) = {
+      val r = residuals(p)
+      val nRes = r.length
       // central-difference Jacobian, step scaled per parameter
       val jac = Array.ofDim[Double](nRes, nParams)
       for (j <- 0 until nParams) {
@@ -347,27 +327,10 @@ object Intrinsic {
         i += 1
       }
       for (a <- 0 until nParams; b <- 0 until a) jtj(a)(b) = jtj(b)(a)
-
-      var accepted = false
-      var tries = 0
-      while (!accepted && tries < 10) {
-        val damped = Array.tabulate(nParams, nParams)((a, b) =>
-          jtj(a)(b) + (if (a == b) lambda * math.max(jtj(a)(a), 1e-12) else 0.0))
-        val step = solveN(damped, jtr.map(-_))
-        val cand = Array.tabulate(nParams)(a => p(a) + step(a))
-        val rc = residuals(cand)
-        val cc = rc.map(x => x * x).sum
-        if (cc < cost) {
-          if (cost - cc < 1e-12 * math.max(cost, 1e-12)) converged = true
-          p = cand; r = rc; cost = cc
-          lambda = math.max(lambda / 3, 1e-12)
-          accepted = true
-        } else { lambda *= 10; tries += 1 }
-      }
-      if (!accepted) converged = true
-      iter += 1
+      (jtj, jtr, sumSq(r))
     }
-    p
+
+    Lm.minimize(init, maxIter)(normalEq, p => sumSq(residuals(p)))._1
   }
 
   // ------------------------------------------------------------------

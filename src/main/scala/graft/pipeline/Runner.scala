@@ -38,6 +38,4 @@ final class Runner(spark: SparkSession, stateDir: String) {
     val f = new java.io.File(outPath(name))
     if (f.exists) rm(f)
   }
-
-  def isMaterialized(name: String): Boolean = exists(name)
 }

@@ -425,7 +425,8 @@ object GeoQueries {
 
     // X12 (apply direction): constant homography applied to a 2D point
     // (image_cut_warp.py:33-36 / cv2.warpPerspective math). The solve
-    // direction is Geometry.solveHomography (+UDF), pinned by unit tests.
+    // direction is Geometry.solveHomography (SQL: solve_homography), pinned
+    // by unit tests.
     QueryDef("x12_homography_apply",
       """WITH p AS (
         |  SELECT l_orderkey, l_linenumber, l_quantity * 16.0 AS u,

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import graft.ops.Geometry
 import graft.pipeline.Extrinsic
 
 /** Golden tests for the extrinsic composite (SURVEY.md §5.2): the shipped
@@ -85,5 +92,60 @@ class ExtrinsicSpec extends SparkSpec {
       c, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
     assert(rmse <= cam.getAs[Double]("stat_rmse") + 1e-3,
       s"end-to-end rmse $rmse")
+  }
+
+  test("refine at maxIter = 0 returns init and its sum of squared residuals") {
+    val c = corners.cache()
+    val init = Extrinsic.initPnp(c, arr("k"))
+    val (p, cost) = Extrinsic.refine(c, arr("k"), arr("dist"), init, maxIter = 0)
+    assert(p == init)
+    val (x, y, z) = Geometry.rigidTransform(Extrinsic.paramsToT(init),
+      col("x"), col("y"), col("z"))
+    val (u, v) = Geometry.projectPointCv(x, y, z, arr("k"), arr("dist"))
+    val du = u - col("u"); val dv = v - col("v")
+    val want = c.agg(sum(du * du + dv * dv)).collect()(0).getDouble(0)
+    assert(math.abs(cost - want) < 1e-9 * want, s"cost $cost vs $want")
+  }
+
+  test("every Spark job of refine has an Extrinsic refine frame as call site") {
+    // per-layer attribution files a job under the innermost graft frame of
+    // its call site; the LM loop it runs through must not take them over
+    val c = corners.cache()
+    val init = Extrinsic.initPnp(c, arr("k"))
+    val sites = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tag = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse("")
+        val frame = e.stageInfos.headOption.toSeq
+          .flatMap(_.details.split("\n").map(_.trim))
+          .find(_.startsWith("graft.")).getOrElse("")
+        sites.add((tag, frame))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.phase", "refine")
+      Extrinsic.refine(c, arr("k"), arr("dist"), init, maxIter = 2)
+      // the listener bus is asynchronous but ordered: once this job's
+      // start has arrived, every refine job's start has too
+      sc.setLocalProperty("graft.test.phase", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!sites.asScala.exists(_._1 == "sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.setLocalProperty("graft.test.phase", null)
+      sc.removeSparkListener(listener)
+    }
+    val all = sites.asScala.toSeq
+    assert(all.exists(_._1 == "sentinel"), "listener never saw the sentinel job")
+    val refine = all.filter(_._1 == "refine").map(_._2)
+    assert(refine.nonEmpty)
+    refine.foreach { f =>
+      assert(f.startsWith("graft.pipeline.Extrinsic") && f.contains("refine"),
+        s"refine job attributed to $f")
+    }
   }
 }

@@ -4,11 +4,13 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expr.WinnowFp
-import graft.pipeline.Intrinsic
+import graft.ops.Geometry
+import graft.pipeline.{Extrinsic, Intrinsic}
 
-/** ScalaCheck properties for the round-5 pure-Scala kernels: the rolling
+/** ScalaCheck properties for the pure-Scala kernels: the rolling
   * winnowing fingerprint and the small linear-algebra pieces behind the
-  * Zhang calibration composite.
+  * calibration composites (Geometry.solveLinear, Intrinsic.poseFromH and
+  * the Zhang DLT/eigen kernels).
   */
 object WinnowProps extends Properties("winnow") {
 
@@ -76,18 +78,78 @@ object IntrinsicProps extends Properties("intrinsic-linalg") {
       math.abs(norm - 1.0) < 1e-9 && rq <= best + 1e-9
     }
 
-  property("solveN solves random well-conditioned systems") = {
-    val gen = for {
-      diag <- Gen.listOfN(6, Gen.choose(5.0, 20.0))
-      off <- Gen.listOfN(36, Gen.choose(-1.0, 1.0))
-      x <- Gen.listOfN(6, Gen.choose(-100.0, 100.0))
-    } yield (diag, off, x)
-    Prop.forAll(gen) { case (diag, off, x) =>
-      val a = Array.tabulate(6, 6)((i, j) =>
-        (if (i == j) diag(i) else 0.0) + (off(i * 6 + j) + off(j * 6 + i)) / 2)
+  /** Diagonally dominant n x n system with a known solution: n is the
+    * extrinsic LM step (6), the 4-point homography (8) or a 1-view
+    * intrinsic bundle step (15).
+    */
+  private val system = for {
+    n <- Gen.oneOf(6, 8, 15)
+    diag <- Gen.listOfN(n, Gen.choose(5.0 * n, 20.0 * n))
+    off <- Gen.listOfN(n * n, Gen.choose(-1.0, 1.0))
+    x <- Gen.listOfN(n, Gen.choose(-100.0, 100.0))
+  } yield {
+    val a = Array.tabulate(n, n)((i, j) =>
+      (if (i == j) diag(i) else 0.0) + (off(i * n + j) + off(j * n + i)) / 2)
+    (a, x.toArray)
+  }
+
+  property("solveLinear solves random well-conditioned systems") =
+    Prop.forAll(system) { case (a, x) =>
       val b = a.map(row => row.zip(x).map(p => p._1 * p._2).sum)
-      val got = Intrinsic.solveN(a, b)
+      val got = Geometry.solveLinear(a, b)
       got.zip(x).forall { case (g, want) => math.abs(g - want) < 1e-6 }
+    }
+
+  property("solveLinear rejects singular systems") = {
+    def rejects(a: Array[Array[Double]]) =
+      try { Geometry.solveLinear(a, Array.fill(a.length)(1.0)); false }
+      catch { case _: IllegalArgumentException => true }
+    // a repeated row eliminates to an exactly zero pivot
+    val repeated = Prop.forAll(system, Gen.choose(0, 1000), Gen.choose(1, 1000)) {
+      case ((a, _), i0, d) =>
+        val n = a.length
+        val (i, j) = (i0 % n, (i0 + d % (n - 1) + 1) % n)
+        rejects(Array.tabulate(n)(r => a(if (r == j) i else r).clone()))
+    }
+    // the pivot threshold is |pivot| <= 1e-12
+    val threshold = Prop(
+      rejects(Array(Array(1.0, 0.0), Array(0.0, 1e-12))) &&
+        !rejects(Array(Array(1.0, 0.0), Array(0.0, 2e-12))))
+    repeated && threshold
+  }
+
+  property("poseFromH returns a proper rotation with the plane in front") = {
+    val gen = for {
+      rv <- Gen.listOfN(3, Gen.choose(-1.2, 1.2))
+      tx <- Gen.choose(-500.0, 500.0); ty <- Gen.choose(-500.0, 500.0)
+      tz <- Gen.choose(200.0, 5000.0)
+      fx <- Gen.choose(300.0, 6000.0); fy <- Gen.choose(300.0, 6000.0)
+      cx <- Gen.choose(0.0, 3000.0); cy <- Gen.choose(0.0, 2000.0)
+      // H is only known up to scale, sign included
+      s <- Gen.oneOf(Gen.choose(-3.0, -0.01), Gen.choose(0.01, 3.0))
+    } yield (rv, Array(tx, ty, tz), (fx, fy, cx, cy), s)
+    Prop.forAll(gen) { case (rv, t, (fx, fy, cx, cy), s) =>
+      val r = Extrinsic.rodriguesScalar(rv)
+      // H = s K [r1 r2 t], row-major
+      def kCol(x: Double, y: Double, z: Double) =
+        Array(s * (fx * x + cx * z), s * (fy * y + cy * z), s * z)
+      val cols = Seq(kCol(r(0), r(3), r(6)), kCol(r(1), r(4), r(7)),
+        kCol(t(0), t(1), t(2)))
+      val h = Array.tabulate(9)(k => cols(k % 3)(k / 3))
+      val (got, gotT) = Intrinsic.poseFromH(h, fx, fy, cx, cy)
+      val rtr = Array.tabulate(3, 3)((i, j) =>
+        (0 until 3).map(k => got(3 * k + i) * got(3 * k + j)).sum)
+      val orthonormal = (0 until 3).forall(i => (0 until 3).forall(j =>
+        math.abs(rtr(i)(j) - (if (i == j) 1.0 else 0.0)) < 1e-12))
+      val det =
+        got(0) * (got(4) * got(8) - got(5) * got(7)) -
+          got(1) * (got(3) * got(8) - got(5) * got(6)) +
+          got(2) * (got(3) * got(7) - got(4) * got(6))
+      val tNorm = math.sqrt(t.map(x => x * x).sum)
+      // exact H: the true pose comes back too
+      orthonormal && math.abs(det - 1.0) < 1e-12 && gotT(2) > 0 &&
+        got.zip(r).forall { case (a, b) => math.abs(a - b) < 1e-9 } &&
+        gotT.zip(t).forall { case (a, b) => math.abs(a - b) < 1e-9 * tNorm }
     }
   }
 

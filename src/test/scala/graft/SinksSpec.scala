@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Exif, Sinks}
@@ -19,10 +19,10 @@ class SinksSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b")))
   }
 
-  test("matrixSink writes named matrices readable as arrays (S6)") {
+  test("matrixTable writes named matrices readable as arrays (S6)") {
     val dir = Files.createTempDirectory("graft-npz").toString
-    Sinks.matrixSink(spark, dir, "camera",
-      Map("k" -> Seq(1.0, 2.0), "dist" -> Seq(0.5)))
+    Sinks.saveTable(Sinks.matrixTable(spark,
+      Map("k" -> Seq(1.0, 2.0), "dist" -> Seq(0.5))), dir, "camera")
     val row = Sinks.loadTable(spark, dir, "camera").collect()(0)
     assert(row.getAs[scala.collection.Seq[Double]]("k").toSeq == Seq(1.0, 2.0))
     assert(row.getAs[scala.collection.Seq[Double]]("dist").toSeq == Seq(0.5))
@@ -54,9 +54,10 @@ class SinksSpec extends SparkSpec {
     runner.stage("s1")(build())
     runner.stage("s1")(build())
     assert(builds == 1, "second run must skip the materialized stage")
-    assert(runner.isMaterialized("s1"))
+    val marker = Paths.get(dir, "s1.parquet", "_SUCCESS")
+    assert(Files.exists(marker))
     runner.invalidate("s1")
-    assert(!runner.isMaterialized("s1"))
+    assert(!Files.exists(marker))
     runner.stage("s1")(build())
     assert(builds == 2)
   }
