@@ -6,10 +6,11 @@ graft.Bench computes spark/duckdb ratios in-JVM when the baseline file
 already exists. A brand-new scale point runs artifact-first — the Spark
 bench lands BEFORE the multi-hour DuckDB baseline re-record — so its
 bench JSON has raw seconds but no ratios. This script recomputes the
-ratio fields from the two files using exactly Bench.scala's formulas
-(Bench.scala:180-208): per-query ratio, total-vs-total over the common
-queries, geomean, and the real_work / floor_dominated buckets split at
-a 0.1 s oracle time. Timings are never altered — only derived ratios.
+ratio fields from the two files using exactly the formulas of the ratio
+block in Bench.main (`ratios`/`ratioPart`): per-query ratio,
+total-vs-total over the common queries, geomean, and the real_work /
+floor_dominated buckets split at a 0.1 s oracle time. Timings are never
+altered — only derived ratios.
 
 Usage: python3 scripts/ratios.py BENCH_<tag>.json BASELINE_<tag>.json
 """

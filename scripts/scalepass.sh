@@ -11,8 +11,9 @@
 #   SPARK_GRAFT_SKIP_ORACLES=... scripts/scalepass.sh <sfDir> <outDir> [batch]
 #
 # Env: SPARK_GRAFT_SKIP_ORACLES / SPARK_GRAFT_SKIP_QUERIES as in
-# check.py / Verify; SPARK_GRAFT_CPUS (default 32), SPARK_DRIVER_MEM
-# (default 32g), SPARK_GRAFT_DUCK_MEM for the compare.
+# check.py / Verify; SPARK_GRAFT_CPUS (default: every core),
+# SPARK_DRIVER_MEM (default: half the RAM), SPARK_GRAFT_DUCK_MEM for the
+# compare.
 # oracle_sql.json persists in <outDir>; per-batch results append to
 # <outDir>/scalepass_results.txt, and already-passed queries (recorded
 # there) are skipped on re-run, so the sweep is resumable.
@@ -28,8 +29,8 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:?sfDir}"
 OUT_DIR="${2:?outDir}"
 BATCH="${3:-10}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
-export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-32g}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)}"
 export SPARK_GRAFT_DUMP_COALESCE="${SPARK_GRAFT_DUMP_COALESCE:-0}"
 mkdir -p "${OUT_DIR}"
 RESULTS="${OUT_DIR}/scalepass_results.txt"

@@ -4,59 +4,39 @@
 #
 #   scripts/scalepoint.sh [sfDir] [mult] [tag]
 #
-# Defaults reproduce the sf1 point the round-8 judge measured:
-#   scripts/scalepoint.sh scratch/sf1 10 sf1
+# e.g. scripts/scalepoint.sh scratch/sf1 10 sf1 (the defaults). The
+# corpus is `mult` x SPARK_GRAFT_SRC_SF (default: the sf0.1 testdata).
 #
-# The sf10 (100x) point needs the oracle skip-list — em1/em2 are
-# DuckDB-quadratic (hours each) and t7/t11's SQL formulations exceed
-# DuckDB's 70 GB in-memory limit at that scale; from sf30 the t6/t8/t10
-# full oracles (193 s / ~800 s / 142 s at sf10, superlinear) join the
-# list. (The round-14 set-level t6/t8 rewrite removed the Spark-side
-# sf30 blocker — the candidate×shingle-array shuffle that outgrew this
-# box's disk is gone, so SPARK_GRAFT_SKIP_QUERIES is no longer needed
-# for them; only their DuckDB oracles stay skipped at 300x.) The deterministic-slice twins (t6_slice/t7_slice/t8_slice/
-# t10_slice/t11_slice/em1_slice/em2_slice — same pipeline on a
-# replica-preserving keyed slice) are NOT skipped: they hash-match
-# DuckDB directly at 100x+, so every skipped full-corpus oracle is
-# covered by a slice row at scale plus full rows at sf1/sf3:
-#   SPARK_GRAFT_SKIP_ORACLES=em1_blocked_closest_pair,em2_cosine_near_dup,t11_simhash_near_dup,t7_simhash \
-#   SPARK_GRAFT_SINGLE_RUN_SEC=60 scripts/scalepoint.sh scratch/sf10 100 sf10
-#   SPARK_GRAFT_SKIP_ORACLES=em1_blocked_closest_pair,em2_cosine_near_dup,t11_simhash_near_dup,t7_simhash,t6_near_dup_candidates,t8_jaccard_verify,t10_winnow_fp,s3_binary_meta \
-#   SPARK_GRAFT_SINGLE_RUN_SEC=60 scripts/scalepoint.sh scratch/sf30 300 sf30
-# At sf100 (1000x) use scripts/scalepass.sh (batched dump→check→delete)
-# instead of the check stage here, and extend the skip list with
-# sim3_ivf_topk (its Lloyd-unrolled oracle exhausts DuckDB temp disk),
-# x17_hdr_merge (600M-row window sort: >46 GiB DuckDB spill, past the
-# box), x7/x8/x14 (the 9-12-double-column dumps alone exceed free disk;
-# skipped on BOTH sides via SPARK_GRAFT_SKIP_QUERIES), and
-# w10_gap_sessions_faithful (deliberately single-window; w2 is the
-# scale stand-in). Every skip is covered by a same-pipeline slice twin
-# that IS checked at sf100 — see scripts/sf100chain.sh for the exact
-# invocation that produced the committed sf100 artifacts.
-# (s3_binary_meta joins the list at sf30: its ORACLE must hex() the whole
-# 4.1 GB lineitem blob — an 8.2 GB string, past DuckDB's 4 GiB cap, and
-# DuckDB 1.0 cannot slice a BLOB before hexing. The Spark side runs fine —
-# Sources.binaryPrefixScan reads 1 MiB per file — and stays checked at
-# 300x by the s3_slice_binary_meta twin over the [cnpr]* dimension files.)
+# Skips come from the table below, keyed on mult. They are single-node
+# ORACLE limits (DuckDB time, memory or temp disk), each covered by a
+# deterministic-slice twin (t6_slice, em1_slice, ...) that IS checked at
+# that scale, plus full rows at smaller points. The rationale per query
+# lives in the chain scripts that recorded the committed points
+# (sf10chain.sh, sf30chain_r17.sh, sf100chain.sh, rebench_sf100_r20.sh;
+# git history has them at 42aa807). A caller's SPARK_GRAFT_SKIP_ORACLES
+# or SPARK_GRAFT_SKIP_QUERIES, when set (even to empty), replaces the
+# table's list for every stage it applies to.
 #
-# Stage ORDER is artifact-first: the Spark bench (the round's contract
-# artifact, ~minutes) runs BEFORE both DuckDB stages — the oracle
-# compare and the baseline re-record (each ~hours at sf10+) — and takes
-# its ratios from the PRIOR BASELINE_<tag>.json when one exists (for a
+# At mult >= 1000 the point outgrows one dump-everything Verify, so the
+# check stage is scripts/scalepass.sh (batched dump -> check -> delete),
+# the bench runs SPARK_GRAFT_REPS=1 (default), and the bench JVM gets
+# -Dspark.cleaner.periodicGC.interval=60s: the 30-min default let ~56 GB
+# of dead shuffle files pile up over an hour-long sweep.
+#
+# Stage ORDER is artifact-first: the Spark bench (~minutes) runs BEFORE
+# both DuckDB stages (each ~hours at sf10+). Bench takes its ratios from
+# the root BASELINE_*.json recorded at this sfDir, if one exists; for a
 # brand-new point scripts/ratios.py patches them in after the baseline
-# stage) — a round boundary mid-sweep strands at worst the refreshed
-# denominators, never the headline number. Each stage drops a
-# .done_<stage> marker in scratch/scalepoint_<tag>/; re-running the
-# script skips completed stages (delete the marker dir, or run with
-# SPARK_GRAFT_FORCE=1, to redo from scratch).
+# stage. Each stage drops a .done_<stage> marker in
+# scratch/scalepoint_<tag>/; re-running skips completed stages (delete
+# the marker dir, or run with SPARK_GRAFT_FORCE=1, to redo from scratch).
 #
 # Produces, in the repo root:
-#   BENCH_<tag>.json     — graft.Bench line incl. vs_baseline_* ratios
+#   BENCH_<tag>.json     — graft.Bench's full line incl. vs_baseline_*
 #   BASELINE_<tag>.json  — DuckDB per-query wall seconds at <sfDir>
 # and leaves the Verify dumps in scratch/verify_<tag>/ for inspection.
 # Fails fast (set -e) if any stage — including the full check.py
-# correctness sweep — does not pass, so a round can't end with the
-# evidence half-generated.
+# correctness sweep — does not pass.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -66,14 +46,46 @@ TAG="${3:-sf1}"
 SRC="${SPARK_GRAFT_SRC_SF:-/root/testdata/sf0.1}"
 VERIFY_DIR="scratch/verify_${TAG}"
 MARK_DIR="scratch/scalepoint_${TAG}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
-# local[32] with the dev default 8g heap is undersized for mult>=30
-# points (a real cluster has tens of GB per executor times N executors);
-# 32g leaves >90g for the OS page cache / the DuckDB baseline stage.
-export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-32g}"
+# the whole box: every core, half the RAM for the JVM heap (the rest
+# is OS page cache and the DuckDB stages)
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)}"
 # Dump at natural write parallelism: a coalesce(1) dump of a 60M-row
 # result is a single-core hour; check.py canonicalizes row order itself.
 export SPARK_GRAFT_DUMP_COALESCE="${SPARK_GRAFT_DUMP_COALESCE:-0}"
+
+# Skip table, by stage: ORACLES for the check, QUERIES for the Spark
+# dumps (each must be in ORACLES too, or check.py fails on the missing
+# dump), BASE for the baseline and BENCH for Bench. Below 1000x the
+# baseline skips ORACLES and Bench skips QUERIES.
+ORACLES="" QUERIES=""
+if [ "${MULT}" -ge 1000 ]; then
+  ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,s3_binary_meta,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,sim3_ivf_topk,w10_gap_sessions_faithful,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
+  QUERIES="w10_gap_sessions_faithful,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
+  BASE="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,s3_binary_meta,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,sim3_ivf_topk,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
+  BENCH="w10_gap_sessions_faithful,em1_blocked_closest_pair,em2_cosine_near_dup,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
+elif [ "${MULT}" -ge 300 ]; then
+  ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,s3_binary_meta,sim3_ivf_topk"
+elif [ "${MULT}" -ge 100 ]; then
+  ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,t7_simhash,t11_simhash_near_dup"
+fi
+if [ "${MULT}" -lt 1000 ]; then BASE="${ORACLES}" BENCH="${QUERIES}"; fi
+if [ -n "${SPARK_GRAFT_SKIP_ORACLES+set}" ]; then
+  ORACLES="${SPARK_GRAFT_SKIP_ORACLES}" BASE="${SPARK_GRAFT_SKIP_ORACLES}"
+fi
+if [ -n "${SPARK_GRAFT_SKIP_QUERIES+set}" ]; then
+  QUERIES="${SPARK_GRAFT_SKIP_QUERIES}" BENCH="${SPARK_GRAFT_SKIP_QUERIES}"
+fi
+# from 100x a query whose warmup run already takes >60 s records that
+# one run instead of a median (variance on minute-long scans is small)
+if [ "${MULT}" -ge 100 ]; then
+  export SPARK_GRAFT_SINGLE_RUN_SEC="${SPARK_GRAFT_SINGLE_RUN_SEC:-60}"
+fi
+BENCH_ENV=()
+if [ "${MULT}" -ge 1000 ]; then
+  BENCH_ENV=(SPARK_GRAFT_REPS="${SPARK_GRAFT_REPS:-1}"
+    JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:+${JAVA_TOOL_OPTIONS} }-Dspark.cleaner.periodicGC.interval=60s")
+fi
 
 if [ "${SPARK_GRAFT_FORCE:-0}" = "1" ]; then rm -rf "${MARK_DIR}"; fi
 mkdir -p "${MARK_DIR}"
@@ -87,42 +99,44 @@ else
   echo "== datagen: ${SF_DIR} already present, skipping =="
 fi
 
-if skip_stage verify; then
+if [ "${MULT}" -ge 1000 ]; then
+  echo "== verify: folded into the batched scalepass check =="
+elif skip_stage verify; then
   echo "== verify: done marker present, skipping =="
 else
   echo "== verify: dumping all queries at ${SF_DIR} =="
   rm -rf "${VERIFY_DIR}"
-  # SPARK_GRAFT_CPUS must reach the Verify JVM too — its default is
-  # local[4] (the driver's modest sf0.01 gate), which at sf10 left 28 of
-  # 32 cores idle for the whole dump stage
-  SPARK_GRAFT_CPUS="${CPUS}" sbt "runMain graft.Verify ${SF_DIR} ${VERIFY_DIR}"
+  SPARK_GRAFT_SKIP_QUERIES="${QUERIES}" \
+    sbt "runMain graft.Verify ${SF_DIR} ${VERIFY_DIR}"
   done_stage verify
 fi
 
 if skip_stage bench; then
   echo "== bench: done marker present, skipping =="
 else
-  if [ -f "BASELINE_${TAG}.json" ]; then
-    echo "== bench: graft.Bench vs existing BASELINE_${TAG}.json -> BENCH_${TAG}.json =="
-  else
-    echo "== bench: graft.Bench (no BASELINE_${TAG}.json yet - ratios omitted) -> BENCH_${TAG}.json =="
-  fi
-  # sbt prefixes forked-process stdout with "[info] ", so extract the JSON
-  # object rather than anchoring at line start
-  SPARK_GRAFT_SF_DIR="${SF_DIR}" \
-  SPARK_GRAFT_BASELINE="BASELINE_${TAG}.json" \
-  SPARK_GRAFT_CPUS="${CPUS}" \
-    sbt "runMain graft.Bench" | grep -o '{"metric".*}' | tail -1 \
-    > "BENCH_${TAG}.json"
-  test -s "BENCH_${TAG}.json" || { echo "bench produced no metric line" >&2; exit 1; }
+  echo "== bench: graft.Bench -> BENCH_${TAG}.json =="
+  # the full line from the file Bench writes: its LAST stdout line is a
+  # short summary without "queries" or "vs_baseline"
+  rm -f "${MARK_DIR}/bench.json"
+  env SPARK_GRAFT_SF_DIR="${SF_DIR}" SPARK_GRAFT_SKIP_QUERIES="${BENCH}" \
+    SPARK_GRAFT_BENCH_OUT="${MARK_DIR}/bench.json" "${BENCH_ENV[@]}" \
+    sbt "runMain graft.Bench"
+  test -s "${MARK_DIR}/bench.json" || { echo "bench wrote no line" >&2; exit 1; }
+  cp "${MARK_DIR}/bench.json" "BENCH_${TAG}.json"
   done_stage bench
 fi
 
 if skip_stage check; then
   echo "== check: done marker present, skipping =="
+elif [ "${MULT}" -ge 1000 ]; then
+  echo "== check: batched scalepass sweep (must be all-pass; re-run resumes) =="
+  SPARK_GRAFT_SKIP_ORACLES="${ORACLES}" SPARK_GRAFT_SKIP_QUERIES="${QUERIES}" \
+    scripts/scalepass.sh "${SF_DIR}" "${VERIFY_DIR}" 1
+  done_stage check
 else
   echo "== check: DuckDB oracle compare (must be all-pass) =="
-  python3 scripts/check.py "${SF_DIR}" "${VERIFY_DIR}"
+  SPARK_GRAFT_SKIP_ORACLES="${ORACLES}" \
+    python3 scripts/check.py "${SF_DIR}" "${VERIFY_DIR}"
   done_stage check
 fi
 
@@ -130,16 +144,16 @@ if skip_stage baseline; then
   echo "== baseline: done marker present, skipping =="
 else
   echo "== baseline: recording DuckDB wall times -> BASELINE_${TAG}.json =="
-  python3 scripts/baseline.py "${SF_DIR}" "${VERIFY_DIR}" "BASELINE_${TAG}.json"
+  SPARK_GRAFT_SKIP_ORACLES="${BASE}" \
+    python3 scripts/baseline.py "${SF_DIR}" "${VERIFY_DIR}" "BASELINE_${TAG}.json"
   done_stage baseline
 fi
 
 # A brand-new scale point benches before any baseline exists, so its
 # bench JSON has raw seconds but no ratios; patch them in from the
-# just-recorded baseline with Bench.scala's exact formulas.
+# just-recorded baseline with Bench.main's exact formulas.
 if ! grep -q '"vs_baseline"' "BENCH_${TAG}.json"; then
   python3 scripts/ratios.py "BENCH_${TAG}.json" "BASELINE_${TAG}.json"
 fi
 
 echo "== done: BENCH_${TAG}.json + BASELINE_${TAG}.json =="
-cat "BENCH_${TAG}.json"

@@ -11,11 +11,11 @@ import org.apache.spark.sql.SparkSession
   * position/GC noise on unchanged plans (round-7 x4/x5), which medians
   * kill. The total is the sum of medians.
   *
-  * If BASELINE_local.json exists (recorded DuckDB per-query wall times at
-  * the same sf — scripts/baseline.py), the line also carries per-query
-  * spark/duckdb ratios and their geometric mean (`vs_baseline_geomean`),
-  * making the "within 2x of the local single-node baseline" target
-  * mechanically checkable.
+  * If a BASELINE_*.json was recorded at the same sf (DuckDB per-query
+  * wall times — scripts/baseline.py; see loadBaseline), the line also
+  * carries per-query spark/duckdb ratios and their geometric mean
+  * (`vs_baseline_geomean`), making the "within 2x of the local
+  * single-node baseline" target mechanically checkable.
   */
 object Bench {
 
@@ -257,36 +257,39 @@ object Bench {
   private[graft] def envCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
-  /** Baseline "queries" map, if the file exists for this sf. The file
-    * defaults to BASELINE_local.json (sf0.1, the driver's round loop) and
-    * is overridable via SPARK_GRAFT_BASELINE for builder-owned scale
-    * points (e.g. BASELINE_sf1.json over scratch/sf1).
+  /** Baseline "queries" map for this sf: the one `BASELINE_*.json` in
+    * `dir` whose `sf_dir` equals `sfDir` (BASELINE_local.json for the
+    * default sf0.1 run, BASELINE_<tag>.json for a scripts/scalepoint.sh
+    * point). An unreadable file is skipped; no match or two matches omit
+    * the ratios. Loud, not silent: each says why on stderr, because a
+    * baseline whose sf_dir merely differs in spelling (relative vs
+    * absolute) would otherwise read as "no baseline recorded".
     */
-  def loadBaseline(sfDir: String): Map[String, Double] = {
-    val f = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE_local.json"))
-    if (!f.exists) return Map.empty
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(f)
-      val baseSf = root.path("sf_dir").asText("")
-      if (baseSf != sfDir) {
-        // loud, not silent: an existing baseline whose sf_dir merely
-        // differs in spelling (relative vs absolute) would otherwise just
-        // drop the ratio fields and read as "no baseline recorded"
-        System.err.println(
-          s"[bench] baseline ${f.getPath} exists but its sf_dir ('$baseSf') " +
-            s"!= SPARK_GRAFT_SF_DIR ('$sfDir') — ratios omitted")
-        return Map.empty
+  def loadBaseline(dir: String, sfDir: String): Map[String, Double] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("BASELINE_") && f.getName.endsWith(".json"))
+      .sortBy(_.getName)
+    val roots = files.flatMap { f =>
+      try Some(f -> om.readTree(f))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          Console.err.println(s"[bench] baseline ${f.getPath} unreadable, skipped: $e")
+          None
       }
-      val it = root.path("queries").properties().iterator()
-      val b = Map.newBuilder[String, Double]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> e.getValue.asDouble()
-      }
-      b.result()
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    }
+    roots.filter(_._2.path("sf_dir").asText("") == sfDir) match {
+      case Seq((_, root)) =>
+        import scala.jdk.CollectionConverters._
+        root.path("queries").properties().asScala
+          .map(e => e.getKey -> e.getValue.asDouble()).toMap
+      case Seq() =>
+        Console.err.println(s"[bench] no $dir/BASELINE_*.json has sf_dir '$sfDir' — ratios omitted")
+        Map.empty
+      case many =>
+        Console.err.println(s"[bench] ${many.map(_._1.getPath).mkString(", ")} all have sf_dir '$sfDir' — ratios omitted")
+        Map.empty
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -378,12 +381,10 @@ object Bench {
       if (!bktNeeded) Nil
       else Seq("bucketed_ingest" ->
         (if (bktOk) (System.nanoTime() - bkt0) / 1e9 else -1.0))
-    // Inter-query disk barrier (see diskBarrier): default 24 GB floor at
-    // scale points, off for the tiny driver corpus (sub-second queries
-    // never spill GBs, and a GC-wait there would perturb floor timings).
-    val minFreeBytes =
-      (sys.env.get("SPARK_GRAFT_MIN_FREE_GB").map(_.toDouble)
-        .getOrElse(if (tinyCorpus(sfDir)) 0.0 else 24.0) * (1L << 30)).toLong
+    // Inter-query disk barrier (see diskBarrier): 24 GB floor at scale
+    // points, off for the tiny driver corpus (sub-second queries never
+    // spill GBs, and a GC-wait there would perturb floor timings).
+    val minFreeBytes = if (tinyCorpus(sfDir)) 0L else 24L << 30
     val startupFree = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp")).getUsableSpace
     val results = (SparkEntry.queries.toSeq.sortBy(_._1)
@@ -413,7 +414,7 @@ object Bench {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries failed: ${failed.sorted.mkString(",")}")
-    val baseline = loadBaseline(sfDir)
+    val baseline = loadBaseline(".", sfDir)
     // Locale.ROOT: the f"" interpolator is default-locale-sensitive and a
     // comma-decimal locale would corrupt the JSON line
     def num(v: Double, digits: Int): String =

@@ -325,19 +325,16 @@ object Tables {
     * 3 of the 5 slowest gate lines, ~2.5 s of pure task scheduling) and
     * a 23 s cold ingest writing 1024 ~40 KB files — the small-files
     * problem of guide §6 manufactured at ingest time.
-    * Env override: SPARK_GRAFT_BUCKETS (a cluster sizes this to its
-    * executor count at ingest time).
     */
-  def defaultBuckets(sfDir: String): Int =
-    sys.env.get("SPARK_GRAFT_BUCKETS").map(_.toInt).getOrElse {
-      def sz(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-      val corpus = Option(new java.io.File(sfDir).listFiles())
-        .map(_.filter(_.getName.endsWith(".parquet")).map(sz).sum)
-        .getOrElse(0L)
-      ((corpus / (64L << 20)).max(32L).min(256L)).toInt
-    }
+  def defaultBuckets(sfDir: String): Int = {
+    def sz(f: java.io.File): Long =
+      if (f.isFile) f.length
+      else Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
+    val corpus = Option(new java.io.File(sfDir).listFiles())
+      .map(_.filter(_.getName.endsWith(".parquet")).map(sz).sum)
+      .getOrElse(0L)
+    ((corpus / (64L << 20)).max(32L).min(256L)).toInt
+  }
 
   /** The declared bucketed layouts — single source of truth shared by
     * the a2/j1/j2 bucketed query bodies and Bench's ingest pre-warm
