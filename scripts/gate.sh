@@ -9,14 +9,13 @@
 #
 # Session lines, logs and the same-day baseline land in scratch/gate/.
 # Env: SPARK_GRAFT_CPUS (default: every core), SPARK_DRIVER_MEM
-# (default: half the RAM).
+# (default: half the RAM, set in build.sbt).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 OUT="${1:?usage: scripts/gate.sh <out.json>}"
 WORK=scratch/gate
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
-export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)}"
 rm -rf "${WORK}"
 mkdir -p "${WORK}"
 unset SPARK_GRAFT_SF_DIR

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command scale-point evidence trail (dev tooling only — not part of
-# the shipped library): datagen -> Verify -> bench -> check -> baseline.
+# the shipped library): datagen -> bench -> check -> baseline.
 #
 #   scripts/scalepoint.sh [sfDir] [mult] [tag]
 #
@@ -17,11 +17,13 @@
 # or SPARK_GRAFT_SKIP_QUERIES, when set (even to empty), replaces the
 # table's list for every stage it applies to.
 #
-# At mult >= 1000 the point outgrows one dump-everything Verify, so the
-# check stage is scripts/scalepass.sh (batched dump -> check -> delete),
-# the bench runs SPARK_GRAFT_REPS=1 (default), and the bench JVM gets
-# -Dspark.cleaner.periodicGC.interval=60s: the 30-min default let ~56 GB
-# of dead shuffle files pile up over an hour-long sweep.
+# The check stage is scripts/scalepass.sh (batched dump -> check ->
+# delete; it resumes, and keeps only failed dumps), in batches of the
+# whole query list below 100x, 4 from 100x and 1 from 1000x, as the
+# chain scripts ran it. From 300x the bench runs SPARK_GRAFT_REPS=1
+# (default) and the bench JVM gets -Dspark.cleaner.periodicGC.interval=60s:
+# the 30-min default let ~56 GB of dead shuffle files pile up over an
+# hour-long sweep.
 #
 # Stage ORDER is artifact-first: the Spark bench (~minutes) runs BEFORE
 # both DuckDB stages (each ~hours at sf10+). Bench takes its ratios from
@@ -34,9 +36,9 @@
 # Produces, in the repo root:
 #   BENCH_<tag>.json     — graft.Bench's full line incl. vs_baseline_*
 #   BASELINE_<tag>.json  — DuckDB per-query wall seconds at <sfDir>
-# and leaves the Verify dumps in scratch/verify_<tag>/ for inspection.
-# Fails fast (set -e) if any stage — including the full check.py
-# correctness sweep — does not pass.
+# and leaves oracle_sql.json, scalepass_results.txt and any failed
+# query's dump in scratch/verify_<tag>/. Fails fast (set -e) if any
+# stage — including the correctness sweep — does not pass.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -46,28 +48,27 @@ TAG="${3:-sf1}"
 SRC="${SPARK_GRAFT_SRC_SF:-/root/testdata/sf0.1}"
 VERIFY_DIR="scratch/verify_${TAG}"
 MARK_DIR="scratch/scalepoint_${TAG}"
-# the whole box: every core, half the RAM for the JVM heap (the rest
-# is OS page cache and the DuckDB stages)
+# every core (the JVM heap defaults to half the RAM in build.sbt)
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
-export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)}"
-# Dump at natural write parallelism: a coalesce(1) dump of a 60M-row
-# result is a single-core hour; check.py canonicalizes row order itself.
-export SPARK_GRAFT_DUMP_COALESCE="${SPARK_GRAFT_DUMP_COALESCE:-0}"
 
-# Skip table, by stage: ORACLES for the check, QUERIES for the Spark
-# dumps (each must be in ORACLES too, or check.py fails on the missing
-# dump), BASE for the baseline and BENCH for Bench. Below 1000x the
-# baseline skips ORACLES and Bench skips QUERIES.
-ORACLES="" QUERIES=""
+# Table keyed on mult. Skips by stage: ORACLES for the check, QUERIES
+# for the Spark dumps (each must be in ORACLES too, or check.py fails
+# on the missing dump), BASE for the baseline and BENCH for Bench.
+# Below 1000x the baseline skips ORACLES and Bench skips QUERIES.
+# BATCH is the check's scalepass batch size (999: every query in one).
+ORACLES="" QUERIES="" BATCH=999
 if [ "${MULT}" -ge 1000 ]; then
   ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,s3_binary_meta,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,sim3_ivf_topk,w10_gap_sessions_faithful,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
   QUERIES="w10_gap_sessions_faithful,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
   BASE="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,s3_binary_meta,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,sim3_ivf_topk,x17_hdr_merge,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
   BENCH="w10_gap_sessions_faithful,em1_blocked_closest_pair,em2_cosine_near_dup,x7_euler_rotation,x8_rodrigues,x14_se3_inverse"
+  BATCH=1
 elif [ "${MULT}" -ge 300 ]; then
   ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,t6_near_dup_candidates,t7_simhash,t8_jaccard_verify,t10_winnow_fp,t11_simhash_near_dup,s3_binary_meta,sim3_ivf_topk"
+  BATCH=4
 elif [ "${MULT}" -ge 100 ]; then
   ORACLES="em1_blocked_closest_pair,em2_cosine_near_dup,em3_ivf_closest_pair,t7_simhash,t11_simhash_near_dup"
+  BATCH=4
 fi
 if [ "${MULT}" -lt 1000 ]; then BASE="${ORACLES}" BENCH="${QUERIES}"; fi
 if [ -n "${SPARK_GRAFT_SKIP_ORACLES+set}" ]; then
@@ -82,12 +83,12 @@ if [ "${MULT}" -ge 100 ]; then
   export SPARK_GRAFT_SINGLE_RUN_SEC="${SPARK_GRAFT_SINGLE_RUN_SEC:-60}"
 fi
 BENCH_ENV=()
-if [ "${MULT}" -ge 1000 ]; then
+if [ "${MULT}" -ge 300 ]; then
   BENCH_ENV=(SPARK_GRAFT_REPS="${SPARK_GRAFT_REPS:-1}"
     JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:+${JAVA_TOOL_OPTIONS} }-Dspark.cleaner.periodicGC.interval=60s")
 fi
 
-if [ "${SPARK_GRAFT_FORCE:-0}" = "1" ]; then rm -rf "${MARK_DIR}"; fi
+if [ "${SPARK_GRAFT_FORCE:-0}" = "1" ]; then rm -rf "${MARK_DIR}" "${VERIFY_DIR}"; fi
 mkdir -p "${MARK_DIR}"
 done_stage() { touch "${MARK_DIR}/.done_$1"; }
 skip_stage() { [ -f "${MARK_DIR}/.done_$1" ]; }
@@ -97,18 +98,6 @@ if [ ! -f "${SF_DIR}/lineitem.parquet" ]; then
   python3 scripts/datagen.py "${SRC}" "${SF_DIR}" "${MULT}"
 else
   echo "== datagen: ${SF_DIR} already present, skipping =="
-fi
-
-if [ "${MULT}" -ge 1000 ]; then
-  echo "== verify: folded into the batched scalepass check =="
-elif skip_stage verify; then
-  echo "== verify: done marker present, skipping =="
-else
-  echo "== verify: dumping all queries at ${SF_DIR} =="
-  rm -rf "${VERIFY_DIR}"
-  SPARK_GRAFT_SKIP_QUERIES="${QUERIES}" \
-    sbt "runMain graft.Verify ${SF_DIR} ${VERIFY_DIR}"
-  done_stage verify
 fi
 
 if skip_stage bench; then
@@ -128,15 +117,10 @@ fi
 
 if skip_stage check; then
   echo "== check: done marker present, skipping =="
-elif [ "${MULT}" -ge 1000 ]; then
-  echo "== check: batched scalepass sweep (must be all-pass; re-run resumes) =="
-  SPARK_GRAFT_SKIP_ORACLES="${ORACLES}" SPARK_GRAFT_SKIP_QUERIES="${QUERIES}" \
-    scripts/scalepass.sh "${SF_DIR}" "${VERIFY_DIR}" 1
-  done_stage check
 else
-  echo "== check: DuckDB oracle compare (must be all-pass) =="
-  SPARK_GRAFT_SKIP_ORACLES="${ORACLES}" \
-    python3 scripts/check.py "${SF_DIR}" "${VERIFY_DIR}"
+  echo "== check: scalepass sweep, batch ${BATCH} (must be all-pass; re-run resumes) =="
+  SPARK_GRAFT_SKIP_ORACLES="${ORACLES}" SPARK_GRAFT_SKIP_QUERIES="${QUERIES}" \
+    scripts/scalepass.sh "${SF_DIR}" "${VERIFY_DIR}" "${BATCH}"
   done_stage check
 fi
 
