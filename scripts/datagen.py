@@ -75,9 +75,8 @@ def main():
     n_ord = nxt("orders", "o_orderkey")
     n_evt = nxt("events", "event_id")
     n_user = nxt("events", "user_id")
-    # The deterministic-slice oracle twins (t7_slice/t11_slice on
-    # doc_id % 50, em1_slice/em2_slice on vec_id % 40 — queries/
-    # TextQueries.scala, queries/EmbQueries.scala) are replica-preserving
+    # The deterministic-slice oracle twins (doc_id % 50 and vec_id % 40,
+    # Slice in queries/Q.scala) are replica-preserving
     # ONLY if the replication stride is a multiple of the slice modulus:
     # doc_id + i*n_doc ≡ doc_id (mod 50) needs 50 | n_doc. Otherwise the
     # slice silently degrades from "every replica of a base-slice doc" to

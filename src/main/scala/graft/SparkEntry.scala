@@ -5,8 +5,7 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator is declared here as a named query (Spark fn)
-  * plus, where SQL-expressible, a DuckDB oracle over the same parquet
-  * tables. The driver hash-compares the two at sf0.01.
+  * plus a DuckDB oracle over the same parquet tables. The driver hash-compares the two at sf0.01.
   */
 object SparkEntry {
 
@@ -32,7 +31,7 @@ object SparkEntry {
     allDefs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    allDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    allDefs.map(q => q.name -> q.oracle).toMap
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StreamingQuery, Trigger}
+import graft.streaming.Sessionize
 
 /** Streaming throughput record (dev tooling, like Bench): drive the
   * §2.10 ingestion pipeline — a REAL binaryFile directory stream →
@@ -91,75 +95,31 @@ object StreamBench {
     }
   }
 
+  private val Dir = "scratch/streambench_src"
+
   def main(args: Array[String]): Unit = {
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "100000").toInt
     val perTrigger = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "5000").toInt
-    val dir = sys.env.getOrElse("SPARK_GRAFT_STREAM_DIR",
-      "scratch/streambench_src")
     val cpus = Bench.envCpus
     sys.env.getOrElse("SPARK_GRAFT_STREAM_SOURCE", "files") match {
-      case "memory"   => runMemory(nFiles, perTrigger, cpus); return
-      case "manifest" => runManifest(nFiles, perTrigger, cpus, dir); return
-      case _          => ()
+      case "memory"   => runMemory(nFiles, perTrigger, cpus)
+      case "manifest" => runManifest(nFiles, perTrigger, cpus)
+      case _          => runFiles(nFiles, perTrigger, cpus)
     }
+  }
 
-    ensureCorpus(dir, nFiles)
-
+  private def runFiles(nFiles: Int, perTrigger: Int, cpus: Int): Unit = {
+    ensureCorpus(Dir, nFiles)
     // the corpus holds no parquet, so the session takes the tiny shape
-    val spark = Bench.session(dir, cpus)
-    import spark.implicits._
-
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-streambench-ckpt").toString
+    val spark = Bench.session(Dir, cpus)
     val files = spark.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
       .option("maxFilesPerTrigger", perTrigger)
-      .load(dir)
-    val events = files.select(
-      regexp_extract(col("path"), "([^/]+)_([0-9]+)\\.JPG$", 1).as("poseId"),
-      regexp_extract(col("path"), "([^/]+)_([0-9]+)\\.JPG$", 2)
-        .cast("int").as("slot"),
-      col("path"), col("modificationTime").as("ts"))
-      .as[graft.streaming.Sessionize.FileEvent]
-    val groups = graft.streaming.Sessionize.completeGroups(
-      graft.streaming.Sessionize.dedupedEvents(events, withinSeconds = 60),
-      groupSize = 5, gapSeconds = 12, setWatermark = false)
-
-    val tally = new ProgressTally
-    spark.streams.addListener(tally)
-    val t0 = System.nanoTime()
-    val q = groups.writeStream
-      .format("memory").queryName("sb")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
-
-    val nGroups = spark.table("sb").count()
-    drain(tally)
-    val batches = tally.batches.get()
-    val inputRows = tally.rows.get()
-    // state operators of the LAST progress carry end-of-run totals (the
-    // last update always survives recentProgress's retention window)
-    val stateOps = q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.toSeq).getOrElse(Seq.empty)
-    val stateRows = stateOps.map(_.numRowsTotal).sum
-    val stateBytes = stateOps.map(_.memoryUsedBytes).sum
-    def num(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val line = s"""{"metric":"stream_sessionize","files":$nFiles,""" +
-      s""""batches":$batches,"input_rows":$inputRows,""" +
-      s""""wall_sec":${num(wall)},"files_per_sec":${num(nFiles / wall)},""" +
-      s""""groups_emitted":$nGroups,"state_rows":$stateRows,""" +
-      s""""state_bytes":$stateBytes}"""
-    println(line)
-    try {
-      val w = new java.io.PrintWriter("scratch/streambench.json", "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case scala.util.control.NonFatal(_) => }
-    spark.stop()
+      .load(Dir)
+    runAndReport(
+      pathEvents(files.select(col("path"), col("modificationTime").as("ts"))),
+      "stream_sessionize", "files", nFiles, Seq.empty,
+      "scratch/streambench.json")(untilDone)
   }
 
   /** The manifest side-channel variant: the corpus directory is listed
@@ -173,20 +133,19 @@ object StreamBench {
     * events per microbatch), so files/s here is directly comparable to
     * the binaryFile record and the MemoryStream operator ceiling.
     */
-  private def runManifest(nFiles: Int, perTrigger: Int, cpus: Int,
-      dir: String): Unit = {
-    ensureCorpus(dir, nFiles)
+  private def runManifest(nFiles: Int, perTrigger: Int, cpus: Int): Unit = {
+    ensureCorpus(Dir, nFiles)
     // the side-channel: one directory listing, chunked into
     // nFiles/perTrigger manifest files of "path\tmtimeMillis" lines —
     // its cost is reported separately (a real notification feed pays it
     // incrementally, never as a scan)
-    val mDir = new java.io.File(dir + "_manifest")
+    val mDir = new java.io.File(Dir + "_manifest")
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     rm(mDir); mDir.mkdirs()
     val tM0 = System.nanoTime()
-    val all = new java.io.File(dir).listFiles().sortBy(_.getName)
+    val all = new java.io.File(Dir).listFiles().sortBy(_.getName)
     all.grouped(perTrigger).zipWithIndex.foreach { case (chunk, i) =>
       val body = chunk.map(f => s"${f.getAbsolutePath}\t${f.lastModified}")
         .mkString("", "\n", "\n")
@@ -197,62 +156,17 @@ object StreamBench {
     val manifestSec = (System.nanoTime() - tM0) / 1e9
 
     val spark = Bench.session(mDir.getPath, cpus)
-    import spark.implicits._
-
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-streambench-man-ckpt").toString
     // one manifest FILE per trigger = perTrigger events per microbatch,
     // the same batch shape as the binaryFile run's maxFilesPerTrigger
     val lines = spark.readStream.format("text")
       .option("maxFilesPerTrigger", 1)
       .load(mDir.getAbsolutePath)
-    val events = lines.select(
-        split(col("value"), "\t").getItem(0).as("path"),
-        timestamp_millis(split(col("value"), "\t").getItem(1).cast("long"))
-          .as("ts"))
-      .select(
-        regexp_extract(col("path"), "([^/]+)_([0-9]+)\\.JPG$", 1).as("poseId"),
-        regexp_extract(col("path"), "([^/]+)_([0-9]+)\\.JPG$", 2)
-          .cast("int").as("slot"),
-        col("path"), col("ts"))
-      .as[graft.streaming.Sessionize.FileEvent]
-    val groups = graft.streaming.Sessionize.completeGroups(
-      graft.streaming.Sessionize.dedupedEvents(events, withinSeconds = 60),
-      groupSize = 5, gapSeconds = 12, setWatermark = false)
-
-    val tally = new ProgressTally
-    spark.streams.addListener(tally)
-    val t0 = System.nanoTime()
-    val q = groups.writeStream
-      .format("memory").queryName("sbman")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
-
-    val nGroups = spark.table("sbman").count()
-    drain(tally)
-    val stateOps = q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.toSeq).getOrElse(Seq.empty)
-    def num(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val line = s"""{"metric":"stream_sessionize_manifest",""" +
-      s""""files":$nFiles,"batches":${tally.batches.get()},""" +
-      s""""input_rows":${tally.rows.get()},""" +
-      s""""manifest_build_sec":${num(manifestSec)},""" +
-      s""""wall_sec":${num(wall)},"files_per_sec":${num(nFiles / wall)},""" +
-      s""""groups_emitted":$nGroups,""" +
-      s""""state_rows":${stateOps.map(_.numRowsTotal).sum},""" +
-      s""""state_bytes":${stateOps.map(_.memoryUsedBytes).sum}}"""
-    println(line)
-    try {
-      val w = new java.io.PrintWriter("scratch/streambench_manifest.json",
-        "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case scala.util.control.NonFatal(_) => }
-    spark.stop()
+    val fields = split(col("value"), "\t")
+    runAndReport(pathEvents(lines.select(fields.getItem(0).as("path"),
+        timestamp_millis(fields.getItem(1).cast("long")).as("ts"))),
+      "stream_sessionize_manifest", "files", nFiles,
+      Seq("manifest_build_sec" -> num(manifestSec)),
+      "scratch/streambench_manifest.json")(untilDone)
   }
 
   /** The operator-ceiling twin: identical pipeline + event shape + batch
@@ -261,58 +175,106 @@ object StreamBench {
     * mtimes, so the watermark/state lifecycle matches the file run.
     */
   private def runMemory(nFiles: Int, perTrigger: Int, cpus: Int): Unit = {
-    // no input dir: size the session from the fresh (empty) checkpoint dir
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-streambench-mem-ckpt").toString
-    val spark = Bench.session(ckpt, cpus)
+    // no input dir: size the session from a fresh (empty) temp dir
+    val spark = Bench.session(java.nio.file.Files
+      .createTempDirectory("graft-streambench-mem").toString, cpus)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val base = 1700000000000L // fixed epoch-ms so runs are reproducible
     val chunks = (0 until nFiles).map { i =>
-      graft.streaming.Sessionize.FileEvent(
+      Sessionize.FileEvent(
         f"p${i / 5}%06d", i % 5, f"mem://p${i / 5}%06d_${i % 5}.JPG",
         new java.sql.Timestamp(base + i / 10))
     }.grouped(perTrigger).toSeq // materialized BEFORE the timed loop
 
-    val input =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-        graft.streaming.Sessionize.FileEvent]
-    val groups = graft.streaming.Sessionize.completeGroups(
-      graft.streaming.Sessionize.dedupedEvents(input.toDS(),
-        withinSeconds = 60),
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Sessionize.FileEvent]
+    runAndReport(input.toDS(),
+      "stream_sessionize_memsource", "rows", nFiles,
+      Seq("chunks" -> chunks.length.toString),
+      "scratch/streambench_mem.json") { w =>
+      val q = w.start()
+      val t0 = System.nanoTime()
+      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
+      val wall = (System.nanoTime() - t0) / 1e9
+      q.stop()
+      (q, wall)
+    }
+  }
+
+  /** Start on the AvailableNow trigger and wait for the end of the input;
+    * the wall clock includes the query start.
+    */
+  private def untilDone(w: DataStreamWriter[Row]): (StreamingQuery, Double) = {
+    val t0 = System.nanoTime()
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    (q, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+
+  /** FileEvents from (path, ts) rows: pose id and slot parsed from the
+    * p{pose}_{slot}.JPG name.
+    */
+  private def pathEvents(pathTs: DataFrame): Dataset[Sessionize.FileEvent] = {
+    val spark = pathTs.sparkSession
+    import spark.implicits._
+    val name = "([^/]+)_([0-9]+)\\.JPG$"
+    pathTs.select(
+        regexp_extract(col("path"), name, 1).as("poseId"),
+        regexp_extract(col("path"), name, 2).cast("int").as("slot"),
+        col("path"), col("ts"))
+      .as[Sessionize.FileEvent]
+  }
+
+  /** The run-and-report body every source shares: `events` → the
+    * stateful pipeline (dedup → group assembly) → a memory sink; `run`
+    * starts the query and drives it to the end of its input, returning
+    * it and the wall seconds. Then one JSON line:
+    * `metric`, `n` under `unit`, batches/input_rows from the listener
+    * tally, the source's `extra` fields, wall_sec, `unit`_per_sec,
+    * groups_emitted, and the end-of-run state-store totals. The line is
+    * printed and written to `out`.
+    */
+  private def runAndReport(events: Dataset[Sessionize.FileEvent],
+      metric: String, unit: String, n: Int, extra: Seq[(String, String)],
+      out: String)(
+      run: DataStreamWriter[Row] => (StreamingQuery, Double)): Unit = {
+    val spark = events.sparkSession
+    val groups = Sessionize.completeGroups(
+      Sessionize.dedupedEvents(events, withinSeconds = 60),
       groupSize = 5, gapSeconds = 12, setWatermark = false)
+
     val tally = new ProgressTally
     spark.streams.addListener(tally)
-    val q = groups.writeStream
-      .format("memory").queryName("sbm")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .start()
-    val t0 = System.nanoTime()
-    chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-streambench-ckpt").toString
+    val (q, wall) = run(groups.toDF().writeStream
+      .format("memory").queryName("sb")
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", ckpt))
 
-    val nGroups = spark.table("sbm").count()
+    val nGroups = spark.table("sb").count()
     drain(tally)
-    val inputRows = tally.rows.get()
-    val nBatches = tally.batches.get()
+    // state operators of the LAST progress carry end-of-run totals (the
+    // last update always survives recentProgress's retention window)
     val stateOps = q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
       .map(_.stateOperators.toSeq).getOrElse(Seq.empty)
-    val stateRows = stateOps.map(_.numRowsTotal).sum
-    val stateBytes = stateOps.map(_.memoryUsedBytes).sum
-    def num(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val line = s"""{"metric":"stream_sessionize_memsource",""" +
-      s""""rows":$nFiles,"batches":$nBatches,"chunks":${chunks.length},""" +
-      s""""input_rows":$inputRows,"wall_sec":${num(wall)},""" +
-      s""""rows_per_sec":${num(nFiles / wall)},""" +
-      s""""groups_emitted":$nGroups,"state_rows":$stateRows,""" +
-      s""""state_bytes":$stateBytes}"""
+    val fields = Seq("metric" -> s""""$metric"""", unit -> n.toString,
+        "batches" -> tally.batches.get().toString,
+        "input_rows" -> tally.rows.get().toString) ++ extra ++ Seq(
+      "wall_sec" -> num(wall), s"${unit}_per_sec" -> num(n / wall),
+      "groups_emitted" -> nGroups.toString,
+      "state_rows" -> stateOps.map(_.numRowsTotal).sum.toString,
+      "state_bytes" -> stateOps.map(_.memoryUsedBytes).sum.toString)
+    val line = fields.map { case (k, v) => s""""$k":$v""" }
+      .mkString("{", ",", "}")
     println(line)
     try {
-      val w = new java.io.PrintWriter("scratch/streambench_mem.json", "UTF-8")
+      val w = new java.io.PrintWriter(out, "UTF-8")
       try w.println(line) finally w.close()
     } catch { case scala.util.control.NonFatal(_) => }
     spark.stop()

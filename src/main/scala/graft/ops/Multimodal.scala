@@ -57,16 +57,6 @@ object Multimodal {
       }
   }
 
-  /** Expression-only binary metadata (no decode): length, magic, md5 —
-    * fully codegen'd, content never leaves the scan.
-    */
-  def binaryMeta(files: DataFrame): DataFrame =
-    files.select(
-      regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
-      col("length"),
-      substring(col("content"), 1, 4).cast("string").as("magic"),
-      md5(col("content")).as("content_md5"))
-
   /** Frame sampling for video-like blobs: treat `content` as fixed-size
     * frames, keep every `everyNth` one — pure expression byte-slicing
     * (substring on binary), one output row per sampled frame. The frame

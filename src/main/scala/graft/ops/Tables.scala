@@ -326,15 +326,8 @@ object Tables {
     * a 23 s cold ingest writing 1024 ~40 KB files — the small-files
     * problem of guide §6 manufactured at ingest time.
     */
-  def defaultBuckets(sfDir: String): Int = {
-    def sz(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-    val corpus = Option(new java.io.File(sfDir).listFiles())
-      .map(_.filter(_.getName.endsWith(".parquet")).map(sz).sum)
-      .getOrElse(0L)
-    ((corpus / (64L << 20)).max(32L).min(256L)).toInt
-  }
+  def defaultBuckets(sfDir: String): Int =
+    ((graft.Bench.corpusBytes(sfDir) / (64L << 20)).max(32L).min(256L)).toInt
 
   /** The declared bucketed layouts — single source of truth shared by
     * the a2/j1/j2 bucketed query bodies and Bench's ingest pre-warm

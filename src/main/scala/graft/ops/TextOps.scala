@@ -163,14 +163,6 @@ object TextOps {
   def minhashSignatureFast(shingleArr: Column, k: Int): Column =
     call_function("minhash_sig", shingleArr, lit(k))
 
-  /** LSH band key b (bands of `rowsPerBand` signature values): the banded
-    * hash that buckets near-duplicate candidates — groupBy(band) join, never
-    * an all-pairs crossJoin.
-    */
-  def bandKey(signature: Column, band: Int, rowsPerBand: Int): Column =
-    md5(concat_ws("", (0 until rowsPerBand).map(r =>
-      element_at(signature, band * rowsPerBand + r + 1)): _*))
-
   /** All band keys at once: array of `bands` md5 keys, each hashing
     * `rowsPerBand` consecutive signature values. posexplode this to get
     * (band, key) rows for the bucket join.

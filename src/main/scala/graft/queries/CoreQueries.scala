@@ -65,8 +65,8 @@ object CoreQueries {
         .select(regexp_extract(col("path"), "[^/]+/[^/]+$", 0).as("file2"),
           col("length"))
         .orderBy("file2")
-    },
-
+    }
+  ) ++
     // S3 (plumbing): expression-only binary metadata over a bounded
     // prefix scan — length, magic bytes, content fingerprint — (the
     // decode itself is the documented stub, Multimodal/Codecs). DuckDB
@@ -80,41 +80,23 @@ object CoreQueries {
     // rows either way. DuckDB can't slice BLOBs, so the oracle bounds
     // the same digest as substring(hex(content), 1, 2N) — hex-of-prefix
     // == prefix-of-hex, only the oracle pays for the full read + hex.
-    QueryDef("s3_binary_meta",
-      """SELECT regexp_extract(filename, '([^/]+)$', 1) AS file,
+    // The twin's glob keeps the dimension-class single-file tables
+    // (tens of MB at any scale point); the full form lists every table.
+    QueryDef.withSlice("s3_binary_meta", "s3_slice_binary_meta",
+        None, Some("[cnpr]*.parquet")) { (glob: Option[String]) =>
+      s"""SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file,
         |  size AS length,
         |  substring(hex(content), 1, 8) AS magic_hex,
         |  md5(substring(hex(content), 1, 2097152)) AS content_md5
-        |FROM read_blob('{SF_DIR}/*.parquet') ORDER BY file""") { (s, d) =>
-      Sources.binaryPrefixScan(s, d)
+        |FROM read_blob('{SF_DIR}/${glob.getOrElse("*.parquet")}') ORDER BY file"""
+    } { glob => (s, d) =>
+      Sources.binaryPrefixScan(s, d, glob)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
           col("length"),
           hex(substring(col("prefix"), 1, 4)).as("magic_hex"),
           md5(hex(col("prefix"))).as("content_md5"))
         .orderBy("file")
-    },
-
-    // S3 slice twin: the same bounded prefix fingerprint restricted (by
-    // glob, in BOTH engines) to the dimension-class single-file tables —
-    // ≤ tens of MB at any committed scale point. The FULL s3 oracle dies
-    // at sf30+ on DuckDB's side only: it must hex() the whole 4.1 GB
-    // lineitem blob (8.2 GB string > DuckDB's 4 GiB cap) because DuckDB
-    // 1.0 cannot slice a BLOB before hexing; Spark's prefix scan reads
-    // 1 MiB per file regardless. Pattern as t7/t11: full oracle at
-    // sf0.01-sf10, slice row keeps the operator DuckDB-checked at 300x+.
-    QueryDef("s3_slice_binary_meta",
-      """SELECT regexp_extract(filename, '([^/]+)$', 1) AS file,
-        |  size AS length,
-        |  substring(hex(content), 1, 8) AS magic_hex,
-        |  md5(substring(hex(content), 1, 2097152)) AS content_md5
-        |FROM read_blob('{SF_DIR}/[cnpr]*.parquet') ORDER BY file""") { (s, d) =>
-      Sources.binaryPrefixScan(s, d, Some("[cnpr]*.parquet"))
-        .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
-          col("length"),
-          hex(substring(col("prefix"), 1, 4)).as("magic_hex"),
-          md5(hex(col("prefix"))).as("content_md5"))
-        .orderBy("file")
-    },
+    } ++ Seq(
 
     // S4/X2/P8: KRL text -> first 6 numbers as doubles
     // (pose_filter.py:3141-3143). Round-trips lineitem columns through a

@@ -87,14 +87,10 @@ object GeoQueries {
       .otherwise(raise_error(concat(
         lit("non-finite input "), c.cast("string"))).cast("double"))
 
-  // x7/x8/x14 bodies over an explicit lineitem source, shared by the
-  // full-corpus queries and their `l_orderkey % 50` slice twins below.
-  // These three are the widest declared results (11-16 columns over
-  // every lineitem row): at the 1000x point the full DUMP (not the
-  // query, not the oracle) exceeds the dev box's disk, so the sweep
-  // checks the same pipeline on the keyed slice there — full rows stay
-  // checked at <= 300x. Per-row scalar math keyed by l_orderkey, so an
-  // input-side filter is exactly an output-side filter.
+  // x7/x8/x14/x17 bodies over an explicit lineitem source: the full
+  // queries and their `Slice.Lineitem` twins (QueryDef.withSlice).
+  // Per-row scalar math keyed by l_orderkey, so an input-side filter is
+  // exactly an output-side filter.
   private def x7Body(li: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val base = li.select(
@@ -172,8 +168,6 @@ object GeoQueries {
         col("l_partkey"), col("l_suppkey")) ++ outs: _*)
   }
 
-  // x17's body over an explicit lineitem source (shared by the full
-  // query and its slice twin; plan notes at the x17 QueryDef).
   private def x17Body(li: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val bracket = array(graft.ops.Hdr.ExposureBracket.map(lit): _*)
@@ -236,11 +230,12 @@ object GeoQueries {
       base.select(col("l_orderkey"), col("l_linenumber"),
           r9(px).as("px"), r9(py).as("py"), r9(pz).as("pz"))
         .orderBy("l_orderkey", "l_linenumber", "px", "py", "pz")
-    },
-
+    }
+  ) ++
     // X7: euler ZYX (degrees, KUKA A,B,C) -> rotation matrix
     // (point3d_transformation.py:87-104). Trig -> round 6.
-    QueryDef("x7_euler_rotation",
+    QueryDef.withSlice("x7_euler_rotation",
+      "x7_slice_euler_rotation", Slice.Lineitem)(
       """SELECT l_orderkey, l_linenumber,
         |  0.0 + floor((cos(radians(a)) * cos(radians(b))) * 1e6 + 0.5) / 1e6 AS r00,
         |  0.0 + floor((cos(radians(a)) * sin(radians(b)) * sin(radians(c)) -
@@ -261,41 +256,14 @@ object GeoQueries {
         |        CAST(l_linenumber * 30 AS DOUBLE) AS c
         |      FROM lineitem)
         |ORDER BY l_orderkey, l_linenumber,
-        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (s, d) =>
-      x7Body(T.lineitem(s, d))
-    },
-
-    // X7 slice twin (see x7Body note): same pipeline over the
-    // l_orderkey % 50 keyed slice — the form the 1000x sweep dumps.
-    QueryDef("x7_slice_euler_rotation",
-      """SELECT l_orderkey, l_linenumber,
-        |  0.0 + floor((cos(radians(a)) * cos(radians(b))) * 1e6 + 0.5) / 1e6 AS r00,
-        |  0.0 + floor((cos(radians(a)) * sin(radians(b)) * sin(radians(c)) -
-        |        sin(radians(a)) * cos(radians(c))) * 1e6 + 0.5) / 1e6 AS r01,
-        |  0.0 + floor((cos(radians(a)) * sin(radians(b)) * cos(radians(c)) +
-        |        sin(radians(a)) * sin(radians(c))) * 1e6 + 0.5) / 1e6 AS r02,
-        |  0.0 + floor((sin(radians(a)) * cos(radians(b))) * 1e6 + 0.5) / 1e6 AS r10,
-        |  0.0 + floor((sin(radians(a)) * sin(radians(b)) * sin(radians(c)) +
-        |        cos(radians(a)) * cos(radians(c))) * 1e6 + 0.5) / 1e6 AS r11,
-        |  0.0 + floor((sin(radians(a)) * sin(radians(b)) * cos(radians(c)) -
-        |        cos(radians(a)) * sin(radians(c))) * 1e6 + 0.5) / 1e6 AS r12,
-        |  0.0 + floor((-sin(radians(b))) * 1e6 + 0.5) / 1e6 AS r20,
-        |  0.0 + floor((cos(radians(b)) * sin(radians(c))) * 1e6 + 0.5) / 1e6 AS r21,
-        |  0.0 + floor((cos(radians(b)) * cos(radians(c))) * 1e6 + 0.5) / 1e6 AS r22
-        |FROM (SELECT l_orderkey, l_linenumber,
-        |        CAST(l_partkey % 360 - 180 AS DOUBLE) AS a,
-        |        CAST(l_suppkey % 180 - 90 AS DOUBLE) AS b,
-        |        CAST(l_linenumber * 30 AS DOUBLE) AS c
-        |      FROM lineitem WHERE l_orderkey % 50 = 0)
-        |ORDER BY l_orderkey, l_linenumber,
-        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (s, d) =>
-      x7Body(T.lineitem(s, d).filter(col("l_orderkey") % 50 === 0))
-    },
-
+        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (_, li) =>
+      x7Body(li)
+    } ++
     // X8: Rodrigues rvec -> matrix with built-in zero-theta guard
     // (extrinsic_calibration.py:76,105; zero vector = identity, matching
     // cv2.Rodrigues). Trig -> round 6.
-    QueryDef("x8_rodrigues",
+    QueryDef.withSlice("x8_rodrigues",
+      "x8_slice_rodrigues", Slice.Lineitem)(
       """WITH base AS (
         |  SELECT l_orderkey, l_linenumber, l_discount AS rx, l_tax AS ry,
         |         l_quantity / 100.0 AS rz
@@ -317,36 +285,9 @@ object GeoQueries {
         |  0.0 + floor((CASE WHEN th > 0.0 THEN kz * ky * v + kx * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r21,
         |  0.0 + floor((CASE WHEN th > 0.0 THEN c + kz * kz * v ELSE 1.0 END) * 1e6 + 0.5) / 1e6 AS r22
         |FROM k ORDER BY l_orderkey, l_linenumber,
-        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (s, d) =>
-      x8Body(T.lineitem(s, d))
-    },
-
-    // X8 slice twin (see x7Body note).
-    QueryDef("x8_slice_rodrigues",
-      """WITH base AS (
-        |  SELECT l_orderkey, l_linenumber, l_discount AS rx, l_tax AS ry,
-        |         l_quantity / 100.0 AS rz
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |t AS (
-        |  SELECT *, sqrt(rx * rx + ry * ry + rz * rz) AS th FROM base),
-        |k AS (
-        |  SELECT *, rx / th AS kx, ry / th AS ky, rz / th AS kz,
-        |         cos(th) AS c, sin(th) AS s, 1.0 - cos(th) AS v
-        |  FROM t)
-        |SELECT l_orderkey, l_linenumber,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN c + kx * kx * v ELSE 1.0 END) * 1e6 + 0.5) / 1e6 AS r00,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN kx * ky * v - kz * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r01,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN kx * kz * v + ky * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r02,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN ky * kx * v + kz * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r10,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN c + ky * ky * v ELSE 1.0 END) * 1e6 + 0.5) / 1e6 AS r11,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN ky * kz * v - kx * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r12,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN kz * kx * v - ky * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r20,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN kz * ky * v + kx * s ELSE 0.0 END) * 1e6 + 0.5) / 1e6 AS r21,
-        |  0.0 + floor((CASE WHEN th > 0.0 THEN c + kz * kz * v ELSE 1.0 END) * 1e6 + 0.5) / 1e6 AS r22
-        |FROM k ORDER BY l_orderkey, l_linenumber,
-        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (s, d) =>
-      x8Body(T.lineitem(s, d).filter(col("l_orderkey") % 50 === 0))
-    },
+        |  r00, r01, r02, r10, r11, r12, r20, r21, r22""") { (_, li) =>
+      x8Body(li)
+    } ++ Seq(
 
     // X9: pinhole projection with rational distortion (k1,k2,p1,p2,k4;
     // extrinsic_calibration.py:114-124, camera_calib.py:101-102).
@@ -489,13 +430,14 @@ object GeoQueries {
         |JOIN grid ON grid.k = CASE WHEN ei % 2 = 0 THEN kk.k ELSE 24 - kk.k END
         |ORDER BY pose_idx""") { (s, d) =>
       graft.pipeline.PoseGrid.poses(s).orderBy("pose_idx")
-    },
-
+    }
+  ) ++
     // X14: per-row SE(3) inverse (point3d_transformation.py:177-191):
     // R from the x7 euler columns, t from quantity/price/discount;
     // output R^T and -R^T t. Trig-derived -> round 6; partkey/suppkey
     // break ordering ties (linenumber alone is not unique).
-    QueryDef("x14_se3_inverse",
+    QueryDef.withSlice("x14_se3_inverse",
+      "x14_slice_se3_inverse", Slice.Lineitem)(
       """WITH base AS (
         |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         |    CAST(l_partkey % 360 - 180 AS DOUBLE) AS a,
@@ -531,58 +473,17 @@ object GeoQueries {
         |  0.0 + floor((-(r01 * tx + r11 * ty + r21 * tz)) * 1e6 + 0.5) / 1e6 AS it1,
         |  0.0 + floor((-(r02 * tx + r12 * ty + r22 * tz)) * 1e6 + 0.5) / 1e6 AS it2
         |FROM r
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""") { (s, d) =>
-      x14Body(T.lineitem(s, d))
-    },
-
-    // X14 slice twin (see x7Body note).
-    QueryDef("x14_slice_se3_inverse",
-      """WITH base AS (
-        |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |    CAST(l_partkey % 360 - 180 AS DOUBLE) AS a,
-        |    CAST(l_suppkey % 180 - 90 AS DOUBLE) AS b,
-        |    CAST(l_linenumber * 30 AS DOUBLE) AS c,
-        |    l_quantity AS tx, l_extendedprice / 100.0 AS ty,
-        |    l_discount * 10.0 AS tz
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |r AS (
-        |  SELECT *,
-        |    cos(radians(a)) * cos(radians(b)) AS r00,
-        |    cos(radians(a)) * sin(radians(b)) * sin(radians(c)) -
-        |      sin(radians(a)) * cos(radians(c)) AS r01,
-        |    cos(radians(a)) * sin(radians(b)) * cos(radians(c)) +
-        |      sin(radians(a)) * sin(radians(c)) AS r02,
-        |    sin(radians(a)) * cos(radians(b)) AS r10,
-        |    sin(radians(a)) * sin(radians(b)) * sin(radians(c)) +
-        |      cos(radians(a)) * cos(radians(c)) AS r11,
-        |    sin(radians(a)) * sin(radians(b)) * cos(radians(c)) -
-        |      cos(radians(a)) * sin(radians(c)) AS r12,
-        |    -sin(radians(b)) AS r20,
-        |    cos(radians(b)) * sin(radians(c)) AS r21,
-        |    cos(radians(b)) * cos(radians(c)) AS r22
-        |  FROM base)
-        |SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |  0.0 + floor((r00) * 1e6 + 0.5) / 1e6 AS i00, 0.0 + floor((r10) * 1e6 + 0.5) / 1e6 AS i01,
-        |  0.0 + floor((r20) * 1e6 + 0.5) / 1e6 AS i02,
-        |  0.0 + floor((r01) * 1e6 + 0.5) / 1e6 AS i10, 0.0 + floor((r11) * 1e6 + 0.5) / 1e6 AS i11,
-        |  0.0 + floor((r21) * 1e6 + 0.5) / 1e6 AS i12,
-        |  0.0 + floor((r02) * 1e6 + 0.5) / 1e6 AS i20, 0.0 + floor((r12) * 1e6 + 0.5) / 1e6 AS i21,
-        |  0.0 + floor((r22) * 1e6 + 0.5) / 1e6 AS i22,
-        |  0.0 + floor((-(r00 * tx + r10 * ty + r20 * tz)) * 1e6 + 0.5) / 1e6 AS it0,
-        |  0.0 + floor((-(r01 * tx + r11 * ty + r21 * tz)) * 1e6 + 0.5) / 1e6 AS it1,
-        |  0.0 + floor((-(r02 * tx + r12 * ty + r22 * tz)) * 1e6 + 0.5) / 1e6 AS it2
-        |FROM r
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""") { (s, d) =>
-      x14Body(T.lineitem(s, d).filter(col("l_orderkey") % 50 === 0))
-    },
-
+        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""") { (_, li) =>
+      x14Body(li)
+    } ++
     // S9/HDR: the pure-Spark exposure-weighted merge semantic of the
     // external hdrgen stage (handlehdrgen.py:30-33; bracket
     // calculate.py:109). Each orderkey's first 5 lineitems play the 5
     // bracketed exposures; two normalized "channels" (quantity, discount)
     // form the pixel array; oracle computes the identical weighted mean in
     // exploded long form. Aggregation-order-sensitive sums => round 6.
-    QueryDef("x17_hdr_merge",
+    QueryDef.withSlice("x17_hdr_merge",
+      "x17_slice_hdr_merge", Slice.Lineitem)(
       """WITH ranked AS (
         |  SELECT l_orderkey,
         |    row_number() OVER (PARTITION BY l_orderkey
@@ -606,7 +507,7 @@ object GeoQueries {
         |SELECT l_orderkey, channel,
         |  round(sum(greatest(0.001, 1 - abs(2*z - 1)) * z / t)
         |      / sum(greatest(0.001, 1 - abs(2*z - 1))), 6) AS radiance
-        |FROM chan GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
+        |FROM chan GROUP BY 1, 2 ORDER BY 1, 2""") { (_, li) =>
       // Plan shape (x17Body): slot assignment is row_number ≤ 5, which
       // Spark 4 plans as WindowGroupLimit — a per-partition streaming
       // top-5 per key BEFORE the exchange (Partial mode) and again after
@@ -624,43 +525,8 @@ object GeoQueries {
       // data — partkey/suppkey break the tie for a total slot order;
       // groups with <5 exposures are dropped by mergeExploded's
       // minExposures count (the oracle's HAVING count(*) >= 5 guard).
-      x17Body(T.lineitem(s, d))
-    },
-
-    // X17 slice twin (see x7Body note): l_orderkey is the window
-    // PARTITION key, so the keyed filter keeps whole exposure groups —
-    // slot assignment, the full-5 guard, and the merge are unchanged
-    // within every surviving group. The full oracle's 600M-row window
-    // sort spills past this box's disk at 1000x (measured: >46 GiB of
-    // DuckDB temp at a 70 GB memory limit, ENOSPC at 100 GB); full rows
-    // stay checked through the 300x point.
-    QueryDef("x17_slice_hdr_merge",
-      """WITH ranked AS (
-        |  SELECT l_orderkey,
-        |    row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_linenumber, l_partkey, l_suppkey) AS slot,
-        |    l_quantity / 50.0 AS z0, l_discount * 10.0 AS z1
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |five AS (SELECT * FROM ranked WHERE slot <= 5),
-        |full5 AS (
-        |  SELECT l_orderkey FROM five GROUP BY 1 HAVING count(*) >= 5),
-        |expo AS (
-        |  SELECT f.l_orderkey, slot,
-        |    CASE slot WHEN 1 THEN 1.0/200 WHEN 2 THEN 1.0/800
-        |              WHEN 3 THEN 1.0/400 WHEN 4 THEN 1.0/100
-        |              ELSE 1.0/50 END AS t,
-        |    z0, z1
-        |  FROM five f JOIN full5 USING (l_orderkey)),
-        |chan AS (
-        |  SELECT l_orderkey, 0 AS channel, z0 AS z, t FROM expo
-        |  UNION ALL
-        |  SELECT l_orderkey, 1 AS channel, z1 AS z, t FROM expo)
-        |SELECT l_orderkey, channel,
-        |  round(sum(greatest(0.001, 1 - abs(2*z - 1)) * z / t)
-        |      / sum(greatest(0.001, 1 - abs(2*z - 1))), 6) AS radiance
-        |FROM chan GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
-      x17Body(T.lineitem(s, d).filter(col("l_orderkey") % 50 === 0))
-    },
+      x17Body(li)
+    } ++ Seq(
 
     // X15: luminance scale x0.9 (lumiadjust.py:14, pcomb -s 0.9) over an
     // HDR-pixel-like float array; posexplode (never stringify doubles).

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Similarity => S, Tables => T}
+import graft.ops.{Similarity => S}
 
 /** Similarity search over the `embeddings` table (Array[Float], dim 64).
   * Brute-force cosine top-k is the oracle-checkable baseline; IVF
@@ -21,28 +21,28 @@ object SimQueries {
   val Sim3IndexIters = 3
   def sim3Index(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    S.kmeansIndex(T.embeddings(s, d), "embedding", "vec_id", Sim3IndexK,
-      cacheKey = d, iters = Sim3IndexIters)
+    ivfIndex(s, d, Slice.Embeddings.whole)
 
-  /** sim3_slice's index: same parameters over the `vec_id % 40 = 0` slice.
-    * The cacheKey MUST differ from the full index's — the memoization key
-    * otherwise collides (a filter changes neither the input file listing
-    * nor any other key component) and whichever of full/slice builds first
-    * would silently serve the other's queries.
+  /** sim3's index over `emb`'s rows. A slice's index keeps its own memo
+    * key: a filter changes neither the input file listing nor any other
+    * key component, so whichever of full/slice built first would
+    * otherwise silently serve the other's queries.
     */
-  def sim3SliceIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    S.kmeansIndex(
-      T.embeddings(s, d).filter(col("vec_id") % 40 === 0),
-      "embedding", "vec_id", Sim3IndexK,
-      cacheKey = s"$d#slice40", iters = Sim3IndexIters)
+  private def ivfIndex(s: org.apache.spark.sql.SparkSession, d: String,
+      emb: Slice): org.apache.spark.sql.DataFrame =
+    S.kmeansIndex(emb.read(s, d), "embedding", "vec_id", Sim3IndexK,
+      cacheKey = if (emb.sliced) s"$d#slice${emb.mod}" else d,
+      iters = Sim3IndexIters)
 
-  def defs: Seq[QueryDef] = Seq(
-
+  def defs: Seq[QueryDef] =
     // Brute-force cosine top-k (baseline / oracle; the query side must be
     // tiny — candidates scan stays distributed, queries broadcast).
-    QueryDef("sim1_brute_topk",
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+    // Query ids: vec_id < qBound — the twin's 200 keeps the slice's
+    // members 0, 40, 80, 120, 160, five queries like the full form's 5.
+    QueryDef.withSlice("sim1_brute_topk", "sim1_slice_brute_topk",
+        (Slice.Embeddings.whole, 5), (Slice.Embeddings, 200)) {
+      case (emb, qBound) => emb.sql(
+        s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < $qBound),
         |c AS (SELECT vec_id AS c_id, embedding AS cv FROM embeddings),
         |s AS (
         |  SELECT q_id, c_id,
@@ -56,21 +56,22 @@ object SimQueries {
         |        row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank
         |      FROM s)
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, sim FROM r
-        |WHERE rank <= 10 ORDER BY q_id, rank""") { (s, d) =>
-      val emb = T.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 5)
+        |WHERE rank <= 10 ORDER BY q_id, rank""")
+    } { case (emb, qBound) => (s, d) =>
+      val e = emb.read(s, d)
+      val q = e.filter(col("vec_id") < qBound)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val c = emb
+      val c = e
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       S.bruteTopK(q, c, 10)
         .withColumn("rank", col("rank").cast("bigint"))
         .select("q_id", "rank", "c_id", "sim")
         .orderBy("q_id", "rank")
-    },
-
+    } ++
     // IVF assignment: nearest (rounded) per-label centroid per embedding —
     // broadcast centroid table, map-side distance ranking.
-    QueryDef("sim2_ivf_assign",
+    QueryDef.withSlice("sim2_ivf_assign",
+      "sim2_slice_ivf_assign", Slice.Embeddings)(
       """WITH comp AS (
         |  SELECT label, generate_subscripts(embedding, 1) AS pos,
         |         CAST(unnest(embedding) AS DOUBLE) AS v
@@ -91,17 +92,16 @@ object SimQueries {
         |        row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_label) AS rk
         |      FROM dist)
         |SELECT vec_id, c_label AS assigned FROM r WHERE rk = 1
-        |ORDER BY vec_id""") { (s, d) =>
-      val emb = T.embeddings(s, d)
+        |ORDER BY vec_id""") { (_, emb) =>
       val cents = S.centroids(emb, "embedding", "label")
       S.assignToCentroids(emb, "embedding", "vec_id", cents)
         .orderBy("vec_id")
-    },
-
+    } ++
     // Blocked embedding near-dup: within each blocking key (label), the
     // closest pair by cosine — the blocked all-pairs shape (block sizes
     // bounded, shuffle on the block key; never a global crossJoin).
-    QueryDef("em1_blocked_closest_pair",
+    QueryDef.withSlice("em1_blocked_closest_pair",
+      "em1_slice_closest_pair", Slice.Embeddings)(
       """WITH p AS (
         |  SELECT a.label AS label, a.vec_id AS va, b.vec_id AS vb,
         |    0.0 + floor((
@@ -114,7 +114,7 @@ object SimQueries {
         |r AS (SELECT label, va, vb, cos,
         |        row_number() OVER (PARTITION BY label ORDER BY cos DESC, va, vb) AS rk
         |      FROM p)
-        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""") { (s, d) =>
+        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""") { (_, emb) =>
       // triangle-decomposed all-pairs: per-label block size capped at
       // maxBlock per task (hot labels fan out over bucket pairs instead
       // of funnelling |block|^2 rows through one task), closest pair via
@@ -130,11 +130,10 @@ object SimQueries {
       // Results are
       // partitioning-invariant (BlockedPairSpec pins bucketed == plain
       // self-join).
-      S.blockedClosestPair(T.embeddings(s, d),
+      S.blockedClosestPair(emb,
           "label", "vec_id", "embedding", maxBlock = 4096)
         .orderBy("label")
-    },
-
+    } ++
     // Embedding-cosine near-dup DEDUP: all within-block pairs above a
     // cosine threshold, reduced to a canonical-representative assignment
     // (each vec maps to the smallest-id neighbor above the threshold, or
@@ -147,7 +146,8 @@ object SimQueries {
     // flip a borderline pair between engines. tau = 0.35 is calibrated to
     // the synthetic corpus (max within-label cosine ~0.47 at small SF;
     // the sf1 datagen's exact-dup replicas sit at 1.0).
-    QueryDef("em2_cosine_near_dup",
+    QueryDef.withSlice("em2_cosine_near_dup",
+      "em2_slice_cosine_near_dup", Slice.Embeddings)(
       """WITH p AS (
         |  SELECT a.vec_id AS va, b.vec_id AS vb,
         |    0.0 + floor((
@@ -163,8 +163,7 @@ object SimQueries {
         |       coalesce(c.canon, e.vec_id) AS canonical_id,
         |       c.canon IS NOT NULL AS is_dup
         |FROM embeddings e LEFT JOIN c USING (vec_id)
-        |ORDER BY e.vec_id""") { (s, d) =>
-      val emb = T.embeddings(s, d)
+        |ORDER BY e.vec_id""") { (_, emb) =>
       val canon = S.blockedPairs(emb, "label", "vec_id", "embedding",
           maxBlock = 4096)
         .filter(col("cos") >= 0.35)
@@ -176,73 +175,7 @@ object SimQueries {
           coalesce(col("__canon"), col("vec_id")).as("canonical_id"),
           col("__canon").isNotNull.as("is_dup"))
         .orderBy("vec_id")
-    },
-
-    // ---- deterministic-slice twins: direct 100x-scale oracles --------
-    //
-    // em1/em2's full oracles are quadratic within label blocks and take
-    // DuckDB hours at the sf10 (100x) point, so full-corpus correctness
-    // there rests on sf1/sf3 rows + the BlockedPairSpec pins. These
-    // twins run the SAME blocked pipeline on a keyed slice whose oracle
-    // stays tractable at any scale: scale-up replication offsets vec_id
-    // by multiples of the base corpus size (a multiple of 40 —
-    // scripts/datagen.py), so `vec_id % 40 = 0` keeps every replica of
-    // the selected base vectors — the slice preserves the exact-dup
-    // cluster structure (cos = 1.0 ties and all) rather than sampling
-    // pairs away.
-    QueryDef("em1_slice_closest_pair",
-      """WITH emb_s AS (SELECT * FROM embeddings WHERE vec_id % 40 = 0),
-        |p AS (
-        |  SELECT a.label AS label, a.vec_id AS va, b.vec_id AS vb,
-        |    0.0 + floor((
-        |      list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-        |) * 1e6 + 0.5) / 1e6 AS cos
-        |  FROM emb_s a JOIN emb_s b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id),
-        |r AS (SELECT label, va, vb, cos,
-        |        row_number() OVER (PARTITION BY label ORDER BY cos DESC, va, vb) AS rk
-        |      FROM p)
-        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""") { (s, d) =>
-      S.blockedClosestPair(
-          T.embeddings(s, d).filter(col("vec_id") % 40 === 0),
-          "label", "vec_id", "embedding", maxBlock = 4096)
-        .orderBy("label")
-    },
-
-    QueryDef("em2_slice_cosine_near_dup",
-      """WITH emb_s AS (SELECT * FROM embeddings WHERE vec_id % 40 = 0),
-        |p AS (
-        |  SELECT a.vec_id AS va, b.vec_id AS vb,
-        |    0.0 + floor((
-        |      list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-        |) * 1e6 + 0.5) / 1e6 AS cos
-        |  FROM emb_s a JOIN emb_s b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id),
-        |c AS (SELECT vb AS vec_id, min(va) AS canon
-        |      FROM p WHERE cos >= 0.35 GROUP BY vb)
-        |SELECT e.vec_id, e.label,
-        |       coalesce(c.canon, e.vec_id) AS canonical_id,
-        |       c.canon IS NOT NULL AS is_dup
-        |FROM emb_s e LEFT JOIN c USING (vec_id)
-        |ORDER BY e.vec_id""") { (s, d) =>
-      val emb = T.embeddings(s, d).filter(col("vec_id") % 40 === 0)
-      val canon = S.blockedPairs(emb, "label", "vec_id", "embedding",
-          maxBlock = 4096)
-        .filter(col("cos") >= 0.35)
-        .groupBy(col("vb").as("vec_id"))
-        .agg(min(col("va")).as("__canon"))
-      emb.select(col("vec_id"), col("label"))
-        .join(canon, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("label"),
-          coalesce(col("__canon"), col("vec_id")).as("canonical_id"),
-          col("__canon").isNotNull.as("is_dup"))
-        .orderBy("vec_id")
-    },
-
+    } ++
     // IVF-prefiltered closest pair — em1's scale route (em1 stays as the
     // exact witness): probe each vector into its 3 nearest of the 25
     // k-means cells (same memoized index as sim3), generate candidate
@@ -258,8 +191,16 @@ object SimQueries {
     // probe-3 pair join gated on cnt/list_intersect); em3-vs-em1
     // agreement is pinned in the test suite and recorded in the README
     // (0.9 on the no-replica corpus, up from probe-2's 0.8).
-    QueryDef("em3_ivf_closest_pair",
-      """WITH e AS (
+    //
+    // hotCellCap: the twin's 256, not 1024 — slice corpora are 1/40th the
+    // population, so the full cap would never trigger there and the
+    // hot-split path would run oracle-UNCHECKED everywhere; at 256 the
+    // zipf30/sf100 slice blocks go hot and DuckDB verifies the
+    // conditional sub-split semantics end to end.
+    QueryDef.withSlice("em3_ivf_closest_pair", "em3_slice_ivf_closest_pair",
+        (Slice.Embeddings.whole, 1024), (Slice.Embeddings, 256)) {
+      case (emb, hotCellCap) => emb.sql(
+        s"""WITH e AS (
         |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
         |seeds AS (
@@ -317,100 +258,19 @@ object SimQueries {
         |  JOIN cnt ct ON ct.label = a.label AND ct.cell = a.cell
         |  LEFT JOIN sb sa ON sa.vec_id = a.vec_id
         |  LEFT JOIN sb sbb ON sbb.vec_id = b.vec_id
-        |  WHERE ct.n <= 1024
+        |  WHERE ct.n <= $hotCellCap
         |     OR len(list_intersect(coalesce(sa.subs, [a.cell]), coalesce(sbb.subs, [b.cell]))) > 0),
         |r AS (SELECT label, va, vb, cos,
         |        row_number() OVER (PARTITION BY label ORDER BY cos DESC, va, vb) AS rk
         |      FROM p)
-        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""") { (s, d) =>
-      S.ivfClosestPair(T.embeddings(s, d),
+        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""")
+    } { case (emb, hotCellCap) => (s, d) =>
+      S.ivfClosestPair(emb.read(s, d),
           "label", "vec_id", "embedding",
-          sim3Index(s, d), nProbe = 3, maxBlock = 4096, hotCellCap = 1024)
+          ivfIndex(s, d, emb), nProbe = 3, maxBlock = 4096,
+          hotCellCap = hotCellCap)
         .orderBy("label")
-    },
-
-    // em3's keyed-slice twin (same `vec_id % 40 = 0` slice + slice index
-    // as the sim3/em1 twins): keeps the IVF-prefiltered pipeline
-    // DuckDB-checked at scale points where the full Lloyd-unrolled
-    // oracle is single-node-infeasible.
-    QueryDef("em3_slice_ivf_closest_pair",
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings WHERE vec_id % 40 = 0),
-        |seeds AS (
-        |  SELECT vec_id AS c_label, list_transform(v, x -> round(x, 3)) AS c
-        |  FROM e ORDER BY vec_id LIMIT 25),
-        |a1 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN seeds c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m1 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a1 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c1 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m1 GROUP BY c_label),
-        |a2 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN c1 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m2 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a2 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c2 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m2 GROUP BY c_label),
-        |a3 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN c2 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m3 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a3 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c3 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m3 GROUP BY c_label),
-        |pr AS (
-        |  SELECT e.vec_id, e.label, e.v, c.c_label AS cell,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) AS rk
-        |  FROM e CROSS JOIN c3 c
-        |  QUALIFY rk <= 5),
-        |p2 AS (SELECT vec_id, label, v, cell FROM pr WHERE rk <= 3),
-        |sb AS (SELECT vec_id, list(cell ORDER BY rk) AS subs
-        |       FROM pr WHERE rk > 3 GROUP BY vec_id),
-        |cnt AS (SELECT label, cell, count(*) AS n FROM p2 GROUP BY label, cell),
-        |p AS (
-        |  SELECT a.label AS label, a.vec_id AS va, b.vec_id AS vb,
-        |    0.0 + floor((
-        |      list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, 65), i -> a.v[i] * a.v[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, 65), i -> b.v[i] * b.v[i]))))
-        |) * 1e6 + 0.5) / 1e6 AS cos
-        |  FROM p2 a
-        |  JOIN p2 b ON a.label = b.label AND a.cell = b.cell AND a.vec_id < b.vec_id
-        |  JOIN cnt ct ON ct.label = a.label AND ct.cell = a.cell
-        |  LEFT JOIN sb sa ON sa.vec_id = a.vec_id
-        |  LEFT JOIN sb sbb ON sbb.vec_id = b.vec_id
-        |  WHERE ct.n <= 256
-        |     OR len(list_intersect(coalesce(sa.subs, [a.cell]), coalesce(sbb.subs, [b.cell]))) > 0),
-        |r AS (SELECT label, va, vb, cos,
-        |        row_number() OVER (PARTITION BY label ORDER BY cos DESC, va, vb) AS rk
-        |      FROM p)
-        |SELECT label, va, vb, cos FROM r WHERE rk = 1 ORDER BY label""") { (s, d) =>
-      S.ivfClosestPair(
-          T.embeddings(s, d).filter(col("vec_id") % 40 === 0),
-          "label", "vec_id", "embedding",
-          sim3SliceIndex(s, d), nProbe = 3, maxBlock = 4096,
-          // 256, not the full form's 4096: slice corpora are 1/40th the
-          // population, so the production cap would never trigger and the
-          // hot-split path would run oracle-UNCHECKED everywhere — at 256
-          // the zipf30/sf100 slice blocks go hot and DuckDB verifies the
-          // conditional sub-split semantics end to end
-          hotCellCap = 256)
-        .orderBy("label")
-    },
-
+    } ++
     // IVF pruned top-k over k-means cells: probe the 8 nearest of 25
     // cells per query (~32% of candidates scanned), rank only their
     // members. This is the plan that survives 100 TB: broadcast
@@ -422,8 +282,12 @@ object SimQueries {
     // round(L2^2, 6) with label tie-break; means re-rounded to 3) and
     // then the probe-8/top-10 ranking — exact hash-match is possible
     // because every engine-sensitive float was quantized by design.
-    QueryDef("sim3_ivf_topk",
-      """WITH e AS (
+    //
+    // Query ids: vec_id < qBound, as sim1's.
+    QueryDef.withSlice("sim3_ivf_topk", "sim3_slice_ivf_topk",
+        (Slice.Embeddings.whole, 5), (Slice.Embeddings, 200)) {
+      case (emb, qBound) => emb.sql(
+        s"""WITH e AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
         |seeds AS (
@@ -466,7 +330,7 @@ object SimQueries {
         |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
         |probes AS (
         |  SELECT q.vec_id AS q_id, q.v AS qv, c.c_label AS cell
-        |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 5) q
+        |  FROM (SELECT vec_id, v FROM e WHERE vec_id < $qBound) q
         |  CROSS JOIN c3 c
         |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
         |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i]))), 6), c.c_label) <= 8),
@@ -482,160 +346,18 @@ object SimQueries {
         |  SELECT q_id, c_id, sim,
         |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
         |  FROM scored)
-        |WHERE rk <= 10 ORDER BY q_id, rank""") { (s, d) =>
-      val emb = T.embeddings(s, d)
+        |WHERE rk <= 10 ORDER BY q_id, rank""")
+    } { case (emb, qBound) => (s, d) =>
+      val e = emb.read(s, d)
       // index BUILD is memoized per corpus dir (kmeansIndex): the Lloyd
       // passes run once per JVM, queries only probe the prebuilt cells
-      val cents = sim3Index(s, d)
-      val q = emb.filter(col("vec_id") < 5)
+      val cents = ivfIndex(s, d, emb)
+      val q = e.filter(col("vec_id") < qBound)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val c = emb
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      S.ivfTopK(q, c, cents, k = 10, nProbe = 8)
-        .withColumn("rank", col("rank").cast("bigint"))
-        .orderBy("q_id", "rank")
-    },
-
-    // ---- sim-family deterministic-slice twins ------------------------
-    //
-    // Same `vec_id % 40 = 0` keyed slice as em1/em2's twins (replication
-    // offsets vec_id by multiples of 40 — scripts/datagen.py asserts it —
-    // so the slice keeps EVERY replica of the selected base vectors,
-    // preserving the exact-dup cluster structure). The need is
-    // oracle-side: sim3's full Lloyd-unrolled SQL exhausted DuckDB's
-    // temp disk at the sf100 (1000x) point — the single-node oracle,
-    // not the operator, is what stops scaling. The sliced oracles stay
-    // tractable at any committed scale point, keeping the whole sim
-    // pipeline DuckDB-checked where the full forms are skip-listed.
-    // Query ids: the slice's members below 200 (0,40,80,120,160 — five
-    // queries, mirroring the full forms' vec_id < 5).
-    QueryDef("sim1_slice_brute_topk",
-      """WITH emb_s AS (SELECT * FROM embeddings WHERE vec_id % 40 = 0),
-        |q AS (SELECT vec_id AS q_id, embedding AS qv FROM emb_s WHERE vec_id < 200),
-        |c AS (SELECT vec_id AS c_id, embedding AS cv FROM emb_s),
-        |s AS (
-        |  SELECT q_id, c_id,
-        |    round(
-        |      list_sum(list_transform(range(1, 65), i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(range(1, 65), i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(range(1, 65), i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))))),
-        |      6) AS sim
-        |  FROM q CROSS JOIN c),
-        |r AS (SELECT q_id, c_id, sim,
-        |        row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank
-        |      FROM s)
-        |SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, sim FROM r
-        |WHERE rank <= 10 ORDER BY q_id, rank""") { (s, d) =>
-      val emb = T.embeddings(s, d).filter(col("vec_id") % 40 === 0)
-      val q = emb.filter(col("vec_id") < 200)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val c = emb
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      S.bruteTopK(q, c, 10)
-        .withColumn("rank", col("rank").cast("bigint"))
-        .select("q_id", "rank", "c_id", "sim")
-        .orderBy("q_id", "rank")
-    },
-
-    QueryDef("sim2_slice_ivf_assign",
-      """WITH emb_s AS (SELECT * FROM embeddings WHERE vec_id % 40 = 0),
-        |comp AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM emb_s),
-        |cent AS (
-        |  SELECT label AS c_label, pos, round(avg(v), 3) AS cv
-        |  FROM comp GROUP BY label, pos),
-        |centl AS (
-        |  SELECT c_label, list(cv ORDER BY pos) AS centroid
-        |  FROM cent GROUP BY c_label),
-        |dist AS (
-        |  SELECT e.vec_id, c.c_label,
-        |    round(list_sum(list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]) *
-        |           (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]))), 6) AS d2
-        |  FROM emb_s e CROSS JOIN centl c),
-        |r AS (SELECT vec_id, c_label,
-        |        row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_label) AS rk
-        |      FROM dist)
-        |SELECT vec_id, c_label AS assigned FROM r WHERE rk = 1
-        |ORDER BY vec_id""") { (s, d) =>
-      val emb = T.embeddings(s, d).filter(col("vec_id") % 40 === 0)
-      val cents = S.centroids(emb, "embedding", "label")
-      S.assignToCentroids(emb, "embedding", "vec_id", cents)
-        .orderBy("vec_id")
-    },
-
-    QueryDef("sim3_slice_ivf_topk",
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings WHERE vec_id % 40 = 0),
-        |seeds AS (
-        |  SELECT vec_id AS c_label, list_transform(v, x -> round(x, 3)) AS c
-        |  FROM e ORDER BY vec_id LIMIT 25),
-        |a1 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN seeds c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m1 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a1 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c1 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m1 GROUP BY c_label),
-        |a2 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN c1 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m2 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a2 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c2 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m2 GROUP BY c_label),
-        |a3 AS (
-        |  SELECT e.vec_id, e.v, c.c_label
-        |  FROM e CROSS JOIN c2 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |m3 AS (
-        |  SELECT a.c_label, pos, round(avg(a.v[pos]), 3) AS cv
-        |  FROM a3 a CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-        |  GROUP BY a.c_label, pos),
-        |c3 AS (SELECT c_label, list(cv ORDER BY pos) AS c FROM m3 GROUP BY c_label),
-        |cand AS (
-        |  SELECT e.vec_id AS c_id, e.v AS cv, c.c_label AS cell
-        |  FROM e CROSS JOIN c3 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))), 6), c.c_label) = 1),
-        |probes AS (
-        |  SELECT q.vec_id AS q_id, q.v AS qv, c.c_label AS cell
-        |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 200) q
-        |  CROSS JOIN c3 c
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_sum(list_transform(range(1, 65), i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i]))), 6), c.c_label) <= 8),
-        |scored AS (
-        |  SELECT p.q_id, cand.c_id,
-        |    round(
-        |      list_sum(list_transform(range(1, 65), i -> p.qv[i] * cand.cv[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, 65), i -> p.qv[i] * p.qv[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, 65), i -> cand.cv[i] * cand.cv[i])))),
-        |      6) AS sim
-        |  FROM probes p JOIN cand ON cand.cell = p.cell)
-        |SELECT q_id, CAST(rk AS BIGINT) AS rank, c_id, sim FROM (
-        |  SELECT q_id, c_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
-        |  FROM scored)
-        |WHERE rk <= 10 ORDER BY q_id, rank""") { (s, d) =>
-      val emb = T.embeddings(s, d).filter(col("vec_id") % 40 === 0)
-      val cents = sim3SliceIndex(s, d)
-      val q = emb.filter(col("vec_id") < 200)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val c = emb
+      val c = e
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       S.ivfTopK(q, c, cents, k = 10, nProbe = 8)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("q_id", "rank")
     }
-  )
 }

@@ -190,12 +190,13 @@ object TextQueries {
           (length(col("norm")) - 2).cast("bigint").as("n_grams"),
           call_function("chargram_distinct", col("norm"), lit(3))
             .cast("bigint").as("n_distinct"))
-    },
-
+    }
+  ) ++
     // Near-dup candidate pairs: shingles(3) -> 8 MinHashes -> 4 bands of 2
     // -> bucket self-join. Candidates << n^2 (29 pairs of 124,750 possible
     // at sf0.01) — the banded join IS the scale story.
-    QueryDef("t6_near_dup_candidates",
+    QueryDef.withSlice("t6_near_dup_candidates",
+      "t6_slice_near_dup_candidates", Slice.Documents)(
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
@@ -230,16 +231,16 @@ object TextQueries {
         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         |FROM bands a JOIN bands b ON a.bk = b.bk AND a.b = b.b
         |  AND a.doc_id < b.doc_id
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      Dedup.nearDupCandidates(T.documents(s, d), "doc_id", "text")
+        |ORDER BY doc_a, doc_b""") { (_, docs) =>
+      Dedup.nearDupCandidates(docs, "doc_id", "text")
         .orderBy("doc_a", "doc_b")
-    },
-
+    } ++
     // n-gram Jaccard verification of the LSH candidates: the banded join
     // proposes pairs, exact shingle-set Jaccard scores them — the full
     // two-stage near-dup pipeline (candidates << n^2, exact check only
     // on candidates).
-    QueryDef("t8_jaccard_verify",
+    QueryDef.withSlice("t8_jaccard_verify",
+      "t8_slice_jaccard_verify", Slice.Documents)(
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
@@ -281,12 +282,18 @@ object TextQueries {
         |    AS jaccard
         |FROM cand JOIN sh sa ON sa.doc_id = doc_a
         |          JOIN sh sb ON sb.doc_id = doc_b
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      jaccardVerify(s, T.documents(s, d))
-    },
-
+        |ORDER BY doc_a, doc_b""") { (_, docs) =>
+      // candidate banding AND the per-pair sorted-xxhash64 intersect run
+      // once per DISTINCT shingle set, expanded to doc pairs afterwards
+      // (intra-set pairs are Jaccard 1.0): the doc-level predecessor
+      // shuffled ~32M pairs x two ~45-long[] payloads (~23 GB) at sf10
+      // where the set-level plan shuffles a few thousand (Dedup's bySet)
+      Dedup.jaccardVerifiedPairs(docs, "doc_id", "text")
+        .orderBy("doc_a", "doc_b")
+    } ++
     // SimHash document fingerprint: one md5 per token, 32 sign bits.
-    QueryDef("t7_simhash",
+    QueryDef.withSlice("t7_simhash",
+      "t7_slice_simhash", Slice.Documents)(
       """WITH toks AS (
         |  SELECT doc_id,
         |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS t
@@ -304,7 +311,7 @@ object TextQueries {
         |sums AS (SELECT doc_id, j, sum(bit * 2 - 1) AS c FROM bits GROUP BY doc_id, j)
         |SELECT doc_id,
         |  string_agg(CASE WHEN c > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
-        |FROM sums GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
+        |FROM sums GROUP BY doc_id ORDER BY doc_id""") { (s, docs) =>
       // codegen'd one-pass form; the HOF reference twin (TX.simhash32)
       // evaluates 32 interpreted pow/floor lambdas per TOKEN — equality
       // of the two forms is pinned in DedupSpec.
@@ -315,14 +322,14 @@ object TextQueries {
       // the tokenizer's whitespace set IS Java's \s) without running the
       // tokenizer below the sort at all.
       graft.expr.GraftFunctions.register(s)
-      T.documents(s, d)
+      docs
         .select(col("doc_id"), col("text"))
         .filter(col("text").rlike("\\S"))
         .orderBy("doc_id")
         .select(col("doc_id"),
           call_function("simhash32_bits", TX.tokensLower(col("text")))
             .as("simhash"))
-    },
+    } ++ Seq(
 
     // BPE-ish sub-word tokenizer (letter runs / digit runs / single
     // punctuation — TextOps.bpeTokens): token count + distinct-token
@@ -355,13 +362,14 @@ object TextQueries {
           col("__bs.n_bpe").as("n_bpe"),
           col("__bs.n_bpe_distinct").as("n_bpe_distinct"))
         .orderBy("doc_id")
-    },
-
+    }
+  ) ++
     // Winnowing document fingerprint (rolling-hash k-grams + window
     // minima, the classic near-dup fingerprint): codegen'd one-pass
     // Rabin-Karp in Spark (expr/WinnowFp), O(n*k) list arithmetic in the
     // oracle — exact longs both sides (no modulus; k=8 keeps sums < 2^51).
-    QueryDef("t10_winnow_fp",
+    QueryDef.withSlice("t10_winnow_fp",
+      "t10_slice_winnow_fp", Slice.Documents)(
       """WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN length(text) >= 8 THEN
@@ -380,7 +388,7 @@ object TextQueries {
         |  FROM g)
         |SELECT doc_id, generate_subscripts(fps, 1) - 1 AS pos,
         |  unnest(fps) AS fp
-        |FROM m ORDER BY doc_id, pos""") { (s, d) =>
+        |FROM m ORDER BY doc_id, pos""") { (s, docs) =>
       graft.expr.GraftFunctions.register(s)
       // winnow + explode ABOVE the total sort (r21): doc_id is unique,
       // so sorting docs by doc_id and THEN exploding yields exactly the
@@ -389,14 +397,13 @@ object TextQueries {
       // sorted row order. The rolling-hash fingerprint runs once per doc
       // (not per sort-sampling pass) and the exchange moves one row per
       // doc instead of one per fingerprint.
-      T.documents(s, d)
+      docs
         .select(col("doc_id"), col("text"))
         .orderBy("doc_id")
         .select(col("doc_id"),
           TX.winnowFingerprintsFast(col("text"), 8, 4).as("fps"))
         .select(col("doc_id"), posexplode(col("fps")).as(Seq("pos", "fp")))
-    },
-
+    } ++
     // SimHash near-dup JOIN (not just the fingerprint): 64-bit simhash ->
     // 4 bands of 16 bits -> bucket self-join -> exact Hamming <= 3.
     // Lossless by pigeonhole (3 flips touch <= 3 of 4 bands), and the
@@ -405,7 +412,8 @@ object TextQueries {
     // banded too — a brute-force all-pairs oracle is O(n^2) and would
     // stall the sf1+ scale-point sweeps; banded == brute-force is
     // instead pinned Spark-side in DedupSpec at sf0.001.
-    QueryDef("t11_simhash_near_dup",
+    QueryDef.withSlice("t11_simhash_near_dup",
+      "t11_slice_simhash_near_dup", Slice.Documents)(
       """WITH toks AS (
         |  SELECT doc_id,
         |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS t
@@ -440,246 +448,8 @@ object TextQueries {
         |           THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
         |  FROM cand)
         |WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      Dedup.simhashNearDup(T.documents(s, d), "doc_id", "text")
+        |ORDER BY doc_a, doc_b""") { (_, docs) =>
+      Dedup.simhashNearDup(docs, "doc_id", "text")
         .orderBy("doc_a", "doc_b")
-    },
-
-    // ---- deterministic-slice twins: direct 100x-scale oracles --------
-    //
-    // t7/t11's full oracles explode docs x tokens x bits in SQL and
-    // exceed DuckDB's memory at the sf10 (100x) scale point, so their
-    // full-corpus correctness there rests on sf1/sf3 rows + test pins.
-    // These twins run the SAME pipeline on a keyed slice chosen so the
-    // oracle stays tractable at ANY scale while the slice preserves the
-    // structure that makes the query interesting: scale-up replication
-    // offsets doc_id by multiples of the base corpus size (a multiple of
-    // 50 — scripts/datagen.py), so `doc_id % 50 = 0` keeps every replica
-    // of the selected base docs and the slice stays dup-cluster-rich at
-    // 100x (it is NOT a pair-destroying random sample). At tiny sf the
-    // slice may contain no near-dup pair — an empty result both engines
-    // agree on.
-    QueryDef("t7_slice_simhash",
-      """WITH documents_s AS (SELECT * FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS t
-        |  FROM documents_s),
-        |th AS (SELECT doc_id, md5(t) AS h FROM toks),
-        |bits AS (
-        |  SELECT doc_id, j,
-        |    CASE j % 4
-        |      WHEN 0 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 8 % 2
-        |      WHEN 1 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 4 % 2
-        |      WHEN 2 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 2 % 2
-        |      ELSE (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) % 2
-        |    END AS bit
-        |  FROM th CROSS JOIN (SELECT unnest(range(0, 32)) AS j)),
-        |sums AS (SELECT doc_id, j, sum(bit * 2 - 1) AS c FROM bits GROUP BY doc_id, j)
-        |SELECT doc_id,
-        |  string_agg(CASE WHEN c > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
-        |FROM sums GROUP BY doc_id ORDER BY doc_id""") { (s, d) =>
-      // same codegen'd compute-above-sort form as the full t7 (its note)
-      graft.expr.GraftFunctions.register(s)
-      T.documents(s, d).filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id"), col("text"))
-        .filter(col("text").rlike("\\S"))
-        .orderBy("doc_id")
-        .select(col("doc_id"),
-          call_function("simhash32_bits", TX.tokensLower(col("text")))
-            .as("simhash"))
-    },
-
-    QueryDef("t11_slice_simhash_near_dup",
-      """WITH documents_s AS (SELECT * FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS t
-        |  FROM documents_s),
-        |th AS (SELECT doc_id, md5(t) AS h FROM toks),
-        |bits AS (
-        |  SELECT doc_id, j,
-        |    CASE j % 4
-        |      WHEN 0 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 8 % 2
-        |      WHEN 1 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 4 % 2
-        |      WHEN 2 THEN (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) // 2 % 2
-        |      ELSE (strpos('0123456789abcdef', substr(h, j // 4 + 1, 1)) - 1) % 2
-        |    END AS bit
-        |  FROM th CROSS JOIN (SELECT unnest(range(0, 64)) AS j)),
-        |sums AS (SELECT doc_id, j, sum(bit * 2 - 1) AS c FROM bits GROUP BY doc_id, j),
-        |fp AS (
-        |  SELECT doc_id,
-        |    string_agg(CASE WHEN c > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS sh
-        |  FROM sums GROUP BY doc_id),
-        |bands AS (
-        |  SELECT doc_id, sh, b, substr(sh, CAST(16 * b + 1 AS INT), 16) AS bk
-        |  FROM fp CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         a.sh AS sha, b.sh AS shb
-        |  FROM bands a JOIN bands b ON a.b = b.b AND a.bk = b.bk
-        |    AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM (
-        |  SELECT doc_a, doc_b,
-        |    CAST(list_sum(list_transform(range(1, 65), i ->
-        |      CASE WHEN substr(sha, CAST(i AS INT), 1) <> substr(shb, CAST(i AS INT), 1)
-        |           THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-        |  FROM cand)
-        |WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      Dedup.simhashNearDup(
-          T.documents(s, d).filter(col("doc_id") % 50 === 0),
-          "doc_id", "text")
-        .orderBy("doc_a", "doc_b")
-    },
-
-    // t6/t10 slice twins: their FULL oracles are the two slowest DuckDB
-    // rows at sf10 (193 s and 142 s single-run) — tractable today, but
-    // the next scale point (sf30+) strands them exactly like t7/t11's.
-    // Same replica-preserving `doc_id % 50` slice (see the block comment
-    // above t7_slice): the slice oracle stays O(base-corpus) at ANY
-    // scale while still exercising the full banded-LSH / winnowing
-    // pipeline over a dup-cluster-rich subset.
-    QueryDef("t6_slice_near_dup_candidates",
-      """WITH documents_s AS (SELECT * FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
-        |  FROM documents_s),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, len(tk) - 2),
-        |      i -> tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3]) AS shingles
-        |  FROM toks WHERE len(tk) >= 3),
-        |bases AS (
-        |  SELECT doc_id, list_transform(list_transform(shingles, s -> md5(s)), h ->
-        |    (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 268435456
-        |  + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 16777216
-        |  + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 1048576
-        |  + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 65536
-        |  + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 4096
-        |  + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1) * 256
-        |  + (strpos('0123456789abcdef', substr(h, 7, 1)) - 1) * 16
-        |  + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1)) AS bs
-        |  FROM sh),
-        |sig AS (
-        |  SELECT doc_id, list_transform(range(0, 8), i ->
-        |    list_min(list_transform(bs, x ->
-        |      ([967079, 825269, 741103, 597269, 447841, 330287, 225961, 121021][i+1] * x
-        |       + [266489, 372893, 449287, 532951, 654803, 713681, 829601, 904441][i+1])
-        |      % 4294967311))) AS sg
-        |  FROM bases),
-        |bands AS (
-        |  SELECT doc_id, b,
-        |    md5(CAST(sg[2*b+1] AS VARCHAR) || CAST(sg[2*b+2] AS VARCHAR)) AS bk
-        |  FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b))
-        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |FROM bands a JOIN bands b ON a.bk = b.bk AND a.b = b.b
-        |  AND a.doc_id < b.doc_id
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      Dedup.nearDupCandidates(
-          T.documents(s, d).filter(col("doc_id") % 50 === 0),
-          "doc_id", "text")
-        .orderBy("doc_a", "doc_b")
-    },
-
-    QueryDef("t10_slice_winnow_fp",
-      """WITH documents_s AS (SELECT * FROM documents WHERE doc_id % 50 = 0),
-        |g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(text) >= 8 THEN
-        |      list_transform(range(1, length(text) - 6), i ->
-        |        CAST(list_sum(list_transform(range(0, 8), j ->
-        |          CAST(unicode(substr(text, CAST(i + j AS INT), 1)) AS BIGINT)
-        |            * CAST(pow(31, 7 - j) AS BIGINT))) AS BIGINT))
-        |    ELSE [] END AS hs
-        |  FROM documents_s),
-        |m AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(hs) >= 4 THEN
-        |      list_sort(list_distinct(list_transform(range(1, len(hs) - 2),
-        |        t -> list_min(hs[t:t+3]))))
-        |    ELSE [] END AS fps
-        |  FROM g)
-        |SELECT doc_id, generate_subscripts(fps, 1) - 1 AS pos,
-        |  unnest(fps) AS fp
-        |FROM m ORDER BY doc_id, pos""") { (s, d) =>
-      // same compute-above-sort form as the full t10 (its note)
-      graft.expr.GraftFunctions.register(s)
-      T.documents(s, d).filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id")
-        .select(col("doc_id"),
-          TX.winnowFingerprintsFast(col("text"), 8, 4).as("fps"))
-        .select(col("doc_id"), posexplode(col("fps")).as(Seq("pos", "fp")))
-    },
-
-    // t8's slice twin: the full Jaccard-verify oracle is the single
-    // heaviest DuckDB row (~800 s single-run at sf10, candidate pairs
-    // grow ~quadratically with the dup factor) — from sf30 it joins the
-    // skip-list alongside t6/t10, and this twin keeps the whole
-    // candidates -> exact-Jaccard verify pipeline directly hash-checked
-    // at every scale point on the same replica-preserving slice.
-    QueryDef("t8_slice_jaccard_verify",
-      """WITH documents_s AS (SELECT * FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
-        |  FROM documents_s),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(0, len(tk) - 2),
-        |      i -> tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3])) AS shset
-        |  FROM toks WHERE len(tk) >= 3),
-        |bases AS (
-        |  SELECT doc_id, list_transform(list_transform(shset, s -> md5(s)), h ->
-        |    (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 268435456
-        |  + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 16777216
-        |  + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 1048576
-        |  + (strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 65536
-        |  + (strpos('0123456789abcdef', substr(h, 5, 1)) - 1) * 4096
-        |  + (strpos('0123456789abcdef', substr(h, 6, 1)) - 1) * 256
-        |  + (strpos('0123456789abcdef', substr(h, 7, 1)) - 1) * 16
-        |  + (strpos('0123456789abcdef', substr(h, 8, 1)) - 1)) AS bs
-        |  FROM sh),
-        |sig AS (
-        |  SELECT doc_id, list_transform(range(0, 8), i ->
-        |    list_min(list_transform(bs, x ->
-        |      ([967079, 825269, 741103, 597269, 447841, 330287, 225961, 121021][i+1] * x
-        |       + [266489, 372893, 449287, 532951, 654803, 713681, 829601, 904441][i+1])
-        |      % 4294967311))) AS sg
-        |  FROM bases),
-        |bands AS (
-        |  SELECT doc_id, b,
-        |    md5(CAST(sg[2*b+1] AS VARCHAR) || CAST(sg[2*b+2] AS VARCHAR)) AS bk
-        |  FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM bands a JOIN bands b ON a.bk = b.bk AND a.b = b.b
-        |    AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_intersect(sa.shset, sb.shset)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(sa.shset, sb.shset))), 6)
-        |    AS jaccard
-        |FROM cand JOIN sh sa ON sa.doc_id = doc_a
-        |          JOIN sh sb ON sb.doc_id = doc_b
-        |ORDER BY doc_a, doc_b""") { (s, d) =>
-      jaccardVerify(s, T.documents(s, d).filter(col("doc_id") % 50 === 0))
     }
-  )
-
-  /** Shared body of t8_jaccard_verify and its `doc_id % 50` slice twin:
-    * banded-MinHash candidate pairs scored with EXACT shingle-set
-    * Jaccard — delegated to [[Dedup.jaccardVerifiedPairs]], which runs
-    * the candidate banding AND the per-pair sorted-xxhash64 array
-    * intersect once per DISTINCT shingle set and expands to doc pairs
-    * afterwards (intra-set pairs are Jaccard 1.0 by definition). See
-    * that method and [[Dedup]]'s bySet for the scale analysis; the
-    * doc-level predecessor shuffled ~32M pairs × two ~45-long[] payloads
-    * (~23 GB) at sf10 where the set-level plan shuffles a few thousand.
-    */
-  private def jaccardVerify(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Dedup.jaccardVerifiedPairs(docs, "doc_id", "text")
-      .orderBy("doc_a", "doc_b")
 }

@@ -72,6 +72,42 @@ class DeclaredQueriesSpec extends SparkSpec {
         spark.sparkContext.getPersistentRDDs.keys.mkString(","))
   }
 
+  test("a slice twin equals its full query run on a slice-only corpus") {
+    // One family per sliced table, each non-empty at sf0.01. The slice is
+    // written out with its own predicate here, not through queries.Slice,
+    // so a twin that filters the wrong table or column, or whose body
+    // reads anything from the unsliced corpus, returns other rows than
+    // the full query over a corpus that holds only the slice.
+    import org.apache.spark.sql.functions.col
+    val whole = sf("sf0.01")
+    val cases = Seq(
+      ("lineitem", col("l_orderkey") % 50 === 0,
+        "x7_euler_rotation", "x7_slice_euler_rotation"),
+      ("embeddings", col("vec_id") % 40 === 0,
+        "em2_cosine_near_dup", "em2_slice_cosine_near_dup"),
+      ("documents", col("doc_id") % 50 === 0,
+        "t7_simhash", "t7_slice_simhash"))
+    graft.expr.GraftFunctions.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-slice")
+    try {
+      for ((table, keep, full, twin) <- cases) {
+        graft.ops.Tables.t(spark, whole, table).filter(keep)
+          .write.parquet(s"$dir/$table.parquet")
+        val want = SparkEntry.queries(twin)(spark, whole).collect().toSeq
+        val got = SparkEntry.queries(full)(spark, dir.toString)
+          .collect().toSeq
+        assert(want.nonEmpty, s"$twin is empty at sf0.01")
+        val same = got == want // not inline: the macro would print every row
+        assert(same, s"$full on the $table slice != $twin: " +
+          s"${got.size} vs ${want.size} rows")
+      }
+    } finally {
+      graft.ops.Caches.releaseAll(spark)
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+  }
+
   test("declared query names are unique and each oracle has a query") {
     val names = SparkEntry.allDefs.map(_.name)
     assert(names.distinct.size == names.size,

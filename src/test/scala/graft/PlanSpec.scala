@@ -147,13 +147,28 @@ class PlanSpec extends SparkSpec {
     // above the exchange and the exchange must carry the narrow
     // (keys + tx/ty/tz) rows — no transcendental anywhere at or below
     // the exchange, where range-boundary sampling would re-run it.
-    val p = plan("x14_se3_inverse")
-    val exIdx = p.indexOf("Exchange rangepartitioning")
-    assert(exIdx >= 0, s"x14 lost its range exchange:\n${p.take(1200)}")
-    assert(!p.substring(exIdx).contains("SIN("),
+    val lines = plan("x14_se3_inverse").linesIterator.toVector
+    val p = lines.mkString("\n")
+    val ex = lines.indexWhere(_.contains("Exchange rangepartitioning"))
+    assert(ex >= 1, s"x14 lost its range exchange:\n${p.take(1200)}")
+    // the global Sort on the four keys sits directly on the exchange: the
+    // output order comes from it, not from a terminal orderBy, so an
+    // optimizer that drops it (EliminateSorts) must fail here
+    val keys = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+      .map(k => raw"$k#\d+L? ASC NULLS FIRST").mkString(", ")
+    val sort = raw".*\bSort \[$keys\], true, \d+"
+    assert(lines(ex - 1).matches(sort),
+      s"x14's global Sort is not directly above the exchange:\n${p.take(1200)}")
+    // the staged trig (Geometry.eulerZyxStaged) prints as
+    // SIN(RADIANS(cast(... as double))) AS __s{a,b,c}
+    val trig = "SIN(RADIANS("
+    assert(!lines.drop(ex).exists(_.contains(trig)),
       s"x14 trig slipped below the range exchange:\n${p.take(1200)}")
-    assert(p.indexOf("SIN(") >= 0 && p.indexOf("SIN(") < exIdx,
-      s"x14 trig not computed above the exchange:\n${p.take(1200)}")
+    val staged = """SIN\(RADIANS\(cast\(.*? as double\)\)\) AS __s([abc])#\d+""".r
+    val above = lines.take(ex - 1).flatMap(l =>
+      staged.findAllMatchIn(l).map(_.group(1))).toSet
+    assert(above == Set("a", "b", "c"),
+      s"x14 staged trig not computed above the sort:\n${p.take(1200)}")
   }
 
   test("w9: scalable ordinal has no single-partition Window task") {
