@@ -168,10 +168,6 @@ object GraftFunctions {
           ArraySumAgg(children(0))
         }),
       (
-        FunctionIdentifier("normal_eq_agg"),
-        new ExpressionInfo(classOf[NormalEqAgg].getName, "normal_eq_agg"),
-        (children: Seq[Expression]) => NormalEqAgg(children)),
-      (
         FunctionIdentifier("simhash64"),
         new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
         (children: Seq[Expression]) => {

@@ -7,6 +7,14 @@ import org.apache.spark.sql.functions._
   * so every op is codegen-friendly, pushdown-transparent, and DuckDB-oracle
   * comparable.
   *
+  * One scalar kernel sits beside them: `projectCvScalar`, the
+  * operation-order twin of `rigidTransform` + `projectPointCv`. The
+  * calibration DAG's per-point passes (Extrinsic.refine / reprojectionStats,
+  * Intrinsic.refineBundle / meanReprojError) run it inside typed Dataset
+  * passes with the parameters in the closure, so an LM step re-plans and
+  * re-compiles nothing; the Column forms stay as its reference and for the
+  * query library.
+  *
   * Re-expresses the reference's per-record numpy/cv2 math
   * (reference: point3d_transformation.py:87-120 euler/transform,
   * extrinsic_calibration.py:114-124 pinhole projection,
@@ -186,6 +194,37 @@ object Geometry {
     val yd = yn * radial + lit(p1) * (r2 + lit(2.0) * yn * yn) +
       lit(2.0 * p2) * xn * yn
     (lit(fx) * xd + lit(cx), lit(fy) * yd + lit(cy))
+  }
+
+  /** Row-at-a-time twin of `rigidTransform(t, x, y, z)` followed by
+    * `projectPointCv(.., k, dist)`: world (x, y, z) -> camera frame through
+    * the row-major 4x4 `t` -> full cv2 rational-model pixel (u, v). Every
+    * sum and product is written in the Column forms' left-associated order
+    * (`2.0 * p1` folded first, as the literal there), and JVM doubles are
+    * strict IEEE, so the result has the same bits as the Catalyst form.
+    * `k` is row-major 9, `dist` the cv2 layout (at least 8 entries).
+    * Domain: camera-frame z != 0 and a non-zero radial denominator; there
+    * the Column form raises or returns null (ANSI / non-ANSI division),
+    * while this kernel returns IEEE infinities or NaN.
+    */
+  def projectCvScalar(t: Array[Double], k: Array[Double], dist: Array[Double],
+      x: Double, y: Double, z: Double): (Double, Double) = {
+    val xc = t(0) * x + t(1) * y + t(2) * z + t(3)
+    val yc = t(4) * x + t(5) * y + t(6) * z + t(7)
+    val zc = t(8) * x + t(9) * y + t(10) * z + t(11)
+    val k1 = dist(0); val k2 = dist(1); val p1 = dist(2); val p2 = dist(3)
+    val k3 = dist(4); val k4 = dist(5); val k5 = dist(6); val k6 = dist(7)
+    val xn = xc / zc
+    val yn = yc / zc
+    val r2 = xn * xn + yn * yn
+    val radial =
+      (1.0 + k1 * r2 + k2 * r2 * r2 + k3 * r2 * r2 * r2) /
+      (1.0 + k4 * r2 + k5 * r2 * r2 + k6 * r2 * r2 * r2)
+    val xd = xn * radial + (2.0 * p1) * xn * yn +
+      p2 * (r2 + 2.0 * xn * xn)
+    val yd = yn * radial + p1 * (r2 + 2.0 * yn * yn) +
+      (2.0 * p2) * xn * yn
+    (k(0) * xd + k(2), k(4) * yd + k(5))
   }
 
   /** Apply a 3x3 homography (row-major 9 doubles) to a 2D point

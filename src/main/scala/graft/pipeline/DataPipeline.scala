@@ -73,7 +73,7 @@ object DataPipeline {
 
     val extrinsic = runner.stage("extrinsic") {
       // cached for the optimizer's repeated passes (each LM iteration
-      // aggregates over it), released once the stats are computed
+      // is a pass over it), released once the stats are computed
       matched.cache()
       try {
         val init = Extrinsic.initPnp(matched, k)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Geometry
 
@@ -11,14 +11,18 @@ import graft.ops.Geometry
   *   B. init: per-pose planar PnP via mapGroups over the first N poses,
   *      column-mean of rvec/tvec (extrinsic_calibration.py:41-79)
   *   C. refine: driver-side Levenberg-Marquardt on the 6 params, where
-  *      every iteration's J^T J / J^T r / cost are ONE distributed
-  *      aggregation over the corner table (the Spark MLlib pattern —
-  *      at 100 TB each iteration is a single shuffle-light pass)
+  *      every iteration's J^T J / J^T r / cost are ONE mapPartitions pass
+  *      over the corner table, each partition folded to 28 doubles (the
+  *      Spark MLlib pattern — at 100 TB each iteration is a single
+  *      shuffle-free pass)
   *   D. evaluate: per-point reprojection error -> per-pose mean -> grand
   *      stats (X5 / A2 / A1), golden-matched against camera_extrinsic.npz
   *
-  * All per-point math is Catalyst expressions (Geometry.projectPointCv);
-  * only the 6-parameter solve itself lives on the driver.
+  * All per-point math is the scalar kernel Geometry.projectCvScalar (the
+  * bit-identical twin of Geometry.rigidTransform + projectPointCv) inside
+  * typed Dataset passes, with the parameters in the closure: an LM step
+  * re-plans and re-compiles nothing. Only the 6-parameter solve itself
+  * lives on the driver.
   */
 object Extrinsic {
 
@@ -30,32 +34,42 @@ object Extrinsic {
     pix.join(wld, Seq("pose_id", "corner_idx"))
   }
 
-  /** Per-point reprojection error for a given extrinsic T (row-major 16):
-    * world -> camera (X6) -> project (X9, full cv2 rational model) ->
-    * Euclidean distance to the detected pixel (X5).
-    *
-    * World coordinates are quantized through float32 first — the reference
-    * casts them with dtype=np.float32 before cv2.projectPoints
-    * (extrinsic_calibration.py:197-198), and the golden
-    * reprojection_stats are only reproducible to 1e-6 with that
-    * quantization (verified: max deviation 7e-14 with it, 4e-5 without).
+  /** (u, v, x, y, z) of every corner as doubles, rows with a null among
+    * them dropped: the typed input of refine and reprojectionStats. A null
+    * input makes a null residual, which sum() and the six stats skip, so
+    * dropping the row here changes no sum, average or order.
     */
-  def withErrors(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
-      t: Seq[Double]): DataFrame = {
-    def f32(c: org.apache.spark.sql.Column) = c.cast("float").cast("double")
-    val (cx, cy, cz) = Geometry.rigidTransform(t,
-      f32(col("x")), f32(col("y")), f32(col("z")))
-    val (u, v) = Geometry.projectPointCv(cx, cy, cz, k, dist)
-    corners.withColumn("err",
-      Geometry.norm2(u - col("u"), v - col("v")))
+  private def points(corners: DataFrame)
+      : Dataset[(Double, Double, Double, Double, Double)] = {
+    val spark = corners.sparkSession
+    import spark.implicits._
+    corners.select(Seq("u", "v", "x", "y", "z").map(c => col(c).cast("double")): _*)
+      .na.drop().as[(Double, Double, Double, Double, Double)]
   }
 
   /** Stage D: mean/std_pop/max/min/median/RMSE over all point errors
     * (extrinsic_calibration.py:216-226). Returns the 6 stats.
+    *
+    * The per-point error is world -> camera (X6) -> project (X9, full cv2
+    * rational model) -> Euclidean distance to the detected pixel (X5), for
+    * the extrinsic T (row-major 16). World coordinates are quantized
+    * through float32 first — the reference casts them with
+    * dtype=np.float32 before cv2.projectPoints
+    * (extrinsic_calibration.py:197-198), and the golden
+    * reprojection_stats are only reproducible to 1e-6 with that
+    * quantization (verified: max deviation 7e-14 with it, 4e-5 without).
     */
   def reprojectionStats(corners: DataFrame, k: Seq[Double],
       dist: Seq[Double], t: Seq[Double]): Map[String, Double] = {
-    val e = withErrors(corners, k, dist, t)
+    val spark = corners.sparkSession
+    import spark.implicits._
+    val (ta, ka, da) = (t.toArray, k.toArray, dist.toArray)
+    val e = points(corners).map { case (u, v, x, y, z) =>
+      val (up, vp) = Geometry.projectCvScalar(ta, ka, da,
+        x.toFloat.toDouble, y.toFloat.toDouble, z.toFloat.toDouble)
+      val (du, dv) = (up - u, vp - v)
+      math.sqrt(du * du + dv * dv)
+    }.toDF("err")
     val r = e.agg(
       avg("err"), stddev_pop(col("err")), max("err"), min("err"),
       median(col("err")), sqrt(avg(col("err") * col("err")))).collect()(0)
@@ -124,49 +138,67 @@ object Extrinsic {
   }
 
   /** Stage C: Levenberg-Marquardt (Lm.minimize) over [rvec,tvec]. Each
-    * iteration's normal equations come from one job that projects the
-    * base + 6 finite-difference residual expressions to 14
-    * named columns (whole-stage codegen evaluates each residual tree
-    * once per row) and folds them through ONE `normal_eq_agg` — a single
-    * TypedImperativeAggregate whose 28-double buffer (cost, J^T J upper
-    * triangle, J^T r) partial-aggregates map-side, so one iteration
-    * shuffles #partitions x 28 doubles and exactly 28 doubles cross the
-    * driver boundary (SURVEY §4's 100-TB accumulator form; previously 28
-    * separate sum() columns); each damping attempt is one sum() job.
-    * Returns the parameters and the sum of squared residuals at them.
+    * iteration's normal equations are one mapPartitions job over the
+    * typed (u, v, x, y, z) corners: per row the kernel projects at the
+    * base parameters and at the 6 forward-difference points, and the
+    * partition folds the residual and Jacobian row into one 28-double
+    * buffer [cost, J^T J upper triangle, J^T r]. The #partitions x 28
+    * doubles are collected and summed on the driver in partition order
+    * (SURVEY §4's 100-TB accumulator form: what crosses the driver
+    * boundary is bounded by the partition count, never by the corners).
+    * Each damping attempt is one mapPartitions job of per-partition sums
+    * of squared residuals. The parameters ride in the closures, so no
+    * step re-plans or re-compiles a query. Rows with a null input add
+    * nothing. Returns the parameters and the sum of squared residuals at
+    * them.
     */
   def refine(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
       init: Seq[Double], maxIter: Int = 50, eps: Double = 1e-6)
       : (Seq[Double], Double) = {
-    graft.expr.GraftFunctions.register(corners.sparkSession)
-
-    def residualCols(p: Seq[Double]) = {
-      val t = paramsToT(p)
-      val (cx, cy, cz) = Geometry.rigidTransform(t, col("x"), col("y"), col("z"))
-      val (u, v) = Geometry.projectPointCv(cx, cy, cz, k, dist)
-      (u - col("u"), v - col("v"))
-    }
+    val spark = corners.sparkSession
+    import spark.implicits._
+    val pts = points(corners)
+    val (ka, da) = (k.toArray, dist.toArray)
 
     // the job-running lambdas stay anonymous functions of refine, so their
     // jobs' call sites read `Extrinsic$.$anonfun$refine$N` (per-layer
     // attribution files a job under its innermost graft frame)
     val (best, cost) = Lm.minimize(init.toArray, maxIter)(
       p => {
-        val (r0u, r0v) = residualCols(p.toSeq)
-        val diffs = (0 until 6).map { i =>
-          val pi = p.clone(); pi(i) += eps
-          val (ru, rv) = residualCols(pi.toSeq)
-          ((ru - r0u) / eps, (rv - r0v) / eps)
-        }
-        val named = corners.select(
-          Seq(r0u.as("_ru"), r0v.as("_rv")) ++
-            diffs.zipWithIndex.flatMap { case ((ju, jv), i) =>
-              Seq(ju.as(s"_j${i}u"), jv.as(s"_j${i}v"))
-            }: _*)
-        val args = (Seq("_ru", "_rv") ++
-          (0 until 6).flatMap(i => Seq(s"_j${i}u", s"_j${i}v"))).mkString(", ")
-        val ne = named.agg(expr(s"normal_eq_agg($args)").as("ne")).collect()(0)
-          .getSeq[Double](0)
+        // T at p, then at p + eps in each of the 6 parameters
+        val ts = (p +: (0 until 6).map { i =>
+          val pi = p.clone(); pi(i) += eps; pi
+        }).map(q => paramsToT(q.toSeq).toArray).toArray
+        val parts = pts.mapPartitions { it =>
+          val buf = new Array[Double](28)
+          val ju = new Array[Double](6); val jv = new Array[Double](6)
+          it.foreach { case (u, v, x, y, z) =>
+            val (u0, v0) = Geometry.projectCvScalar(ts(0), ka, da, x, y, z)
+            val (ru, rv) = (u0 - u, v0 - v)
+            var i = 0
+            while (i < 6) {
+              val (ui, vi) = Geometry.projectCvScalar(ts(i + 1), ka, da, x, y, z)
+              ju(i) = ((ui - u) - ru) / eps; jv(i) = ((vi - v) - rv) / eps
+              i += 1
+            }
+            buf(0) += ru * ru + rv * rv
+            var idx = 1
+            var a = 0
+            while (a < 6) {
+              var b = a
+              while (b < 6) {
+                buf(idx) += ju(a) * ju(b) + jv(a) * jv(b)
+                idx += 1
+                b += 1
+              }
+              buf(22 + a) += ju(a) * ru + jv(a) * rv
+              a += 1
+            }
+          }
+          Iterator.single(buf)
+        }.collect()
+        val ne = new Array[Double](28)
+        parts.foreach(b => (0 until 28).foreach(i => ne(i) += b(i)))
         val jtj = Array.ofDim[Double](6, 6)
         var idx = 1
         for (i <- 0 until 6; j <- i until 6) {
@@ -175,8 +207,16 @@ object Extrinsic {
         (jtj, Array.tabulate(6)(i => ne(idx + i)), ne(0))
       },
       p => {
-        val (u, v) = residualCols(p.toSeq)
-        corners.agg(sum(u * u + v * v)).collect()(0).getDouble(0)
+        val t = paramsToT(p.toSeq).toArray
+        pts.mapPartitions { it =>
+          var s = 0.0
+          it.foreach { case (u, v, x, y, z) =>
+            val (up, vp) = Geometry.projectCvScalar(t, ka, da, x, y, z)
+            val (du, dv) = (up - u, vp - v)
+            s += du * du + dv * dv
+          }
+          Iterator.single(s)
+        }.collect().foldLeft(0.0)(_ + _)
       })
     (best.toSeq, cost)
   }

@@ -26,9 +26,11 @@ import graft.ops.Geometry
   *      #views x #corners (15 x 99 here) — intrinsic calibration input is
   *      a handful of chessboard views regardless of corpus scale, so this
   *      is NOT a 100-TB funnel; the 100-TB-sized tables never pass here.
-  *   4. mean reprojection error evaluated DISTRIBUTED with the same
-  *      Catalyst expressions used everywhere else (Geometry.rodrigues +
-  *      projectPointCv), per camera_calib.py:104-113.
+  *   4. mean reprojection error evaluated DISTRIBUTED, per
+  *      camera_calib.py:104-113: a typed map through the scalar kernel
+  *      Geometry.projectCvScalar (the bit-identical twin of the Column
+  *      forms rigidTransform + projectPointCv) with the per-view poses in
+  *      the closure, then the per-view / across-view aggregates.
   *
   * Distortion parameterization follows the reference's flags
   * (CALIB_RATIONAL_MODEL | FIX_K3..K5, camera_calib.py:101-102): free
@@ -247,70 +249,64 @@ object Intrinsic {
   // 3. LM bundle polish (driver, bounded by #views x #corners)
   // ------------------------------------------------------------------
 
-  /** Scalar twin of Geometry.projectPointCv for the driver-side bundle:
-    * board point (X, Y, 0) -> rotate/translate -> rational-model project.
-    * dist8 = [k1,k2,p1,p2,k3,k4,k5,k6].
-    */
-  def projectCvScalar(fx: Double, fy: Double, cx: Double, cy: Double,
-      dist8: Array[Double], r9: Array[Double], t: Array[Double],
-      xw: Double, yw: Double): (Double, Double) = {
-    val xc = r9(0) * xw + r9(1) * yw + t(0)
-    val yc = r9(3) * xw + r9(4) * yw + t(1)
-    val zc = r9(6) * xw + r9(7) * yw + t(2)
-    val xn = xc / zc; val yn = yc / zc
-    val r2 = xn * xn + yn * yn
-    val Array(k1, k2, p1, p2, k3, k4, k5, k6) = dist8
-    val radial = (1 + k1 * r2 + k2 * r2 * r2 + k3 * r2 * r2 * r2) /
-      (1 + k4 * r2 + k5 * r2 * r2 + k6 * r2 * r2 * r2)
-    val xd = xn * radial + 2 * p1 * xn * yn + p2 * (r2 + 2 * xn * xn)
-    val yd = yn * radial + p1 * (r2 + 2 * yn * yn) + 2 * p2 * xn * yn
-    (fx * xd + cx, fy * yd + cy)
-  }
-
   /** LM (Lm.minimize) over the bundle [fx,fy,cx,cy,k1,k2,p1,p2,k6] ++
-    * 6/view. `viewPts(v)` = that view's (X, Y, u, v) corners. Pure-Scala
+    * 6/view. `viewPts(v)` = that view's (X, Y, u, v) corners on the board
+    * plane Z = 0, projected with Geometry.projectCvScalar. Pure-Scala
     * numeric Jacobian (central differences) — at #views x #corners points
     * this is microseconds per iteration, the same boundary the reference
     * crosses when it hands its point lists to cv2.calibrateCamera.
+    *
+    * The Jacobian is block-sparse: a view's 6 pose columns move only that
+    * view's residuals, so those columns re-evaluate just the perturbed
+    * view and leave every other row at 0.0, which is exactly what the
+    * dense difference of two equal finite residuals gives. Per iteration
+    * that is 1 + 18 full passes + 12 single-view passes per view, and the
+    * dense J^T J accumulation order is kept, so the result is bit-identical
+    * to the dense Jacobian's.
     */
   def refineBundle(viewPts: IndexedSeq[Seq[(Double, Double, Double, Double)]],
       init: Array[Double], maxIter: Int = 80): Array[Double] = {
     val nViews = viewPts.length
     val nParams = 9 + 6 * nViews
     require(init.length == nParams)
+    // view v's residuals occupy [offs(v), offs(v + 1))
+    val offs = viewPts.scanLeft(0)(_ + 2 * _.length)
+    val nRes = offs.last
 
-    def residuals(p: Array[Double]): Array[Double] = {
+    def viewResiduals(p: Array[Double], v: Int, out: Array[Double]): Unit = {
+      val k = Array(p(0), 0.0, p(2), 0.0, p(1), p(3), 0.0, 0.0, 1.0)
       val dist8 = Array(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8))
-      val out = Array.newBuilder[Double]
-      var v = 0
-      while (v < nViews) {
-        val base = 9 + 6 * v
-        val r9 = Extrinsic.rodriguesScalar(
-          Seq(p(base), p(base + 1), p(base + 2)))
-        val t = Array(p(base + 3), p(base + 4), p(base + 5))
-        viewPts(v).foreach { case (xw, yw, u, vv) =>
-          val (up, vp) =
-            projectCvScalar(p(0), p(1), p(2), p(3), dist8, r9, t, xw, yw)
-          out += (up - u); out += (vp - vv)
-        }
-        v += 1
+      val t = Extrinsic.paramsToT(p.slice(9 + 6 * v, 15 + 6 * v).toSeq).toArray
+      var i = offs(v)
+      viewPts(v).foreach { case (xw, yw, u, vv) =>
+        val (up, vp) = Geometry.projectCvScalar(t, k, dist8, xw, yw, 0.0)
+        out(i) = up - u; out(i + 1) = vp - vv
+        i += 2
       }
-      out.result()
+    }
+    def residuals(p: Array[Double]): Array[Double] = {
+      val out = new Array[Double](nRes)
+      (0 until nViews).foreach(viewResiduals(p, _, out))
+      out
     }
     def sumSq(r: Array[Double]) = r.map(x => x * x).sum
 
     def normalEq(p: Array[Double]) = {
       val r = residuals(p)
-      val nRes = r.length
-      // central-difference Jacobian, step scaled per parameter
+      // central-difference Jacobian, step scaled per parameter; the 9
+      // intrinsics move every view, a pose column only its own view
       val jac = Array.ofDim[Double](nRes, nParams)
+      val rp = new Array[Double](nRes); val rm = new Array[Double](nRes)
       for (j <- 0 until nParams) {
         val h = 1e-6 * math.max(math.abs(p(j)), 1e-3)
         val pp = p.clone(); pp(j) += h
         val pm = p.clone(); pm(j) -= h
-        val rp = residuals(pp); val rm = residuals(pm)
-        var i = 0
-        while (i < nRes) { jac(i)(j) = (rp(i) - rm(i)) / (2 * h); i += 1 }
+        val vs = if (j < 9) 0 until nViews else Seq((j - 9) / 6)
+        vs.foreach { v => viewResiduals(pp, v, rp); viewResiduals(pm, v, rm) }
+        var i = offs(vs.head)
+        while (i < offs(vs.last + 1)) {
+          jac(i)(j) = (rp(i) - rm(i)) / (2 * h); i += 1
+        }
       }
       val jtj = Array.ofDim[Double](nParams, nParams)
       val jtr = new Array[Double](nParams)
@@ -339,27 +335,34 @@ object Intrinsic {
 
   /** camera_calib.py:104-113 as a distributed plan: per-view
     * L2-norm-of-residuals / #points, then the mean across views (A4 /
-    * A2 two-level shape). All per-point math is Catalyst expressions;
-    * the per-view poses ride in on a broadcast join.
+    * A2 two-level shape). A typed map projects each board point (X, Y, 0)
+    * through Geometry.projectCvScalar with its view's T, which rides in
+    * the closure (no join), to (view_id, du² + dv²); a corner with a null
+    * input maps to a null term, skipped by sum() but counted by
+    * count(1). Corners of a view without a pose drop out.
     */
   def meanReprojError(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
       views: Seq[ViewPose]): Double = {
     val spark = corners.sparkSession
     import spark.implicits._
-    val vdf = views.map(v =>
-      (v.viewId, v.rvec(0), v.rvec(1), v.rvec(2),
-        v.tvec(0), v.tvec(1), v.tvec(2)))
-      .toDF("view_id", "r0", "r1", "r2", "t0", "t1", "t2")
-    val j = corners.join(broadcast(vdf), "view_id")
-    val m = Geometry.rodrigues(col("r0"), col("r1"), col("r2"))
-    val (x, y) = (col("x"), col("y")) // board plane, z = 0
-    val xc = m(0)(0) * x + m(0)(1) * y + col("t0")
-    val yc = m(1)(0) * x + m(1)(1) * y + col("t1")
-    val zc = m(2)(0) * x + m(2)(1) * y + col("t2")
-    val (u, v) = Geometry.projectPointCv(xc, yc, zc, k, dist)
-    val du = u - col("u"); val dv = v - col("v")
-    j.groupBy("view_id")
-      .agg((sqrt(sum(du * du + dv * dv)) / count(lit(1))).as("view_err"))
+    val ts = views.map(v =>
+      v.viewId -> Extrinsic.paramsToT(v.rvec ++ v.tvec).toArray).toMap
+    val (ka, da) = (k.toArray, dist.toArray)
+    corners
+      .select(col("view_id"), col("x").cast("double"), col("y").cast("double"),
+        col("u").cast("double"), col("v").cast("double"))
+      .as[(String, Option[Double], Option[Double], Option[Double], Option[Double])]
+      .flatMap { case (id, x, y, u, v) =>
+        ts.get(id).map { t =>
+          (id, for (xw <- x; yw <- y; uo <- u; vo <- v) yield {
+            val (up, vp) = Geometry.projectCvScalar(t, ka, da, xw, yw, 0.0)
+            val (du, dv) = (up - uo, vp - vo)
+            du * du + dv * dv
+          })
+        }
+      }.toDF("view_id", "e")
+      .groupBy("view_id")
+      .agg((sqrt(sum("e")) / count(lit(1))).as("view_err"))
       .agg(avg("view_err")).collect()(0).getDouble(0)
   }
 

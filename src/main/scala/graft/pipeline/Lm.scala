@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.ops.Geometry
 
 /** The one Levenberg-Marquardt loop behind both calibration fits:
-  * Extrinsic.refine (normal equations from one distributed aggregation,
+  * Extrinsic.refine (normal equations from one distributed pass,
   * every cost evaluation a Spark job) and Intrinsic.refineBundle
   * (driver-side Jacobian over the collected chessboard views).
   *

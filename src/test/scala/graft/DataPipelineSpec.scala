@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.pipeline.DataPipeline
@@ -10,6 +14,39 @@ import graft.pipeline.DataPipeline
   * memoization (data_pipeline.py:10-56 guard chain).
   */
 class DataPipelineSpec extends SparkSpec {
+
+  /** Run `body`, returning its value and the call-site frames of every
+    * Spark job it started, one Seq of stack lines per job.
+    */
+  private def withJobFrames[A](body: => A): (A, Seq[Seq[String]]) = {
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tag = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse("")
+        jobs.add((tag, e.stageInfos.flatMap(_.details.split("\n").map(_.trim))))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.phase", "body")
+      val a = body
+      // the listener bus is asynchronous but ordered: once this job's
+      // start has arrived, every job of the body has too
+      sc.setLocalProperty("graft.test.phase", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.asScala.exists(_._1 == "sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == "sentinel"),
+        "listener never saw the sentinel job")
+      (a, jobs.asScala.toSeq.filter(_._1 == "body").map(_._2))
+    } finally {
+      sc.setLocalProperty("graft.test.phase", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("full DAG materializes all stages and resumes without recompute") {
     val stateDir = Files.createTempDirectory("graft-dag").toString
@@ -28,21 +65,42 @@ class DataPipelineSpec extends SparkSpec {
     assert(out("warp_matrices").count() == 3108)
     assert(out("matched_corners").count() == 3108 * 4)
     val ext = out("extrinsic").collect()(0)
-    val stats = ext.getAs[scala.collection.Seq[Double]]("stats")
-    assert(stats(5) < 60.0, s"pipeline rmse ${stats(5)} not in sane range")
+    def got(n: String) = ext.getAs[scala.collection.Seq[Double]](n)
+    val stats = got("stats")
+    // the fixture run at maxIter = 12, pinned
+    def near(name: String, a: Double, want: Double) =
+      assert(math.abs(a - want) <= 1e-12 * math.abs(want), s"$name $a vs $want")
+    near("mean_error", stats(0), 43.15047825442768)
+    near("rmse", stats(5), 47.085441143774645)
+    Seq(-0.005238381122141273, -0.0030909924299878516, -3.15019277642639)
+      .zip(got("rvec")).zipWithIndex.foreach { case ((w, a), i) => near(s"rvec$i", a, w) }
+    Seq(46.88624431479772, 20.267215005592245, 1590.0193147823095)
+      .zip(got("tvec")).zipWithIndex.foreach { case ((w, a), i) => near(s"tvec$i", a, w) }
 
-    // resume: everything is materialized; must be much faster and identical
-    val t1 = System.nanoTime()
-    val again = DataPipeline.run(spark, pix, stateDir, arr("k"), arr("dist"))
-    val warmSecs = (System.nanoTime() - t1) / 1e9
+    // resume: everything is materialized; must be much faster, identical,
+    // and run nothing of the calibration itself
+    var warmSecs = 0.0
+    val (again, frames) = withJobFrames {
+      val t1 = System.nanoTime()
+      val r = DataPipeline.run(spark, pix, stateDir, arr("k"), arr("dist"))
+      warmSecs = (System.nanoTime() - t1) / 1e9
+      r
+    }
     assert(again("extrinsic").collect()(0)
       .getAs[scala.collection.Seq[Double]]("stats") == stats)
     assert(warmSecs < coldSecs / 3,
       s"resume ($warmSecs s) should skip the optimizer (cold $coldSecs s)")
+    assert(frames.nonEmpty, "the resume ran no job at all")
+    frames.foreach { f =>
+      assert(!f.exists(l => l.startsWith("graft.pipeline.Intrinsic") ||
+        l.startsWith("graft.pipeline.Extrinsic")),
+        s"resume ran a calibration job:\n${f.mkString("\n")}")
+    }
   }
 
   test("full DAG computes intrinsics as its first stage (data_pipeline.py:19-24)") {
     import spark.implicits._
+    import graft.ops.Geometry
     import graft.pipeline.{Extrinsic, Intrinsic}
     val stateDir = Files.createTempDirectory("graft-dag-calib").toString
     val pix = spark.read
@@ -62,12 +120,12 @@ class DataPipelineSpec extends SparkSpec {
       (Seq(0.2406, -0.2368, 0.0855), Seq(-41.4, -188.7, 1611.7)),
       (Seq(0.2514, -0.0346, 0.0581), Seq(-62.3, -187.9, 1643.0)))
     val dist8 = Array(0.0558, 0.5418, -0.0045, -0.0110, 0.0, 0.0, 0.0, -0.2606)
+    val kDetect = Array(goldK(0) * 0.5, 0.0, goldK(2) * 0.5,
+      0.0, goldK(4) * 0.5, goldK(5) * 0.5, 0.0, 0.0, 1.0)
     val calib = views.zipWithIndex.flatMap { case ((rv, tv), i) =>
-      val r9 = Extrinsic.rodriguesScalar(rv)
+      val t = Extrinsic.paramsToT(rv ++ tv).toArray
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
-          goldK(0) * 0.5, goldK(4) * 0.5, goldK(2) * 0.5, goldK(5) * 0.5,
-          dist8, r9, tv.toArray, xw, yw)
+        val (u, v) = Geometry.projectCvScalar(t, kDetect, dist8, xw, yw, 0.0)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }.toDF("view_id", "corner_idx", "u", "v", "x", "y")

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.lang.Double.doubleToLongBits
 
-import graft.pipeline.{Extrinsic, Intrinsic}
+import graft.ops.Geometry
+import graft.pipeline.{Extrinsic, Intrinsic, Lm}
 
 /** Golden test for the Zhang intrinsic-calibration composite
   * (camera_calib.py:95-119): the 15 chessboard views are reconstructed by
@@ -42,16 +43,23 @@ class IntrinsicSpec extends SparkSpec {
     (Seq(0.25135434498136111, -0.034579806240666693, 0.058123267795099749), Seq(-62.25649292477263, -187.94673922723987, 1642.9523548566922)),
     (Seq(0.23956350581594499, 0.07475480301336114, -0.0021757971644543604), Seq(-108.13086876032928, -185.09131632141168, 1618.976112562985)))
 
+  /** Golden K at detect scale, row-major 9. */
+  private val kDetect = Array(goldFx * 0.5, 0.0, goldCx * 0.5,
+    0.0, goldFy * 0.5, goldCy * 0.5, 0.0, 0.0, 1.0)
+
+  /** Board corner (X, Y, 0) of a view [rvec, tvec] projected to pixels. */
+  private def project(rv: Seq[Double], tv: Seq[Double], dist: Array[Double],
+      xw: Double, yw: Double): (Double, Double) =
+    Geometry.projectCvScalar(Extrinsic.paramsToT(rv ++ tv).toArray, kDetect,
+      dist, xw, yw, 0.0)
+
   /** (view_id, corner_idx, u, v, x, y) rows synthesized from the goldens. */
   private def syntheticCorners = {
     import spark.implicits._
     val objp = Intrinsic.objectPoints(9, 11, 45.0)
     val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
-      val r9 = Extrinsic.rodriguesScalar(rv)
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
-          goldFx * 0.5, goldFy * 0.5, goldCx * 0.5, goldCy * 0.5,
-          goldDist8, r9, tv.toArray, xw, yw)
+        val (u, v) = project(rv, tv, goldDist8, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }
@@ -110,11 +118,8 @@ class IntrinsicSpec extends SparkSpec {
     val objp = Intrinsic.objectPoints(9, 11, 45.0)
     val noDist = Array.fill(8)(0.0)
     val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
-      val r9 = Extrinsic.rodriguesScalar(rv)
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = Intrinsic.projectCvScalar(
-          goldFx * 0.5, goldFy * 0.5, goldCx * 0.5, goldCy * 0.5,
-          noDist, r9, tv.toArray, xw, yw)
+        val (u, v) = project(rv, tv, noDist, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }
@@ -127,5 +132,60 @@ class IntrinsicSpec extends SparkSpec {
     assert(math.abs(fy - goldFy * 0.5) / (goldFy * 0.5) < 0.02, s"fy init $fy")
     assert(math.abs(cx - goldCx * 0.5) < 60, s"cx init $cx")
     assert(math.abs(cy - goldCy * 0.5) < 60, s"cy init $cy")
+  }
+
+  test("refineBundle: the block-sparse Jacobian gives the dense one's result bit for bit") {
+    // 6 views with deterministic sub-pixel noise, from a perturbed start
+    val objp = Intrinsic.objectPoints(9, 11, 45.0)
+    val viewPts = goldViews.take(6).map { case (rv, tv) =>
+      objp.map { case (ci, xw, yw) =>
+        val (u, v) = project(rv, tv, goldDist8, xw, yw)
+        (xw, yw, u + 0.3 * math.sin(ci * 12.9898), v + 0.3 * math.cos(ci * 78.233))
+      }
+    }.toIndexedSeq
+    val init = Array(goldFx * 0.5 * 1.01, goldFy * 0.5 * 0.99, goldCx * 0.5 + 5,
+      goldCy * 0.5 - 5, 0.0, 0.0, 0.0, 0.0, 0.0) ++
+      goldViews.take(6).flatMap { case (rv, tv) =>
+        rv.map(_ + 0.01) ++ tv.map(_ + 2.0)
+      }
+    val nParams = init.length
+
+    // the dense central-difference normal equations: every column is
+    // two full residual passes over all views
+    def residuals(p: Array[Double]): Array[Double] = viewPts.indices.toArray.flatMap { v =>
+      val k = Array(p(0), 0.0, p(2), 0.0, p(1), p(3), 0.0, 0.0, 1.0)
+      val d8 = Array(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8))
+      val t = Extrinsic.paramsToT(p.slice(9 + 6 * v, 15 + 6 * v).toSeq).toArray
+      viewPts(v).toArray.flatMap { case (xw, yw, u, vv) =>
+        val (up, vp) = Geometry.projectCvScalar(t, k, d8, xw, yw, 0.0)
+        Array(up - u, vp - vv)
+      }
+    }
+    def sumSq(r: Array[Double]) = r.map(x => x * x).sum
+    def denseNormalEq(p: Array[Double]) = {
+      val r = residuals(p)
+      val jac = Array.ofDim[Double](r.length, nParams)
+      for (j <- 0 until nParams) {
+        val h = 1e-6 * math.max(math.abs(p(j)), 1e-3)
+        val pp = p.clone(); pp(j) += h
+        val pm = p.clone(); pm(j) -= h
+        val rp = residuals(pp); val rm = residuals(pm)
+        for (i <- r.indices) jac(i)(j) = (rp(i) - rm(i)) / (2 * h)
+      }
+      val jtj = Array.ofDim[Double](nParams, nParams)
+      val jtr = new Array[Double](nParams)
+      for (i <- r.indices; a <- 0 until nParams) {
+        jtr(a) += jac(i)(a) * r(i)
+        for (b <- a until nParams) jtj(a)(b) += jac(i)(a) * jac(i)(b)
+      }
+      for (a <- 0 until nParams; b <- 0 until a) jtj(a)(b) = jtj(b)(a)
+      (jtj, jtr, sumSq(r))
+    }
+
+    val want = Lm.minimize(init, 4)(denseNormalEq, p => sumSq(residuals(p)))._1
+    val got = Intrinsic.refineBundle(viewPts, init, maxIter = 4)
+    assert(!got.sameElements(init), "the bundle did not move")
+    assert(got.map(doubleToLongBits).toSeq == want.map(doubleToLongBits).toSeq,
+      s"block-sparse ${got.mkString(",")}\ndense ${want.mkString(",")}")
   }
 }

@@ -275,57 +275,6 @@ class PlanSpec extends SparkSpec {
       s"em2 fell back to an all-pairs product:\n${p.take(1200)}")
   }
 
-  test("normal_eq_agg: one partial-aggregating pass, values match 28 sums") {
-    import spark.implicits._
-    graft.expr.GraftFunctions.register(spark)
-    val rnd = new scala.util.Random(7)
-    val rows = Seq.fill(200)(Array.fill(14)(rnd.nextDouble() * 2 - 1))
-    val df = rows.map(a => (a(0), a(1), a(2), a(3), a(4), a(5), a(6),
-        a(7), a(8), a(9), a(10), a(11), a(12), a(13)))
-      .toDF((0 until 14).map(i => s"c$i"): _*)
-      .repartition(4)
-    val args = (0 until 14).map(i => s"c$i").mkString(", ")
-    val agg = df.agg(expr(s"normal_eq_agg($args)").as("ne"))
-    // plan: ONE aggregate pair (partial map-side, final after a single
-    // SinglePartition exchange) — the LM iteration's whole shuffle is
-    // #partitions x 28 doubles
-    val p = agg.queryExecution.executedPlan.toString
-    assert(p.contains("normal_eq_agg"), s"aggregate missing:\n${p.take(800)}")
-    val first = p.indexOf("normal_eq_agg")
-    assert(p.lastIndexOf("normal_eq_agg") > first, "no map-side partial")
-    // one SinglePartition exchange for the global fold (the repartition's
-    // RoundRobin exchange stands in for the scan's many partitions) and
-    // no hashpartitioning shuffle anywhere
-    assert("Exchange SinglePartition".r.findAllIn(p).size == 1,
-      s"expected one SinglePartition exchange:\n${p.take(1200)}")
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"unexpected hash shuffle:\n${p.take(1200)}")
-    // values: identical (up to fp reassociation) to the 28 separate sums
-    val ne = agg.collect()(0).getSeq[Double](0)
-    def ju(r: Array[Double], i: Int) = r(2 + 2 * i)
-    def jv(r: Array[Double], i: Int) = r(3 + 2 * i)
-    val expCost = rows.map(r => r(0) * r(0) + r(1) * r(1)).sum
-    assert(math.abs(ne.head - expCost) < 1e-9 * math.abs(expCost))
-    var idx = 1
-    for (i <- 0 until 6; j <- i until 6) {
-      val e = rows.map(r => ju(r, i) * ju(r, j) + jv(r, i) * jv(r, j)).sum
-      assert(math.abs(ne(idx) - e) < 1e-9 * (math.abs(e) + 1), s"jtj($i,$j)")
-      idx += 1
-    }
-    for (i <- 0 until 6) {
-      val e = rows.map(r => ju(r, i) * r(0) + jv(r, i) * r(1)).sum
-      assert(math.abs(ne(idx + i) - e) < 1e-9 * (math.abs(e) + 1), s"jtr($i)")
-    }
-    // a row with ANY null input is skipped whole (sum()-compatible
-    // masking: all 28 terms share the same inputs)
-    val withNull = df.union(spark.sql(
-      "SELECT cast(null as double), " +
-        (1 until 14).map(_ => "cast(1.0 as double)").mkString(", ")))
-    val ne2 = withNull.agg(expr(s"normal_eq_agg($args)")).collect()(0)
-      .getSeq[Double](0)
-    assert(math.abs(ne2.head - ne.head) < 1e-12)
-  }
-
   test("a2_bucketed/j2_bucketed: no keyed exchange anywhere in the plan") {
     // The point of the declared bucketed family (A2_SF100.md §6): the
     // keyed shuffle a2/j2 pay is a LAYOUT choice, and on the bucketed
