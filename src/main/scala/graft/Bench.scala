@@ -56,10 +56,6 @@ object Bench {
   def machineryWarmup(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_warm").toFile
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete()
-    }
     try {
       val p = s"${dir.getAbsolutePath}/w.parquet"
       spark.range(0, 10000)
@@ -71,7 +67,7 @@ object Bench {
       r.orderBy("id").limit(5).collect()
       r.groupBy(expr("id % 7")).agg(sum("v"), count("*")).collect()
       r.unpersist(false)
-    } finally rmTree(dir)
+    } finally graft.ops.Memo.rmTree(dir)
   }
 
   /** Inter-query disk barrier: wait (GC-assisted) until the spill

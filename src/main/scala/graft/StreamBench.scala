@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
   StreamingQuery, Trigger}
+import graft.ops.Memo
 import graft.streaming.Sessionize
 
 /** Streaming throughput record (dev tooling, like Bench): drive the
@@ -77,10 +78,7 @@ object StreamBench {
     val d = new java.io.File(dir)
     val existing = Option(d.list()).map(_.length).getOrElse(0)
     if (existing != nFiles) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d)
+      Memo.rmTree(d)
       d.mkdirs()
       var i = 0
       while (i < nFiles) {
@@ -140,10 +138,7 @@ object StreamBench {
     // its cost is reported separately (a real notification feed pays it
     // incrementally, never as a scan)
     val mDir = new java.io.File(Dir + "_manifest")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(mDir); mDir.mkdirs()
+    Memo.rmTree(mDir); mDir.mkdirs()
     val tM0 = System.nanoTime()
     val all = new java.io.File(Dir).listFiles().sortBy(_.getName)
     all.grouped(perTrigger).zipWithIndex.foreach { case (chunk, i) =>

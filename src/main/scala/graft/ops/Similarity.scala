@@ -365,53 +365,38 @@ object Similarity {
   // eviction really evicts.
   private[graft] var maxCachedIndexes = 64 // test seam: shrink to force eviction
   private[graft] val indexBuildCount = new java.util.concurrent.atomic.AtomicLong
-  private val indexCache = new java.util.LinkedHashMap[
-      String, (Array[org.apache.spark.sql.Row],
-               org.apache.spark.sql.types.StructType)](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, (Array[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType)]): Boolean =
-      size() > maxCachedIndexes
-  }
+  private val indexCache = new Memo.Lru[String,
+    (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)](
+    maxCachedIndexes)
 
   /** Memoized IVF index build — the pipeline-stage separation a real
     * system has between index BUILD and query: the k-means centroid table
-    * for a given (cacheKey, vecCol, idCol, k, iters, corpus fingerprint)
-    * is computed once per JVM and reused by every subsequent query (any
+    * for a given (cacheKey, vecCol, idCol, k, iters, input content) is
+    * computed once per JVM and reused by every subsequent query (any
     * session — the cached value is session-free data), so repeated
     * searches stop paying the Lloyd passes. cacheKey should identify the
     * corpus (e.g. its directory).
     *
     * idCol participates in the key because seeding takes the k LOWEST-id
-    * vectors — a different id column is a different index. The key also
-    * folds in the input's file listing (count + hash of sorted names, a
-    * driver-side metadata call): data rewritten under the same path gets
-    * fresh part-file names, so the stale entry is orphaned instead of
-    * served for the JVM's lifetime. Limits: a non-file source (in-memory
-    * relation) has no listing, and an IN-PLACE byte mutation of an
-    * existing file keeps its name — callers doing either over changing
-    * data must `clearIndexCache()` themselves.
+    * vectors — a different id column is a different index. The input's
+    * content is [[Memo.of]]: its plan (a filtered slice of a corpus is a
+    * different index than the whole), its files' listing fingerprint (an
+    * in-place rewrite is a new key) and any in-memory rows.
     */
   def kmeansIndex(embeddings: DataFrame, vecCol: String, idCol: String,
       k: Int, cacheKey: String, iters: Int = 3): DataFrame = {
-    val files = embeddings.inputFiles
-    val fp = Tables.fnv1a(files.sorted)
-    val key = s"$cacheKey|$vecCol|$idCol|$k|$iters|${files.length}|$fp"
-    val cached = indexCache.synchronized { Option(indexCache.get(key)) }
-    val (rows, schema) = cached.getOrElse {
+    val key = Memo.key(cacheKey, vecCol, idCol, k, iters, Memo.of(embeddings))
+    val (rows, schema) = indexCache(key) {
       indexBuildCount.incrementAndGet()
       val df = kmeansCentroids(embeddings, vecCol, idCol, k, iters)
-      val v = (df.collect(), df.schema) // local relation: collect is free
-      indexCache.synchronized { indexCache.put(key, v) }
-      v
+      (df.collect(), df.schema) // local relation: collect is free
     }
     embeddings.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Test seam: drop every memoized index (e.g. between benchmark runs). */
-  def clearIndexCache(): Unit =
-    indexCache.synchronized { indexCache.clear() }
+  def clearIndexCache(): Unit = indexCache.clear()
 
   /** Rank centroids per vector by squared L2 (rounded for cross-engine
     * tie stability, then centroid label as tiebreak). The centroid table

@@ -23,7 +23,7 @@ object Sinks {
 
   /** S6: matrix table — the npz equivalent (camera_calib.py:124-128,
     * extrinsic_calibration.py:381-387): named row-major matrices as a
-    * 1-row table of array columns, persisted by saveTable or a Runner stage.
+    * 1-row table of array columns, persisted by saveTable or a DataPipeline stage.
     */
   def matrixTable(spark: SparkSession, matrices: Map[String, Seq[Double]])
       : DataFrame = {

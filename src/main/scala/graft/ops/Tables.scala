@@ -81,21 +81,19 @@ object Tables {
     * EVERY call (~100 ms warm), which for a sub-second query is the
     * single largest fixed cost. A real engine resolves a table through a
     * catalog once per session, exactly as the DuckDB oracle harness
-    * creates its views once per connection — so table resolution is
-    * memoized per (session, zone, dir, table). Values are immutable
-    * logical plans (no pinned data; Caches.releaseAll is unaffected).
-    * The session timeZone is part of the key so a zone change mid-session
-    * (TablesSpec's zone-independence pin) re-runs normalization under
-    * the new zone rather than replaying a plan built under the old one.
-    *
-    * Contract: a table path is not rewritten within a session's lifetime
-    * (the memoized plan pins the file listing and schema observed at
-    * first resolution — standard immutable-table catalog semantics).
-    * Entries of STOPPED sessions are purged on every call, so test
-    * churn cannot retain dead sessions' plans indefinitely.
+    * creates its views once per connection — so table resolution is a
+    * [[Memo.Lru]] keyed by (session, zone, dir, table, listing
+    * fingerprint): a table rewritten in place mid-session has a new
+    * fingerprint and re-resolves. Values are immutable logical plans (no
+    * pinned data; Caches.releaseAll is unaffected). The session timeZone
+    * is part of the key so a zone change mid-session (TablesSpec's
+    * zone-independence pin) re-runs normalization under the new zone
+    * rather than replaying a plan built under the old one. Entries of
+    * STOPPED sessions are purged on every call, so test churn cannot
+    * retain dead sessions' plans.
     */
   private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), DataFrame]()
+    new Memo.Lru[(SparkSession, String, String, String, String), DataFrame](256)
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // TIMESTAMP(NANOS) columns are otherwise unreadable — Spark has no
@@ -111,13 +109,12 @@ object Tables {
       "set spark.sql.legacy.parquet.nanosAsLong=true at session " +
         "construction before resolving graft tables (see Tables scaladoc)")
     val zone = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    val it = relCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    if (relCache.size > 256) relCache.clear() // many sessions/dirs: re-resolve
-    relCache.computeIfAbsent((spark, zone, sfDir, name), _ => {
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    relCache.dropKeys(_._1.sparkContext.isStopped)
+    relCache((spark, zone, sfDir, name, Memo.files(Seq(path)))) {
+      val df = spark.read.parquet(path)
       logical.get(name).fold(df)(cols => normalize(df, name, cols))
-    })
+    }
   }
 
   private def normalize(df: DataFrame, table: String,
@@ -180,21 +177,22 @@ object Tables {
     * buckets with zero network (measured at sf100: a2 52→20.5 s,
     * j2 12.8→9.0 s medians).
     *
-    * Lifecycle (existence-memoized, like the pipeline runner):
-    *  1. table already in this session's catalog → reuse;
-    *  2. files on disk from an earlier session (`_SUCCESS` present) →
-    *     re-register as an external bucketed table (DDL only, no
-    *     re-write: bucket ids live in the file names, sort order in the
-    *     catalog spec we re-declare);
-    *  3. otherwise ingest: `repartition(n, key)` uses the SAME
-    *     murmur3-pmod function as the bucket-id assignment, so every
+    * Lifecycle: one directory per logical layout,
+    * `graft_bkt_<table>_<md5(logicalId)>`, stored through [[Memo.onDisk]]
+    * under the source's listing fingerprint ([[Memo.files]]):
+    *  1. table already in this session's catalog → reuse (its name
+    *     carries the fingerprint too, so a regenerated source is never
+    *     served from the catalog);
+    *  2. directory stored under the current fingerprint (an earlier
+    *     session) → re-register as an external bucketed table (DDL only,
+    *     no re-write: bucket ids live in the file names, sort order in
+    *     the catalog spec we re-declare);
+    *  3. otherwise (first ingest, a regenerated source, a killed write)
+    *     rebuild the directory in place: `repartition(n, key)` uses the
+    *     SAME murmur3-pmod function as the bucket-id assignment, so every
     *     write task holds exactly one bucket → exactly one file per
     *     bucket, which is also the precondition for the reader to trust
     *     the per-bucket sort (multi-file buckets forfeit it).
-    *
-    * The table tag fingerprints the SOURCE parquet (size + mtime): if the
-    * driver regenerates testdata, the stale layout is abandoned and
-    * re-ingested rather than silently served.
     *
     * Storage root: SPARK_GRAFT_BUCKET_DIR (default `scratch/bucketed`,
     * dev-local and git-ignored). The source dir itself may be read-only.
@@ -206,98 +204,31 @@ object Tables {
       // directory must not mint a second multi-GB layout copy (r20
       // ADVICE) — getCanonicalFile resolves both `.`/`..` and symlinks
       val canonSf = new java.io.File(sfDir).getCanonicalPath
-      // logical identity of the layout MINUS the source fingerprint: two
-      // tags sharing a logicalId are the same layout at different source
-      // generations — exactly the stale copies the ingest-time GC below
-      // deletes before writing a fresh one
       val logicalId = s"$canonSf|$table|$key|${cols.mkString(",")}|$buckets"
-      val tag = {
-        val id = s"$logicalId|" +
-          sourceFingerprint(s"$sfDir/$table.parquet")
-        val md5 = java.security.MessageDigest.getInstance("MD5")
-        md5.digest(id.getBytes("UTF-8")).take(6)
-          .map("%02x".format(_)).mkString
-      }
-      val tname = s"graft_bkt_${table}_$tag"
+      val fp = Memo.files(Seq(s"$sfDir/$table.parquet"))
+      val tname = s"graft_bkt_${table}_${Memo.key(logicalId, fp).take(12)}"
       if (!spark.catalog.tableExists(tname)) {
         val root = sys.env.getOrElse("SPARK_GRAFT_BUCKET_DIR",
           "scratch/bucketed")
-        val loc = new java.io.File(s"$root/$tname").getAbsoluteFile
+        val loc = new java.io.File(
+          s"$root/graft_bkt_${table}_${Memo.key(logicalId).take(12)}")
+          .getAbsoluteFile
         val src = t(spark, sfDir, table).select(cols.map(col): _*)
-        if (new java.io.File(loc, "_SUCCESS").isFile) {
-          spark.sql(
-            s"""CREATE TABLE $tname (${src.schema.toDDL}) USING parquet
-               |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
-               |LOCATION '${loc.toURI}'""".stripMargin)
-        } else {
-          // GC stale generations BEFORE paying the write (r20 ADVICE):
-          // on the sf100 box abandoned multi-GB copies accumulate toward
-          // the exact ENOSPC the bench's disk barrier exists to avoid
-          gcStaleLayouts(new java.io.File(root), table, logicalId, tname)
-          lastIngestWroteFiles = true
+        val wrote = Memo.onDisk(loc, fp) {
           src.repartition(buckets, col(key))
             .write.mode("overwrite")
             .bucketBy(buckets, key).sortBy(key)
             .format("parquet").option("path", loc.toString)
             .saveAsTable(tname)
-          // identity marker consumed by gcStaleLayouts of FUTURE
-          // generations; written after the data so a crashed ingest
-          // (no _SUCCESS) is itself GC-able as marker-less
-          val w = new java.io.PrintWriter(
-            new java.io.File(loc, "_graft_id"), "UTF-8")
-          try w.println(logicalId) finally w.close()
         }
+        if (wrote) lastIngestWroteFiles = true
+        else spark.sql(
+          s"""CREATE TABLE $tname (${src.schema.toDDL}) USING parquet
+             |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
+             |LOCATION '${loc.toURI}'""".stripMargin)
       }
       spark.table(tname)
     }
-
-  /** Delete sibling layout dirs of `table` that this ingest supersedes:
-    * same logical identity but a different tag (the source was
-    * regenerated — fingerprint drift), or a graft_bkt dir with no
-    * `_graft_id` marker (a pre-marker-format or crashed ingest; its tag
-    * can never be re-derived, so it would otherwise leak forever).
-    * Scoped to names with this table's prefix so another table's layouts
-    * are untouched; a marker naming a DIFFERENT logicalId (e.g. the
-    * orders_keys vs orders_wide projections of the same source table, or
-    * another corpus) is live and kept.
-    */
-  private def gcStaleLayouts(root: java.io.File, table: String,
-      logicalId: String, keep: String): Unit = {
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete()
-    }
-    Option(root.listFiles()).getOrElse(Array.empty).foreach { d =>
-      if (d.isDirectory && d.getName.startsWith(s"graft_bkt_${table}_") &&
-          d.getName != keep) {
-        val marker = new java.io.File(d, "_graft_id")
-        val staleSameLayout = marker.isFile && {
-          val src = scala.io.Source.fromFile(marker, "UTF-8")
-          try src.getLines().next().trim == logicalId
-          finally src.close()
-        }
-        // marker-less dirs are GC'd only past a safety window: the
-        // marker is written AFTER saveAsTable and bucketLock is
-        // JVM-local, so a SECOND JVM's in-flight ingest of a sibling
-        // layout (Bench + tests on one box) is marker-less while healthy
-        // — deleting it mid-write corrupts that ingest (r21 ADVICE). A
-        // genuinely crashed/pre-marker dir ages past the window and is
-        // then collected by any later ingest of the same table.
-        val safetyMs = 6L * 3600 * 1000
-        val abandonedNoMarker = !marker.isFile &&
-          d.lastModified < System.currentTimeMillis() - safetyMs
-        if (staleSameLayout || abandonedNoMarker) {
-          System.err.println(
-            s"[tables] GC stale bucketed layout ${d.getName}")
-          rmTree(d)
-        } else if (!marker.isFile) {
-          System.err.println(
-            s"[tables] keeping recent marker-less layout ${d.getName} " +
-              "(possible in-flight ingest of another JVM)")
-        }
-      }
-    }
-  }
 
   private val bucketLock = new Object
 
@@ -377,43 +308,6 @@ object Tables {
     }
     lastIngestWroteFiles
   }
-
-  /** Drift detector for the bucketed-table tag: file count + newest
-    * mtime + a hash over every (relative name, size) — one cheap local
-    * listing, but a regeneration that preserves total bytes within the
-    * mtime granularity still flips the per-file hash (r20 ADVICE; the
-    * old total-size+mtime pair could miss it). A MISSING source path
-    * fails loudly instead of returning a constant: a constant meant any
-    * future non-local corpus would silently reuse stale buckets.
-    */
-  private[graft] def sourceFingerprint(path: String): String = {
-    val rootF = new java.io.File(path)
-    require(rootF.exists,
-      s"bucketed-layout source $path does not exist locally — " +
-        "non-local sources cannot be fingerprinted (and must not " +
-        "silently reuse a stale layout)")
-    val files = Seq.newBuilder[(String, java.io.File)]
-    def walk(f: java.io.File, rel: String): Unit =
-      if (f.isFile) files += rel -> f
-      else Option(f.listFiles()).getOrElse(Array.empty)
-        .sortBy(_.getName)
-        .foreach(c => walk(c, s"$rel/${c.getName}"))
-    walk(rootF, "")
-    val fs = files.result()
-    val mt = fs.foldLeft(0L)((m, f) => m.max(f._2.lastModified))
-    val h = fnv1a(fs.map { case (rel, f) => s"$rel:${f.length}" })
-    s"${fs.size}:$mt:${java.lang.Long.toHexString(h)}"
-  }
-
-  /** 64-bit FNV-1a over each string's UTF-16 units plus a NUL after each
-    * one, so distinct listings like ["ab","c"] and ["a","bc"] cannot
-    * collide. The one listing hash behind the bucketed-layout tag and the
-    * IVF index key (Similarity.kmeansIndex): both persist across runs, so
-    * its output must never change.
-    */
-  private[graft] def fnv1a(parts: Iterable[String]): Long =
-    parts.foldLeft(0xcbf29ce484222325L)((h, p) =>
-      (p + '\u0000').foldLeft(h)((a, c) => (a ^ c) * 0x100000001b3L))
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

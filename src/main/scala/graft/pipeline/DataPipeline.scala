@@ -3,11 +3,14 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Sinks
+import graft.ops.{Memo, Sinks}
 
 /** The reference's orchestrated calibration DAG (data_pipeline.py:10-56)
-  * as memoized Runner stages — each guard (`if pixel_coords is None`)
-  * becomes a materialized-table existence check:
+  * as memoized stages — each guard (`if pixel_coords is None`) becomes a
+  * [[Memo.onDisk]] table at `$stateDir/<name>.parquet`, reused only while
+  * its key (the stage's inputs and parameters) is unchanged. Parquet's
+  * `_SUCCESS` commit gives the save-on-interrupt durability
+  * (data_pipeline.py:62-72): a killed stage reruns next time.
   *
   *   camera_matrix   <- Zhang intrinsics (Intrinsic.calibrate), the first
   *                      stage when chessboard views are given (S6)
@@ -31,7 +34,7 @@ object DataPipeline {
   def run(spark: SparkSession, pixelCorners: DataFrame,
       calibCorners: DataFrame, stateDir: String, maxIter: Int)
       : Map[String, DataFrame] = {
-    val cam = new Runner(spark, stateDir).stage("camera_matrix") {
+    val cam = stage(spark, stateDir, "camera_matrix", Memo.of(calibCorners)) {
       val res = Intrinsic.calibrate(calibCorners)
       Sinks.matrixTable(spark, Map(
         "k" -> res.k, "dist" -> res.dist,
@@ -50,17 +53,18 @@ object DataPipeline {
   def run(spark: SparkSession, pixelCorners: DataFrame, stateDir: String,
       k: Seq[Double], dist: Seq[Double], maxIter: Int = 50)
       : Map[String, DataFrame] = {
-    val runner = new Runner(spark, stateDir)
+    val pixKey = Memo.of(pixelCorners)
 
-    val warp = runner.stage("warp_matrices") {
+    val warp = stage(spark, stateDir, "warp_matrices", pixKey) {
       PoseGrid.warpMatrices(pixelCorners)
     }
 
-    val world = runner.stage("world_corners") {
+    // no input: the pose grid is fixed, so its key is a constant
+    val world = stage(spark, stateDir, "world_corners", "constant") {
       PoseGrid.worldCorners(spark)
     }
 
-    val matched = runner.stage("matched_corners") {
+    val matched = stage(spark, stateDir, "matched_corners", pixKey) {
       // J4: dict key addresses the compacted pose sequence
       pixelCorners
         .withColumn("idx", expr("try_cast(pose_id AS BIGINT)"))
@@ -71,7 +75,8 @@ object DataPipeline {
           col("wx").as("x"), col("wy").as("y"), col("wz").as("z"))
     }
 
-    val extrinsic = runner.stage("extrinsic") {
+    val extKey = Memo.key(pixKey, k.mkString(","), dist.mkString(","), maxIter)
+    val extrinsic = stage(spark, stateDir, "extrinsic", extKey) {
       // cached for the optimizer's repeated passes (each LM iteration
       // is a pass over it), released once the stats are computed
       matched.cache()
@@ -91,5 +96,16 @@ object DataPipeline {
 
     Map("warp_matrices" -> warp, "world_corners" -> world,
       "matched_corners" -> matched, "extrinsic" -> extrinsic)
+  }
+
+  /** Build stage `name` unless it is stored under `key`; return its
+    * stored table either way.
+    */
+  private def stage(spark: SparkSession, stateDir: String, name: String,
+      key: String)(build: => DataFrame): DataFrame = {
+    val dir = s"$stateDir/$name.parquet"
+    Memo.onDisk(new java.io.File(dir), key)(
+      build.write.mode("overwrite").parquet(dir))
+    spark.read.parquet(dir)
   }
 }

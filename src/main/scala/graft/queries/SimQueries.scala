@@ -23,16 +23,11 @@ object SimQueries {
       d: String): org.apache.spark.sql.DataFrame =
     ivfIndex(s, d, Slice.Embeddings.whole)
 
-  /** sim3's index over `emb`'s rows. A slice's index keeps its own memo
-    * key: a filter changes neither the input file listing nor any other
-    * key component, so whichever of full/slice built first would
-    * otherwise silently serve the other's queries.
-    */
+  /** sim3's index over `emb`'s rows. */
   private def ivfIndex(s: org.apache.spark.sql.SparkSession, d: String,
       emb: Slice): org.apache.spark.sql.DataFrame =
     S.kmeansIndex(emb.read(s, d), "embedding", "vec_id", Sim3IndexK,
-      cacheKey = if (emb.sliced) s"$d#slice${emb.mod}" else d,
-      iters = Sim3IndexIters)
+      cacheKey = d, iters = Sim3IndexIters)
 
   def defs: Seq[QueryDef] =
     // Brute-force cosine top-k (baseline / oracle; the query side must be

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Tables
+import graft.ops.{Memo, Tables}
 
 /** Lifecycle and correctness of the bucketed-layout catalog
   * (Tables.bucketed, A2_SF100.md §6 productized): values must be
@@ -79,9 +79,9 @@ class BucketedSpec extends SparkSpec {
   }
 
   test("listing fingerprints keep their on-disk values") {
-    // both key state that outlives the JVM or the run (the bucketed
-    // layout's dir tag, the memoized IVF index): any change to the hash
-    // orphans every existing layout, so the values are pinned literally
+    // Memo.files is the key of every bucketed layout stored on disk
+    // (its _graft_key): any change to the hash rebuilds every existing
+    // layout, so the values are pinned literally
     val root = new java.io.File(tmpDir(), "lineitem.parquet")
     root.mkdirs()
     Seq(("part-00000.parquet", 5, 1700000000000L),
@@ -91,10 +91,10 @@ class BucketedSpec extends SparkSpec {
       java.nio.file.Files.write(f.toPath, Array.fill[Byte](size)(7))
       f.setLastModified(mtime)
     }
-    assert(Tables.sourceFingerprint(root.getPath) ==
+    assert(Memo.files(Seq(root.getPath)) ==
       "3:1700000002000:c58dd7b235c3773d")
-    // kmeansIndex keys on fnv1a of its sorted input listing
-    assert(Tables.fnv1a(Seq(
+    // the listing hash behind Memo.files
+    assert(Memo.fnv1a(Seq(
       "file:///data/embeddings.parquet/part-00001-c0.snappy.parquet",
       "file:///data/embeddings.parquet/part-00000-c0.snappy.parquet",
       "file:///data/\u00e9mb.parquet").sorted) == -8693908762533161902L)
@@ -120,70 +120,62 @@ class BucketedSpec extends SparkSpec {
       "stale bucketed layout served after the source was regenerated")
   }
 
-  test("re-ingest GCs the superseded generation's files (r21)") {
-    // r20 ADVICE: abandoned layout generations (fingerprint drift)
-    // accumulated multi-GB dirs toward ENOSPC on the sf100 box. The
-    // ingest path now deletes same-logical-identity siblings whose tag
-    // differs, and ONLY those — another table's layouts stay.
+  test("a re-ingest rebuilds the layout's one directory in place") {
+    // one directory per logical layout: a regenerated source rebuilds it
+    // under a new _graft_key, so no superseded generation is left behind,
+    // and another table's layout is untouched
     import spark.implicits._
     val src = tmpDir()
     val root = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_BUCKET_DIR", "scratch/bucketed"))
     // per-run table names: layout dirs persist across JVMs by DESIGN, so
-    // a fixed name would see live leftovers of earlier test runs (their
-    // logicalId names a different tmp src — correctly NOT GC'd)
+    // a fixed name would see live leftovers of earlier test runs
     val run = java.lang.Long.toHexString(System.nanoTime())
-    val gcT = s"gcme$run"
+    val reT = s"rebuild$run"
     val keepT = s"keepme$run"
-    def gens(t: String) = Option(root.listFiles()).getOrElse(Array.empty)
+    def dirs(t: String) = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.startsWith(s"graft_bkt_${t}_"))
-      .map(_.getName).toSet
-    def rmAll(t: String): Unit =
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(s"graft_bkt_${t}_"))
-        .foreach { d =>
-          Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-        }
+    def keyOf(d: java.io.File) = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(d, "_graft_key").toPath), "UTF-8")
     try {
-      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$src/$gcT.parquet")
+      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$src/$reT.parquet")
       Seq((9L, "z")).toDF("k", "v").write.parquet(s"$src/$keepT.parquet")
       val s1 = spark.newSession()
-      Tables.bucketed(s1, src.toString, gcT, "k", Seq("k", "v"), buckets = 2)
+      Tables.bucketed(s1, src.toString, reT, "k", Seq("k", "v"), buckets = 2)
       Tables.bucketed(s1, src.toString, keepT, "k", Seq("k", "v"), buckets = 2)
-      val g1 = gens(gcT)
-      val keep1 = gens(keepT)
-      assert(g1.size == 1 && keep1.size == 1)
+      val Array(d1) = dirs(reT)
+      val key1 = keyOf(d1)
+      val Array(keep) = dirs(keepT)
+      val keepFiles = keep.listFiles().map(f => f.getName -> f.lastModified)
+        .toSet
       Thread.sleep(5)
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").write
-        .mode("overwrite").parquet(s"$src/$gcT.parquet")
+        .mode("overwrite").parquet(s"$src/$reT.parquet")
       val s2 = spark.newSession()
-      Tables.bucketed(s2, src.toString, gcT, "k", Seq("k", "v"), buckets = 2)
-      val g2 = gens(gcT)
-      assert(g2.size == 1 && g2 != g1,
-        s"stale generation not GC'd: $g2 (was $g1)")
-      assert(gens(keepT) == keep1, "GC touched an unrelated table's layout")
-    } finally { rmAll(gcT); rmAll(keepT) }
+      assert(Tables.bucketed(s2, src.toString, reT, "k", Seq("k", "v"),
+        buckets = 2).count() == 2)
+      val Array(d2) = dirs(reT)
+      assert(d2.getName == d1.getName, "the layout moved to a new directory")
+      assert(keyOf(d2) != key1, "the rebuilt layout kept its old key")
+      assert(dirs(keepT).toSeq == Seq(keep) &&
+        keep.listFiles().map(f => f.getName -> f.lastModified).toSet ==
+          keepFiles, "a re-ingest touched an unrelated table's layout")
+    } finally (dirs(reT) ++ dirs(keepT)).foreach(Memo.rmTree)
   }
 
-  test("GC keeps a RECENT marker-less sibling, collects an aged one (r22)") {
-    // r21 ADVICE (medium): the _graft_id marker lands only AFTER
-    // saveAsTable and bucketLock is JVM-local, so a sibling dir another
-    // JVM is mid-ingest is healthy-but-marker-less; GC must not delete
-    // it. Aged marker-less dirs (crashed/pre-marker ingests) still go.
+  test("an ingest never touches a sibling layout directory") {
+    // layout directories are never collected: a sibling (another JVM's
+    // in-flight ingest, a layout from an older naming) stays, fresh or old
     import spark.implicits._
     val src = tmpDir()
     val root = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_BUCKET_DIR", "scratch/bucketed"))
     root.mkdirs()
     val run = java.lang.Long.toHexString(System.nanoTime())
-    val t = s"inflight$run"
+    val t = s"sibling$run"
     def dirs() = Option(root.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.startsWith(s"graft_bkt_${t}_"))
-    def rmAll(): Unit = dirs().foreach { d =>
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-    }
     try {
-      // two fake marker-less siblings: one fresh (in-flight), one aged
       val fresh = new java.io.File(root, s"graft_bkt_${t}_fresh0")
       val aged = new java.io.File(root, s"graft_bkt_${t}_aged00")
       fresh.mkdirs(); aged.mkdirs()
@@ -192,10 +184,8 @@ class BucketedSpec extends SparkSpec {
       Tables.bucketed(spark.newSession(), src.toString, t, "k",
         Seq("k", "v"), buckets = 2)
       val names = dirs().map(_.getName).toSet
-      assert(names.contains(s"graft_bkt_${t}_fresh0"),
-        "GC deleted a recent marker-less sibling (possible in-flight ingest)")
-      assert(!names.contains(s"graft_bkt_${t}_aged00"),
-        "GC failed to collect an aged marker-less dir")
-    } finally { rmAll() }
+      assert(names.size == 3 && names(fresh.getName) && names(aged.getName),
+        s"an ingest touched a sibling layout directory: $names")
+    } finally dirs().foreach(Memo.rmTree)
   }
 }

@@ -82,7 +82,8 @@ class DataPipelineSpec extends SparkSpec {
     var warmSecs = 0.0
     val (again, frames) = withJobFrames {
       val t1 = System.nanoTime()
-      val r = DataPipeline.run(spark, pix, stateDir, arr("k"), arr("dist"))
+      val r = DataPipeline.run(spark, pix, stateDir, arr("k"), arr("dist"),
+        maxIter = 12)
       warmSecs = (System.nanoTime() - t1) / 1e9
       r
     }
@@ -96,6 +97,66 @@ class DataPipelineSpec extends SparkSpec {
         l.startsWith("graft.pipeline.Extrinsic")),
         s"resume ran a calibration job:\n${f.mkString("\n")}")
     }
+  }
+
+  private val pixFixture = "src/test/resources/fixtures/pixel_corners.parquet"
+  private lazy val (camK, camDist) = {
+    val cam = spark.read
+      .parquet("src/test/resources/fixtures/camera.parquet").collect()(0)
+    def arr(n: String) = cam.getAs[scala.collection.Seq[Double]](n).toSeq
+    (arr("k"), arr("dist"))
+  }
+
+  test("a rerun at another maxIter rebuilds only the extrinsic stage") {
+    val stateDir = Files.createTempDirectory("graft-dag-iter").toString
+    val pix = spark.read.parquet(pixFixture)
+    DataPipeline.run(spark, pix, stateDir, camK, camDist, maxIter = 12)
+    def stored(stage: String) =
+      new java.io.File(s"$stateDir/$stage.parquet").listFiles().toSeq
+        .filter(f => f.getName == "_graft_key" || f.getName.startsWith("part-"))
+        .map(f => (f.getName, f.lastModified, java.util.Arrays.hashCode(
+          Files.readAllBytes(f.toPath))))
+        .sorted
+    val upstream = Seq("warp_matrices", "world_corners", "matched_corners")
+    val before = upstream.map(stored)
+    val extBefore = stored("extrinsic")
+    Thread.sleep(5) // a rewrite would show in the mtimes
+    val out = DataPipeline.run(spark, pix, stateDir, camK, camDist,
+      maxIter = 13)
+    val fresh = DataPipeline.run(spark, pix,
+      Files.createTempDirectory("graft-dag-iter-fresh").toString,
+      camK, camDist, maxIter = 13)
+    def rvec(o: Map[String, org.apache.spark.sql.DataFrame]) =
+      o("extrinsic").collect()(0).getAs[scala.collection.Seq[Double]]("rvec")
+    val extAfter = stored("extrinsic")
+    assert(extAfter.filter(_._1.startsWith("part-")).toSet
+      .intersect(extBefore.toSet).isEmpty,
+      "the maxIter = 12 extrinsic was reused")
+    assert(extAfter.find(_._1 == "_graft_key") !=
+      extBefore.find(_._1 == "_graft_key"))
+    assert(rvec(out) == rvec(fresh))
+    assert(upstream.map(stored) == before, "an upstream stage was rebuilt")
+    assert(before.forall(_.exists(_._1 == "_graft_key")))
+  }
+
+  test("a pixel-corner table rewritten in place rebuilds warp_matrices") {
+    val stateDir = Files.createTempDirectory("graft-dag-rewrite").toString
+    val copy =
+      s"${Files.createTempDirectory("graft-pix")}/pixel_corners.parquet"
+    val fixture = spark.read.parquet(pixFixture)
+    def run() = DataPipeline.run(spark, spark.read.parquet(copy), stateDir,
+      camK, camDist, maxIter = 1)
+    fixture.write.parquet(copy)
+    assert(run()("warp_matrices").count() == 3108)
+    Thread.sleep(5)
+    val kept = fixture.filter(col("ord") < 1000)
+    kept.write.mode("overwrite").parquet(copy)
+    val out = run()
+    val poses = kept.select("pose_id").distinct().count()
+    assert(poses < 3108)
+    assert(out("warp_matrices").count() == poses,
+      "warp_matrices served stale after its input was rewritten")
+    assert(out("matched_corners").count() == kept.count())
   }
 
   test("full DAG computes intrinsics as its first stage (data_pipeline.py:19-24)") {

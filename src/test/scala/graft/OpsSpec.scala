@@ -416,6 +416,44 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("embeddings parquet rewritten with the same file names bumps indexBuildCount") {
+    // the index key carries the input's listing fingerprint (sizes and
+    // mtimes, not only names): new bytes under an old file name rebuild
+    import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, StandardCopyOption}
+    def emb(shift: Int) = spark.range(0, 40)
+      .select(col("id").as("vec_id"),
+        transform(sequence(lit(0), lit(7)),
+          j => (col("id") * (shift + 1) + j).cast("float")).as("embedding"))
+    def part(d: java.nio.file.Path) = Files.list(d)
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst.get
+    val S = graft.ops.Similarity
+    val dir = Files.createTempDirectory("graft-emb-rewrite")
+    val path = dir.resolve("embeddings.parquet")
+    emb(0).coalesce(1).write.parquet(path.toString)
+    val name = part(path).getFileName
+    def index() = S.kmeansIndex(spark.read.parquet(path.toString),
+      "embedding", "vec_id", 2, cacheKey = dir.toString)
+      .orderBy("c_label").collect().toSeq
+    val b0 = S.indexBuildCount.get()
+    val first = index()
+    index()
+    assert(S.indexBuildCount.get() == b0 + 1)
+    // rewrite: new bytes copied over the SAME part-file name
+    Thread.sleep(5)
+    val staging = dir.resolve("staging.parquet")
+    emb(1).coalesce(1).write.parquet(staging.toString)
+    Seq("" -> "", "." -> ".crc").foreach { case (pre, suf) =>
+      Files.copy(staging.resolve(s"$pre${part(staging).getFileName}$suf"),
+        path.resolve(s"$pre$name$suf"), StandardCopyOption.REPLACE_EXISTING)
+    } // the part file and its checksum
+    assert(part(path).getFileName == name)
+    val second = index()
+    assert(S.indexBuildCount.get() == b0 + 2,
+      "an in-place rewrite was served the stale index")
+    assert(second != first)
+  }
+
   test("IVF recall@10 >= 0.9 vs brute force on sf0.01 embeddings") {
     val emb = Tables.embeddings(spark, sf("sf0.01"))
     val q = emb.filter(col("vec_id") < 20)

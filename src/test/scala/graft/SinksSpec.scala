@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Exif, Sinks}
-import graft.pipeline.Runner
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -44,22 +43,6 @@ class SinksSpec extends SparkSpec {
     val out = Sinks.processMap(df, Seq("tr", "a-z", "A-Z"))
       .as[String].collect().toSet
     assert(out == Set("ALPHA", "BETA", "GAMMA"))
-  }
-
-  test("Runner memoizes stages and recomputes after invalidate") {
-    val dir = Files.createTempDirectory("graft-runner").toString
-    val runner = new Runner(spark, dir)
-    var builds = 0
-    def build() = { builds += 1; Seq((1, "x")).toDF("k", "v") }
-    runner.stage("s1")(build())
-    runner.stage("s1")(build())
-    assert(builds == 1, "second run must skip the materialized stage")
-    val marker = Paths.get(dir, "s1.parquet", "_SUCCESS")
-    assert(Files.exists(marker))
-    runner.invalidate("s1")
-    assert(!Files.exists(marker))
-    runner.stage("s1")(build())
-    assert(builds == 2)
   }
 
   // hand-built JPEG: SOI + APP1(Exif, little-endian TIFF):

@@ -155,6 +155,21 @@ class TablesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("a table rewritten in place within one session re-resolves to the new rows") {
+    // the relCache key carries the table's listing fingerprint, so the
+    // same (session, zone, dir, table) over rewritten files is a new entry
+    // (the old one lists part files the overwrite deleted)
+    val dir = Files.createTempDirectory("graft-rewrite").toString
+    val nation = spark.read.parquet(s"$src/nation.parquet")
+    nation.write.parquet(s"$dir/nation.parquet")
+    val before = Tables.nation(spark, dir).count()
+    val kept = nation.filter(col("n_regionkey") === 0)
+    kept.write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    val after = Tables.nation(spark, dir)
+    assert(after.count() == kept.count() && kept.count() < before,
+      s"stale table served after an in-place rewrite: ${after.count()} rows")
+  }
+
   test("every declared query analyzes and executes on drifted types") {
     graft.expr.GraftFunctions.register(spark)
     val dir = variantDir
