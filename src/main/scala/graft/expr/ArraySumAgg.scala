@@ -26,8 +26,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * rather than silently truncating.
   */
 case class ArraySumAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    mutableAggBufferOffset: Int, inputAggBufferOffset: Int)
     extends TypedImperativeAggregate[Array[Double]] {
+
+  def this(child: Expression) = this(child, 0, 0)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>

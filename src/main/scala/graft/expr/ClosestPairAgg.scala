@@ -32,8 +32,11 @@ import org.apache.spark.sql.types._
   */
 case class ClosestPairAgg(
     cos: Expression, va: Expression, vb: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    mutableAggBufferOffset: Int, inputAggBufferOffset: Int)
     extends TypedImperativeAggregate[ClosestPairAgg.Buf] {
+
+  def this(cos: Expression, va: Expression, vb: Expression) =
+    this(cos, va, vb, 0, 0)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (cos.dataType != DoubleType)

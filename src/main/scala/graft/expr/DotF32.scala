@@ -3,7 +3,6 @@ package graft.expr
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -33,9 +32,22 @@ case class DotF32(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotF32.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.DotF32.compute($a, $b)")
+
+  override def prettyName: String = "dot_f32"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotF32 =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotF32 {
+  /** The loop interpreted eval and the generated code both call. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -45,25 +57,4 @@ case class DotF32(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      code"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-        }
-        ${ev.value} = $s;
-      """.toString
-    })
-
-  override def prettyName: String = "dot_f32"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotF32 =
-    copy(left = newLeft, right = newRight)
 }

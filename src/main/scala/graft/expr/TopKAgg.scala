@@ -28,8 +28,11 @@ import org.apache.spark.sql.types._
   */
 case class TopKBySim(
     sim: Expression, id: Expression, kExpr: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    mutableAggBufferOffset: Int, inputAggBufferOffset: Int)
     extends TypedImperativeAggregate[ArrayBuffer[(Double, Long)]] {
+
+  def this(sim: Expression, id: Expression, kExpr: Expression) =
+    this(sim, id, kExpr, 0, 0)
 
   private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
 

@@ -39,7 +39,8 @@ object Similarity {
     dotFast(a, b) / (sqrt(dotFast(a, a)) * sqrt(dotFast(b, b)))
 
   /** Squared L2 distance between a float-array column and a double-array
-    * column (centroid), left-to-right.
+    * column (centroid), left-to-right — the HOF reference the
+    * `nearest_cells` kernel (centroidRankCells) is tested against.
     */
   def l2sq(a: Column, b: Column): Column =
     aggregate(
@@ -49,13 +50,6 @@ object Similarity {
       }),
       lit(0.0),
       (s, p) => s + p)
-
-  /** Codegen'd form of `l2sq` (graft.expr.L2SqF32) — bit-identical
-    * values, primitive loop inside whole-stage codegen. Requires
-    * GraftFunctions.register (done by the search entry points).
-    */
-  def l2sqFast(a: Column, b: Column): Column =
-    call_function("l2sq_f32", a, b)
 
   /** Per-query top-k reduction via the bounded TopKBySim aggregate
     * (graft.expr.TopKAgg): map-side partial with an O(k) buffer per
@@ -221,25 +215,19 @@ object Similarity {
   def ivfClosestPair(df: DataFrame, labelCol: String, idCol: String,
       vecCol: String, cents: DataFrame, nProbe: Int = 2,
       maxBlock: Int = 1024, hotCellCap: Int = Int.MaxValue): DataFrame = {
-    val cells = centroidRankCells(df, vecCol, cents, nProbe + 2) match {
-      case None => // empty centroid table -> empty probe set, empty result
-        return df.limit(0).select(col(labelCol),
-          col(idCol).as("va"), col(idCol).as("vb"),
-          lit(null).cast("double").as("cos"))
-      case Some(ranked) => df
-        // stage the ranked array ONCE: it feeds both slices below, and a
-        // non-cheap multi-referenced alias survives CollapseProject — an
-        // inline `ranked` tree would re-run the full 25-cell l2sq ranking
-        // per consumer (measured ~2x em3's probe stage)
-        .withColumn("__rkc", ranked)
-        .select(col(labelCol), col(idCol), col(vecCol),
-          // probed cells (ranks 1..nProbe) + the two NEXT-nearest cells
-          // (ranks nProbe+1, nProbe+2) that sub-key hot blocks below
-          transform(slice(col("__rkc"), 1, nProbe), s => s.getField("c_label"))
-            .as("__pc"),
-          transform(slice(col("__rkc"), nProbe + 1, 2), s => s.getField("c_label"))
-            .as("__subs"))
-    }
+    val cells = df
+      // stage the ranked array ONCE: it feeds both slices below, and a
+      // non-cheap multi-referenced alias survives CollapseProject — an
+      // inline ranking would re-run per consumer. An empty centroid
+      // table ranks to empty arrays: no probe, no row
+      .withColumn("__rkc", centroidRankCells(df, vecCol, cents, nProbe + 2))
+      .select(col(labelCol), col(idCol), col(vecCol),
+        // probed cells (ranks 1..nProbe) + the two NEXT-nearest cells
+        // (ranks nProbe+1, nProbe+2) that sub-key hot blocks below
+        transform(slice(col("__rkc"), 1, nProbe), s => s.getField("c_label"))
+          .as("__pc"),
+        transform(slice(col("__rkc"), nProbe + 1, 2), s => s.getField("c_label"))
+          .as("__subs"))
     // cached (graft-scoped, harness-released): three consumers re-run
     // this lineage otherwise — the cnt broadcast below, then
     // blockedPairs' own counts pass and its bucketed join — and the
@@ -399,115 +387,59 @@ object Similarity {
   def clearIndexCache(): Unit = indexCache.clear()
 
   /** Rank centroids per vector by squared L2 (rounded for cross-engine
-    * tie stability, then centroid label as tiebreak). The centroid table
-    * is tiny (one row per cell), so it is collected (≤ cells rows, the
-    * one driver-side collect this module allows itself) into a literal
-    * array and the per-row top-maxRank runs as a pure expression:
-    * transform → array_sort on (d2, c_label) structs → slice →
-    * posexplode. No crossJoin row blow-up, no window, no Exchange —
-    * at 100 TB the old window form shuffled cells× the embedding table
-    * to rank against a handful of rows.
-    * Output: input columns + (d2, c_label, rk), decisions identical to
-    * the window form (same rounding, same tiebreak).
+    * tie stability, then centroid label as tiebreak): the posexploded
+    * `centroidRankCells` array, one row per (vector, rank <= maxRank).
+    * No crossJoin row blow-up, no window, no Exchange — at 100 TB a
+    * window form would shuffle cells x the embedding table to rank
+    * against a handful of rows.
+    * Output: input columns + (d2, c_label, rk). A null vector ranks to
+    * null and an empty centroid table to an empty array, so neither
+    * yields a row.
     *
     * NOTE: the centroid collect means building this DataFrame RUNS a
-    * Spark job (plan construction is eager on `cents`). An empty centroid
-    * table (empty or fully-filtered input) yields an empty result with
-    * the same schema, mirroring what the old window form returned.
+    * Spark job (plan construction is eager on `cents`).
     */
   def centroidRanks(vectors: DataFrame, vecCol: String, idCol: String,
-      cents: DataFrame, maxRank: Int): DataFrame = {
-    graft.expr.GraftFunctions.register(vectors.sparkSession)
-    centsLiteral(cents) match {
-      case None =>
-        val labelType = cents.schema.head.dataType
-        vectors.limit(0)
-          .withColumn("d2", lit(null).cast("double"))
-          .withColumn("c_label", lit(null).cast(labelType))
-          .withColumn("rk", lit(null).cast("int"))
-      case Some(cl) if maxRank == 1 =>
-        // rank-1 fast path: the codegen'd argmin (expr/NearestCell) —
-        // decision-identical to slice(array_sort(transform(...)), 1, 1)
-        // (same l2sq accumulation, same round-6, same label tiebreak,
-        // pinned in SimilaritySpec) but a primitive loop over a
-        // reference-object centroid matrix instead of building and
-        // sorting `cells` structs per row INTERPRETED. This is the IVF
-        // assignment hot path (sim2, every Lloyd pass, ivfTopK's
-        // candidate side): measured at the sf0.1 gate the index build's
-        // warm Lloyd pass dropped ~10x. The vecCol null filter mirrors
-        // the posexplode form for real corpora (embeddings are non-null;
-        // a null vector's old output — d2 NULL ranked first — was
-        // engine-divergent garbage the oracles never see).
-        vectors
-          .filter(col(vecCol).isNotNull)
-          .withColumn("__s", call_function("nearest_cell", col(vecCol), cl))
-          .withColumn("d2", col("__s.d2"))
-          .withColumn("c_label", col("__s.c_label"))
-          .withColumn("rk", lit(1).cast("int"))
-          .drop("__s")
-      case Some(cl) =>
-        // same null-vector filter as the rank-1 fast path above, so the
-        // two branches agree in cardinality for any input (r21 ADVICE:
-        // the declared corpora are non-null, but a divergent null policy
-        // between rank-1 and rank-N was a latent asymmetry — Lloyd
-        // counts and ivfTopK's candidate/query sides must match)
-        vectors
-          .filter(col(vecCol).isNotNull)
-          .select(col("*"),
-            posexplode(rankedCells(cl, vecCol, maxRank))
-              .as(Seq("__rk0", "__s")))
-          .withColumn("d2", col("__s.d2"))
-          .withColumn("c_label", col("__s.c_label"))
-          .withColumn("rk", (col("__rk0") + 1).cast("int"))
-          .drop("__rk0", "__s")
-    }
-  }
+      cents: DataFrame, maxRank: Int): DataFrame =
+    vectors
+      .select(col("*"),
+        posexplode(centroidRankCells(vectors, vecCol, cents, maxRank))
+          .as(Seq("__rk0", "__s")))
+      .withColumn("d2", col("__s.d2"))
+      .withColumn("c_label", col("__s.c_label"))
+      .withColumn("rk", (col("__rk0") + 1).cast("int"))
+      .drop("__rk0", "__s")
 
   /** The non-exploded form of `centroidRanks`: the `maxRank` nearest
     * centroids of `vecCol` as one sorted array<struct<d2, c_label>>
-    * Column over `vectors` — same collect-the-centroids literal, same
-    * rounding and tiebreak, so consumers that need SEVERAL rank slices
-    * per vector (ivfClosestPair's probe + sub-split cells) evaluate the
-    * ranking once instead of re-exploding. None when `cents` is empty
-    * (empty or fully-filtered input).
+    * Column over `vectors` — the codegen'd `nearest_cells` kernel
+    * (graft.expr.NearestCells) against the collected centroid table, so
+    * consumers that need SEVERAL rank slices per vector (ivfClosestPair's
+    * probe + sub-split cells) evaluate the ranking once instead of
+    * re-exploding. Its decisions are the HOF ranking
+    * `slice(array_sort(transform(cents, c => struct(round(l2sq(v, c._2),
+    * 6), c._1))), 1, maxRank)` (pinned in SimilaritySpec and
+    * NearestCellsProps).
     */
   def centroidRankCells(vectors: DataFrame, vecCol: String,
-      cents: DataFrame, maxRank: Int): Option[Column] = {
+      cents: DataFrame, maxRank: Int): Column = {
     graft.expr.GraftFunctions.register(vectors.sparkSession)
-    // l2sqFast, not l2sq: the fold runs rows x cells times — the
-    // codegen'd expression's primitive loop replaces per-element
-    // interpreted lambda churn even though the surrounding transform/
-    // array_sort evaluate interpreted (measured at sf1: sim2 1.6 s ->
-    // 0.75 s, sim3 probe 3.8 s -> 1.4 s, index build 12.9 s -> ~6.4 s).
-    // Rank-1 consumers never reach this tree — centroidRanks routes them
-    // to the codegen'd nearest_cell argmin instead.
-    centsLiteral(cents).map(rankedCells(_, vecCol, maxRank))
+    call_function("nearest_cells", col(vecCol), centsLiteral(cents),
+      lit(maxRank))
   }
 
-  /** The sorted top-maxRank cell structs of `vecCol` against a centroid
-    * literal — the shared ranking tree of centroidRankCells/centroidRanks.
+  /** The collected centroid table as ONE typed Literal Column (empty,
+    * of the label's type, for an empty table). Not a CreateArray tree of
+    * cells x dims literal nodes: the per-element form made every consumer
+    * pay seconds of analyzer/codegen work on a ~1600-node constant
+    * subtree (measured: sim2 cold 3.9 s -> the plan, not the data).
     */
-  private def rankedCells(centsLit: Column, vecCol: String,
-      maxRank: Int): Column = slice(
-    array_sort(transform(centsLit, c => struct(
-      round(l2sqFast(col(vecCol), c.getField("_2")), 6).as("d2"),
-      c.getField("_1").as("c_label")))),
-    1, maxRank)
-
-  /** The collected centroid table as ONE typed Literal Column (None when
-    * empty) — shared by the sorted-rank tree above and the rank-1
-    * argmin path. Not a CreateArray tree of cells x dims literal nodes:
-    * the per-element form made every consumer pay seconds of
-    * analyzer/codegen work on a ~1600-node constant subtree (measured:
-    * sim2 cold 3.9 s -> the plan, not the data).
-    */
-  private def centsLiteral(cents: DataFrame): Option[Column] = {
+  private def centsLiteral(cents: DataFrame): Column = {
     val rows = cents
       .select(col(cents.columns.head).as("c_label"), col("centroid"))
       .collect()
-    if (rows.isEmpty) return None
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    Some(cents.schema.head.dataType match {
+    cents.schema.head.dataType match {
       case StringType => typedLit(rows.map(r =>
         (r.getString(0), r.getSeq[Double](1).toSeq)))
       case LongType => typedLit(rows.map(r =>
@@ -516,7 +448,7 @@ object Similarity {
         (r.getInt(0), r.getSeq[Double](1).toSeq)))
       case t => throw new IllegalArgumentException(
         s"unsupported centroid label type ${t.sql}")
-    })
+    }
   }
 
   /** IVF assignment: nearest centroid per embedding. */
@@ -540,7 +472,10 @@ object Similarity {
       .select(col(cId), col(cVec), col("c_label"))
     val qry = centroidRanks(queries, qVec, qId, cents, nProbe)
       .select(col(qId), col(qVec), col("c_label"))
-    val joined = qry.join(cand, "c_label")
+    // candidates on the LEFT: both sides are the same ranking over the
+    // same scan, so their static size estimates tie, and a tie builds
+    // the right side — here the (small) query side
+    val joined = cand.join(qry, "c_label")
       .withColumn("sim", round(cosineFast(col(qVec), col(cVec)), 6))
     topKReduce(joined, qId, cId, k)
   }

@@ -17,6 +17,31 @@ object WindowQueries {
   private def eventsUsGrid(s: org.apache.spark.sql.SparkSession, d: String) =
     T.events(s, d).withColumn("ts", expr("ts div 1000 * 1000"))
 
+  /** The oracle of both gap-session forms (w2 scalable, w10 faithful). */
+  private val GapSessionsOracle =
+    """WITH ordered AS (
+      |  SELECT epoch_ns(ts) AS tsn,
+      |         row_number() OVER (ORDER BY event_id) AS rn
+      |  FROM events),
+      |g AS (
+      |  SELECT CAST((rn - 1) // 5 AS BIGINT) AS grp, min(tsn) AS start_ns,
+      |         max(tsn) AS end_ns, count(*) AS n
+      |  FROM ordered GROUP BY 1),
+      |w AS (
+      |  SELECT grp, start_ns, end_ns, n,
+      |         lead(start_ns) OVER (ORDER BY grp) AS next_start_ns,
+      |         lead(n) OVER (ORDER BY grp) AS next_n
+      |  FROM g)
+      |SELECT grp AS group_id, start_ns, end_ns, next_start_ns,
+      |       next_start_ns - end_ns AS gap_ns
+      |FROM w
+      |WHERE n = 5 AND next_n = 5
+      |  AND next_start_ns - end_ns > 12000000000
+      |ORDER BY group_id"""
+
+  /** Below this estimated input size w2 runs the single-window form. */
+  private val W2SmallBytes = 64L << 20
+
   def defs: Seq[QueryDef] = Seq(
 
     // W1: global sort by file mtime (point3d_transformation.py:24).
@@ -37,26 +62,7 @@ object WindowQueries {
     // row-identical in OpsSpec. At 20M+ events the faithful form funnels
     // the whole table through one window task; the scalable form keeps
     // every stage at the session's parallelism.
-    QueryDef("w2_gap_sessions",
-      """WITH ordered AS (
-        |  SELECT epoch_ns(ts) AS tsn,
-        |         row_number() OVER (ORDER BY event_id) AS rn
-        |  FROM events),
-        |g AS (
-        |  SELECT CAST((rn - 1) // 5 AS BIGINT) AS grp, min(tsn) AS start_ns,
-        |         max(tsn) AS end_ns, count(*) AS n
-        |  FROM ordered GROUP BY 1),
-        |w AS (
-        |  SELECT grp, start_ns, end_ns, n,
-        |         lead(start_ns) OVER (ORDER BY grp) AS next_start_ns,
-        |         lead(n) OVER (ORDER BY grp) AS next_n
-        |  FROM g)
-        |SELECT grp AS group_id, start_ns, end_ns, next_start_ns,
-        |       next_start_ns - end_ns AS gap_ns
-        |FROM w
-        |WHERE n = 5 AND next_n = 5
-        |  AND next_start_ns - end_ns > 12000000000
-        |ORDER BY group_id""") { (s, d) =>
+    QueryDef("w2_gap_sessions", GapSessionsOracle) { (s, d) =>
       // ADAPTIVE small-input switch (r22; mirrors Dedup's cost-based
       // path choice and Bench's corpus-sized session shape): below
       // ~64 MB of estimated input the scalable form's 4 jobs (persist +
@@ -65,12 +71,10 @@ object WindowQueries {
       // runs 1 job (measured: 0.32 vs 1.04 s at sf0.1, 1.11 vs 2.69 s
       // at sf1). Above the threshold the scale-safe numbering stands:
       // one window task over >64 MB is exactly the funnel it exists to
-      // avoid. Threshold env-overridable for cluster-side tuning.
+      // avoid.
       val ev = eventsUsGrid(s, d)
-      val smallBytes = sys.env.get("SPARK_GRAFT_W2_SMALL_BYTES")
-        .map(_.toLong).getOrElse(64L << 20)
       val est = ev.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= smallBytes)
+      if (est <= W2SmallBytes)
         Windows.gapSessions(ev.select("event_id", "ts"), "event_id", "ts")
       else Windows.gapSessionsScalable(ev, "event_id", "ts")
     },
@@ -79,30 +83,11 @@ object WindowQueries {
     // — row_number + lead over one global order, the reference's literal
     // shape) declared under its own name so BOTH twins carry oracle rows:
     // w2 above IS the scalable form (range-partitioned numbering + grp+1
-    // self-join), w10 is the original. Same oracle SQL by construction —
-    // OpsSpec additionally pins the two row-identical on a shared corpus.
+    // self-join), w10 is the original. One oracle SQL for both — OpsSpec
+    // additionally pins the two row-identical on a shared corpus.
     // At fact-table scale this form funnels every row through ONE window
     // task by design; skip-list it in scale sweeps (w2 is the stand-in).
-    QueryDef("w10_gap_sessions_faithful",
-      """WITH ordered AS (
-        |  SELECT epoch_ns(ts) AS tsn,
-        |         row_number() OVER (ORDER BY event_id) AS rn
-        |  FROM events),
-        |g AS (
-        |  SELECT CAST((rn - 1) // 5 AS BIGINT) AS grp, min(tsn) AS start_ns,
-        |         max(tsn) AS end_ns, count(*) AS n
-        |  FROM ordered GROUP BY 1),
-        |w AS (
-        |  SELECT grp, start_ns, end_ns, n,
-        |         lead(start_ns) OVER (ORDER BY grp) AS next_start_ns,
-        |         lead(n) OVER (ORDER BY grp) AS next_n
-        |  FROM g)
-        |SELECT grp AS group_id, start_ns, end_ns, next_start_ns,
-        |       next_start_ns - end_ns AS gap_ns
-        |FROM w
-        |WHERE n = 5 AND next_n = 5
-        |  AND next_start_ns - end_ns > 12000000000
-        |ORDER BY group_id""") { (s, d) =>
+    QueryDef("w10_gap_sessions_faithful", GapSessionsOracle) { (s, d) =>
       Windows.gapSessions(eventsUsGrid(s, d), "event_id", "ts")
     },
 

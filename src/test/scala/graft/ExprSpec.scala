@@ -17,18 +17,42 @@ class ExprSpec extends SparkSpec {
       s"wrong failure: ${e.getMessage}")
   }
 
-  test("nearest_cell rejects an empty centroid table at analysis time") {
-    // r21 ADVICE: an empty foldable table NPE'd in codegen. The check
-    // must hold on the non-structural path too (a foldable Cast, not
-    // the CreateArray/Literal fast paths) — that exercises the memoized
-    // eval fallback in NearestCell.emptyTable.
+  test("an empty table ranks to an empty array, for a Literal and for a Cast child") {
+    // r21: an empty foldable table NPE'd in codegen. Both child shapes
+    // reach execution (ConstantFolding is off, so the Cast stays a Cast),
+    // interpreted and codegen'd.
     GraftFunctions.register(spark)
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT nearest_cell(array(1.0d), cast(array() as " +
-        "array<struct<c_label:int,centroid:array<double>>>))").collect()
-    }
-    assert(e.getMessage.contains("non-empty centroid table"),
-      s"wrong failure: ${e.getMessage}")
+    import org.apache.spark.sql.functions._
+    val vecs = spark.range(0, 3).select(array(col("id").cast("double")).as("v"))
+    val asLiteral = typedLit(Seq.empty[(Int, Seq[Double])])
+    val asCast = expr(
+      "cast(array() as array<struct<c_label:int,centroid:array<double>>>)")
+    for (codegen <- Seq(true, false); cents <- Seq(asLiteral, asCast))
+      TestSpark.withCodegen(codegen, "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConstantFolding") {
+        val q = vecs
+          .select(call_function("nearest_cells", col("v"), cents, lit(3)))
+        val child = q.queryExecution.optimizedPlan.expressions
+          .flatMap(_.collect { case e: graft.expr.NearestCells => e.cents }).head
+        assert(child.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Cast] ==
+          (cents eq asCast), child)
+        val got = q.collect().map(_.getSeq[org.apache.spark.sql.Row](0))
+        assert(got.length == 3 && got.forall(_.isEmpty),
+          s"codegen=$codegen $cents: ${got.toSeq}")
+      }
+  }
+
+  test("nearest_cells type check reads no centroid data") {
+    // a foldable centroid child whose eval throws must still type-check
+    // (ROADMAP D2's structural check, for this expression)
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    val e = graft.expr.NearestCells(
+      Literal.create(Seq(1.0), ArrayType(DoubleType)), ExprSpec.Unreadable,
+      Literal(2))
+    assert(e.checkInputDataTypes().isSuccess)
+    assert(e.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[StructType].fieldNames.toSeq == Seq("d2", "c_label"))
   }
 
   test("topk_by_sim keeps the k best by (sim DESC, id ASC) across merges") {
@@ -65,33 +89,6 @@ class ExprSpec extends SparkSpec {
       .map(_.getLong(0))
     assert(top == Seq(2L, 1L, 4L),
       s"NaN similarity must rank first (Double.compare order), got $top")
-  }
-
-  test("collect_smallest_n equals slice(array_sort(collect_list), 1, n)") {
-    GraftFunctions.register(spark)
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // struct payloads with deliberate first-field ties so the ordering
-    // must fall through to later fields, across many partitions so
-    // partial-buffer merges happen
-    val df = (0L until 300L)
-      .map(i => (i % 7, (i % 5).toInt, i, i * 0.25))
-      .toDF("g", "a", "b", "z").repartition(11)
-      .select(col("g"), struct(col("a"), col("b"), col("z")).as("r"))
-    val viaBounded = df.groupBy("g")
-      .agg(call_function("collect_smallest_n", col("r"), lit(5)).as("e5"))
-    val viaCollectAll = df.groupBy("g")
-      .agg(slice(array_sort(collect_list(col("r"))), 1, 5).as("e5"))
-    assert(viaBounded.exceptAll(viaCollectAll).isEmpty &&
-      viaCollectAll.exceptAll(viaBounded).isEmpty,
-      "bounded smallest-n disagrees with the collect-all form")
-    // groups smaller than n return the whole group, sorted
-    val small = Seq((1L, 3), (1L, 1)).toDF("g", "a")
-      .select(col("g"), struct(col("a")).as("r"))
-      .groupBy("g")
-      .agg(call_function("collect_smallest_n", col("r"), lit(5)).as("e5"))
-      .collect()(0).getSeq[org.apache.spark.sql.Row](1).map(_.getInt(0))
-    assert(small == Seq(1, 3))
   }
 
   test("winnow_fp twin equality holds for non-BMP (astral) characters") {
@@ -149,28 +146,6 @@ class ExprSpec extends SparkSpec {
     assert(cg.contains("WholeStageCodegen"), cg.take(500))
   }
 
-  test("l2sq_f32 codegen loop matches the HOF fold bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
-    val emb = graft.ops.Tables.embeddings(spark, sf("sf0.01"))
-      .limit(50).select(col("embedding").as("a"))
-    // float-vs-float and float-vs-double (centroid) element-type mixes
-    val paired = emb.crossJoin(emb.select(col("a").as("b")))
-      .withColumn("bd", transform(col("b"), x => x.cast("double")))
-    val diffs = paired.select(greatest(
-      abs(graft.ops.Similarity.l2sq(col("a"), col("b")) -
-        graft.ops.Similarity.l2sqFast(col("a"), col("b"))),
-      abs(graft.ops.Similarity.l2sq(col("a"), col("bd")) -
-        graft.ops.Similarity.l2sqFast(col("a"), col("bd")))).as("d"))
-      .agg(max(col("d"))).collect()(0).getDouble(0)
-    assert(diffs == 0.0, s"codegen l2sq deviates by $diffs")
-    val cg = paired.select(
-      graft.ops.Similarity.l2sqFast(col("a"), col("bd")).as("s"))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    assert(cg.contains("WholeStageCodegen"), cg.take(500))
-  }
-
   test("solve_homography null input yields null, wrong arity is an error") {
     GraftFunctions.register(spark)
     val r = spark.sql(
@@ -183,5 +158,23 @@ class ExprSpec extends SparkSpec {
     }
     assert(err.getMessage.toLowerCase.contains("argument") ||
       err.getMessage.contains("solve_homography"))
+  }
+}
+
+object ExprSpec {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.LeafExpression
+  import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+  import org.apache.spark.sql.types._
+
+  /** A foldable centroid table that fails if anything evaluates it. */
+  case object Unreadable extends LeafExpression with CodegenFallback {
+    override def foldable: Boolean = true
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("c_label", IntegerType),
+      StructField("centroid", ArrayType(DoubleType)))))
+    override def eval(input: InternalRow): Any =
+      throw new IllegalStateException("the centroid table was evaluated")
   }
 }

@@ -90,12 +90,7 @@ object GeometryProps extends Properties("geometry") {
       codegen: Boolean): Seq[(Double, Double)] = {
     val spark = TestSpark.spark
     import spark.implicits._
-    val confs = Map(
-      "spark.sql.codegen.wholeStage" -> codegen.toString,
-      "spark.sql.codegen.factoryMode" -> (if (codegen) "FALLBACK" else "NO_CODEGEN"))
-    val saved = confs.keys.map(c => c -> spark.conf.getOption(c)).toMap
-    confs.foreach { case (c, v) => spark.conf.set(c, v) }
-    try {
+    TestSpark.withCodegen(codegen) {
       // an RDD source, so no optimizer rule folds the projection into a
       // local relation on the driver
       val df = spark.sparkContext.parallelize(pts.zipWithIndex.map {
@@ -107,9 +102,6 @@ object GeometryProps extends Properties("geometry") {
       require(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen,
         plan.toString)
       q.collect().sortBy(_.getInt(0)).map(r => (r.getDouble(1), r.getDouble(2))).toSeq
-    } finally saved.foreach {
-      case (c, Some(v)) => spark.conf.set(c, v)
-      case (c, None) => spark.conf.unset(c)
     }
   }
 

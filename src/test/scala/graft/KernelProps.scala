@@ -207,3 +207,94 @@ object SimHashProps extends Properties("simhash64") {
       graft.expr.SimHash64.compute(arr) == reference(ts)
     }
 }
+
+/** The `nearest_cells` kernel (expr/NearestCells) against the HOF ranking
+  * it replaces, interpreted and codegen'd: every rank count, float and
+  * double vectors, int/bigint/string labels, exact ties, NaN coordinates,
+  * large magnitudes (where the left-to-right accumulation order shows in
+  * d2) and the empty table.
+  */
+object NearestCellsProps extends Properties("nearest_cells") {
+  import org.apache.spark.sql.{Column, Row}
+  import org.scalacheck.Prop.propBoolean
+  import org.apache.spark.sql.execution.WholeStageCodegenExec
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+  import graft.ops.Similarity
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) =
+    p.withMinSuccessfulTests(25)
+
+  private val coord: Gen[Double] = Gen.frequency(
+    8 -> Gen.choose(-2, 2).map(_.toDouble),
+    2 -> Gen.choose(-1.0, 1.0),
+    1 -> Gen.oneOf(1e8, -1e8),
+    1 -> Gen.const(Double.NaN))
+
+  /** String labels whose order is not their index order. */
+  private val names = Vector("b", "a", "B", "ab", "", "z", "é", "aa")
+
+  private case class Case(dim: Int, floatVec: Boolean, labelKind: Int,
+      labels: Seq[Int], cents: Seq[Seq[Double]], vecs: Seq[Seq[Double]])
+
+  private val caseGen: Gen[Case] = for {
+    dim <- Gen.choose(1, 5)
+    floatVec <- Gen.oneOf(true, false)
+    labelKind <- Gen.choose(0, 2)
+    k <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 9))
+    // few distinct positions, so several labels tie on d2
+    pool <- Gen.listOfN(3, Gen.listOfN(dim, coord))
+    cents <- Gen.listOfN(k, Gen.oneOf(Gen.oneOf(pool), Gen.listOfN(dim, coord)))
+    labels <- Gen.listOfN(k, Gen.choose(-3, names.length - 1))
+    vecs <- Gen.listOfN(12, Gen.oneOf(Gen.oneOf(pool), Gen.listOfN(dim, coord)))
+  } yield Case(dim, floatVec, labelKind, labels, cents, vecs)
+
+  private def centsLit(c: Case): Column = {
+    val cs = c.cents.map(_.toSeq)
+    c.labelKind match {
+      case 0 => typedLit(c.labels.zip(cs).toArray)
+      case 1 => typedLit(c.labels.map(_.toLong).zip(cs).toArray)
+      case _ => typedLit(c.labels.map(l => names(math.floorMod(l, names.length)))
+        .zip(cs).toArray)
+    }
+  }
+
+  private def reference(v: Column, cents: Column, n: Int): Column =
+    slice(array_sort(transform(cents, c => struct(
+      round(Similarity.l2sq(v, c.getField("_2")), 6), c.getField("_1")))), 1, n)
+
+  property("matches the HOF array_sort ranking") =
+    Prop.forAll(caseGen) { c =>
+      val spark = TestSpark.spark
+      graft.expr.GraftFunctions.register(spark)
+      val k = c.cents.length
+      val ns = Seq(1, 2, 8, k, k + 3)
+      val elem = if (c.floatVec) FloatType else DoubleType
+      val rows = c.vecs.zipWithIndex.map { case (v, i) =>
+        Row(i, if (c.floatVec) v.map(_.toFloat) else v) }
+      // an RDD source, so no optimizer rule folds the projection into a
+      // local relation on the driver
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+        StructType(Seq(StructField("i", IntegerType),
+          StructField("v", ArrayType(elem)))))
+      val cl = centsLit(c)
+      val cols = ns.flatMap(n => Seq(
+        call_function("nearest_cells", col("v"), cl, lit(n)),
+        reference(col("v"), cl, n)))
+      val bad = Seq(true, false).flatMap { codegen =>
+        TestSpark.withCodegen(codegen) {
+          val q = df.select(col("i") +: cols: _*)
+          require(q.queryExecution.executedPlan
+            .exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen)
+          q.collect().toSeq.flatMap { r =>
+            ns.indices.collect {
+              case j if r.getSeq[Row](1 + 2 * j) != r.getSeq[Row](2 + 2 * j) =>
+                s"codegen=$codegen n=${ns(j)} row ${r.getInt(0)}: " +
+                  s"${r.get(1 + 2 * j)} vs ${r.get(2 + 2 * j)}"
+            }
+          }
+        }
+      }
+      bad.isEmpty :| bad.take(3).mkString("\n")
+    }
+}

@@ -324,28 +324,28 @@ class DedupSpec extends SparkSpec {
 class SimilaritySpec extends SparkSpec {
 
   test("nearest_cell rank-1 path == sorted-HOF ranking exactly (incl. ties)") {
-    // r21 optimization: centroidRanks(maxRank = 1) routes to the
-    // codegen'd argmin (expr/NearestCell) instead of building + sorting
-    // `cells` structs per row interpreted. This pin proves the two forms
-    // decision-identical — same rounded d2, same label-ascending
-    // tiebreak — on (a) engineered exact ties (duplicate centroid
-    // positions under different labels) and (b) the real embeddings
-    // corpus with int labels.
+    // centroidRanks ranks every maxRank with the codegen'd nearest_cells
+    // kernel (expr/NearestCells). This pins it, at ranks 1, 2 and 8, to
+    // the reference ranking built from Similarity.l2sq (cross join,
+    // round-6 d2, row_number over (d2, c_label)) on (a) engineered exact
+    // ties (duplicate centroid positions under different labels) and
+    // (b) the real embeddings corpus with int labels.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    graft.expr.GraftFunctions.register(spark)
     val S = graft.ops.Similarity
-    def slowRank1(vecs: org.apache.spark.sql.DataFrame,
-        cents: org.apache.spark.sql.DataFrame) = {
-      val ranked = S.centroidRankCells(vecs, "embedding", cents, 1).get
-      vecs.select(col("*"), posexplode(ranked).as(Seq("__rk0", "__s")))
-        .select(col("vec_id"), col("__s.d2").as("d2"),
-          col("__s.c_label").as("c_label"),
-          (col("__rk0") + 1).cast("int").as("rk"))
-    }
-    def fastRank1(vecs: org.apache.spark.sql.DataFrame,
-        cents: org.apache.spark.sql.DataFrame) =
-      S.centroidRanks(vecs, "embedding", "vec_id", cents, 1)
+    def reference(vecs: DataFrame, cents: DataFrame, maxRank: Int) =
+      vecs.crossJoin(cents.toDF("c_label", "centroid"))
+        .withColumn("d2", round(S.l2sq(col("embedding"), col("centroid")), 6))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("vec_id").orderBy(col("d2"), col("c_label"))))
+        .filter(col("rk") <= maxRank)
         .select("vec_id", "d2", "c_label", "rk")
+    def kernel(vecs: DataFrame, cents: DataFrame, maxRank: Int) =
+      S.centroidRanks(vecs, "embedding", "vec_id", cents, maxRank)
+        .select("vec_id", "d2", "c_label", "rk")
+    def same(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     // (a) ties: labels 0..5 but only 3 distinct positions (id % 3), so
     // every vector ties two labels on d2 and the smaller label must win
     val vecs = spark.range(0, 200).select(col("id").as("vec_id"),
@@ -354,19 +354,21 @@ class SimilaritySpec extends SparkSpec {
     val tied = spark.range(0, 6).select(col("id").as("c_label"),
       transform(sequence(lit(0), lit(7)),
         j => ((col("id") % 3) + j).cast("double")).as("centroid"))
-    val fa = fastRank1(vecs, tied)
-    val sa = slowRank1(vecs, tied)
-    assert(fa.exceptAll(sa).isEmpty && sa.exceptAll(fa).isEmpty,
-      "tie corpus: fast/slow rank-1 disagree")
-    assert(fa.filter(col("c_label") >= 3).isEmpty,
-      "tie corpus: label-ascending tiebreak violated")
     // (b) real corpus, int labels via label-partition centroids
     val emb = graft.ops.Tables.embeddings(spark, sf("sf0.001"))
     val cents = S.centroids(emb, "embedding", "label")
-    val fb = fastRank1(emb, cents)
-    val sb = slowRank1(emb, cents)
-    assert(fb.exceptAll(sb).isEmpty && sb.exceptAll(fb).isEmpty,
-      "embeddings corpus: fast/slow rank-1 disagree")
+    Seq(1, 2, 8).foreach { r =>
+      assert(same(kernel(vecs, tied, r), reference(vecs, tied, r)),
+        s"tie corpus: kernel and reference disagree at rank $r")
+      assert(same(kernel(emb, cents, r), reference(emb, cents, r)),
+        s"embeddings corpus: kernel and reference disagree at rank $r")
+    }
+    assert(kernel(vecs, tied, 1).filter(col("c_label") >= 3).isEmpty,
+      "tie corpus: label-ascending tiebreak violated")
+    // an empty centroid table ranks nothing (same columns, no rows)
+    val none = kernel(vecs, tied.filter(lit(false)), 2)
+    assert(none.columns.toSeq == Seq("vec_id", "d2", "c_label", "rk") &&
+      none.isEmpty)
   }
 
   test("kmeansIndex cache is session-free, cross-session, and bounded") {

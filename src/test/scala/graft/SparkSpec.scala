@@ -17,6 +17,24 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` compiled (whole-stage and expression codegen, no
+    * fallback to interpreted on a compile error) or fully interpreted,
+    * with `extra` confs set too; every conf is restored after.
+    */
+  def withCodegen[T](codegen: Boolean, extra: (String, String)*)(body: => T): T = {
+    val confs = Seq(
+      "spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.codegen.fallback" -> (!codegen).toString,
+      "spark.sql.codegen.factoryMode" ->
+        (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")) ++ extra
+    val saved = confs.map { case (c, _) => c -> spark.conf.getOption(c) }
+    confs.foreach { case (c, v) => spark.conf.set(c, v) }
+    try body finally saved.foreach {
+      case (c, Some(v)) => spark.conf.set(c, v)
+      case (c, None) => spark.conf.unset(c)
+    }
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
