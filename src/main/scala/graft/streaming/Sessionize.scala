@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{classic, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.{DeduplicateWithinWatermark, EventTimeWatermark}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -13,11 +15,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *  - `sessionGaps`: event-time session windows (works in batch too —
   *    the oracled w8 query reuses it);
+  *  - `dedupedEvents`: drops re-delivered (poseId, slot) events within
+  *    the watermark window;
   *  - `completeGroups`: count-based groups of 5 per pose id via
   *    flatMapGroupsWithState — emits a group the moment its 5th exposure
   *    arrives, or flushes a partial group when the event-time watermark
   *    passes its timeout (the late-camera-write story the batch reference
-  *    doesn't have).
+  *    doesn't have). Composed as `completeGroups(dedupedEvents(x))`, the
+  *    two run as ONE stateful operator: the group state keeps the seen
+  *    slots, so a trigger commits one state store per partition, not
+  *    two. Checkpoints of the earlier two-operator plan do not resume.
   */
 object Sessionize {
 
@@ -33,11 +40,18 @@ object Sessionize {
       endTs: Timestamp,
       paths: Seq[String])
 
-  /** Per-key accumulator (public: the state encoder's codegen requires a
-    * resolvable public constructor).
+  /** Per-key state (public: the state encoder's codegen requires a
+    * resolvable public constructor): the open group's paths (newest
+    * first) and event-time span, and the dedup's seen slots, each with
+    * its window end in µs (ts + window).
     */
-  case class Acc(paths: Seq[String], slots: Seq[Int],
-      startMs: Long, endMs: Long)
+  case class Acc(paths: Seq[String], startMs: Long, endMs: Long,
+      seen: Map[Int, Long]) {
+    def restart: Acc = Acc(Seq.empty, Long.MaxValue, Long.MinValue, seen)
+  }
+  object Acc {
+    val empty: Acc = Acc(Seq.empty, Long.MaxValue, Long.MinValue, Map.empty)
+  }
 
   /** Event-time session windows over a timestamp column; `df` may be a
     * batch or streaming DataFrame (streaming requires a watermark
@@ -59,6 +73,8 @@ object Sessionize {
     * `dropDuplicatesWithinWatermark` keeps per-key state only until the
     * watermark passes it, so state is bounded by event-time skew rather
     * than growing with the stream (the plain dropDuplicates would).
+    * Fed straight into [[completeGroups]], this operator is not run: the
+    * group state takes its dedup over.
     */
   def dedupedEvents(events: Dataset[FileEvent],
       withinSeconds: Long = 60): Dataset[FileEvent] = {
@@ -70,16 +86,51 @@ object Sessionize {
       .as[FileEvent]
   }
 
+  /** The dedup's input and window (µs) when `events` is exactly what
+    * [[dedupedEvents]] builds — a watermark-window dedup on
+    * (poseId, slot) — else `events` itself and no window.
+    */
+  private def absorbDedup(events: Dataset[FileEvent])
+      : (Dataset[FileEvent], Option[Long]) = events match {
+    case ds: classic.Dataset[FileEvent @unchecked] =>
+      ds.queryExecution.analyzed match {
+        case DeduplicateWithinWatermark(keys, child)
+            if keys.map(_.name).sorted == Seq("poseId", "slot") =>
+          child.output.find(_.name == "ts").map(_.metadata)
+            .filter(_.contains(EventTimeWatermark.delayKey))
+            .fold((events, Option.empty[Long])) { md =>
+              val input: Dataset[FileEvent] =
+                new classic.Dataset(ds.sparkSession, child, ds.encoder)
+              (input, Some(md.getLong(EventTimeWatermark.delayKey) * 1000))
+            }
+        case _ => (events, None)
+      }
+    case _ => (events, None)
+  }
+
   /** Count-based group assembly: emit each pose's group as soon as
     * `groupSize` files arrived; flush incomplete groups when the event
     * time watermark passes last-event + `gapSeconds` (mirrors the 12 s
-    * missing-pose rule). State per key is O(groupSize) paths.
+    * missing-pose rule). State per key is O(groupSize).
+    *
+    * Fed [[dedupedEvents]], the dedup runs here, in the same
+    * `flatMapGroupsWithState`: one stateful operator, so one state-store
+    * commit per partition per trigger instead of two. Each pose's state
+    * keeps its seen slots until the watermark reaches slot ts + window,
+    * exactly when `dropDuplicatesWithinWatermark` evicts the key, and
+    * the timeout is the earlier of the group deadline and the first
+    * expiry, so the output matches the two-operator plan batch for
+    * batch. Any other input runs the same function with no window. A
+    * checkpoint written by the two-operator plan (before the dedup was
+    * taken over) cannot be resumed by this one: its operators differ.
     */
   def completeGroups(events: Dataset[FileEvent], groupSize: Int = 5,
       gapSeconds: Long = 12, setWatermark: Boolean = true)
       : Dataset[PoseGroup] = {
     val spark = events.sparkSession
     import spark.implicits._
+    val (input, windowMicros) = absorbDedup(events)
+    val gapMs = gapSeconds * 1000
 
     def flush(key: String, acc: Acc, complete: Boolean): PoseGroup =
       PoseGroup(key, acc.paths.length, complete,
@@ -90,36 +141,54 @@ object Sessionize {
     // declared one (e.g. dedupedEvents): Spark allows CHAINED stateful
     // operators but forbids REDEFINING the watermark on one lineage —
     // the upstream delay then also governs this stage's timeout sweep
-    (if (setWatermark) events.withWatermark("ts", s"$gapSeconds seconds")
-     else events)
+    (if (setWatermark) input.withWatermark("ts", s"$gapSeconds seconds")
+     else input)
       .groupByKey(_.poseId)
       .flatMapGroupsWithState[Acc, PoseGroup](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: String, it: Iterator[FileEvent], state: GroupState[Acc]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(flush(key, _, complete = false))
-            state.remove()
-            out.iterator
-          } else {
-            var acc = state.getOption.getOrElse(
-              Acc(Seq.empty, Seq.empty, Long.MaxValue, Long.MinValue))
-            val emitted = scala.collection.mutable.ListBuffer[PoseGroup]()
-            it.foreach { e =>
+          // one body for new data and for a timeout (whose iterator is
+          // empty): add the unseen slots, then settle both deadlines
+          // against the watermark
+          var acc = state.getOption.getOrElse(Acc.empty)
+          val emitted = scala.collection.mutable.ListBuffer[PoseGroup]()
+          it.foreach { e =>
+            if (!acc.seen.contains(e.slot)) {
               val ms = e.ts.getTime
-              acc = Acc(e.path +: acc.paths, e.slot +: acc.slots,
-                math.min(acc.startMs, ms), math.max(acc.endMs, ms))
+              // the µs the dedup operator reads from its UnsafeRow
+              val seen = windowMicros.fold(acc.seen)(w => acc.seen.updated(
+                e.slot, DateTimeUtils.fromJavaTimestamp(e.ts) + w))
+              acc = Acc(e.path +: acc.paths, math.min(acc.startMs, ms),
+                math.max(acc.endMs, ms), seen)
               if (acc.paths.length >= groupSize) {
                 emitted += flush(key, acc, complete = true)
-                acc = Acc(Seq.empty, Seq.empty, Long.MaxValue, Long.MinValue)
+                acc = acc.restart
               }
             }
-            if (acc.paths.isEmpty) state.remove()
-            else {
-              state.update(acc)
-              state.setTimeoutTimestamp(acc.endMs + gapSeconds * 1000)
-            }
-            emitted.iterator
           }
+          // the group deadline passed: flush the partial group, as the
+          // timeout would; the seen slots expire as
+          // StreamingDeduplicateWithinWatermarkExec evicts them, at
+          // expiresAt <= watermark
+          if (acc.paths.nonEmpty || acc.seen.nonEmpty) {
+            val wm = state.getCurrentWatermarkMs()
+            if (acc.paths.nonEmpty && acc.endMs + gapMs < wm) {
+              emitted += flush(key, acc, complete = false)
+              acc = acc.restart
+            }
+            acc = acc.copy(seen = acc.seen.filter(_._2 > wm * 1000))
+          }
+          // a timeout fires once timeout < watermark, so an entry
+          // expiring at e µs needs floor((e - 1) / 1000) ms
+          val deadlines =
+            (if (acc.paths.nonEmpty) Seq(acc.endMs + gapMs) else Nil) ++
+              acc.seen.values.map(e => Math.floorDiv(e - 1, 1000L))
+          if (deadlines.isEmpty) state.remove()
+          else {
+            state.update(acc)
+            state.setTimeoutTimestamp(deadlines.min)
+          }
+          emitted.iterator
       }
   }
 }
