@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Codegen'd word-k-shingle expression: `word_shingles(tokens, k)` →
   * array<string> of the k-token windows joined by single spaces —
   * value-identical to the guarded higher-order-function form in
-  * `TextOps.shinglesHof` (fewer than k tokens → empty array), but one
+  * `TextOps.shingles` (fewer than k tokens → empty array), but one
   * compiled loop per row instead of O(n·k) interpreted `element_at` +
   * `concat_ws` lambda evaluations. This is the near-dup pipeline's
   * per-row constant cost at 100 TB (reference shingling surface:

@@ -24,29 +24,15 @@ object Aggs {
     * aggregation buffer (Spark's Median is a collect-then-sort
     * TypedImperativeAggregate) — faithful to numpy and required for the
     * DuckDB hash-match, but a single-reducer memory funnel at 100 TB.
-    * `grandStatsScalable` below swaps it for the fixed-size
-    * approx_percentile sketch; accuracy is pinned in AggsSpec.
     */
-  private def statsWithMedian(err: Column, r: Int, med: Column): Seq[Column] =
+  def grandStats(err: Column, r: Int = 6): Seq[Column] =
     Seq(
       round(avg(err), r).as("mean_err"),
       round(stddev_pop(err), r).as("std_err"),
       max(err).as("max_err"),
       min(err).as("min_err"),
-      round(med, r).as("median_err"),
+      round(median(err), r).as("median_err"),
       round(sqrt(avg(err * err)), r).as("rmse"))
-
-  def grandStats(err: Column, r: Int = 6): Seq[Column] =
-    statsWithMedian(err, r, median(err))
-
-  /** grandStats with the 100-TB median: approx_percentile's
-    * fixed-size histogram sketch (map-side partial, bounded memory at
-    * `accuracy` inverse-error) instead of the exact collect-everything
-    * Median buffer. Everything else identical (shared column builder).
-    */
-  def grandStatsScalable(err: Column, r: Int = 6,
-      accuracy: Int = 10000): Seq[Column] =
-    statsWithMedian(err, r, percentile_approx(err, lit(0.5), lit(accuracy)))
 
   /** Two-level aggregation: per-group mean, then global stats over the
     * group means (extrinsic_calibration.py:212-214). Spark's partial

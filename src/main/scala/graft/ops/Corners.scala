@@ -482,6 +482,40 @@ object Corners {
     */
   final case class BoardCorner(i: Int, j: Int, cx: Double, cy: Double)
 
+  /** Inner-corner candidates of both detectors: greedily pair each quad
+    * corner with the first later, still unpaired corner of a DIFFERENT
+    * quad within Chebyshev distance `tol`, and emit the pair's midpoint.
+    */
+  private def innerCorners(quads: Seq[Array[(Int, Int)]], tol: Int)
+      : IndexedSeq[(Double, Double)] = {
+    // candidate corners tagged by their source quad
+    val pts = quads.zipWithIndex.flatMap { case (q, qi) => q.map(p => (p, qi)) }
+      .toIndexedSeq
+    val used = scala.collection.mutable.Set.empty[Int]
+    val corners = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    var a = 0
+    while (a < pts.length) {
+      if (!used(a)) {
+        val ((ax, ay), aq) = pts(a)
+        var b = a + 1
+        var hit = -1
+        while (hit < 0 && b < pts.length) {
+          val ((bx, by), bq) = pts(b)
+          if (!used(b) && bq != aq &&
+              math.max(math.abs(ax - bx), math.abs(ay - by)) <= tol) hit = b
+          b += 1
+        }
+        if (hit >= 0) {
+          val ((bx, by), _) = pts(hit)
+          used += a; used += hit
+          corners += (((ax + bx) / 2.0, (ay + by) / 2.0))
+        }
+      }
+      a += 1
+    }
+    corners.toIndexedSeq
+  }
+
   /** Full detector over a grayscale raster. Returns the cols×rows inner
     * corners in grid order, or None when the pattern is not found —
     * the ret=False branch of camera_calib.py:71.
@@ -494,36 +528,13 @@ object Corners {
     val black = g2.map(_ < 128)
     val eroded = erode3(black, w2, h2)
     val quads = externalContours(eroded, w2, h2).filter(_.length == 4)
-    // candidate corners tagged by their source quad
-    val pts = quads.zipWithIndex.flatMap { case (q, qi) => q.map(p => (p, qi)) }
-    // inner corner = two corners of DIFFERENT quads within Chebyshev 4
-    // (erode pulls each square in by 1, so the diagonal pair sits 3 px
-    // apart per axis; same-row squares are a full square away)
-    val used = scala.collection.mutable.Set.empty[Int]
-    val corners = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    var a = 0
-    while (a < pts.length) {
-      if (!used(a)) {
-        val ((ax, ay), aq) = pts(a)
-        var b = a + 1
-        var hit = -1
-        while (hit < 0 && b < pts.length) {
-          val ((bx, by), bq) = pts(b)
-          if (!used(b) && bq != aq &&
-              math.max(math.abs(ax - bx), math.abs(ay - by)) <= 4) hit = b
-          b += 1
-        }
-        if (hit >= 0) {
-          val ((bx, by), _) = pts(hit)
-          used += a; used += hit
-          corners += (((ax + bx) / 2.0, (ay + by) / 2.0))
-        }
-      }
-      a += 1
-    }
+    // inner corners within Chebyshev 4 (erode pulls each square in by 1,
+    // so the diagonal pair sits 3 px apart per axis; same-row squares are
+    // a full square away)
+    val corners = innerCorners(quads, 4)
     if (corners.size != cols * rows) return None
     // grid assembly (axis-aligned synthetic): rows by y, columns by x
-    val byRow = corners.toSeq.sortBy(_._2).grouped(cols).toSeq
+    val byRow = corners.sortBy(_._2).grouped(cols).toSeq
     if (byRow.exists(_.size != cols)) return None
     Some(byRow.zipWithIndex.flatMap { case (row, j) =>
       row.sortBy(_._1).zipWithIndex.map { case ((cx, cy), i) =>
@@ -752,31 +763,9 @@ object Corners {
         if (ap.length == 4) Some(ap) else None
       }
     }
-    val pts = quads.zipWithIndex.flatMap { case (q, qi) => q.map(p => (p, qi)) }
-    val used = scala.collection.mutable.Set.empty[Int]
-    val corners = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    var a = 0
-    while (a < pts.length) {
-      if (!used(a)) {
-        val ((ax, ay), aq) = pts(a)
-        var b = a + 1
-        var hit = -1
-        while (hit < 0 && b < pts.length) {
-          val ((bx, by), bq) = pts(b)
-          if (!used(b) && bq != aq &&
-              math.max(math.abs(ax - bx), math.abs(ay - by)) <= 5) hit = b
-          b += 1
-        }
-        if (hit >= 0) {
-          val ((bx, by), _) = pts(hit)
-          used += a; used += hit
-          corners += (((ax + bx) / 2.0, (ay + by) / 2.0))
-        }
-      }
-      a += 1
-    }
+    val corners = innerCorners(quads, 5)
     if (corners.size != cols * rows) return None
-    orderByHomography(corners.toSeq, cols, rows).map(_.map { bc =>
+    orderByHomography(corners, cols, rows).map(_.map { bc =>
       val (rx, ry) = saddleRefine(g2, w2, h2, bc.cx, bc.cy)
       BoardCorner(bc.i, bc.j, rx, ry)
     })

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * One scalar kernel sits beside them: `projectCvScalar`, the
   * operation-order twin of `rigidTransform` + `projectPointCv`. The
-  * calibration DAG's per-point passes (Extrinsic.refine / reprojectionStats,
-  * Intrinsic.refineBundle / meanReprojError) run it inside typed Dataset
-  * passes with the parameters in the closure, so an LM step re-plans and
-  * re-compiles nothing; the Column forms stay as its reference and for the
-  * query library.
+  * calibration DAG's per-point passes run it with the parameters in the
+  * closure: Extrinsic.refine / reprojectionStats inside typed Dataset
+  * passes, Intrinsic.calibrate (bundle and mean error) on its collected
+  * point set, so an LM step re-plans and re-compiles nothing; the Column
+  * forms stay as its reference and for the query library.
   *
   * Re-expresses the reference's per-record numpy/cv2 math
   * (reference: point3d_transformation.py:87-120 euler/transform,
@@ -145,28 +145,6 @@ object Geometry {
         when(th > 0.0, finish(e)).otherwise(lit(if (i == j) 1.0 else 0.0))
       }
     })
-  }
-
-  /** Pinhole projection with the rational distortion model actually used by
-    * the reference (k1,k2,p1,p2,k4 nonzero; K3..K5 fixed —
-    * camera_calib.py:101-102, extrinsic_calibration.py:114-124).
-    * Input: camera-frame point (x,y,z), z > 0. Output: (u,v) pixels.
-    */
-  def projectPoint(
-      x: Column, y: Column, z: Column,
-      fx: Double, fy: Double, cx: Double, cy: Double,
-      k1: Double, k2: Double, p1: Double, p2: Double, k4: Double)
-      : (Column, Column) = {
-    val xn = x / z
-    val yn = y / z
-    val r2 = xn * xn + yn * yn
-    val radial =
-      (lit(1.0) + lit(k1) * r2 + lit(k2) * r2 * r2) / (lit(1.0) + lit(k4) * r2)
-    val xd = xn * radial + lit(2.0 * p1) * xn * yn +
-      lit(p2) * (r2 + lit(2.0) * xn * xn)
-    val yd = yn * radial + lit(p1) * (r2 + lit(2.0) * yn * yn) +
-      lit(2.0 * p2) * xn * yn
-    (lit(fx) * xd + lit(cx), lit(fy) * yd + lit(cy))
   }
 
   /** Full cv2 rational-model projection (extrinsic_calibration.py:114-124

@@ -111,20 +111,6 @@ object TextOps {
   def winnowFingerprintsFast(text: Column, k: Int, w: Int): Column =
     call_function("winnow_fp", text, lit(k), lit(w))
 
-  /** One MinHash value: min over shingles of md5(seedTag | shingle).
-    * Lexicographic min over fixed-width hex == numeric min — portable
-    * across engines (the DuckDB oracle uses the same trick).
-    */
-  def minhash(shingleArr: Column, seed: Column): Column =
-    array_min(transform(shingleArr, s => md5(concat(seed, lit("|"), s))))
-
-  /** Full k-function MinHash signature as array<string> (one md5 PER
-    * SEED per shingle — simple, but k x the hashing; prefer
-    * minhashSignatureFast on hot paths).
-    */
-  def minhashSignature(shingleArr: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), h => minhash(shingleArr, h))
-
   /** 32-bit base hash of a shingle: first 8 hex digits of its md5. */
   def shingleBase(s: Column): Column =
     conv(substring(md5(s), 1, 8), 16, 10).cast("long")
@@ -136,8 +122,8 @@ object TextOps {
     * permutations decorrelate; small ones nearly preserve the ordering of
     * x, the mins correlate, and band collisions inflate ~5x).
     * At 100 TB this is the shape that matters: hashing cost is 1/k of
-    * the per-seed form with comparable banding behavior, and every
-    * operation is exact integer arithmetic an oracle can replay.
+    * one md5 per seed per shingle, with comparable banding behavior, and
+    * every operation is exact integer arithmetic an oracle can replay.
     *
     * Higher-order-function reference form, kept as the parity oracle for
     * the codegen'd `minhashSignatureFast`.

@@ -61,8 +61,8 @@ object Windows {
     * ONCE: the count pass materializes the cache and the numbering pass
     * reads it back — without the persist both passes re-sorted every
     * partition. The cached blocks are reclaimed by Spark's ContextCleaner
-    * as soon as the returned lineage is garbage-collected; callers that
-    * want deterministic release can `Windows.unpersistRowNumberCache(df)`.
+    * as soon as the returned lineage is garbage-collected; the RDD is
+    * `graft:`-tagged, so `Caches.releaseAll` releases it deterministically.
     *
     * The persist is CORRECTNESS-load-bearing, not a cache: RangePartitioner
     * samples its boundaries with an rdd.id-derived seed, so two plans that
@@ -108,19 +108,6 @@ object Windows {
       it.map { r => val out = Row.fromSeq(r.toSeq :+ k); k += 1; out }
     }
     spark.createDataFrame(numbered, schema)
-  }
-
-  /** Release the persisted sort behind a `withGlobalRowNumbers` result
-    * once its consumers have run: walks the RDD lineage and unpersists
-    * any cached ancestor.
-    */
-  def unpersistRowNumberCache(numbered: DataFrame): Unit = {
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit = {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(false)
-      r.dependencies.foreach(d => walk(d.rdd))
-    }
-    walk(numbered.queryExecution.toRdd)
   }
 
   /** gapSessions on top of the scale-safe numbering — identical output to

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Geometry
@@ -10,27 +10,28 @@ import graft.ops.Geometry
   * rational distortion + per-view poses + mean reprojection error, with the
   * final K rescaled by the 0.5 detect scale (camera_calib.py:115-119).
   *
-  * Spark-first decomposition:
-  *   1. per-view plane->image homographies: distributed `mapGroups` over
-  *      the corner table (one group per chessboard view), normalized DLT
-  *      least-squares over ALL the view's corners — the Zhang analogue of
+  * One collect, then the driver: the corner table is read with ONE
+  * `collect` of (view_id, corner_idx, x, y, u, v) and each view's points
+  * are sorted by corner_idx once; every step below runs on that one
+  * point set. This mirrors the reference exactly: cv2.calibrateCamera IS
+  * a single driver call over in-memory point lists (SURVEY.md §2.8
+  * "driver-side after Spark collects per-image point sets"). The collect
+  * is bounded by #views x #corners (15 x 99 here) — intrinsic calibration
+  * input is a handful of chessboard views regardless of corpus scale, so
+  * this is NOT a 100-TB funnel; the 100-TB-sized tables never pass here.
+  * Views are taken in view_id order and points in corner_idx order, so
+  * the result does not depend on how the input is partitioned.
+  *   1. per-view plane->image homographies: normalized DLT least-squares
+  *      over ALL the view's corners — the Zhang analogue of
   *      cv2.findChessboardCorners feeding calibrateCamera;
   *   2. closed-form K init from the B-matrix constraints of Zhang's method
   *      (the algorithm inside cv2.calibrateCamera's init, public knowledge);
-  *      driver-side on #views x 9 doubles;
-  *   3. LM bundle polish over [fx,fy,cx,cy,k1,k2,p1,p2,k6] + 6 params/view
-  *      — driver-side on the collected per-view point sets. This mirrors
-  *      the reference exactly: cv2.calibrateCamera IS a single driver call
-  *      over in-memory point lists (SURVEY.md §2.8 "driver-side after Spark
-  *      collects per-image point sets"). The collect is bounded by
-  *      #views x #corners (15 x 99 here) — intrinsic calibration input is
-  *      a handful of chessboard views regardless of corpus scale, so this
-  *      is NOT a 100-TB funnel; the 100-TB-sized tables never pass here.
-  *   4. mean reprojection error evaluated DISTRIBUTED, per
-  *      camera_calib.py:104-113: a typed map through the scalar kernel
+  *   3. per-view pose init (poseFromH) and the LM bundle polish over
+  *      [fx,fy,cx,cy,k1,k2,p1,p2,k6] + 6 params/view;
+  *   4. mean reprojection error per camera_calib.py:104-113: per view
+  *      sqrt(sum du² + dv²) / #points through the scalar kernel
   *      Geometry.projectCvScalar (the bit-identical twin of the Column
-  *      forms rigidTransform + projectPointCv) with the per-view poses in
-  *      the closure, then the per-view / across-view aggregates.
+  *      forms rigidTransform + projectPointCv), then the mean over views.
   *
   * Distortion parameterization follows the reference's flags
   * (CALIB_RATIONAL_MODEL | FIX_K3..K5, camera_calib.py:101-102): free
@@ -104,7 +105,7 @@ object Intrinsic {
   }
 
   // ------------------------------------------------------------------
-  // 1. per-view DLT homography (distributed)
+  // 1. per-view DLT homography
   // ------------------------------------------------------------------
 
   /** Least-squares plane->image homography from all of one view's corners
@@ -150,29 +151,8 @@ object Intrinsic {
     if (math.abs(h(8)) > 1e-12) h.map(_ / h(8)) else h
   }
 
-  /** Distributed per-view homographies: groupByKey(view).mapGroups — each
-    * chessboard view is one bounded group (#corners rows), the standard
-    * grouped-solve shape shared with Extrinsic.initPnp.
-    * Input schema: (view_id, corner_idx, u, v, x, y); output (view_id, h[9]).
-    */
-  def viewHomographies(corners: DataFrame): DataFrame = {
-    val spark = corners.sparkSession
-    import spark.implicits._
-    corners
-      .select(col("view_id"), col("corner_idx"),
-        col("u").cast("double"), col("v").cast("double"),
-        col("x").cast("double"), col("y").cast("double"))
-      .as[(String, Int, Double, Double, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        val pts = it.toSeq.sortBy(_._2).map(p => (p._5, p._6, p._3, p._4))
-        (id, homographyDLT(pts).toSeq)
-      }
-      .toDF("view_id", "h")
-  }
-
   // ------------------------------------------------------------------
-  // 2. closed-form Zhang init (driver, #views x 9 doubles)
+  // 2. closed-form Zhang init (#views x 9 doubles)
   // ------------------------------------------------------------------
 
   /** K init from per-view homographies via the image-of-the-absolute-conic
@@ -238,15 +218,8 @@ object Intrinsic {
     (Array(r1(0), r2(0), r3(0), r1(1), r2(1), r3(1), r1(2), r2(2), r3(2)), t)
   }
 
-  /** Per-view [rvec, tvec] init from its homography and K (poseFromH). */
-  def extrinsicFromH(h: Array[Double], fx: Double, fy: Double,
-      cx: Double, cy: Double): (Array[Double], Array[Double]) = {
-    val (r, t) = poseFromH(h, fx, fy, cx, cy)
-    (Extrinsic.rodriguesInv(r.toSeq), t)
-  }
-
   // ------------------------------------------------------------------
-  // 3. LM bundle polish (driver, bounded by #views x #corners)
+  // 3. LM bundle polish (bounded by #views x #corners)
   // ------------------------------------------------------------------
 
   /** LM (Lm.minimize) over the bundle [fx,fy,cx,cy,k1,k2,p1,p2,k6] ++
@@ -330,41 +303,8 @@ object Intrinsic {
   }
 
   // ------------------------------------------------------------------
-  // 4. distributed reprojection error + the composite
+  // 4. reprojection error + the composite
   // ------------------------------------------------------------------
-
-  /** camera_calib.py:104-113 as a distributed plan: per-view
-    * L2-norm-of-residuals / #points, then the mean across views (A4 /
-    * A2 two-level shape). A typed map projects each board point (X, Y, 0)
-    * through Geometry.projectCvScalar with its view's T, which rides in
-    * the closure (no join), to (view_id, du² + dv²); a corner with a null
-    * input maps to a null term, skipped by sum() but counted by
-    * count(1). Corners of a view without a pose drop out.
-    */
-  def meanReprojError(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
-      views: Seq[ViewPose]): Double = {
-    val spark = corners.sparkSession
-    import spark.implicits._
-    val ts = views.map(v =>
-      v.viewId -> Extrinsic.paramsToT(v.rvec ++ v.tvec).toArray).toMap
-    val (ka, da) = (k.toArray, dist.toArray)
-    corners
-      .select(col("view_id"), col("x").cast("double"), col("y").cast("double"),
-        col("u").cast("double"), col("v").cast("double"))
-      .as[(String, Option[Double], Option[Double], Option[Double], Option[Double])]
-      .flatMap { case (id, x, y, u, v) =>
-        ts.get(id).map { t =>
-          (id, for (xw <- x; yw <- y; uo <- u; vo <- v) yield {
-            val (up, vp) = Geometry.projectCvScalar(t, ka, da, xw, yw, 0.0)
-            val (du, dv) = (up - uo, vp - vo)
-            du * du + dv * dv
-          })
-        }
-      }.toDF("view_id", "e")
-      .groupBy("view_id")
-      .agg((sqrt(sum("e")) / count(lit(1))).as("view_err"))
-      .agg(avg("view_err")).collect()(0).getDouble(0)
-  }
 
   /** The cam_calib composite (camera_calib.py:95-119). Input: long-form
     * corner table (view_id, corner_idx, u, v, x, y) at DETECT scale (the
@@ -374,40 +314,49 @@ object Intrinsic {
     */
   def calibrate(corners: DataFrame, detectScale: Double = 0.5,
       maxIter: Int = 80): Result = {
-    // stage 1 (distributed): per-view homographies
-    val hs = viewHomographies(corners).collect()
-      .map(r => (r.getString(0),
-        r.getAs[scala.collection.Seq[Double]](1).toArray))
-      .sortBy(_._1)
-    // stage 2 (driver, #views x 9 doubles): closed-form K
-    val (fx0, fy0, cx0, cy0) = zhangInitK(hs.map(_._2).toSeq)
-    // stage 3: per-view pose init + LM bundle over the collected point
-    // sets (bounded: #views x #corners; see object scaladoc)
-    val ptsByView: Map[String, Seq[(Double, Double, Double, Double)]] =
-      corners.select(col("view_id"), col("x").cast("double"),
-          col("y").cast("double"), col("u").cast("double"),
-          col("v").cast("double"))
-        .collect()
-        .map(r => (r.getString(0), (r.getDouble(1), r.getDouble(2),
-          r.getDouble(3), r.getDouble(4))))
-        .groupBy(_._1).map { case (k2, v) => (k2, v.map(_._2).toSeq) }
-    val viewIds = hs.map(_._1)
+    // the one Spark job: every corner to the driver; a null anywhere fails
+    // the calibration instead of dropping the corner
+    val rows = corners.select(col("view_id"), col("corner_idx").cast("long"),
+        col("x").cast("double"), col("y").cast("double"),
+        col("u").cast("double"), col("v").cast("double"))
+      .collect()
+    rows.find(_.anyNull).foreach(r =>
+      throw new IllegalArgumentException(s"calibrate: corner with a null field: $r"))
+    // view_id order, then each view's (X, Y, u, v) in corner_idx order
+    val byView = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1)
+    val viewIds = byView.map(_._1)
+    val viewPts = byView.map { case (_, rs) =>
+      rs.sortBy(_.getLong(1)).map(r =>
+        (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
+    }.toIndexedSeq
+    val hs = viewPts.map(homographyDLT)
+    val (fx0, fy0, cx0, cy0) = zhangInitK(hs)
     val init = Array(fx0, fy0, cx0, cy0, 0.0, 0.0, 0.0, 0.0, 0.0) ++
-      hs.flatMap { case (_, h) =>
-        val (rv, tv) = extrinsicFromH(h, fx0, fy0, cx0, cy0)
-        rv ++ tv
+      hs.flatMap { h =>
+        val (r, t) = poseFromH(h, fx0, fy0, cx0, cy0)
+        Extrinsic.rodriguesInv(r.toSeq) ++ t
       }
-    val p = refineBundle(viewIds.toIndexedSeq.map(ptsByView), init, maxIter)
+    val p = refineBundle(viewPts, init, maxIter)
     val views = viewIds.zipWithIndex.map { case (id, i) =>
       val b = 9 + 6 * i
       ViewPose(id, Seq(p(b), p(b + 1), p(b + 2)),
         Seq(p(b + 3), p(b + 4), p(b + 5)))
-    }.toSeq
-    val kDetect = Seq(p(0), 0.0, p(2), 0.0, p(1), p(3), 0.0, 0.0, 1.0)
+    }
+    // camera_calib.py:104-113 at detect scale: per-view
+    // L2-norm-of-residuals / #points, then the mean across views
+    val kDetect = Array(p(0), 0.0, p(2), 0.0, p(1), p(3), 0.0, 0.0, 1.0)
     val dist14 = Seq(p(4), p(5), p(6), p(7), 0.0, 0.0, 0.0, p(8),
       0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    // stage 4 (distributed): the reference's quality metric
-    val err = meanReprojError(corners, kDetect, dist14, views)
+    val distA = dist14.toArray
+    val viewErrs = views.zip(viewPts).map { case (pose, pts) =>
+      val t = Extrinsic.paramsToT(pose.rvec ++ pose.tvec).toArray
+      val sq = pts.map { case (xw, yw, u, v) =>
+        val (pu, pv) = Geometry.projectCvScalar(t, kDetect, distA, xw, yw, 0.0)
+        (pu - u) * (pu - u) + (pv - v) * (pv - v)
+      }
+      math.sqrt(sq.sum) / pts.length
+    }
+    val err = viewErrs.sum / viewErrs.length
     // X10 rescale to full resolution (camera_calib.py:115-119)
     val k = Seq(p(0) / detectScale, 0.0, p(2) / detectScale,
       0.0, p(1) / detectScale, p(3) / detectScale, 0.0, 0.0, 1.0)

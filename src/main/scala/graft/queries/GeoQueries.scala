@@ -317,9 +317,9 @@ object GeoQueries {
         (col("l_quantity") - 25.0).as("x"),
         (col("l_discount") * 100.0 - 5.0).as("y"),
         (col("l_linenumber").cast("double") + 10.0).as("z"))
-      val (u, v) = G.projectPoint(col("x"), col("y"), col("z"),
-        fx = 1000.5, fy = 998.25, cx = 960.0, cy = 540.0,
-        k1 = 0.1, k2 = -0.05, p1 = 0.001, p2 = -0.002, k4 = 0.02)
+      val (u, v) = G.projectPointCv(col("x"), col("y"), col("z"),
+        k = Seq(1000.5, 0.0, 960.0, 0.0, 998.25, 540.0, 0.0, 0.0, 1.0),
+        dist = Seq(0.1, -0.05, 0.001, -0.002, 0.0, 0.02, 0.0, 0.0))
       base.select(col("l_orderkey"), col("l_linenumber"),
           r9(u).as("u"), r9(v).as("v"))
         .orderBy("l_orderkey", "l_linenumber", "u", "v")

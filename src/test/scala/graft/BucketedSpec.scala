@@ -105,9 +105,10 @@ class BucketedSpec extends SparkSpec {
     val src = tmpDir()
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write
       .parquet(s"$src/foo.parquet")
-    // driver datagen drift happens BETWEEN sessions (Tables.t's memoized
-    // plan documents paths as immutable within one), so each resolution
-    // uses a fresh session — same SparkContext, fresh catalog + relCache
+    // driver datagen drift happens BETWEEN sessions, so each resolution
+    // uses a fresh session — same SparkContext, fresh catalog. Tables.t's
+    // relCache and the layout's table name both key on the source
+    // listing, so the same session would see the new files too
     val s1 = spark.newSession()
     assert(Tables.bucketed(s1, src.toString, "foo", "k",
       Seq("k", "v"), buckets = 2).count() == 2)

@@ -1,6 +1,11 @@
 package graft
 
 import java.lang.Double.doubleToLongBits
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.ops.Geometry
 import graft.pipeline.{Extrinsic, Intrinsic, Lm}
@@ -53,18 +58,29 @@ class IntrinsicSpec extends SparkSpec {
     Geometry.projectCvScalar(Extrinsic.paramsToT(rv ++ tv).toArray, kDetect,
       dist, xw, yw, 0.0)
 
-  /** (view_id, corner_idx, u, v, x, y) rows synthesized from the goldens. */
-  private def syntheticCorners = {
-    import spark.implicits._
+  /** (view_id, corner_idx, u, v, x, y) rows of the golden views projected
+    * with `dist`, view by view in corner order.
+    */
+  private def syntheticRows(dist: Array[Double] = goldDist8,
+      views: Seq[(Seq[Double], Seq[Double])] = goldViews) = {
     val objp = Intrinsic.objectPoints(9, 11, 45.0)
-    val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
+    views.zipWithIndex.flatMap { case ((rv, tv), i) =>
       objp.map { case (ci, xw, yw) =>
-        val (u, v) = project(rv, tv, goldDist8, xw, yw)
+        val (u, v) = project(rv, tv, dist, xw, yw)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
     }
-    rows.toDF("view_id", "corner_idx", "u", "v", "x", "y")
   }
+
+  private def syntheticCorners = {
+    import spark.implicits._
+    syntheticRows().toDF("view_id", "corner_idx", "u", "v", "x", "y")
+  }
+
+  /** Every double of a calibration result, as raw bits. */
+  private def bits(r: Intrinsic.Result): Seq[Long] =
+    (r.k ++ r.dist ++ r.views.flatMap(v => v.rvec ++ v.tvec) :+
+      r.meanReprojError).map(doubleToLongBits)
 
   test("objectPoints follows the mgrid layout of camera_calib.py:49-51") {
     val p = Intrinsic.objectPoints(9, 11, 45.0)
@@ -114,24 +130,79 @@ class IntrinsicSpec extends SparkSpec {
   }
 
   test("zhangInitK lands in the convergence basin (no distortion case)") {
-    import spark.implicits._
-    val objp = Intrinsic.objectPoints(9, 11, 45.0)
-    val noDist = Array.fill(8)(0.0)
-    val rows = goldViews.zipWithIndex.flatMap { case ((rv, tv), i) =>
-      objp.map { case (ci, xw, yw) =>
-        val (u, v) = project(rv, tv, noDist, xw, yw)
-        (f"v$i%02d", ci, u, v, xw, yw)
-      }
+    val rows = syntheticRows(dist = Array.fill(8)(0.0))
+    val hs = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, pts) =>
+      Intrinsic.homographyDLT(pts.sortBy(_._2).map(p => (p._5, p._6, p._3, p._4)))
     }
-    val df = rows.toDF("view_id", "corner_idx", "u", "v", "x", "y")
-    val hs = Intrinsic.viewHomographies(df).collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("h").toArray).toSeq
     val (fx, fy, cx, cy) = Intrinsic.zhangInitK(hs)
     // distortion-free views => closed form alone is already close
     assert(math.abs(fx - goldFx * 0.5) / (goldFx * 0.5) < 0.02, s"fx init $fx")
     assert(math.abs(fy - goldFy * 0.5) / (goldFy * 0.5) < 0.02, s"fy init $fy")
     assert(math.abs(cx - goldCx * 0.5) < 60, s"cx init $cx")
     assert(math.abs(cy - goldCy * 0.5) < 60, s"cy init $cy")
+  }
+
+  test("calibrate does not depend on the input's partitioning or row order") {
+    import spark.implicits._
+    // 6 views with deterministic sub-pixel noise, rows shuffled, then
+    // spread over 1 and over 7 partitions
+    val rows = syntheticRows(views = goldViews.take(6)).map {
+      case (id, ci, u, v, xw, yw) =>
+        (id, ci, u + 0.3 * math.sin(ci * 12.9898), v + 0.3 * math.cos(ci * 78.233), xw, yw)
+    }
+    val shuffled = new scala.util.Random(7).shuffle(rows)
+      .toDF("view_id", "corner_idx", "u", "v", "x", "y")
+    val one = Intrinsic.calibrate(shuffled.repartition(1), maxIter = 10)
+    val seven = Intrinsic.calibrate(shuffled.repartition(7), maxIter = 10)
+    val ordered = Intrinsic.calibrate(
+      rows.toDF("view_id", "corner_idx", "u", "v", "x", "y"), maxIter = 10)
+    assert(one.views.map(_.viewId) == (0 until 6).map(i => f"v$i%02d"))
+    assert(bits(one) == bits(seven), s"1 partition $one\n7 partitions $seven")
+    assert(bits(one) == bits(ordered), s"shuffled $one\ncorner order $ordered")
+  }
+
+  test("calibrate runs exactly one Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-intrinsic").toString
+    syntheticCorners.repartition(3).write.mode("overwrite").parquet(dir)
+    val corners = spark.read.parquet(dir)
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.phase", "calibrate")
+      Intrinsic.calibrate(corners, maxIter = 2)
+      // the listener bus is asynchronous but ordered: once this job's
+      // start has arrived, every calibrate job's start has too
+      sc.setLocalProperty("graft.test.phase", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.asScala.exists(_ == "sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.setLocalProperty("graft.test.phase", null)
+      sc.removeSparkListener(listener)
+    }
+    val all = jobs.asScala.toSeq
+    assert(all.contains("sentinel"), "listener never saw the sentinel job")
+    assert(all.count(_ == "calibrate") == 1, s"calibrate jobs: $all")
+  }
+
+  test("a corner with a null u fails the calibration") {
+    import spark.implicits._
+    val rows = syntheticRows(views = goldViews.take(3)).zipWithIndex.map {
+      case ((id, ci, u, v, xw, yw), i) =>
+        (id, ci, if (i == 57) None else Some(u), v, xw, yw)
+    }
+    val df = rows.toDF("view_id", "corner_idx", "u", "v", "x", "y")
+    val e = intercept[IllegalArgumentException](Intrinsic.calibrate(df))
+    assert(e.getMessage.contains("null"), e.getMessage)
   }
 
   test("refineBundle: the block-sparse Jacobian gives the dense one's result bit for bit") {
