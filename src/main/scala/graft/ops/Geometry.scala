@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * One scalar kernel sits beside them: `projectCvScalar`, the
   * operation-order twin of `rigidTransform` + `projectPointCv`. The
-  * calibration DAG's per-point passes run it with the parameters in the
-  * closure: Extrinsic.refine / reprojectionStats inside typed Dataset
-  * passes, Intrinsic.calibrate (bundle and mean error) on its collected
-  * point set, so an LM step re-plans and re-compiles nothing; the Column
-  * forms stay as its reference and for the query library.
+  * calibration DAG's per-point math runs it on the driver, over each
+  * fit's one collected point set: Extrinsic (PnP-refined LM and
+  * reprojection stats) and Intrinsic.calibrate (bundle and mean error),
+  * so an LM step plans and compiles no query; the Column forms stay as
+  * its reference and for the query library.
   *
   * Re-expresses the reference's per-record numpy/cv2 math
   * (reference: point3d_transformation.py:87-120 euler/transform,

@@ -18,8 +18,9 @@ import graft.ops.{Memo, Sinks}
   *   world_corners   <- pose grid + rigid transform (point3d_transformation)
   *   matched_corners <- positional join of detections onto the compacted
   *                      pose sequence (J4)
-  *   extrinsic       <- PnP init + LM refine + reprojection stats,
-  *                      persisted as a matrix table (S6)
+  *   extrinsic       <- PnP init + LM refine + reprojection stats on
+  *                      one collect of matched_corners, persisted as a
+  *                      matrix table (S6)
   */
 object DataPipeline {
 
@@ -77,21 +78,17 @@ object DataPipeline {
 
     val extKey = Memo.key(pixKey, k.mkString(","), dist.mkString(","), maxIter)
     val extrinsic = stage(spark, stateDir, "extrinsic", extKey) {
-      // cached for the optimizer's repeated passes (each LM iteration
-      // is a pass over it), released once the stats are computed
-      matched.cache()
-      try {
-        val init = Extrinsic.initPnp(matched, k)
-        val (p, _) = Extrinsic.refine(matched, k, dist, init, maxIter)
-        val t = Extrinsic.paramsToT(p)
-        val stats = Extrinsic.reprojectionStats(matched, k, dist, t)
-        Sinks.matrixTable(spark, Map(
-          "extrinsic" -> t,
-          "rvec" -> p.take(3), "tvec" -> p.drop(3),
-          "stats" -> Seq(stats("mean_error"), stats("std_error"),
-            stats("max_error"), stats("min_error"), stats("median_error"),
-            stats("rmse"))))
-      } finally matched.unpersist(false)
+      val pts = Extrinsic.points(matched)
+      val init = Extrinsic.initPnp(pts, k)
+      val (p, _) = Extrinsic.refine(pts, k, dist, init, maxIter)
+      val t = Extrinsic.paramsToT(p)
+      val stats = Extrinsic.reprojectionStats(pts, k, dist, t)
+      Sinks.matrixTable(spark, Map(
+        "extrinsic" -> t,
+        "rvec" -> p.take(3), "tvec" -> p.drop(3),
+        "stats" -> Seq(stats("mean_error"), stats("std_error"),
+          stats("max_error"), stats("min_error"), stats("median_error"),
+          stats("rmse"))))
     }
 
     Map("warp_matrices" -> warp, "world_corners" -> world,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Geometry
 
@@ -8,23 +8,30 @@ import graft.ops.Geometry
   * extrinsic_calibration.py:244-316):
   *
   *   A. validate: key-intersection of pixel/world corner tables (J2/A6)
-  *   B. init: per-pose planar PnP via mapGroups over the first N poses,
+  *   B. init: per-pose planar PnP over the first N poses in ord order,
   *      column-mean of rvec/tvec (extrinsic_calibration.py:41-79)
-  *   C. refine: driver-side Levenberg-Marquardt on the 6 params, where
-  *      every iteration's J^T J / J^T r / cost are ONE mapPartitions pass
-  *      over the corner table, each partition folded to 28 doubles (the
-  *      Spark MLlib pattern — at 100 TB each iteration is a single
-  *      shuffle-free pass)
-  *   D. evaluate: per-point reprojection error -> per-pose mean -> grand
-  *      stats (X5 / A2 / A1), golden-matched against camera_extrinsic.npz
+  *   C. refine: Levenberg-Marquardt on the 6 params, every iteration's
+  *      J^T J / J^T r / cost one loop over the corner points
+  *   D. evaluate: per-point reprojection error -> grand stats
+  *      (X5 / A2 / A1), golden-matched against camera_extrinsic.npz
+  *
+  * One collect, then the driver: `points` reads the corner table with ONE
+  * `collect` and sorts it by (ord, pose_id, corner_idx) once; B-D run on
+  * that point array, as the reference runs solvePnP and least_squares in
+  * one process (extrinsic_calibration.py:54-79, 154-161). The collect is
+  * bounded by the pose grid, not by the corpus: at most 3,120 poses x 4
+  * corners, since matched_corners inner-joins the detections onto the
+  * constant world grid. Every sum runs in that one order, so the results
+  * do not depend on how the input is partitioned.
   *
   * All per-point math is the scalar kernel Geometry.projectCvScalar (the
-  * bit-identical twin of Geometry.rigidTransform + projectPointCv) inside
-  * typed Dataset passes, with the parameters in the closure: an LM step
-  * re-plans and re-compiles nothing. Only the 6-parameter solve itself
-  * lives on the driver.
+  * bit-identical twin of Geometry.rigidTransform + projectPointCv).
   */
 object Extrinsic {
+
+  /** One matched corner: pixel (u, v) and world (x, y, z). */
+  final case class Point(poseId: String, ord: Long, cornerIdx: Long,
+      u: Double, v: Double, x: Double, y: Double, z: Double)
 
   /** (pose_id, ord, corner_idx, u, v, x, y, z) — pixel+world corners. */
   def loadCorners(spark: SparkSession, fixturesDir: String): DataFrame = {
@@ -34,21 +41,31 @@ object Extrinsic {
     pix.join(wld, Seq("pose_id", "corner_idx"))
   }
 
-  /** (u, v, x, y, z) of every corner as doubles, rows with a null among
-    * them dropped: the typed input of refine and reprojectionStats. A null
-    * input makes a null residual, which sum() and the six stats skip, so
-    * dropping the row here changes no sum, average or order.
+  /** The one Spark job of the extrinsic solve: every corner of `corners`
+    * (pose_id, ord, corner_idx, u, v, x, y, z) to the driver, sorted by
+    * (ord, pose_id, corner_idx). Rows with a null among u, v, x, y, z are
+    * dropped: they have no residual. A null key fails the solve.
     */
-  private def points(corners: DataFrame)
-      : Dataset[(Double, Double, Double, Double, Double)] = {
-    val spark = corners.sparkSession
-    import spark.implicits._
-    corners.select(Seq("u", "v", "x", "y", "z").map(c => col(c).cast("double")): _*)
-      .na.drop().as[(Double, Double, Double, Double, Double)]
+  def points(corners: DataFrame): Array[Point] = {
+    val rows = corners.select(col("pose_id").cast("string"),
+        col("ord").cast("long"), col("corner_idx").cast("long"),
+        col("u").cast("double"), col("v").cast("double"),
+        col("x").cast("double"), col("y").cast("double"),
+        col("z").cast("double"))
+      .na.drop(Seq("u", "v", "x", "y", "z"))
+      .collect()
+    rows.find(_.anyNull).foreach(r =>
+      throw new IllegalArgumentException(s"extrinsic: corner with a null key: $r"))
+    rows.map(r => Point(r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
+        r.getDouble(7)))
+      .sortBy(p => (p.ord, p.poseId, p.cornerIdx))
   }
 
   /** Stage D: mean/std_pop/max/min/median/RMSE over all point errors
-    * (extrinsic_calibration.py:216-226). Returns the 6 stats.
+    * (extrinsic_calibration.py:216-226). Returns the 6 stats; the median
+    * is the mean of the two middle errors, as Spark's exact percentile
+    * at 0.5 interpolates it.
     *
     * The per-point error is world -> camera (X6) -> project (X9, full cv2
     * rational model) -> Euclidean distance to the detected pixel (X5), for
@@ -59,27 +76,28 @@ object Extrinsic {
     * reprojection_stats are only reproducible to 1e-6 with that
     * quantization (verified: max deviation 7e-14 with it, 4e-5 without).
     */
-  def reprojectionStats(corners: DataFrame, k: Seq[Double],
+  def reprojectionStats(pts: Array[Point], k: Seq[Double],
       dist: Seq[Double], t: Seq[Double]): Map[String, Double] = {
-    val spark = corners.sparkSession
-    import spark.implicits._
+    require(pts.nonEmpty, "no corners to evaluate")
     val (ta, ka, da) = (t.toArray, k.toArray, dist.toArray)
-    val e = points(corners).map { case (u, v, x, y, z) =>
+    val err = pts.map { p =>
       val (up, vp) = Geometry.projectCvScalar(ta, ka, da,
-        x.toFloat.toDouble, y.toFloat.toDouble, z.toFloat.toDouble)
-      val (du, dv) = (up - u, vp - v)
+        p.x.toFloat.toDouble, p.y.toFloat.toDouble, p.z.toFloat.toDouble)
+      val (du, dv) = (up - p.u, vp - p.v)
       math.sqrt(du * du + dv * dv)
-    }.toDF("err")
-    val r = e.agg(
-      avg("err"), stddev_pop(col("err")), max("err"), min("err"),
-      median(col("err")), sqrt(avg(col("err") * col("err")))).collect()(0)
+    }
+    val n = err.length
+    val mean = err.sum / n
+    val sorted = err.sorted
     Map(
-      "mean_error" -> r.getDouble(0), "std_error" -> r.getDouble(1),
-      "max_error" -> r.getDouble(2), "min_error" -> r.getDouble(3),
-      "median_error" -> r.getDouble(4), "rmse" -> r.getDouble(5))
+      "mean_error" -> mean,
+      "std_error" -> math.sqrt(err.map(e => (e - mean) * (e - mean)).sum / n),
+      "max_error" -> sorted(n - 1), "min_error" -> sorted(0),
+      "median_error" -> (sorted((n - 1) / 2) + sorted(n / 2)) / 2,
+      "rmse" -> math.sqrt(err.map(e => e * e).sum / n))
   }
 
-  // ---- plain-Scala small linear algebra (driver/executor kernels) ----
+  // ---- plain-Scala small linear algebra (driver kernels) ----
 
   /** Rodrigues vector -> row-major 3x3 (scala twin of Geometry.rodrigues). */
   def rodriguesScalar(r: Seq[Double]): Array[Double] = {
@@ -138,67 +156,50 @@ object Extrinsic {
   }
 
   /** Stage C: Levenberg-Marquardt (Lm.minimize) over [rvec,tvec]. Each
-    * iteration's normal equations are one mapPartitions job over the
-    * typed (u, v, x, y, z) corners: per row the kernel projects at the
-    * base parameters and at the 6 forward-difference points, and the
-    * partition folds the residual and Jacobian row into one 28-double
-    * buffer [cost, J^T J upper triangle, J^T r]. The #partitions x 28
-    * doubles are collected and summed on the driver in partition order
-    * (SURVEY §4's 100-TB accumulator form: what crosses the driver
-    * boundary is bounded by the partition count, never by the corners).
-    * Each damping attempt is one mapPartitions job of per-partition sums
-    * of squared residuals. The parameters ride in the closures, so no
-    * step re-plans or re-compiles a query. Rows with a null input add
-    * nothing. Returns the parameters and the sum of squared residuals at
-    * them.
+    * iteration's normal equations are one loop over the points: per point
+    * the kernel projects at the base parameters and at the 6
+    * forward-difference points, and the residual and Jacobian row are
+    * folded into one 28-double buffer [cost, J^T J upper triangle, J^T r].
+    * Each damping attempt is one loop summing the squared residuals.
+    * Both loops run in the points' one order. Returns the parameters and
+    * the sum of squared residuals at them.
     */
-  def refine(corners: DataFrame, k: Seq[Double], dist: Seq[Double],
+  def refine(pts: Array[Point], k: Seq[Double], dist: Seq[Double],
       init: Seq[Double], maxIter: Int = 50, eps: Double = 1e-6)
       : (Seq[Double], Double) = {
-    val spark = corners.sparkSession
-    import spark.implicits._
-    val pts = points(corners)
     val (ka, da) = (k.toArray, dist.toArray)
-
-    // the job-running lambdas stay anonymous functions of refine, so their
-    // jobs' call sites read `Extrinsic$.$anonfun$refine$N` (per-layer
-    // attribution files a job under its innermost graft frame)
     val (best, cost) = Lm.minimize(init.toArray, maxIter)(
       p => {
         // T at p, then at p + eps in each of the 6 parameters
         val ts = (p +: (0 until 6).map { i =>
           val pi = p.clone(); pi(i) += eps; pi
         }).map(q => paramsToT(q.toSeq).toArray).toArray
-        val parts = pts.mapPartitions { it =>
-          val buf = new Array[Double](28)
-          val ju = new Array[Double](6); val jv = new Array[Double](6)
-          it.foreach { case (u, v, x, y, z) =>
-            val (u0, v0) = Geometry.projectCvScalar(ts(0), ka, da, x, y, z)
-            val (ru, rv) = (u0 - u, v0 - v)
-            var i = 0
-            while (i < 6) {
-              val (ui, vi) = Geometry.projectCvScalar(ts(i + 1), ka, da, x, y, z)
-              ju(i) = ((ui - u) - ru) / eps; jv(i) = ((vi - v) - rv) / eps
-              i += 1
-            }
-            buf(0) += ru * ru + rv * rv
-            var idx = 1
-            var a = 0
-            while (a < 6) {
-              var b = a
-              while (b < 6) {
-                buf(idx) += ju(a) * ju(b) + jv(a) * jv(b)
-                idx += 1
-                b += 1
-              }
-              buf(22 + a) += ju(a) * ru + jv(a) * rv
-              a += 1
-            }
-          }
-          Iterator.single(buf)
-        }.collect()
         val ne = new Array[Double](28)
-        parts.foreach(b => (0 until 28).foreach(i => ne(i) += b(i)))
+        val ju = new Array[Double](6); val jv = new Array[Double](6)
+        pts.foreach { pt =>
+          val (u0, v0) = Geometry.projectCvScalar(ts(0), ka, da, pt.x, pt.y, pt.z)
+          val (ru, rv) = (u0 - pt.u, v0 - pt.v)
+          var i = 0
+          while (i < 6) {
+            val (ui, vi) =
+              Geometry.projectCvScalar(ts(i + 1), ka, da, pt.x, pt.y, pt.z)
+            ju(i) = ((ui - pt.u) - ru) / eps; jv(i) = ((vi - pt.v) - rv) / eps
+            i += 1
+          }
+          ne(0) += ru * ru + rv * rv
+          var idx = 1
+          var a = 0
+          while (a < 6) {
+            var b = a
+            while (b < 6) {
+              ne(idx) += ju(a) * ju(b) + jv(a) * jv(b)
+              idx += 1
+              b += 1
+            }
+            ne(22 + a) += ju(a) * ru + jv(a) * rv
+            a += 1
+          }
+        }
         val jtj = Array.ofDim[Double](6, 6)
         var idx = 1
         for (i <- 0 until 6; j <- i until 6) {
@@ -208,15 +209,13 @@ object Extrinsic {
       },
       p => {
         val t = paramsToT(p.toSeq).toArray
-        pts.mapPartitions { it =>
-          var s = 0.0
-          it.foreach { case (u, v, x, y, z) =>
-            val (up, vp) = Geometry.projectCvScalar(t, ka, da, x, y, z)
-            val (du, dv) = (up - u, vp - v)
-            s += du * du + dv * dv
-          }
-          Iterator.single(s)
-        }.collect().foldLeft(0.0)(_ + _)
+        var s = 0.0
+        pts.foreach { pt =>
+          val (up, vp) = Geometry.projectCvScalar(t, ka, da, pt.x, pt.y, pt.z)
+          val (du, dv) = (up - pt.u, vp - pt.v)
+          s += du * du + dv * dv
+        }
+        s
       })
     (best.toSeq, cost)
   }
@@ -226,22 +225,19 @@ object Extrinsic {
     * build a deterministic plane frame, solve the plane->normalized-image
     * homography exactly (4 points), decompose to [R|t], compose back to
     * camera-from-BASE. Distortion is ignored at init (it is an init).
-    * Runs as mapGroups per pose; rvec/tvec averaged over the sample
+    * The poses with ord < sampleSize are solved in ord order, each from
+    * its corners in corner_idx order; rvec/tvec averaged over the sample
     * (extrinsic_calibration.py:72-73 np.mean(axis=0)).
     */
-  def initPnp(corners: DataFrame, k: Seq[Double], sampleSize: Int = 20)
+  def initPnp(pts: Array[Point], k: Seq[Double], sampleSize: Int = 20)
       : Seq[Double] = {
-    val spark = corners.sparkSession
-    import spark.implicits._
     val (fx, fy, cx0, cy0) = (k(0), k(4), k(2), k(5))
-    val sample = corners.filter(col("ord") < sampleSize)
-      .select(col("pose_id"), col("corner_idx"),
-        col("u"), col("v"), col("x"), col("y"), col("z"))
-      .as[(String, Long, Double, Double, Double, Double, Double)]
-    val poses = sample.groupByKey(_._1).mapGroups { (_, it) =>
-      val pts = it.toSeq.sortBy(_._2)
-      val w = pts.map(p => Array(p._5, p._6, p._7)) // world, BASE frame
-      val px = pts.map(p => ((p._3 - cx0) / fx, (p._4 - cy0) / fy))
+    val sample = pts.filter(_.ord < sampleSize)
+    // pts is sorted by (ord, pose_id, corner_idx): ord order of the poses
+    val poses = sample.map(_.poseId).distinct.map(id => sample.filter(_.poseId == id))
+    val sols = poses.map { ps =>
+      val w = ps.map(p => Array(p.x, p.y, p.z)) // world, BASE frame
+      val px = ps.map(p => ((p.u - cx0) / fx, (p.v - cy0) / fy)).toSeq
       // deterministic plane frame
       def sub(a: Array[Double], b: Array[Double]) =
         Array(a(0) - b(0), a(1) - b(1), a(2) - b(2))
@@ -257,7 +253,7 @@ object Extrinsic {
       val e1 = norm(sub(w(1), w(0)))
       val n = norm(cross(sub(w(1), w(0)), sub(w(3), w(0))))
       val e2 = cross(n, e1)
-      val plane2d = w.map(p => (dot3(sub(p, o), e1), dot3(sub(p, o), e2)))
+      val plane2d = w.map(p => (dot3(sub(p, o), e1), dot3(sub(p, o), e2))).toSeq
       // homography plane2d -> normalized image
       val h = Geometry.solveHomography(plane2d, px)
       // pose of the plane in the camera; px is already K^-1-normalized
@@ -266,28 +262,22 @@ object Extrinsic {
       val q = Array(e1, e2, n) // rows = plane axes in BASE => Q^T rows
       val r = Array.tabulate(3, 3)((i, j) =>
         dot3(rcp.slice(3 * i, 3 * i + 3), Array(q(0)(j), q(1)(j), q(2)(j))))
-      val rflat = r.flatten
       val t = Array.tabulate(3)(i => tp(i) - dot3(r(i), o))
-      val rvec = rodriguesInv(rflat.toSeq)
-      (rvec(0), rvec(1), rvec(2), t(0), t(1), t(2))
+      rodriguesInv(r.flatten.toSeq) ++ t
     }
     // Column-mean of the sampled solutions (extrinsic_calibration.py:72-73)
     // with one correction the reference gets away with only by luck of
     // cv2's parameterization: near theta = pi the axis sign flips between
     // poses on either side of pi (rvec ~ +pi*k vs -pi*k are the same
     // rotation), so rvecs must be sign-aligned to an anchor before
-    // averaging — a naive mean cancels them toward zero.
-    val sols = poses.collect()
+    // averaging — a naive mean cancels them toward zero. The anchor is
+    // the lowest-ord pose, the reference's first.
     require(sols.nonEmpty, "no poses in init sample")
-    val anchor = Array(sols.head._1, sols.head._2, sols.head._3)
+    val anchor = sols.head
     val aligned = sols.map { s =>
-      val dot = s._1 * anchor(0) + s._2 * anchor(1) + s._3 * anchor(2)
-      if (dot < 0) (-s._1, -s._2, -s._3, s._4, s._5, s._6) else s
+      val dot = s(0) * anchor(0) + s(1) * anchor(1) + s(2) * anchor(2)
+      if (dot < 0) Array(-s(0), -s(1), -s(2), s(3), s(4), s(5)) else s
     }
-    val n = aligned.length.toDouble
-    Seq(
-      aligned.map(_._1).sum / n, aligned.map(_._2).sum / n,
-      aligned.map(_._3).sum / n, aligned.map(_._4).sum / n,
-      aligned.map(_._5).sum / n, aligned.map(_._6).sum / n)
+    Seq.tabulate(6)(i => aligned.map(_(i)).sum / aligned.length)
   }
 }

@@ -2,13 +2,12 @@ package graft.pipeline
 
 import graft.ops.Geometry
 
-/** The one Levenberg-Marquardt loop behind both calibration fits:
-  * Extrinsic.refine (normal equations from one distributed pass,
-  * every cost evaluation a Spark job) and Intrinsic.refineBundle
-  * (driver-side Jacobian over the collected chessboard views).
+/** The one Levenberg-Marquardt loop behind both calibration fits, each
+  * on its one collected point set: Extrinsic.refine (normal equations
+  * folded over the matched corners) and Intrinsic.refineBundle
+  * (block-sparse Jacobian over the chessboard views).
   *
-  * The schedule is Extrinsic's, because each damping attempt there costs
-  * a job: lambda starts at 1e-3, x10 on a rejected step, /3 on an
+  * The schedule: lambda starts at 1e-3, x10 on a rejected step, /3 on an
   * accepted one (floored at 1e-12), at most 8 attempts per iteration;
   * stop when the relative cost decrease falls below 1e-9 or no attempt
   * is accepted. The damped diagonal is JtJ_ii + lambda * max(JtJ_ii,

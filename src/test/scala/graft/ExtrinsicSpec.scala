@@ -5,14 +5,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops.Geometry
 import graft.pipeline.Extrinsic
 
 /** Golden tests for the extrinsic composite (SURVEY.md §5.2): the shipped
   * fixtures from the reference's own output (data.pkl / camera_extrinsic
-  * .npz) must reproduce reprojection_stats through OUR evaluation DAG.
+  * .npz) must reproduce reprojection_stats through OUR evaluation.
   */
 class ExtrinsicSpec extends SparkSpec {
 
@@ -21,14 +21,15 @@ class ExtrinsicSpec extends SparkSpec {
     spark.read.parquet(s"$fixtures/camera.parquet").collect()(0)
   private def arr(name: String): Seq[Double] =
     cam.getAs[scala.collection.Seq[Double]](name).toSeq
-  private lazy val corners = Extrinsic.loadCorners(spark, fixtures)
+  private lazy val corners = Extrinsic.loadCorners(spark, fixtures).cache()
+  private lazy val pts = Extrinsic.points(corners)
 
   test("golden: stored extrinsic reproduces reprojection_stats to 1e-6") {
     // the npz stats were computed from rvec/tvec (cv2.projectPoints);
     // the separately-stored 4x4 diverges from Rodrigues(rvec) at ~1e-6,
     // so the golden path goes through the parameters
     val stats = Extrinsic.reprojectionStats(
-      corners, arr("k"), arr("dist"),
+      pts, arr("k"), arr("dist"),
       Extrinsic.paramsToT(arr("rvec") ++ arr("tvec")))
     val want = Map(
       "mean_error" -> cam.getAs[Double]("stat_mean"),
@@ -60,10 +61,9 @@ class ExtrinsicSpec extends SparkSpec {
   }
 
   test("LM refinement from a perturbed start reaches the stored optimum") {
-    val c = corners.cache()
-    val (p, _) = Extrinsic.refine(c, arr("k"), arr("dist"), perturbedStart)
+    val (p, _) = Extrinsic.refine(pts, arr("k"), arr("dist"), perturbedStart)
     val rmse = Extrinsic.reprojectionStats(
-      c, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
+      pts, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
     val storedRmse = cam.getAs[Double]("stat_rmse")
     assert(rmse <= storedRmse + 1e-3,
       s"refined rmse $rmse vs stored $storedRmse")
@@ -75,38 +75,42 @@ class ExtrinsicSpec extends SparkSpec {
       tvec(0) + 8.0, tvec(1) - 6.0, tvec(2) + 15.0)
   }
 
-  test("refine returns the same parameters on 1 and on 7 partitions") {
-    // the partition count only reorders the sums. The cost keeps that at
-    // the last ulps; the parameters carry it amplified by the normal
-    // equations' conditioning (measured: at most 2.6e-8 relative, on the
-    // near-zero rvec components, 2e-10 on tvec)
-    val c = corners.cache()
-    val Seq((p1, c1), (p7, c7)) = Seq(1, 7).map { n =>
-      val cn = c.repartition(n).cache()
-      try {
-        assert(cn.rdd.getNumPartitions == n)
-        Extrinsic.refine(cn, arr("k"), arr("dist"), perturbedStart)
-      } finally cn.unpersist(true)
+  test("init, refine and the stats are bit-equal on 1, 4, 7 and 16 partitions and shuffled rows") {
+    // the init, the parameters and cost of a refine from it, and the six
+    // stats at the result, as raw bits
+    def solve(df: DataFrame): Seq[Long] = {
+      val p = Extrinsic.points(df)
+      val init = Extrinsic.initPnp(p, arr("k"))
+      val (best, cost) = Extrinsic.refine(p, arr("k"), arr("dist"), init)
+      val stats = Extrinsic.reprojectionStats(p, arr("k"), arr("dist"),
+        Extrinsic.paramsToT(best))
+      (init ++ best ++ Seq(cost) ++ Seq("mean_error", "std_error",
+        "max_error", "min_error", "median_error", "rmse").map(stats))
+        .map(java.lang.Double.doubleToLongBits)
     }
-    assert(math.abs(c1 - c7) <= 1e-12 * c1, s"cost $c1 vs $c7")
-    p1.zip(p7).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= 1e-7 * math.abs(a), s"params $p1 vs $p7")
+    val want = solve(corners.repartition(1))
+    Seq(4, 7, 16).foreach { n =>
+      val df = corners.repartition(n)
+      assert(df.rdd.getNumPartitions == n)
+      assert(solve(df) == want, s"$n partitions differ from 1")
     }
+    val shuffled = corners.orderBy(xxhash64(col("pose_id"), col("corner_idx")))
+    assert(solve(shuffled) == want, "a shuffled row order differs from 1 partition")
   }
 
   test("a corner row with a null u leaves refine's parameters and cost unchanged") {
-    // a null input makes a null residual, which adds nothing to any sum
-    val c = corners.cache()
-    val withNull = c.union(c.limit(1).withColumn("u", lit(null).cast("double")))
-    val want = Extrinsic.refine(c, arr("k"), arr("dist"), perturbedStart, maxIter = 3)
-    val got = Extrinsic.refine(withNull, arr("k"), arr("dist"), perturbedStart,
-      maxIter = 3)
-    assert(got == want, s"$got vs $want")
+    // a corner without a residual is dropped from the point array
+    val withNull = corners.union(
+      corners.limit(1).withColumn("u", lit(null).cast("double")))
+    val got = Extrinsic.points(withNull)
+    assert(got.toSeq == pts.toSeq)
+    val want = Extrinsic.refine(pts, arr("k"), arr("dist"), perturbedStart, maxIter = 3)
+    assert(Extrinsic.refine(got, arr("k"), arr("dist"), perturbedStart,
+      maxIter = 3) == want)
   }
 
-  test("planar-PnP init (mapGroups) lands close enough for refinement") {
-    val c = corners.cache()
-    val init = Extrinsic.initPnp(c, arr("k"))
+  test("planar-PnP init lands close enough for refinement") {
+    val init = Extrinsic.initPnp(pts, arr("k"))
     // init must be in the basin: within 200mm translation / 0.2rad of
     // truth. Compare as ROTATIONS (near theta=pi the rvec representation
     // is antipodally ambiguous — +pi*k and -pi*k are the same rotation).
@@ -119,31 +123,29 @@ class ExtrinsicSpec extends SparkSpec {
     assert(angDiff < 0.2, s"rotation diff $angDiff rad")
     (0 until 3).foreach(i => assert(math.abs(init(3 + i) - tvec(i)) < 200.0,
       s"tvec[$i] init ${init(3 + i)} vs ${tvec(i)}"))
-    val (p, _) = Extrinsic.refine(c, arr("k"), arr("dist"), init)
+    val (p, _) = Extrinsic.refine(pts, arr("k"), arr("dist"), init)
     val rmse = Extrinsic.reprojectionStats(
-      c, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
+      pts, arr("k"), arr("dist"), Extrinsic.paramsToT(p))("rmse")
     assert(rmse <= cam.getAs[Double]("stat_rmse") + 1e-3,
       s"end-to-end rmse $rmse")
   }
 
   test("refine at maxIter = 0 returns init and its sum of squared residuals") {
-    val c = corners.cache()
-    val init = Extrinsic.initPnp(c, arr("k"))
-    val (p, cost) = Extrinsic.refine(c, arr("k"), arr("dist"), init, maxIter = 0)
+    val init = Extrinsic.initPnp(pts, arr("k"))
+    val (p, cost) = Extrinsic.refine(pts, arr("k"), arr("dist"), init, maxIter = 0)
     assert(p == init)
     val (x, y, z) = Geometry.rigidTransform(Extrinsic.paramsToT(init),
       col("x"), col("y"), col("z"))
     val (u, v) = Geometry.projectPointCv(x, y, z, arr("k"), arr("dist"))
     val du = u - col("u"); val dv = v - col("v")
-    val want = c.agg(sum(du * du + dv * dv)).collect()(0).getDouble(0)
+    val want = corners.agg(sum(du * du + dv * dv)).collect()(0).getDouble(0)
     assert(math.abs(cost - want) < 1e-9 * want, s"cost $cost vs $want")
   }
 
-  test("every Spark job of refine has an Extrinsic refine frame as call site") {
-    // per-layer attribution files a job under the innermost graft frame of
-    // its call site; the LM loop it runs through must not take them over
-    val c = corners.cache()
-    val init = Extrinsic.initPnp(c, arr("k"))
+  test("the extrinsic solve runs one Spark job, called from Extrinsic") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-extrinsic").toString
+    corners.repartition(3).write.mode("overwrite").parquet(dir)
+    val stored = spark.read.parquet(dir)
     val sites = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -158,10 +160,13 @@ class ExtrinsicSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty("graft.test.phase", "refine")
-      Extrinsic.refine(c, arr("k"), arr("dist"), init, maxIter = 2)
+      sc.setLocalProperty("graft.test.phase", "extrinsic")
+      val p = Extrinsic.points(stored)
+      val init = Extrinsic.initPnp(p, arr("k"))
+      val (best, _) = Extrinsic.refine(p, arr("k"), arr("dist"), init, maxIter = 2)
+      Extrinsic.reprojectionStats(p, arr("k"), arr("dist"), Extrinsic.paramsToT(best))
       // the listener bus is asynchronous but ordered: once this job's
-      // start has arrived, every refine job's start has too
+      // start has arrived, every extrinsic job's start has too
       sc.setLocalProperty("graft.test.phase", "sentinel")
       spark.range(1).count()
       val deadline = System.nanoTime() + 30e9.toLong
@@ -173,11 +178,9 @@ class ExtrinsicSpec extends SparkSpec {
     }
     val all = sites.asScala.toSeq
     assert(all.exists(_._1 == "sentinel"), "listener never saw the sentinel job")
-    val refine = all.filter(_._1 == "refine").map(_._2)
-    assert(refine.nonEmpty)
-    refine.foreach { f =>
-      assert(f.startsWith("graft.pipeline.Extrinsic") && f.contains("refine"),
-        s"refine job attributed to $f")
-    }
+    val ext = all.filter(_._1 == "extrinsic").map(_._2)
+    assert(ext.length == 1, s"extrinsic jobs: $ext")
+    assert(ext.head.startsWith("graft.pipeline.Extrinsic"),
+      s"extrinsic job attributed to ${ext.head}")
   }
 }
