@@ -75,6 +75,18 @@ class ExtrinsicSpec extends SparkSpec {
       tvec(0) + 8.0, tvec(1) - 6.0, tvec(2) + 15.0)
   }
 
+  test("refine returns the same parameters on 1 and on 7 partitions") {
+    // the point array is sorted before any sum, so the partition count
+    // reaches neither the parameters nor the cost
+    val Seq((p1, c1), (p7, c7)) = Seq(1, 7).map { n =>
+      val cn = corners.repartition(n)
+      assert(cn.rdd.getNumPartitions == n)
+      Extrinsic.refine(Extrinsic.points(cn), arr("k"), arr("dist"), perturbedStart)
+    }
+    assert(c1 == c7, s"cost $c1 vs $c7")
+    assert(p1 == p7, s"params $p1 vs $p7")
+  }
+
   test("init, refine and the stats are bit-equal on 1, 4, 7 and 16 partitions and shuffled rows") {
     // the init, the parameters and cost of a refine from it, and the six
     // stats at the result, as raw bits
