@@ -2,9 +2,10 @@
 """Record the DuckDB single-node baseline (dev tooling only — not part of
 the shipped library): run each oracle SQL from a Verify dump's
 oracle_sql.json in DuckDB against the sf parquet tables, time it, and
-write per-query wall seconds to BASELINE_local.json. graft.Bench reads
-that file and prints per-query spark/duckdb ratios so "within 2x of the
-local baseline" is mechanically checkable.
+write per-query wall seconds to BASELINE_local.json. scripts/ratios.py
+divides a bench line by that file and scripts/gate.py uses it as the
+gate's denominator, so it should be recorded on the box that runs the
+bench.
 
 Usage: python3 scripts/baseline.py <sfDir> <verifyOutDir> [outJson]
 

@@ -1,22 +1,32 @@
 #!/usr/bin/env python3
-"""Patch vs_baseline ratio fields into a BENCH_<tag>.json (dev tooling
+"""Write the spark/duckdb ratio fields into a bench JSON (dev tooling
 only — not part of the shipped library).
 
-graft.Bench computes spark/duckdb ratios in-JVM when the baseline file
-already exists. A brand-new scale point runs artifact-first — the Spark
-bench lands BEFORE the multi-hour DuckDB baseline re-record — so its
-bench JSON has raw seconds but no ratios. This script recomputes the
-ratio fields from the two files using exactly the formulas of the ratio
-block in Bench.main (`ratios`/`ratioPart`): per-query ratio,
-total-vs-total over the common queries, geomean, and the real_work /
-floor_dominated buckets split at a 0.1 s oracle time. Timings are never
-altered — only derived ratios.
+graft.Bench only measures: its full line carries per-query seconds and
+no ratios. This script is the one place a bench line is divided by a
+DuckDB baseline (scripts/baseline.py), so the baseline should be one
+recorded on the same box as the bench; scripts/scalepoint.sh passes the
+one it has just recorded. Fields written:
+  baseline_sec         sum of every baseline query's seconds
+  vs_baseline_total    Σ spark / Σ duckdb over the common queries
+  real_work            {n, spark_sec, duckdb_sec, ratio} over common
+  floor_dominated        queries whose DuckDB time is >= / < 0.1 s
+                       (a bucket with no queries is omitted)
+  vs_baseline          per-query spark / duckdb
+  vs_baseline_geomean  geometric mean of the per-query ratios
+A common query has a bench time >= 0 (a failed query is -1) and a
+baseline time > 0. Every ratio field from an earlier run is dropped
+first, so a rerun against another baseline leaves no stale field.
+Timings are never altered.
 
 Usage: python3 scripts/ratios.py BENCH_<tag>.json BASELINE_<tag>.json
 """
 import json
 import math
 import sys
+
+RATIO_KEYS = ("baseline_sec", "vs_baseline_total", "real_work",
+              "floor_dominated", "vs_baseline", "vs_baseline_geomean")
 
 
 def main():
@@ -27,6 +37,8 @@ def main():
             if v >= 0 and base.get(k, 0) > 0]
     if not rows:
         sys.exit(f"no common queries between {bench_path} and {base_path}")
+    for k in RATIO_KEYS:
+        bench.pop(k, None)
     bench["baseline_sec"] = round(sum(base.values()), 2)
     bench["vs_baseline_total"] = round(
         sum(r[1] for r in rows) / sum(r[2] for r in rows), 3)

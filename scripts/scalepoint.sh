@@ -26,15 +26,18 @@
 # hour-long sweep.
 #
 # Stage ORDER is artifact-first: the Spark bench (~minutes) runs BEFORE
-# both DuckDB stages (each ~hours at sf10+). Bench takes its ratios from
-# the root BASELINE_*.json recorded at this sfDir, if one exists; for a
-# brand-new point scripts/ratios.py patches them in after the baseline
-# stage. Each stage drops a .done_<stage> marker in
-# scratch/scalepoint_<tag>/; re-running skips completed stages (delete
-# the marker dir, or run with SPARK_GRAFT_FORCE=1, to redo from scratch).
+# both DuckDB stages (each ~hours at sf10+). Bench only measures; once
+# the baseline stage has recorded BASELINE_<tag>.json on this box (a
+# file of that name already in the root is overwritten, not resumed),
+# scripts/ratios.py writes the vs_baseline_* fields into BENCH_<tag>.json
+# from it, on every run, replacing any ratios already in the file. Each
+# stage drops a .done_<stage> marker in scratch/scalepoint_<tag>/;
+# re-running skips completed stages (delete the marker dir, or run with
+# SPARK_GRAFT_FORCE=1, to redo from scratch).
 #
 # Produces, in the repo root:
-#   BENCH_<tag>.json     — graft.Bench's full line incl. vs_baseline_*
+#   BENCH_<tag>.json     — graft.Bench's full line plus the vs_baseline_*
+#                          fields against BASELINE_<tag>.json
 #   BASELINE_<tag>.json  — DuckDB per-query wall seconds at <sfDir>
 # and leaves oracle_sql.json, scalepass_results.txt and any failed
 # query's dump in scratch/verify_<tag>/. Fails fast (set -e) if any
@@ -105,7 +108,7 @@ if skip_stage bench; then
 else
   echo "== bench: graft.Bench -> BENCH_${TAG}.json =="
   # the full line from the file Bench writes: its LAST stdout line is a
-  # short summary without "queries" or "vs_baseline"
+  # short summary without "queries"
   rm -f "${MARK_DIR}/bench.json"
   env SPARK_GRAFT_SF_DIR="${SF_DIR}" SPARK_GRAFT_SKIP_QUERIES="${BENCH}" \
     SPARK_GRAFT_BENCH_OUT="${MARK_DIR}/bench.json" "${BENCH_ENV[@]}" \
@@ -128,16 +131,18 @@ if skip_stage baseline; then
   echo "== baseline: done marker present, skipping =="
 else
   echo "== baseline: recording DuckDB wall times -> BASELINE_${TAG}.json =="
+  # recorded in the marker dir and copied when complete: baseline.py
+  # resumes from any file at its output path with the same sf_dir, so an
+  # interrupted run resumes here, while a BASELINE_<tag>.json already in
+  # the root (from another box or day) is never taken as recorded
   SPARK_GRAFT_SKIP_ORACLES="${BASE}" \
-    python3 scripts/baseline.py "${SF_DIR}" "${VERIFY_DIR}" "BASELINE_${TAG}.json"
+    python3 scripts/baseline.py "${SF_DIR}" "${VERIFY_DIR}" "${MARK_DIR}/baseline.json"
+  cp "${MARK_DIR}/baseline.json" "BASELINE_${TAG}.json"
   done_stage baseline
 fi
 
-# A brand-new scale point benches before any baseline exists, so its
-# bench JSON has raw seconds but no ratios; patch them in from the
-# just-recorded baseline with Bench.main's exact formulas.
-if ! grep -q '"vs_baseline"' "BENCH_${TAG}.json"; then
-  python3 scripts/ratios.py "BENCH_${TAG}.json" "BASELINE_${TAG}.json"
-fi
+# ratios against the baseline the stage above recorded; on every run, so
+# a re-run replaces whatever ratios BENCH_<tag>.json carried before
+python3 scripts/ratios.py "BENCH_${TAG}.json" "BASELINE_${TAG}.json"
 
 echo "== done: BENCH_${TAG}.json + BASELINE_${TAG}.json =="

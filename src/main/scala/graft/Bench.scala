@@ -11,11 +11,9 @@ import org.apache.spark.sql.SparkSession
   * position/GC noise on unchanged plans (round-7 x4/x5), which medians
   * kill. The total is the sum of medians.
   *
-  * If a BASELINE_*.json was recorded at the same sf (DuckDB per-query
-  * wall times — scripts/baseline.py; see loadBaseline), the line also
-  * carries per-query spark/duckdb ratios and their geometric mean
-  * (`vs_baseline_geomean`), making the "within 2x of the local
-  * single-node baseline" target mechanically checkable.
+  * Bench only measures. Ratios against DuckDB are derived outside the
+  * JVM from a baseline recorded on the same box: scripts/ratios.py for
+  * one bench line, scripts/gate.py for the sf0.1 gate.
   */
 object Bench {
 
@@ -253,41 +251,6 @@ object Bench {
   private[graft] def envCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
-  /** Baseline "queries" map for this sf: the one `BASELINE_*.json` in
-    * `dir` whose `sf_dir` equals `sfDir` (BASELINE_local.json for the
-    * default sf0.1 run, BASELINE_<tag>.json for a scripts/scalepoint.sh
-    * point). An unreadable file is skipped; no match or two matches omit
-    * the ratios. Loud, not silent: each says why on stderr, because a
-    * baseline whose sf_dir merely differs in spelling (relative vs
-    * absolute) would otherwise read as "no baseline recorded".
-    */
-  def loadBaseline(dir: String, sfDir: String): Map[String, Double] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("BASELINE_") && f.getName.endsWith(".json"))
-      .sortBy(_.getName)
-    val roots = files.flatMap { f =>
-      try Some(f -> om.readTree(f))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"[bench] baseline ${f.getPath} unreadable, skipped: $e")
-          None
-      }
-    }
-    roots.filter(_._2.path("sf_dir").asText("") == sfDir) match {
-      case Seq((_, root)) =>
-        import scala.jdk.CollectionConverters._
-        root.path("queries").properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble()).toMap
-      case Seq() =>
-        Console.err.println(s"[bench] no $dir/BASELINE_*.json has sf_dir '$sfDir' — ratios omitted")
-        Map.empty
-      case many =>
-        Console.err.println(s"[bench] ${many.map(_._1.getPath).mkString(", ")} all have sf_dir '$sfDir' — ratios omitted")
-        Map.empty
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session(sfDir, envCpus)
@@ -410,48 +373,6 @@ object Bench {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries failed: ${failed.sorted.mkString(",")}")
-    val baseline = loadBaseline(".", sfDir)
-    // Locale.ROOT: the f"" interpolator is default-locale-sensitive and a
-    // comma-decimal locale would corrupt the JSON line
-    def num(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-    val ratios =
-      if (baseline.isEmpty) Nil
-      else results.collect {
-        case (k, v) if v >= 0 && baseline.get(k).exists(_ > 0) =>
-          (k, v, baseline(k))
-      }
-    val ratioPart =
-      if (ratios.isEmpty) "" // no baseline, or every query failed
-      else {
-        val rs = ratios.map { case (k, v, b) =>
-          "\"" + k + "\":" + num(v / b, 3) }.mkString("{", ",", "}")
-        val geomean =
-          math.exp(ratios.map(r => math.log(r._2 / r._3)).sum / ratios.size)
-        // total-vs-total is the headline comparison: per-query ratios on
-        // sub-10ms DuckDB queries mostly measure Spark's fixed per-job
-        // floor (~0.2 s scheduling + footer reads), which amortizes away
-        // at scale; the total ratio amortizes it here too
-        val totalSpark = ratios.map(_._2).sum
-        val totalBase = ratios.map(_._3).sum
-        // floor-dominated bucket: queries whose ORACLE is <0.1 s measure
-        // Spark's fixed per-job floor, not the operator — splitting them
-        // out stops round-over-round diffs flagging job-floor noise as
-        // regressions while keeping the headline total honest
-        val (real, floor) = ratios.partition(_._3 >= 0.1)
-        def bucket(tag: String, rs2: Seq[(String, Double, Double)]) =
-          if (rs2.isEmpty) ""
-          else {
-            val ts = rs2.map(_._2).sum; val tb = rs2.map(_._3).sum
-            s""","$tag":{"n":${rs2.size},"spark_sec":${num(ts, 2)}""" +
-              s""","duckdb_sec":${num(tb, 2)},"ratio":${num(ts / tb, 3)}}"""
-          }
-        s""","baseline_sec":${num(baseline.values.sum, 2)}""" +
-          s""","vs_baseline_total":${num(totalSpark / totalBase, 3)}""" +
-          bucket("real_work", real) + bucket("floor_dominated", floor) +
-          s""","vs_baseline":$rs""" +
-          s""","vs_baseline_geomean":${num(geomean, 3)}"""
-      }
     val skipPart =
       if (skipQ.isEmpty) ""
       else skipQ.toSeq.sorted.map("\"" + _ + "\"")
@@ -467,7 +388,7 @@ object Bench {
       if (!bktNeeded) ""
       else if (!bktOk) ""","bucketed_ingest_cold":null"""
       else s""","bucketed_ingest_cold":$bktCold"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"sf":"$sfDir"$skipPart$bktPart$ratioPart}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"sf":"$sfDir"$skipPart$bktPart}"""
     println(line)
     // Also persist the line whole: the driver's round artifact captures
     // only the sbt output tail, which truncates the per-query map on big
@@ -493,10 +414,6 @@ object Bench {
     // A compact trailing summary survives any tail truncation, so the
     // driver's own capture is self-sufficient even without
     // BENCH_full_r{N}.json.
-    val vsTotal =
-      if (ratios.isEmpty) ""
-      else s""","vs_baseline_total":${num(
-        ratios.map(_._2).sum / ratios.map(_._3).sum, 3)}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"$vsTotal,"full":"$outPath"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","full":"$outPath"}""")
   }
 }

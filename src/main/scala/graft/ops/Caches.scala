@@ -30,9 +30,9 @@ import org.apache.spark.storage.StorageLevel
   * mid-action: every declared query re-derives its caches from source
   * data, and the sim3 IVF index is deliberately session-free (collected
   * rows, not a cached DataFrame — ops/Similarity.scala) so it survives
-  * this call by construction. Self-managed short-lived caches
-  * (kmeansCentroids' vector persist, DataPipeline's match cache) release
-  * themselves in `finally` and never enter these registries.
+  * this call by construction. The one self-managed short-lived cache,
+  * kmeansCentroids' vector persist, releases itself in `finally` and
+  * never enters these registries.
   */
 object Caches {
   private val Tag = "graft:"

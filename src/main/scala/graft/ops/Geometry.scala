@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * comparable.
   *
   * One scalar kernel sits beside them: `projectCvScalar`, the
-  * operation-order twin of `rigidTransform` + `projectPointCv`. The
-  * calibration DAG's per-point math runs it on the driver, over each
+  * operation-order twin of `rigidTransform` + `projectPointCvStaged`.
+  * The calibration DAG's per-point math runs it on the driver, over each
   * fit's one collected point set: Extrinsic (PnP-refined LM and
   * reprojection stats) and Intrinsic.calibrate (bundle and mean error),
   * so an LM step plans and compiles no query; the Column forms stay as
@@ -42,46 +42,11 @@ object Geometry {
   }
 
   /** Rotation matrix from ZYX euler angles in degrees (KUKA A,B,C order;
-    * point3d_transformation.py:87-104). R = Rz(a) @ Ry(b) @ Rx(c).
-    */
-  def eulerZyxToMatrix(aDeg: Column, bDeg: Column, cDeg: Column): Mat3 = {
-    val (ca, sa) = (cos(radians(aDeg)), sin(radians(aDeg)))
-    val (cb, sb) = (cos(radians(bDeg)), sin(radians(bDeg)))
-    val (cc, sc) = (cos(radians(cDeg)), sin(radians(cDeg)))
-    Seq(
-      Seq(ca * cb, ca * sb * sc - sa * cc, ca * sb * cc + sa * sc),
-      Seq(sa * cb, sa * sb * sc + ca * cc, sa * sb * cc - ca * sc),
-      Seq(-sb, cb * sc, cb * cc))
-  }
-
-  /** Rodrigues rotation-vector -> rotation matrix, closed form
-    * (extrinsic_calibration.py:76,105: cv2.Rodrigues):
-    * R = c I + (1-c) k k^T + s [k]x, with theta = |r|, k = r/theta.
-    * The zero rotation vector is a legitimate cv2.Rodrigues input meaning
-    * identity, so the guard is built in — theta == 0 yields I, never NaN.
-    */
-  def rodrigues(rx: Column, ry: Column, rz: Column): Mat3 = {
-    val theta = sqrt(rx * rx + ry * ry + rz * rz)
-    val (kx, ky, kz) = (rx / theta, ry / theta, rz / theta)
-    val c = cos(theta)
-    val s = sin(theta)
-    val v = lit(1.0) - c
-    val raw = Seq(
-      Seq(c + kx * kx * v, kx * ky * v - kz * s, kx * kz * v + ky * s),
-      Seq(ky * kx * v + kz * s, c + ky * ky * v, ky * kz * v - kx * s),
-      Seq(kz * kx * v - ky * s, kz * ky * v + kx * s, c + kz * kz * v))
-    raw.zipWithIndex.map { case (row, i) =>
-      row.zipWithIndex.map { case (e, j) =>
-        when(theta > 0.0, e).otherwise(lit(if (i == j) 1.0 else 0.0))
-      }
-    }
-  }
-
-  /** `eulerZyxToMatrix` with the six trig terms staged as named
-    * intermediate columns on `df` — the corpus-scale form.
+    * point3d_transformation.py:87-104): R = Rz(a) @ Ry(b) @ Rx(c), with
+    * the six trig terms staged as named intermediate columns on `df`.
     *
-    * Why a DataFrame-level variant exists: the Column-only helpers build
-    * each matrix entry as its own tree, so shared terms (cos/sin of each
+    * Why the DataFrame-level form: a Column-only helper builds each
+    * matrix entry as its own tree, so shared terms (cos/sin of each
     * angle, Rodrigues' sqrt) are textually DUPLICATED into all 9 entries
     * — ~90 transcendental evaluations per row once the 9 entries are
     * selected, and an expression source so large it bloats codegen.
@@ -91,8 +56,7 @@ object Geometry {
     * the same whole-stage-codegen pass. Measured on x8 at sf0.1:
     * 15.6 s inline -> 0.23 s staged, bit-identical output (same entry
     * trees, shared terms have one evaluation site but the same value).
-    * The Column-only forms above stay for small-cardinality callers
-    * (pose grids, per-image calibration).
+    * rodriguesStaged and projectPointCvStaged follow the same pattern.
     */
   def eulerZyxStaged(df: org.apache.spark.sql.DataFrame,
       aDeg: Column, bDeg: Column, cDeg: Column)
@@ -110,9 +74,14 @@ object Geometry {
       Seq(-sb, cb * sc, cb * cc)))
   }
 
-  /** `rodrigues` with theta / k / cos / sin / (1-cos) staged as named
-    * intermediate columns — the corpus-scale form (see eulerZyxStaged
-    * for why; the sqrt alone appeared ~50x in the inline entry trees).
+  /** Rodrigues rotation-vector -> rotation matrix, closed form
+    * (extrinsic_calibration.py:76,105: cv2.Rodrigues):
+    * R = c I + (1-c) k k^T + s [k]x, with theta = |r|, k = r/theta, and
+    * theta / k / cos / sin / (1-cos) staged as named intermediate columns
+    * (see eulerZyxStaged; inline, the sqrt appeared ~50x in the entry
+    * trees). The zero rotation vector is a legitimate cv2.Rodrigues
+    * input meaning identity, so the guard is built in — theta == 0
+    * yields I, never NaN.
     *
     * `finish` is applied to each entry INSIDE the zero-theta guard's
     * live branch (the identity constants pass through exactly under any
@@ -154,16 +123,23 @@ object Geometry {
     * [k1,k2,p1,p2,k3,k4,k5,k6,s1..s4,τx,τy] (s/τ unused — the reference
     * calibrates with CALIB_RATIONAL_MODEL|FIX_K3..K5, camera_calib.py:101,
     * so its only nonzero denominator term is k6 r⁶).
+    *
+    * xn, yn and r2 are staged as named columns on `df` (see
+    * eulerZyxStaged): inline, each of u and v repeated the r2 subtree
+    * 14 times.
     */
-  def projectPointCv(
+  def projectPointCvStaged(df: org.apache.spark.sql.DataFrame,
       x: Column, y: Column, z: Column,
-      k: Seq[Double], dist: Seq[Double]): (Column, Column) = {
+      k: Seq[Double], dist: Seq[Double])
+      : (org.apache.spark.sql.DataFrame, (Column, Column)) = {
     require(k.length == 9 && dist.length >= 8)
     val Seq(k1, k2, p1, p2, k3, k4, k5, k6) = dist.take(8)
     val (fx, fy, cx, cy) = (k(0), k(4), k(2), k(5))
-    val xn = x / z
-    val yn = y / z
-    val r2 = xn * xn + yn * yn
+    val staged = df
+      .withColumns(Map("__xn" -> (x / z), "__yn" -> (y / z)))
+      .withColumn("__r2",
+        col("__xn") * col("__xn") + col("__yn") * col("__yn"))
+    val (xn, yn, r2) = (col("__xn"), col("__yn"), col("__r2"))
     val radial =
       (lit(1.0) + lit(k1) * r2 + lit(k2) * r2 * r2 + lit(k3) * r2 * r2 * r2) /
       (lit(1.0) + lit(k4) * r2 + lit(k5) * r2 * r2 + lit(k6) * r2 * r2 * r2)
@@ -171,15 +147,16 @@ object Geometry {
       lit(p2) * (r2 + lit(2.0) * xn * xn)
     val yd = yn * radial + lit(p1) * (r2 + lit(2.0) * yn * yn) +
       lit(2.0 * p2) * xn * yn
-    (lit(fx) * xd + lit(cx), lit(fy) * yd + lit(cy))
+    (staged, (lit(fx) * xd + lit(cx), lit(fy) * yd + lit(cy)))
   }
 
   /** Row-at-a-time twin of `rigidTransform(t, x, y, z)` followed by
-    * `projectPointCv(.., k, dist)`: world (x, y, z) -> camera frame through
-    * the row-major 4x4 `t` -> full cv2 rational-model pixel (u, v). Every
-    * sum and product is written in the Column forms' left-associated order
-    * (`2.0 * p1` folded first, as the literal there), and JVM doubles are
-    * strict IEEE, so the result has the same bits as the Catalyst form.
+    * `projectPointCvStaged(.., k, dist)`: world (x, y, z) -> camera frame
+    * through the row-major 4x4 `t` -> full cv2 rational-model pixel
+    * (u, v). Every sum and product is written in the Column forms'
+    * left-associated order (`2.0 * p1` folded first, as the literal
+    * there), and JVM doubles are strict IEEE, so the result has the same
+    * bits as the Catalyst form.
     * `k` is row-major 9, `dist` the cv2 layout (at least 8 entries).
     * Domain: camera-frame z != 0 and a non-zero radial denominator; there
     * the Column form raises or returns null (ANSI / non-ANSI division),

@@ -25,7 +25,7 @@ import graft.ops.Geometry
   * do not depend on how the input is partitioned.
   *
   * All per-point math is the scalar kernel Geometry.projectCvScalar (the
-  * bit-identical twin of Geometry.rigidTransform + projectPointCv).
+  * bit-identical twin of Geometry.rigidTransform + projectPointCvStaged).
   */
 object Extrinsic {
 
@@ -99,7 +99,7 @@ object Extrinsic {
 
   // ---- plain-Scala small linear algebra (driver kernels) ----
 
-  /** Rodrigues vector -> row-major 3x3 (scala twin of Geometry.rodrigues). */
+  /** Rodrigues vector -> row-major 3x3 (scalar twin of Geometry.rodriguesStaged). */
   def rodriguesScalar(r: Seq[Double]): Array[Double] = {
     val theta = math.sqrt(r.map(x => x * x).sum)
     if (theta < 1e-12) return Array(1, 0, 0, 0, 1, 0, 0, 0, 1)

@@ -31,7 +31,7 @@ import graft.ops.Geometry
   *   4. mean reprojection error per camera_calib.py:104-113: per view
   *      sqrt(sum du² + dv²) / #points through the scalar kernel
   *      Geometry.projectCvScalar (the bit-identical twin of the Column
-  *      forms rigidTransform + projectPointCv), then the mean over views.
+  *      forms rigidTransform + projectPointCvStaged), then the mean over views.
   *
   * Distortion parameterization follows the reference's flags
   * (CALIB_RATIONAL_MODEL | FIX_K3..K5, camera_calib.py:101-102): free

@@ -317,10 +317,11 @@ object GeoQueries {
         (col("l_quantity") - 25.0).as("x"),
         (col("l_discount") * 100.0 - 5.0).as("y"),
         (col("l_linenumber").cast("double") + 10.0).as("z"))
-      val (u, v) = G.projectPointCv(col("x"), col("y"), col("z"),
+      val (staged, (u, v)) = G.projectPointCvStaged(base,
+        col("x"), col("y"), col("z"),
         k = Seq(1000.5, 0.0, 960.0, 0.0, 998.25, 540.0, 0.0, 0.0, 1.0),
         dist = Seq(0.1, -0.05, 0.001, -0.002, 0.0, 0.02, 0.0, 0.0))
-      base.select(col("l_orderkey"), col("l_linenumber"),
+      staged.select(col("l_orderkey"), col("l_linenumber"),
           r9(u).as("u"), r9(v).as("v"))
         .orderBy("l_orderkey", "l_linenumber", "u", "v")
     },

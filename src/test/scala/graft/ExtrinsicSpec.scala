@@ -148,9 +148,10 @@ class ExtrinsicSpec extends SparkSpec {
     assert(p == init)
     val (x, y, z) = Geometry.rigidTransform(Extrinsic.paramsToT(init),
       col("x"), col("y"), col("z"))
-    val (u, v) = Geometry.projectPointCv(x, y, z, arr("k"), arr("dist"))
+    val (staged, (u, v)) =
+      Geometry.projectPointCvStaged(corners, x, y, z, arr("k"), arr("dist"))
     val du = u - col("u"); val dv = v - col("v")
-    val want = corners.agg(sum(du * du + dv * dv)).collect()(0).getDouble(0)
+    val want = staged.agg(sum(du * du + dv * dv)).collect()(0).getDouble(0)
     assert(math.abs(cost - want) < 1e-9 * want, s"cost $cost vs $want")
   }
 

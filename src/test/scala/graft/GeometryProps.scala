@@ -82,7 +82,7 @@ object GeometryProps extends Properties("geometry") {
     doubleToLongBits(a._1) == doubleToLongBits(b._1) &&
       doubleToLongBits(a._2) == doubleToLongBits(b._2)
 
-  /** rigidTransform + projectPointCv evaluated by Spark over `pts`, with
+  /** rigidTransform + projectPointCvStaged evaluated by Spark over `pts`, with
     * whole-stage codegen or fully interpreted.
     */
   private def columnForm(t: Array[Double], k: Array[Double],
@@ -96,8 +96,9 @@ object GeometryProps extends Properties("geometry") {
       val df = spark.sparkContext.parallelize(pts.zipWithIndex.map {
         case ((x, y, z), i) => (i, x, y, z) }, 2).toDF("i", "x", "y", "z")
       val (xc, yc, zc) = Geometry.rigidTransform(t.toSeq, col("x"), col("y"), col("z"))
-      val (u, v) = Geometry.projectPointCv(xc, yc, zc, k.toSeq, dist.toSeq)
-      val q = df.select(col("i"), u, v)
+      val (staged, (u, v)) =
+        Geometry.projectPointCvStaged(df, xc, yc, zc, k.toSeq, dist.toSeq)
+      val q = staged.select(col("i"), u, v)
       val plan = q.queryExecution.executedPlan
       require(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen,
         plan.toString)
@@ -105,7 +106,7 @@ object GeometryProps extends Properties("geometry") {
     }
   }
 
-  property("projectCvScalar is rigidTransform + projectPointCv bit for bit") = {
+  property("projectCvScalar is rigidTransform + projectPointCvStaged bit for bit") = {
     val gen = for {
       t12 <- Gen.listOfN(12, value(2.0))
       k <- kGen; dist <- distGen

@@ -29,8 +29,9 @@ class GeometrySpec extends SparkSpec {
   test("rodrigues theta->R->theta roundtrip (angle from trace)") {
     val cases = Seq((0.1, 0.2, 0.3), (1.0, 0.0, 0.0), (0.0, 0.0, 1.5),
       (-0.7, 0.4, -0.2))
-    val df = spark.createDataFrame(cases).toDF("rx", "ry", "rz")
-    val m = Geometry.rodrigues(col("rx"), col("ry"), col("rz"))
+    val (df, m) = Geometry.rodriguesStaged(
+      spark.createDataFrame(cases).toDF("rx", "ry", "rz"),
+      col("rx"), col("ry"), col("rz"))
     val rows = df.select(
       (m(0)(0) + m(1)(1) + m(2)(2)).as("trace"),
       sqrt(col("rx") * col("rx") + col("ry") * col("ry") +
@@ -45,9 +46,10 @@ class GeometrySpec extends SparkSpec {
   }
 
   test("rodrigues zero vector yields exact identity (cv2 semantics)") {
-    val df = spark.range(1).select(lit(0.0).as("rx"), lit(0.0).as("ry"),
-      lit(0.0).as("rz"))
-    val m = Geometry.rodrigues(col("rx"), col("ry"), col("rz"))
+    val (df, m) = Geometry.rodriguesStaged(
+      spark.range(1).select(lit(0.0).as("rx"), lit(0.0).as("ry"),
+        lit(0.0).as("rz")),
+      col("rx"), col("ry"), col("rz"))
     val out = df.select(
       (for (i <- 0 until 3; j <- 0 until 3) yield m(i)(j).as(s"r$i$j")): _*)
       .collect()(0)
@@ -57,10 +59,11 @@ class GeometrySpec extends SparkSpec {
 
   test("euler rotation preserves pairwise distances (rigid)") {
     val pts = Seq((1.0, 2.0, 3.0), (4.0, -1.0, 0.5), (-2.0, 0.0, 7.0))
-    val df = spark.createDataFrame(pts).toDF("x", "y", "z")
-      .withColumn("a", lit(33.0)).withColumn("b", lit(-12.0))
-      .withColumn("c", lit(71.0))
-    val m = Geometry.eulerZyxToMatrix(col("a"), col("b"), col("c"))
+    val (df, m) = Geometry.eulerZyxStaged(
+      spark.createDataFrame(pts).toDF("x", "y", "z")
+        .withColumn("a", lit(33.0)).withColumn("b", lit(-12.0))
+        .withColumn("c", lit(71.0)),
+      col("a"), col("b"), col("c"))
     def rot(i: Int) = m(i)(0) * col("x") + m(i)(1) * col("y") + m(i)(2) * col("z")
     val out = df.select(rot(0).as("px"), rot(1).as("py"), rot(2).as("pz"))
       .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))

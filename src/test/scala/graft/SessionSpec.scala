@@ -59,46 +59,4 @@ class SessionSpec extends SparkSpec {
     assert(c("spark.sql.adaptive.enabled") == "true")
     assert(c("spark.sql.shuffle.partitions") == "32") // capped at 8x cpus
   }
-
-  test("loadBaseline picks the one BASELINE_*.json whose sf_dir matches") {
-    val dir = Files.createTempDirectory("graft-baseline").toFile
-    def write(name: String, body: String) =
-      Files.write(new File(dir, name).toPath, body.getBytes("UTF-8"))
-    def load(sf: String) = {
-      val err = new java.io.ByteArrayOutputStream
-      val m = Console.withErr(err)(Bench.loadBaseline(dir.getPath, sf))
-      (m, err.toString("UTF-8"))
-    }
-    try {
-      write("BASELINE.json", """{"queries":{"q1":9.0}}""")
-      write("BASELINE_local.json", """{"sf_dir":"/data/sf0.1","queries":{"q1":1.5,"q2":0.25}}""")
-      write("BASELINE_sf1.json", """{"sf_dir":"scratch/sf1","queries":{"q1":15.0}}""")
-      val (m, err) = load("/data/sf0.1")
-      assert(m == Map("q1" -> 1.5, "q2" -> 0.25))
-      assert(err.isEmpty)
-      assert(load("scratch/sf1")._1 == Map("q1" -> 15.0))
-      // BASELINE.json has no sf_dir and is not a BASELINE_* file
-      val (none, noneErr) = load("")
-      assert(none.isEmpty && noneErr.contains("ratios omitted"))
-
-      write("BASELINE_sf1b.json", """{"sf_dir":"scratch/sf1","queries":{"q1":16.0}}""")
-      val (two, twoErr) = load("scratch/sf1")
-      assert(two.isEmpty)
-      assert(twoErr.contains("BASELINE_sf1.json") && twoErr.contains("BASELINE_sf1b.json"))
-
-      // a malformed file is named on stderr and skipped
-      write("BASELINE_bad.json", """{"sf_dir":"/data/sf0.1","queries":""")
-      val (kept, keptErr) = load("/data/sf0.1")
-      assert(kept == Map("q1" -> 1.5, "q2" -> 0.25))
-      assert(keptErr.contains("BASELINE_bad.json") && keptErr.contains("unreadable"))
-      write("BASELINE_local.json", """{"sf_dir":"/data/sf0.1","queries":{"q1":""")
-      new File(dir, "BASELINE_bad.json").delete()
-      val (bad, badErr) = load("/data/sf0.1")
-      assert(bad.isEmpty)
-      assert(badErr.contains("BASELINE_local.json") && badErr.contains("unreadable"))
-      assert(badErr.contains("ratios omitted"))
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
-  }
 }
