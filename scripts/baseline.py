@@ -57,20 +57,22 @@ def main():
     single_run_sec = float(os.environ.get("SPARK_GRAFT_SINGLE_RUN_SEC", "30"))
     times = {}
     # Resume: a baseline record at a big scale point is hours of DuckDB
-    # wall time; write the JSON after EVERY query and skip queries already
-    # recorded for the SAME sf dir, so an interrupted run (round boundary,
+    # wall time; write the JSON after EVERY query, marked "partial" until
+    # the final write, and skip queries already recorded in a PARTIAL
+    # payload for the SAME sf dir, so an interrupted run (round boundary,
     # OOM, reboot) strands at most the query in flight, not the whole
-    # record. Delete the out file to force a full re-record.
+    # record. A completed file (no mark, e.g. a committed BASELINE_*.json
+    # from another box) is re-recorded in full.
     if os.path.exists(out_json):
         try:
             prev = json.load(open(out_json))
-            if prev.get("sf_dir") == sf_dir:
+            if prev.get("partial") and prev.get("sf_dir") == sf_dir:
                 times = dict(prev.get("queries", {}))
                 print(f"resuming {out_json}: {len(times)} already recorded")
         except (json.JSONDecodeError, OSError):
             pass
 
-    def write_payload():
+    def write_payload(partial=True):
         payload = {"sf_dir": sf_dir, "engine": "duckdb",
                    "engine_version": duckdb.__version__,
                    "note": "per-query wall seconds, best of 2 after warmup "
@@ -79,6 +81,8 @@ def main():
                            "materialized engine-side (CTAS temp table)",
                    "skipped": sorted(skip),
                    "queries": times}
+        if partial:
+            payload["partial"] = True
         with open(out_json, "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
 
@@ -119,7 +123,7 @@ def main():
             print(f"{name}: SKIP ({e})", file=sys.stderr)
         finally:
             con.execute("DROP TABLE IF EXISTS _basetmp")
-    write_payload()
+    write_payload(partial=False)
     print(f"wrote {out_json} ({len(times)} queries)")
 
 

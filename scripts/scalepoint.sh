@@ -132,7 +132,7 @@ if skip_stage baseline; then
 else
   echo "== baseline: recording DuckDB wall times -> BASELINE_${TAG}.json =="
   # recorded in the marker dir and copied when complete: baseline.py
-  # resumes from any file at its output path with the same sf_dir, so an
+  # resumes a partial file at its output path with the same sf_dir, so an
   # interrupted run resumes here, while a BASELINE_<tag>.json already in
   # the root (from another box or day) is never taken as recorded
   SPARK_GRAFT_SKIP_ORACLES="${BASE}" \

@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * Each query is timed as the MEDIAN of `SPARK_GRAFT_REPS` runs
   * (default 3): single-shot full-bench numbers at sf0.1 showed ±6×
   * position/GC noise on unchanged plans (round-7 x4/x5), which medians
-  * kill. The total is the sum of medians.
+  * kill. The total is the sum of medians. Every line — the queries, the
+  * sim3 index build and the bucketed ingest — is timed at one site,
+  * [[timedLine]]. The full line also records `cpus`, the local[n] width
+  * the run had.
   *
   * Bench only measures. Ratios against DuckDB are derived outside the
   * JVM from a baseline recorded on the same box: scripts/ratios.py for
@@ -116,6 +119,21 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2)
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
+
+  /** The one timed line: `run`'s wall seconds as the median of `n` runs,
+    * `beforeRep` before each (untimed), or -1.0 when any run throws
+    * (logged as `[bench] name FAILED: ...`).
+    */
+  private def timedLine(name: String, n: Int, beforeRep: () => Unit = () => ())(
+      run: => Any): Double =
+    SparkEntry.attempt("bench", name) {
+      median((1 to n).map { _ =>
+        beforeRep()
+        val t0 = System.nanoTime()
+        run
+        (System.nanoTime() - t0) / 1e9
+      })
+    }.getOrElse(-1.0)
 
   /** Total bytes of the sf dir's `*.parquet` tables — the one corpus
     * probe the session is sized from. A table may be a parquet DIRECTORY
@@ -253,167 +271,84 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(sfDir, envCpus)
-    // warm up JVM/codegen so the alphabetically-first query doesn't absorb
-    // several seconds of one-time startup in its reported time
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // ...and the heavier machinery (parquet reader/writer init, janino
-    // codegen of real plan shapes, persist paths) that the range-sum
-    // does not touch. Measured attribution (r22):
-    // sim3_index_build — the first timed line of every session — read
-    // 3.8 s cold of which ~2.1 s was this one-time warmup; with the
-    // machinery warmed it reads ~1.7 s (warm rebuilds ~0.8 s either
-    // way). The warmup runs on spark.range data only (no testdata, no
-    // declared query), so nothing benched is precomputed or cached.
+    val cpus = envCpus
+    val spark = session(sfDir, cpus)
+    // one-time JVM and Spark machinery startup, which otherwise lands on
+    // the first timed line: r22 measured sim3_index_build at 3.8 s cold,
+    // ~1.7 s with the machinery warmed (warm rebuilds ~0.8 s either way)
     machineryWarmup(spark)
-    var failed = List.empty[String]
     // Index BUILD timed as its own line: a real system separates the
     // one-off IVF index build from the queries it serves. sim3's
-    // kmeansIndex is memoized per corpus, so pre-warming it here (with
-    // sim3's exact parameters) makes the sim3 line below measure the
-    // probe path only, and `sim3_index_build` carries the Lloyd passes.
-    val idx0 = System.nanoTime()
-    val idxOk =
-      try {
-        // same definition site as the sim3 query body — cannot drift
-        graft.queries.SimQueries.sim3Index(spark, sfDir)
-        true
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] sim3_index_build FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          failed ::= "sim3_index_build"
-          false
-      }
-    val idxLine = "sim3_index_build" ->
-      (if (idxOk) (System.nanoTime() - idx0) / 1e9 else -1.0)
+    // kmeansIndex is memoized per corpus, so pre-warming it here (same
+    // definition site as the sim3 query body) makes the sim3 line measure
+    // the probe path only, and `sim3_index_build` carries the Lloyd passes.
+    val idxLine = "sim3_index_build" -> timedLine("sim3_index_build", 1)(
+      graft.queries.SimQueries.sim3Index(spark, sfDir))
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // Same scale-point knob as graft.Verify: a query whose single-node
-    // shuffle footprint exceeds the box at a huge mult is left out of the
-    // sweep; the JSON records the omission in "skipped_queries" so a
-    // bench line can never silently pass itself off as full-surface.
-    val skipQ = sys.env.getOrElse("SPARK_GRAFT_SKIP_QUERIES", "")
-      .split(",").filter(_.nonEmpty).toSet
-    skipQ.foreach(n => System.err.println(
-      s"[bench] $n SKIPPED (SPARK_GRAFT_SKIP_QUERIES)"))
-    // Bucketed-layout ingest timed as its own line, same rationale as
-    // sim3_index_build: a real system pays the layout ONCE at ingest and
-    // every a2_bucketed/j2_bucketed run reuses it. The layout is
-    // memoized ON DISK (Tables.bucketed re-registers existing files), so
-    // this line measures a write only on the first-ever sweep at a scale
-    // point and a catalog lookup afterwards. Skipped when both bucketed
-    // queries are skipped.
-    val bkt0 = System.nanoTime()
-    // layout-granular gating (r20 ADVICE): ingest only layouts whose
-    // consumer queries survive the skip filter — a disk-constrained
-    // sweep skipping a2_bucketed must not still write lineitem's copy
-    val bktNeeded = graft.ops.Tables.layoutConsumers.values
-      .exists(_.exists(q => !skipQ(q)))
+    // recorded in "skipped_queries", so a bench line can never silently
+    // pass itself off as full-surface
+    val skipQ = SparkEntry.skippedQueries
+    // Bucketed-layout ingest timed as its own line, same rationale: a real
+    // system pays the layout ONCE and every a2/j1/j2_bucketed run reuses
+    // it. Memoized ON DISK, so it measures a write only on the first-ever
+    // sweep at a scale point. Only layouts whose consumer queries survive
+    // the skip filter are ingested (a disk-constrained sweep skipping
+    // a2_bucketed must not still write lineitem's copy); with none, the
+    // line is omitted, not -1.0: an intentional skip is not a failure.
+    val layouts = graft.ops.Tables.declaredLayouts.map(_._1)
+      .filter(graft.ops.Tables.layoutConsumers(_).exists(q => !skipQ(q)))
     var bktCold = false
-    val bktOk =
-      if (!bktNeeded) false
-      else try {
+    val bktLine = if (layouts.isEmpty) Nil else Seq("bucketed_ingest" ->
+      timedLine("bucketed_ingest", 1) {
         bktCold = graft.ops.Tables.ingestDeclaredLayouts(spark, sfDir, skipQ)
-        // Read every ingested layout through ONCE inside this timed line:
-        // first-access I/O (OS page cache cold on a freshly written or
-        // freshly booted layout) belongs to ingest, not to whichever
-        // bucketed query happens to run first in the sweep. Without this
-        // the r21 driver's 32-core run charged a2/j2_bucketed 2.2 s for
-        // the cold first read of files its own ingest had just written,
-        // while its 8-core run minutes later read 0.33 s (r21 VERDICT
-        // item 3). toRdd.count() materializes every column of every row
-        // (same coverage as the noop sink, guide §1.4).
-        graft.ops.Tables.declaredLayouts.foreach { case (name, _, _, _) =>
-          if (graft.ops.Tables.layoutConsumers(name).exists(q => !skipQ(q)))
-            runFull(graft.ops.Tables.bucketedDeclared(spark, sfDir, name))
-        }
-        true
-      }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] bucketed_ingest FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          failed ::= "bucketed_ingest"
-          false
-      }
-    // omitted (not -1.0) when both bucketed queries are skipped: an
-    // intentionally-skipped ingest is not a failure
-    val bktLine =
-      if (!bktNeeded) Nil
-      else Seq("bucketed_ingest" ->
-        (if (bktOk) (System.nanoTime() - bkt0) / 1e9 else -1.0))
+        // read every layout through once here: first-access I/O of a
+        // freshly written layout belongs to ingest, not to whichever
+        // bucketed query runs first (r21 charged a2/j2_bucketed 2.2 s for
+        // it). toRdd.count() materializes every column of every row.
+        layouts.foreach(n =>
+          runFull(graft.ops.Tables.bucketedDeclared(spark, sfDir, n)))
+      })
     // Inter-query disk barrier (see diskBarrier): 24 GB floor at scale
     // points, off for the tiny driver corpus (sub-second queries never
     // spill GBs, and a GC-wait there would perturb floor timings).
     val minFreeBytes = if (tinyCorpus(sfDir)) 0L else 24L << 30
     val startupFree = new java.io.File(
       sys.props.getOrElse("java.io.tmpdir", "/tmp")).getUsableSpace
-    val results = (SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot(q => skipQ(q._1)).map { case (name, fn) =>
+    val results = SparkEntry.sweep(spark, "bench", skip = skipQ) { q =>
       diskBarrier(minFreeBytes, startupFree)
-      val walls = (1 to reps).flatMap { _ =>
-        // release BEFORE timing, not after: each rep then measures the
-        // full computation (CacheManager matches by logical plan, so
-        // without this reps 2..n of a caching query would silently time
-        // cache hits), and nothing accumulates across the 68-query sweep
-        // (the w2/w9 persisted sort is a fresh RDD per invocation — at
-        // sf10 leaving reps x queries of them resident is real memory)
-        graft.ops.Caches.releaseAll(spark)
-        val t0 = System.nanoTime()
-        try { runFull(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            if (!failed.contains(name)) failed ::= name
-            None
-        }
-      }
-      name -> (if (walls.size == reps) median(walls) else -1.0)
-    }) ++ bktLine :+ idxLine
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+      // release BEFORE each rep too: CacheManager matches by logical
+      // plan, so reps 2..n of a caching query would otherwise time hits
+      timedLine(q.name, reps, () => graft.ops.Caches.releaseAll(spark))(
+        runFull(q.fn(spark, sfDir)))
+    }.map { case (name, r) => name -> r.getOrElse(-1.0) } ++ bktLine :+ idxLine
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val failed = results.collect { case (k, v) if v < 0 => k }
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries failed: ${failed.sorted.mkString(",")}")
-    val skipPart =
-      if (skipQ.isEmpty) ""
-      else skipQ.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString(""","skipped_queries":[""", ",", "]")
-    // whether the bucketed_ingest line measured a COLD write (first-ever
-    // sweep at this scale point) or an on-disk re-register (~100x
-    // cheaper) — without the flag, totals were not comparable
-    // round-over-round (r20 ADVICE). null when the ingest FAILED: a
-    // failed ingest is neither cold nor warm, and `false` there made a
-    // failure indistinguishable from a successful re-register (r21
-    // ADVICE)
-    val bktPart =
-      if (!bktNeeded) ""
-      else if (!bktOk) ""","bucketed_ingest_cold":null"""
-      else s""","bucketed_ingest_cold":$bktCold"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"sf":"$sfDir"$skipPart$bktPart}"""
-    println(line)
-    // Also persist the line whole: the driver's round artifact captures
-    // only the sbt output tail, which truncates the per-query map on big
-    // query counts (BENCH_r13/r14 committed with "parsed": null). A file
-    // copy can always be read in full. Best-effort — a read-only CWD must
-    // not fail the bench itself.
+    val head = Seq("metric" -> Json.str("total"), "value" -> total.toString,
+      "unit" -> Json.str("sec"))
+    // bucketed_ingest_cold: whether the ingest line measured a COLD write
+    // or an on-disk re-register (~100x cheaper; r20 ADVICE), null when the
+    // ingest FAILED — neither cold nor warm (r21 ADVICE)
+    val line = Json.obj(head ++ Seq("reps" -> reps.toString,
+        "queries" -> Json.obj(results.map { case (k, v) => k -> v.toString }),
+        "sf" -> Json.str(sfDir)) ++
+      (if (skipQ.isEmpty) Nil
+       else Seq("skipped_queries" ->
+         skipQ.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))) ++
+      bktLine.map { case (_, v) =>
+        "bucketed_ingest_cold" -> (if (v < 0) "null" else bktCold.toString) } :+
+      ("cpus" -> cpus.toString))
+    // persisted whole too: a captured stdout tail truncates the per-query
+    // map on big query counts (BENCH_r13/r14 committed "parsed": null)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "scratch/bench_last.json")
-    try {
-      val f = new java.io.File(outPath)
-      Option(f.getParentFile).foreach(_.mkdirs())
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not write $outPath: $e")
-    }
+    Json.emit("bench", line, outPath)
     spark.stop()
-    // LAST stdout line, deliberately short: the driver's round capture
-    // keeps only the TAIL of stdout, which on big query counts truncates
-    // the full JSON line above from the FRONT — exactly where its
-    // headline "value" sits (BENCH_r13/14/16 committed "parsed": null).
-    // A compact trailing summary survives any tail truncation, so the
-    // driver's own capture is self-sufficient even without
-    // BENCH_full_r{N}.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","full":"$outPath"}""")
+    // LAST stdout line, deliberately short: a stdout tail truncates the
+    // full line above from the FRONT, where its headline "value" sits;
+    // this summary survives any tail truncation.
+    println(Json.obj(head ++ Seq("sf" -> Json.str(sfDir),
+      "full" -> Json.str(outPath))))
   }
 }

@@ -258,20 +258,13 @@ object StreamBench {
     // last update always survives recentProgress's retention window)
     val stateOps = q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
       .map(_.stateOperators.toSeq).getOrElse(Seq.empty)
-    val fields = Seq("metric" -> s""""$metric"""", unit -> n.toString,
-        "batches" -> tally.batches.get().toString,
+    Json.emit("stream-bench", Json.obj(Seq("metric" -> Json.str(metric),
+        unit -> n.toString, "batches" -> tally.batches.get().toString,
         "input_rows" -> tally.rows.get().toString) ++ extra ++ Seq(
       "wall_sec" -> num(wall), s"${unit}_per_sec" -> num(n / wall),
       "groups_emitted" -> nGroups.toString,
       "state_rows" -> stateOps.map(_.numRowsTotal).sum.toString,
-      "state_bytes" -> stateOps.map(_.memoryUsedBytes).sum.toString)
-    val line = fields.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    println(line)
-    try {
-      val w = new java.io.PrintWriter(out, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case scala.util.control.NonFatal(_) => }
+      "state_bytes" -> stateOps.map(_.memoryUsedBytes).sum.toString)), out)
     spark.stop()
   }
 }

@@ -24,9 +24,9 @@ import org.apache.spark.storage.StorageLevel
   * A query closure cannot release its own cache after the caller's action
   * (the action happens outside the closure), so long-lived sessions pin
   * one cache + lineage per invocation unless the HARNESS releases between
-  * queries. Verify and Bench both call this after every query action; a
-  * library user embedding graft in a service should do the same at their
-  * request boundary. Safe to call at any point where no graft query is
+  * queries. SparkEntry.sweep, the walk Verify and Bench share, calls
+  * this after every query; a library user embedding graft in a service
+  * should do the same at their request boundary. Safe to call at any point where no graft query is
   * mid-action: every declared query re-derives its caches from source
   * data, and the sim3 IVF index is deliberately session-free (collected
   * rows, not a cached DataFrame — ops/Similarity.scala) so it survives

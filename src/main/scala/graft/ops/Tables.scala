@@ -199,6 +199,15 @@ object Tables {
     */
   def bucketed(spark: SparkSession, sfDir: String, table: String,
       key: String, cols: Seq[String], buckets: Int = 256): DataFrame =
+    bucketedWrote(spark, sfDir, table, key, cols, buckets)._1
+
+  /** [[bucketed]], plus whether this call WROTE the layout's files (a cold
+    * ingest) rather than reusing or re-registering it — the two differ by
+    * ~100x, so Bench's `bucketed_ingest` line records which it measured.
+    */
+  private def bucketedWrote(spark: SparkSession, sfDir: String,
+      table: String, key: String, cols: Seq[String], buckets: Int)
+      : (DataFrame, Boolean) =
     bucketLock.synchronized {
       // canonical sfDir: a relative vs absolute spelling of the same
       // directory must not mint a second multi-GB layout copy (r20
@@ -207,38 +216,30 @@ object Tables {
       val logicalId = s"$canonSf|$table|$key|${cols.mkString(",")}|$buckets"
       val fp = Memo.files(Seq(s"$sfDir/$table.parquet"))
       val tname = s"graft_bkt_${table}_${Memo.key(logicalId, fp).take(12)}"
-      if (!spark.catalog.tableExists(tname)) {
+      val wrote = !spark.catalog.tableExists(tname) && {
         val root = sys.env.getOrElse("SPARK_GRAFT_BUCKET_DIR",
           "scratch/bucketed")
         val loc = new java.io.File(
           s"$root/graft_bkt_${table}_${Memo.key(logicalId).take(12)}")
           .getAbsoluteFile
         val src = t(spark, sfDir, table).select(cols.map(col): _*)
-        val wrote = Memo.onDisk(loc, fp) {
+        val fresh = Memo.onDisk(loc, fp) {
           src.repartition(buckets, col(key))
             .write.mode("overwrite")
             .bucketBy(buckets, key).sortBy(key)
             .format("parquet").option("path", loc.toString)
             .saveAsTable(tname)
         }
-        if (wrote) lastIngestWroteFiles = true
-        else spark.sql(
+        if (!fresh) spark.sql(
           s"""CREATE TABLE $tname (${src.schema.toDDL}) USING parquet
              |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
              |LOCATION '${loc.toURI}'""".stripMargin)
+        fresh
       }
-      spark.table(tname)
+      (spark.table(tname), wrote)
     }
 
   private val bucketLock = new Object
-
-  /** True iff some `bucketed` call in this JVM actually WROTE files (as
-    * opposed to re-registering an existing on-disk layout) — Bench reads
-    * and resets this so its `bucketed_ingest` line can record whether it
-    * measured a cold write or a catalog lookup (r20 ADVICE: the two
-    * differ by ~100x and were indistinguishable in the JSON).
-    */
-  @volatile private[graft] var lastIngestWroteFiles = false
 
   /** Scale-adaptive bucket count for the DECLARED layouts (the guide's
     * §2 rule: partitioning derived from input size, never a constant
@@ -300,14 +301,11 @@ object Tables {
     * actually WROTE files (cold ingest) rather than re-registering.
     */
   def ingestDeclaredLayouts(spark: SparkSession, sfDir: String,
-      skipQ: Set[String] = Set.empty): Boolean = {
-    lastIngestWroteFiles = false
-    declaredLayouts.foreach { case (name, _, _, _) =>
-      if (layoutConsumers(name).exists(q => !skipQ(q)))
-        bucketedDeclared(spark, sfDir, name)
-    }
-    lastIngestWroteFiles
-  }
+      skipQ: Set[String] = Set.empty): Boolean =
+    declaredLayouts.filter(l => layoutConsumers(l._1).exists(q => !skipQ(q)))
+      .map { case (_, table, key, cols) =>
+        bucketedWrote(spark, sfDir, table, key, cols, defaultBuckets(sfDir))._2
+      }.contains(true)
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

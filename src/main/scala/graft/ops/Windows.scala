@@ -53,9 +53,9 @@ object Windows {
   }
 
   /** Scale-safe global row numbering: sort by `orderCol` with a RANGE
-    * partitioner (parallel sort), count rows per partition, broadcast the
-    * tiny cumulative-offset array, then number rows per partition — no
-    * single-task window. 0-based in `outCol`.
+    * partitioner (parallel sort), then `RDD.zipWithIndex` (one job counts
+    * the rows per partition, the numbering pass offsets each partition by
+    * the counts before it) — no single-task window. 0-based in `outCol`.
     *
     * The sorted RDD is persisted (MEMORY_AND_DISK_SER) so the range sort runs
     * ONCE: the count pass materializes the cache and the numbering pass
@@ -97,16 +97,10 @@ object Windows {
     val sortedRdd = Caches.persisted(sorted.rdd,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER,
       "global-rownum-sorted")
-    val counts = sortedRdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.size)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
     val schema = StructType(sorted.schema.fields :+
       StructField(outCol, LongType, nullable = false))
-    val numbered = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-      var k = offsets(i)
-      it.map { r => val out = Row.fromSeq(r.toSeq :+ k); k += 1; out }
-    }
+    val numbered = sortedRdd.zipWithIndex()
+      .map { case (r, k) => Row.fromSeq(r.toSeq :+ k) }
     spark.createDataFrame(numbered, schema)
   }
 

@@ -159,7 +159,8 @@ object Extrinsic {
     * iteration's normal equations are one loop over the points: per point
     * the kernel projects at the base parameters and at the 6
     * forward-difference points, and the residual and Jacobian row are
-    * folded into one 28-double buffer [cost, J^T J upper triangle, J^T r].
+    * folded straight into the cost, the J^T J upper triangle (mirrored
+    * after the loop) and J^T r.
     * Each damping attempt is one loop summing the squared residuals.
     * Both loops run in the points' one order. Returns the parameters and
     * the sum of squared residuals at them.
@@ -174,7 +175,8 @@ object Extrinsic {
         val ts = (p +: (0 until 6).map { i =>
           val pi = p.clone(); pi(i) += eps; pi
         }).map(q => paramsToT(q.toSeq).toArray).toArray
-        val ne = new Array[Double](28)
+        val jtj = Array.ofDim[Double](6, 6); val jtr = new Array[Double](6)
+        var rss = 0.0
         val ju = new Array[Double](6); val jv = new Array[Double](6)
         pts.foreach { pt =>
           val (u0, v0) = Geometry.projectCvScalar(ts(0), ka, da, pt.x, pt.y, pt.z)
@@ -186,26 +188,20 @@ object Extrinsic {
             ju(i) = ((ui - pt.u) - ru) / eps; jv(i) = ((vi - pt.v) - rv) / eps
             i += 1
           }
-          ne(0) += ru * ru + rv * rv
-          var idx = 1
+          rss += ru * ru + rv * rv
           var a = 0
           while (a < 6) {
             var b = a
             while (b < 6) {
-              ne(idx) += ju(a) * ju(b) + jv(a) * jv(b)
-              idx += 1
+              jtj(a)(b) += ju(a) * ju(b) + jv(a) * jv(b)
               b += 1
             }
-            ne(22 + a) += ju(a) * ru + jv(a) * rv
+            jtr(a) += ju(a) * ru + jv(a) * rv
             a += 1
           }
         }
-        val jtj = Array.ofDim[Double](6, 6)
-        var idx = 1
-        for (i <- 0 until 6; j <- i until 6) {
-          jtj(i)(j) = ne(idx); jtj(j)(i) = jtj(i)(j); idx += 1
-        }
-        (jtj, Array.tabulate(6)(i => ne(idx + i)), ne(0))
+        for (a <- 0 until 6; b <- 0 until a) jtj(a)(b) = jtj(b)(a)
+        (jtj, jtr, rss)
       },
       p => {
         val t = paramsToT(p.toSeq).toArray

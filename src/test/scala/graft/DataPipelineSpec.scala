@@ -1,11 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.pipeline.DataPipeline
@@ -14,39 +9,6 @@ import graft.pipeline.DataPipeline
   * memoization (data_pipeline.py:10-56 guard chain).
   */
 class DataPipelineSpec extends SparkSpec {
-
-  /** Run `body`, returning its value and the call-site frames of every
-    * Spark job it started, one Seq of stack lines per job.
-    */
-  private def withJobFrames[A](body: => A): (A, Seq[Seq[String]]) = {
-    val jobs = new ConcurrentLinkedQueue[(String, Seq[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tag = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse("")
-        jobs.add((tag, e.stageInfos.flatMap(_.details.split("\n").map(_.trim))))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.phase", "body")
-      val a = body
-      // the listener bus is asynchronous but ordered: once this job's
-      // start has arrived, every job of the body has too
-      sc.setLocalProperty("graft.test.phase", "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.asScala.exists(_._1 == "sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == "sentinel"),
-        "listener never saw the sentinel job")
-      (a, jobs.asScala.toSeq.filter(_._1 == "body").map(_._2))
-    } finally {
-      sc.setLocalProperty("graft.test.phase", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("full DAG materializes all stages and resumes without recompute") {
     val stateDir = Files.createTempDirectory("graft-dag").toString

@@ -56,17 +56,18 @@ class DeclaredQueriesSpec extends SparkSpec {
   test("storage returns to zero after a full declared-query sweep") {
     // The leak class the harness must not have: query closures that cache
     // (t8's shingle DF) or persist (w2/w9's sorted RDD) cannot release
-    // after the caller's action, so Verify/Bench call Caches.releaseAll
-    // between queries. This RUNS every declared query (real actions, so
-    // caches actually materialize) with the same release discipline and
+    // after the caller's action, so Verify/Bench walk the queries through
+    // SparkEntry.sweep, which calls Caches.releaseAll after each. This
+    // RUNS every declared query through that same sweep, with Bench's
+    // timed action (real actions, so caches actually materialize), and
     // asserts the block manager ends empty — a new query that pins
     // storage with no release path fails here, not at an sf10 scale point.
     val dir = sf("sf0.001")
     graft.expr.GraftFunctions.register(spark)
-    SparkEntry.allDefs.foreach { q =>
-      q.fn(spark, dir).count()
-      graft.ops.Caches.releaseAll(spark)
-    }
+    val failed = SparkEntry.sweep(spark, "test", skip = Set.empty) { q =>
+      Bench.runFull(q.fn(spark, dir))
+    }.collect { case (name, Left(e)) => s"$name: $e" }
+    assert(failed.isEmpty, s"\n${failed.mkString("\n")}")
     assert(graft.ops.Caches.storageEmpty(spark),
       "persisted RDDs or cached DataFrames survived releaseAll: " +
         spark.sparkContext.getPersistentRDDs.keys.mkString(","))

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.ops.Geometry
@@ -159,39 +154,13 @@ class ExtrinsicSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-extrinsic").toString
     corners.repartition(3).write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
-    val sites = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tag = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse("")
-        val frame = e.stageInfos.headOption.toSeq
-          .flatMap(_.details.split("\n").map(_.trim))
-          .find(_.startsWith("graft.")).getOrElse("")
-        sites.add((tag, frame))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.phase", "extrinsic")
+    val (_, frames) = withJobFrames {
       val p = Extrinsic.points(stored)
       val init = Extrinsic.initPnp(p, arr("k"))
       val (best, _) = Extrinsic.refine(p, arr("k"), arr("dist"), init, maxIter = 2)
       Extrinsic.reprojectionStats(p, arr("k"), arr("dist"), Extrinsic.paramsToT(best))
-      // the listener bus is asynchronous but ordered: once this job's
-      // start has arrived, every extrinsic job's start has too
-      sc.setLocalProperty("graft.test.phase", "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!sites.asScala.exists(_._1 == "sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-    } finally {
-      sc.setLocalProperty("graft.test.phase", null)
-      sc.removeSparkListener(listener)
     }
-    val all = sites.asScala.toSeq
-    assert(all.exists(_._1 == "sentinel"), "listener never saw the sentinel job")
-    val ext = all.filter(_._1 == "extrinsic").map(_._2)
+    val ext = frames.map(_.find(_.startsWith("graft.")).getOrElse(""))
     assert(ext.length == 1, s"extrinsic jobs: $ext")
     assert(ext.head.startsWith("graft.pipeline.Extrinsic"),
       s"extrinsic job attributed to ${ext.head}")

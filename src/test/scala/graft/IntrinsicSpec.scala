@@ -1,11 +1,6 @@
 package graft
 
 import java.lang.Double.doubleToLongBits
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.ops.Geometry
 import graft.pipeline.{Extrinsic, Intrinsic, Lm}
@@ -165,33 +160,8 @@ class IntrinsicSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-intrinsic").toString
     syntheticCorners.repartition(3).write.mode("overwrite").parquet(dir)
     val corners = spark.read.parquet(dir)
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.test.phase"))).getOrElse(""))
-        ()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.phase", "calibrate")
-      Intrinsic.calibrate(corners, maxIter = 2)
-      // the listener bus is asynchronous but ordered: once this job's
-      // start has arrived, every calibrate job's start has too
-      sc.setLocalProperty("graft.test.phase", "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.asScala.exists(_ == "sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-    } finally {
-      sc.setLocalProperty("graft.test.phase", null)
-      sc.removeSparkListener(listener)
-    }
-    val all = jobs.asScala.toSeq
-    assert(all.contains("sentinel"), "listener never saw the sentinel job")
-    assert(all.count(_ == "calibrate") == 1, s"calibrate jobs: $all")
+    val (_, jobs) = withJobFrames(Intrinsic.calibrate(corners, maxIter = 2))
+    assert(jobs.length == 1, s"calibrate jobs: ${jobs.map(_.mkString("\n"))}")
   }
 
   test("a corner with a null u fails the calibration") {
