@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** Sink operators (SURVEY.md §2.1 S5-S11). The reference persists one
   * pickle + npz sidecars and writes renamed/annotated files; here every
@@ -23,15 +24,28 @@ object Sinks {
 
   /** S6: matrix table — the npz equivalent (camera_calib.py:124-128,
     * extrinsic_calibration.py:381-387): named row-major matrices as a
-    * 1-row table of array columns, persisted by saveTable or a DataPipeline stage.
+    * 1-row table of array columns in name order, persisted by saveTable
+    * or a DataPipeline stage (which writes [[matrixRow]] under
+    * [[matrixSchema]]).
     */
   def matrixTable(spark: SparkSession, matrices: Map[String, Seq[Double]])
       : DataFrame = {
-    val cols = matrices.toSeq.sortBy(_._1).map { case (n, m) =>
-      array(m.map(lit): _*).as(n)
-    }
-    spark.range(1).select(cols: _*)
+    val schema = matrixSchema(matrices.keys.toSeq)
+    spark.createDataFrame(java.util.List.of(matrixRow(schema, matrices)), schema)
   }
+
+  /** The matrix table's schema: one non-null array<double> per name, in
+    * name order.
+    */
+  def matrixSchema(names: Seq[String]): StructType =
+    StructType(names.sorted.map(n =>
+      StructField(n, ArrayType(DoubleType, containsNull = false), nullable = false)))
+
+  /** The matrix table's one row under `schema`; a name `matrices` lacks
+    * fails.
+    */
+  def matrixRow(schema: StructType, matrices: Map[String, Seq[Double]]): Row =
+    Row.fromSeq(schema.fieldNames.toSeq.map(matrices))
 
   /** S11: rename-key projection sink (file_rename_sort.py:7-18): the
     * "rename" is a projection computing the new key `{i div 5}_{i mod 5}`

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Geometry
 
@@ -16,13 +16,15 @@ import graft.ops.Geometry
   *      (X5 / A2 / A1), golden-matched against camera_extrinsic.npz
   *
   * One collect, then the driver: `points` reads the corner table with ONE
-  * `collect` and sorts it by (ord, pose_id, corner_idx) once; B-D run on
-  * that point array, as the reference runs solvePnP and least_squares in
-  * one process (extrinsic_calibration.py:54-79, 154-161). The collect is
-  * bounded by the pose grid, not by the corpus: at most 3,120 poses x 4
-  * corners, since matched_corners inner-joins the detections onto the
-  * constant world grid. Every sum runs in that one order, so the results
-  * do not depend on how the input is partitioned.
+  * `collect` and `pointsOf` sorts it by (ord, pose_id, corner_idx) once;
+  * B-D run on that point array, as the reference runs solvePnP and
+  * least_squares in one process (extrinsic_calibration.py:54-79,
+  * 154-161). DataPipeline hands over the `pointsOf` array of the
+  * matched corners it has just built, so a cold DAG runs no job here. The
+  * collect is bounded by the pose grid, not by the corpus: at most 3,120
+  * poses x 4 corners, since matched_corners inner-joins the detections
+  * onto the constant world grid. Every sum runs in that one order, so the
+  * results do not depend on how the input is partitioned.
   *
   * All per-point math is the scalar kernel Geometry.projectCvScalar (the
   * bit-identical twin of Geometry.rigidTransform + projectPointCvStaged).
@@ -42,21 +44,28 @@ object Extrinsic {
   }
 
   /** The one Spark job of the extrinsic solve: every corner of `corners`
-    * (pose_id, ord, corner_idx, u, v, x, y, z) to the driver, sorted by
-    * (ord, pose_id, corner_idx). Rows with a null among u, v, x, y, z are
-    * dropped: they have no residual. A null key fails the solve.
+    * (pose_id, ord, corner_idx, u, v, x, y, z) to the driver, cast as
+    * [[pointsOf]] reads them.
     */
-  def points(corners: DataFrame): Array[Point] = {
-    val rows = corners.select(col("pose_id").cast("string"),
+  def points(corners: DataFrame): Array[Point] =
+    pointsOf(corners.select(col("pose_id").cast("string"),
         col("ord").cast("long"), col("corner_idx").cast("long"),
         col("u").cast("double"), col("v").cast("double"),
         col("x").cast("double"), col("y").cast("double"),
         col("z").cast("double"))
-      .na.drop(Seq("u", "v", "x", "y", "z"))
-      .collect()
-    rows.find(_.anyNull).foreach(r =>
+      .collect())
+
+  /** Rows of (pose_id string, ord long, corner_idx long, u, v, x, y, z
+    * double) as points sorted by (ord, pose_id, corner_idx). Rows with a
+    * null or NaN among u, v, x, y, z are dropped (as `na.drop` drops
+    * them): they have no residual. A null key fails the solve.
+    */
+  def pointsOf(rows: Array[Row]): Array[Point] = {
+    val kept = rows.filterNot(r =>
+      (3 to 7).exists(i => r.isNullAt(i) || r.getDouble(i).isNaN))
+    kept.find(_.anyNull).foreach(r =>
       throw new IllegalArgumentException(s"extrinsic: corner with a null key: $r"))
-    rows.map(r => Point(r.getString(0), r.getLong(1), r.getLong(2),
+    kept.map(r => Point(r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
         r.getDouble(7)))
       .sortBy(p => (p.ord, p.poseId, p.cornerIdx))

@@ -1,22 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Geometry
-
-/** The reference's world-coordinate stage as one declarative Spark plan
+/** The reference's pose grid and world-coordinate stage
   * (point3d_transformation.py:65-171):
   *
-  *   euler^3 cross join (a,b,c major order) x serpentine 5x5 grid
+  *   euler^3 (a,b,c major order) x serpentine 5x5 grid
   *   -> 3,125 TOOL-in-BASE transforms (odd rotation index walks the grid
-  *      backwards), anti-join the 5 missing captures, compacted
-  *      positional index, then the 4 sample corners through T.
+  *      backwards), drop the 5 missing captures, compacted positional
+  *      index, then the 4 sample corners through T.
   *
-  * Everything is literals + cross joins + closed-form trig expressions —
-  * Catalyst constant-folds the tiny dimension tables and the whole plan
-  * is codegen'd; at scale the only data-sized operation is the final
-  * per-pose transform.
+  * `poses` and `serpentineGrid` are the grid as Spark plans (literals +
+  * cross joins; the g1_pose_grid query). The world stage is a constant
+  * table from the scalar kernel [[poseCorners]], built once on the driver:
+  * 12,480 rows need no distributed plan.
   *
   * NOTE the euler convention: scipy's R.from_euler('zyx', ...) with a
   * LOWERCASE seq is EXTRINSIC — R = Rx(c) @ Ry(b) @ Rz(a) — not the
@@ -31,21 +29,6 @@ object PoseGrid {
   /** TOOL-frame sample corners, TL,TR,BR,BL (point3d_transformation.py:139). */
   val CornerPts: Seq[(Double, Double, Double)] =
     Seq((90, 90, 0), (-90, 90, 0), (-90, -90, 0), (90, -90, 0))
-
-  /** scipy from_euler('zyx', [a,b,c], degrees=True) twin:
-    * R = Rx(c) @ Ry(b) @ Rz(a) (extrinsic z, then y, then x).
-    */
-  def eulerZyxExtrinsic(aDeg: Column, bDeg: Column, cDeg: Column)
-      : Geometry.Mat3 = {
-    val (ca, sa) = (cos(radians(aDeg)), sin(radians(aDeg)))
-    val (cb, sb) = (cos(radians(bDeg)), sin(radians(bDeg)))
-    val (cc, sc) = (cos(radians(cDeg)), sin(radians(cDeg)))
-    // Rx(c) Ry(b) Rz(a), rows expanded
-    Seq(
-      Seq(cb * ca, -cb * sa, sb),
-      Seq(sc * sb * ca + cc * sa, -sc * sb * sa + cc * ca, -sc * cb),
-      Seq(-cc * sb * ca + sc * sa, cc * sb * sa + sc * ca, cc * cb))
-  }
 
   /** The 25-point serpentine grid in program order: k = row*5 + pos,
     * x = (row-2)*50, y = ((row odd ? 4-pos : pos) - 2)*50
@@ -81,55 +64,40 @@ object PoseGrid {
         col("a"), col("b"), col("c"), col("gx"), col("gy"))
   }
 
-  /** World coordinates of the 4 corners for every usable pose, with the
-    * COMPACTED index the reference's dict keys address
-    * (anti-join missing, then row_number — SURVEY §7.4 J4 subtlety).
-    * Output: (idx, corner_idx, wx, wy, wz).
+  /** World (x, y, z) of the 4 sample corners at pose `poseIdx` (0-3124),
+    * in corner order: the euler angles and serpentine grid point of the
+    * pose in closed form, R = Rx(c) Ry(b) Rz(a) with the rows expanded,
+    * then R p + (gx, gy, 0). Every product and sum runs in the order of
+    * the Column forms it replaced, so the values are bit-identical to
+    * them (PoseGridSpec).
     */
-  def worldCorners(spark: SparkSession): DataFrame = {
-    val usable = graft.ops.Joins.withCompactedIndex(
-      graft.ops.Joins.dropKeys(poses(spark), "pose_idx", MissingPoses),
-      "pose_idx")
-      .withColumnRenamed("c", "ec") // avoid collision with the corner struct
-    val corners = CornerPts.zipWithIndex.map { case ((x, y, z), i) =>
-      struct(lit(i).as("ci"), lit(x).as("px"), lit(y).as("py"),
-        lit(z).as("pz"))
-    }
-    val exploded = usable
-      .withColumn("corner", explode(array(corners: _*)))
-      .select(col("idx"), col("corner.ci").as("corner_idx"),
-        col("a"), col("b"), col("ec"), col("gx"), col("gy"),
-        col("corner.px").as("px"), col("corner.py").as("py"),
-        col("corner.pz").as("pz"))
-    val m = eulerZyxExtrinsic(col("a"), col("b"), col("ec"))
-    def rowDot(i: Int): Column =
-      m(i)(0) * col("px") + m(i)(1) * col("py") + m(i)(2) * col("pz")
-    exploded.select(col("idx"), col("corner_idx"),
-      (rowDot(0) + col("gx")).as("wx"),
-      (rowDot(1) + col("gy")).as("wy"),
-      (rowDot(2) + lit(0.0)).as("wz"))
+  def poseCorners(poseIdx: Int): Array[Array[Double]] = {
+    val (ei, k) = (poseIdx / 25, poseIdx % 25)
+    def deg(i: Int) = math.toRadians(EulerValues(i).toDouble)
+    val (a, b, c) = (deg(ei / 25), deg(ei / 5 % 5), deg(ei % 5))
+    val (ca, sa) = (math.cos(a), math.sin(a))
+    val (cb, sb) = (math.cos(b), math.sin(b))
+    val (cc, sc) = (math.cos(c), math.sin(c))
+    val m = Array(
+      Array(cb * ca, -cb * sa, sb),
+      Array(sc * sb * ca + cc * sa, -sc * sb * sa + cc * ca, -sc * cb),
+      Array(-cc * sb * ca + sc * sa, cc * sb * sa + sc * ca, cc * cb))
+    // odd rotation index: the grid walked backwards
+    val g = if (ei % 2 == 0) k else 24 - k
+    val (row, pos) = (g / 5, g % 5)
+    val t = Array((row - 2) * 50.0,
+      ((if (row % 2 == 1) 4 - pos else pos) - 2) * 50.0, 0.0)
+    CornerPts.map { case (px, py, pz) =>
+      Array.tabulate(3)(i => m(i)(0) * px + m(i)(1) * py + m(i)(2) * pz + t(i))
+    }.toArray
   }
 
-  /** Warp-matrix stage (act_img.py:202 via image_cut_warp.py:19-29):
-    * per pose, the homography mapping the detected TL,TR,BR,BL pixel quad
-    * onto the (outSize-1)-square — cv2.getPerspectiveTransform semantics,
-    * solved by the native SolveHomography expression per group.
-    * Input: long-form pixel corners (pose_id, corner_idx, u, v).
-    * Output: (pose_id, h array<double>[9]).
+  /** World corners of every usable pose, indexed by the COMPACTED index
+    * the reference's dict keys address: the poses in pose_idx order less
+    * the missing ones, so idx = pose_idx - #missing below it (SURVEY §7.4
+    * J4 subtlety).
     */
-  def warpMatrices(pixelCorners: DataFrame, outSize: Int = 800): DataFrame = {
-    val s = outSize - 1.0
-    val dst = array(
-      array(lit(0.0), lit(0.0)), array(lit(s), lit(0.0)),
-      array(lit(s), lit(s)), array(lit(0.0), lit(s)))
-    graft.expr.GraftFunctions.register(pixelCorners.sparkSession)
-    pixelCorners
-      .groupBy("pose_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("corner_idx"),
-          array(col("u").cast("double"), col("v").cast("double")).as("p")))),
-        e => e.getField("p")).as("src"))
-      .select(col("pose_id"),
-        call_function("solve_homography", col("src"), dst).as("h"))
-  }
+  lazy val worldCorners: IndexedSeq[Array[Array[Double]]] =
+    (0 until 3125).filterNot(p => MissingPoses.contains(p.toLong))
+      .map(poseCorners)
 }

@@ -1,9 +1,17 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
 import graft.ops.Multimodal
-import graft.pipeline.DataPipeline
+import graft.pipeline.{DataPipeline, Extrinsic}
 
 /** End-to-end calibration DAG over the reference fixtures with stage
   * memoization (data_pipeline.py:10-56 guard chain).
@@ -24,10 +32,12 @@ class DataPipelineSpec extends SparkSpec {
       DataPipeline.run(spark, pix, stateDir, arr("k"), arr("dist"), maxIter = 12)
     }
     val coldSecs = (System.nanoTime() - t0) / 1e9
-    // the extrinsic solve is one collect; the rest runs on the driver
-    val extJobs = coldFrames.filter(_.exists(_.startsWith("graft.pipeline.Extrinsic")))
-    assert(extJobs.length == 1,
-      s"Extrinsic jobs:\n${extJobs.map(_.mkString("\n")).mkString("\n--\n")}")
+    // one collect of the pixel corners, then one write per stage; the
+    // extrinsic solve takes the points the match built, so no job is
+    // called from Extrinsic
+    assert(coldFrames.length == 5, s"cold jobs:\n${show(coldFrames)}")
+    assert(!coldFrames.exists(_.exists(_.startsWith("graft.pipeline.Extrinsic"))),
+      s"cold jobs:\n${show(coldFrames)}")
 
     assert(out("warp_matrices").count() == 3108)
     assert(out("matched_corners").count() == 3108 * 4)
@@ -58,13 +68,12 @@ class DataPipelineSpec extends SparkSpec {
       .getAs[scala.collection.Seq[Double]]("stats") == stats)
     assert(warmSecs < coldSecs / 3,
       s"resume ($warmSecs s) should skip the optimizer (cold $coldSecs s)")
-    assert(frames.nonEmpty, "the resume ran no job at all")
-    frames.foreach { f =>
-      assert(!f.exists(l => l.startsWith("graft.pipeline.Intrinsic") ||
-        l.startsWith("graft.pipeline.Extrinsic")),
-        s"resume ran a calibration job:\n${f.mkString("\n")}")
-    }
+    // every stage is read back under its stored schema: no job at all
+    assert(frames.isEmpty, s"resume jobs:\n${show(frames)}")
   }
+
+  private def show(frames: Seq[Seq[String]]): String =
+    frames.map(_.mkString("\n")).mkString("\n--\n")
 
   private val pixFixture = "src/test/resources/fixtures/pixel_corners.parquet"
   private lazy val (camK, camDist) = {
@@ -126,10 +135,111 @@ class DataPipelineSpec extends SparkSpec {
     assert(out("matched_corners").count() == kept.count())
   }
 
+  /** A table's rows as sorted strings, every double as its raw bits. */
+  private def rowBits(rows: Seq[Row]): Seq[String] = {
+    def cell(v: Any): String = v match {
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))
+      case xs: scala.collection.Seq[_] => xs.map(cell).mkString("[", ",", "]")
+      case x => String.valueOf(x)
+    }
+    rows.map(_.toSeq.map(cell).mkString("|")).sorted
+  }
+  private def rowBits(df: DataFrame): Seq[String] = rowBits(df.collect().toSeq)
+
+  /** The schema Spark wrote into each part file of a stage, nullability
+    * included (a read makes every field nullable).
+    */
+  private def writtenSchemas(dir: String): Seq[StructType] =
+    new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try DataType.fromJson(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+      finally r.close()
+    }.toSeq.distinct
+
+  private def tmpDir(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  test("warp, world and match stages are bit-identical to their Spark plans") {
+    val stateDir = tmpDir("graft-dag-bits")
+    val pix = spark.read.parquet(pixFixture)
+    val out = DataPipeline.run(spark, pix, stateDir, camK, camDist, maxIter = 1)
+    val world = PipelineRefs.worldCorners(spark)
+    Seq("warp_matrices" -> PipelineRefs.warpMatrices(pix),
+      "world_corners" -> world,
+      "matched_corners" -> PipelineRefs.matchedCorners(pix, world))
+      .foreach { case (name, ref) =>
+        // read back as a schema-inferring read sees it
+        assert(out(name).schema ==
+          spark.read.parquet(s"$stateDir/$name.parquet").schema, name)
+        assert(writtenSchemas(s"$stateDir/$name.parquet") == Seq(ref.schema), name)
+        assert(rowBits(out(name)) == rowBits(ref), name)
+      }
+    assert(out("matched_corners").count() == 3108 * 4)
+  }
+
+  test("the stage tables are bit-equal on 1 and 7 partitions and shuffled pixel rows") {
+    val pix = spark.read.parquet(pixFixture)
+    def tables(df: DataFrame): Seq[Seq[String]] = {
+      val out = DataPipeline.run(spark, df, tmpDir("graft-dag-parts"), camK,
+        camDist, maxIter = 2)
+      Seq("warp_matrices", "world_corners", "matched_corners", "extrinsic")
+        .map(n => rowBits(out(n)))
+    }
+    val want = tables(pix.repartition(1))
+    val p7 = pix.repartition(7)
+    assert(p7.rdd.getNumPartitions == 7)
+    assert(tables(p7) == want, "7 partitions differ from 1")
+    val shuffled = pix.orderBy(xxhash64(col("pose_id"), col("corner_idx")))
+    assert(tables(shuffled) == want, "a shuffled row order differs from 1 partition")
+  }
+
+  test("a null pixel coordinate stays in matched_corners and out of the solve") {
+    val pix = spark.read.parquet(pixFixture)
+    val first = pix.orderBy("pose_id", "corner_idx").limit(1).collect()(0)
+    val withNull = pix.withColumn("u",
+      when(col("pose_id") === first.getAs[String]("pose_id") &&
+        col("corner_idx") === first.getAs[Long]("corner_idx"), lit(null))
+        .otherwise(col("u")))
+    val (rows, pts) = new DataPipeline.PixelCorners(withNull).matched
+    val ref = PipelineRefs.matchedCorners(withNull, PipelineRefs.worldCorners(spark))
+    assert(rowBits(rows) == rowBits(ref))
+    assert(rows.count(_.isNullAt(3)) == 1)
+    assert(pts.length == rows.length - 1)
+    assert(pts.toSeq == Extrinsic.points(ref).toSeq)
+  }
+
+  test("a stage stored without its schema, or with another, is rebuilt") {
+    val stateDir = tmpDir("graft-dag-schema")
+    val pix = spark.read.parquet(pixFixture)
+    def run() = DataPipeline.run(spark, pix, stateDir, camK, camDist, maxIter = 1)
+    def parts(stage: String) = new File(s"$stateDir/$stage.parquet").listFiles()
+      .map(_.getName).filter(_.startsWith("part-")).toSet
+    def schemaFile(stage: String) = new File(s"$stateDir/$stage.parquet/_graft_schema")
+    val stages = Seq("warp_matrices", "world_corners", "matched_corners", "extrinsic")
+    val first = run()
+    val want = stages.map(n => rowBits(first(n)))
+    val before = stages.map(n => n -> parts(n)).toMap
+    val schemas = stages.map(n => n -> Files.readString(schemaFile(n).toPath)).toMap
+
+    schemaFile("world_corners").delete()
+    val noSchema = DataType.fromJson(schemas("matched_corners")).asInstanceOf[StructType]
+    Files.writeString(schemaFile("matched_corners").toPath,
+      StructType(noSchema.fields.dropRight(1)).json)
+    val again = run()
+    Seq("world_corners", "matched_corners").foreach { n =>
+      assert(parts(n).intersect(before(n)).isEmpty, s"$n was not rebuilt")
+      assert(Files.readString(schemaFile(n).toPath) == schemas(n), n)
+    }
+    Seq("warp_matrices", "extrinsic").foreach(n =>
+      assert(parts(n) == before(n), s"$n was rebuilt"))
+    assert(stages.map(n => rowBits(again(n))) == want)
+  }
+
   test("full DAG computes intrinsics as its first stage (data_pipeline.py:19-24)") {
     import spark.implicits._
     import graft.ops.Geometry
-    import graft.pipeline.{Extrinsic, Intrinsic}
+    import graft.pipeline.Intrinsic
     val stateDir = Files.createTempDirectory("graft-dag-calib").toString
     val pix = spark.read
       .parquet("src/test/resources/fixtures/pixel_corners.parquet")
@@ -150,15 +260,21 @@ class DataPipelineSpec extends SparkSpec {
     val dist8 = Array(0.0558, 0.5418, -0.0045, -0.0110, 0.0, 0.0, 0.0, -0.2606)
     val kDetect = Array(goldK(0) * 0.5, 0.0, goldK(2) * 0.5,
       0.0, goldK(4) * 0.5, goldK(5) * 0.5, 0.0, 0.0, 1.0)
-    val calib = views.zipWithIndex.flatMap { case ((rv, tv), i) =>
+    val calibDir = s"${tmpDir("graft-calib")}/calib_corners.parquet"
+    views.zipWithIndex.flatMap { case ((rv, tv), i) =>
       val t = Extrinsic.paramsToT(rv ++ tv).toArray
       objp.map { case (ci, xw, yw) =>
         val (u, v) = Geometry.projectCvScalar(t, kDetect, dist8, xw, yw, 0.0)
         (f"v$i%02d", ci, u, v, xw, yw)
       }
-    }.toDF("view_id", "corner_idx", "u", "v", "x", "y")
+    }.toDF("view_id", "corner_idx", "u", "v", "x", "y").write.parquet(calibDir)
+    // read from files, as a capture's corners are: their collect is a job
+    val calib = spark.read.parquet(calibDir)
 
-    val out = DataPipeline.run(spark, pix, calib, stateDir, maxIter = 2)
+    // the intrinsic collect, the pixel collect and 5 stage writes
+    val (out, coldFrames) = withJobFrames(
+      DataPipeline.run(spark, pix, calib, stateDir, maxIter = 2))
+    assert(coldFrames.length == 7, s"cold jobs:\n${show(coldFrames)}")
     assert(out.contains("camera_matrix"))
     val cam = out("camera_matrix").collect()(0)
     val k = cam.getAs[scala.collection.Seq[Double]]("k")
@@ -167,8 +283,13 @@ class DataPipelineSpec extends SparkSpec {
     assert(out("matched_corners").count() == 3108 * 4)
     // memoized: second run must not recompute the calibration
     val t0 = System.nanoTime()
-    val again = DataPipeline.run(spark, pix, calib, stateDir, maxIter = 2)
+    val (again, frames) = withJobFrames(
+      DataPipeline.run(spark, pix, calib, stateDir, maxIter = 2))
     assert((System.nanoTime() - t0) / 1e9 < 10.0, "resume should skip stages")
+    // one job: the stored camera matrix to the driver
+    assert(frames.length == 1 &&
+      frames.head.exists(_.startsWith("graft.pipeline.DataPipeline")),
+      s"resume jobs:\n${show(frames)}")
     assert(again("camera_matrix").collect()(0)
       .getAs[scala.collection.Seq[Double]]("k") == k)
   }

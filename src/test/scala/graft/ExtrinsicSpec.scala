@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import graft.ops.Geometry
 import graft.pipeline.Extrinsic
 
@@ -9,7 +10,7 @@ import graft.pipeline.Extrinsic
   * fixtures from the reference's own output (data.pkl / camera_extrinsic
   * .npz) must reproduce reprojection_stats through OUR evaluation.
   */
-class ExtrinsicSpec extends SparkSpec {
+class ExtrinsicSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val fixtures = "src/test/resources/fixtures"
   private lazy val cam: Row =
@@ -18,6 +19,11 @@ class ExtrinsicSpec extends SparkSpec {
     cam.getAs[scala.collection.Seq[Double]](name).toSeq
   private lazy val corners = Extrinsic.loadCorners(spark, fixtures).cache()
   private lazy val pts = Extrinsic.points(corners)
+
+  // the session is shared: a suite that runs later may assert its storage
+  // is empty
+  override def afterAll(): Unit =
+    try corners.unpersist(blocking = true) finally super.afterAll()
 
   test("golden: stored extrinsic reproduces reprojection_stats to 1e-6") {
     // the npz stats were computed from rvec/tvec (cv2.projectPoints);
@@ -106,9 +112,11 @@ class ExtrinsicSpec extends SparkSpec {
   }
 
   test("a corner row with a null u leaves refine's parameters and cost unchanged") {
-    // a corner without a residual is dropped from the point array
+    // a corner without a residual (null or NaN) is dropped from the point
+    // array
     val withNull = corners.union(
-      corners.limit(1).withColumn("u", lit(null).cast("double")))
+      corners.limit(1).withColumn("u", lit(null).cast("double"))).union(
+      corners.limit(1).withColumn("v", lit(Double.NaN)))
     val got = Extrinsic.points(withNull)
     assert(got.toSeq == pts.toSeq)
     val want = Extrinsic.refine(pts, arr("k"), arr("dist"), perturbedStart, maxIter = 3)
