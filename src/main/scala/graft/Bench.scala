@@ -254,8 +254,8 @@ object Bench {
       "spark.ui.enabled" -> "false")
   }
 
-  /** The one SparkSession builder: Bench, Verify, StreamBench and the
-    * test suites all run on it, so the plans verified are the plans timed.
+  /** The one SparkSession builder: Bench, Verify and the test suites all
+    * run on it, so the plans verified are the plans timed.
     */
   def session(sfDir: String, cpus: Int): SparkSession = {
     val spark = sessionConf(sfDir, cpus)

@@ -1,9 +1,9 @@
 package graft
 
-/** The one JSON writer of the mains (Bench's two lines, StreamBench's
-  * line, Verify's oracle_sql.json and failures.json): values arrive as
-  * JSON text, so every caller keeps its own number formatting, and every
-  * string goes through [[str]].
+/** The one JSON writer of the mains (Bench's two lines, Verify's
+  * oracle_sql.json and failures.json): values arrive as JSON text, so
+  * every caller keeps its own number formatting, and every string goes
+  * through [[str]].
   */
 object Json {
 

@@ -15,8 +15,9 @@ import graft.ops.Geometry
   *
   * CodegenFallback is deliberate: the solve runs once per image group
   * (3,108 in the reference), never per pixel — eval cost is irrelevant,
-  * but as a native expression it avoids UDF SerDe, is null-safe, and is
-  * registrable in the SQL function registry (GraftFunctions).
+  * but as a native expression it avoids UDF SerDe, is null-safe (a null
+  * input, point or coordinate yields null), and is registrable in the
+  * SQL function registry (GraftFunctions).
   */
 case class SolveHomography(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -34,15 +35,20 @@ case class SolveHomography(left: Expression, right: Expression)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
+  // a null point or coordinate yields null even when both inputs are
+  // non-null, so the generated code must check the result
+  override def nullable: Boolean = true
+
   override def nullSafeEval(src: Any, dst: Any): Any = {
-    def pts(a: Any): Seq[(Double, Double)] = {
+    def pts(a: Any): Option[Seq[(Double, Double)]] = {
       val arr = a.asInstanceOf[ArrayData]
-      (0 until arr.numElements()).map { i =>
-        val p = arr.getArray(i)
-        (p.getDouble(0), p.getDouble(1))
-      }
+      val ps = (0 until arr.numElements())
+        .map(i => if (arr.isNullAt(i)) null else arr.getArray(i))
+      if (ps.exists(p => p == null || p.isNullAt(0) || p.isNullAt(1))) None
+      else Some(ps.map(p => (p.getDouble(0), p.getDouble(1))))
     }
-    new GenericArrayData(Geometry.solveHomography(pts(src), pts(dst)))
+    (for (s <- pts(src); d <- pts(dst))
+      yield new GenericArrayData(Geometry.solveHomography(s, d))).orNull
   }
 
   override def prettyName: String = "solve_homography"

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.io.File
-import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
@@ -14,10 +13,10 @@ import graft.ops.{Geometry, Memo, Sinks}
 /** The reference's orchestrated calibration DAG (data_pipeline.py:10-56)
   * as memoized stages — each guard (`if pixel_coords is None`) becomes a
   * [[Memo.onDisk]] table at `$stateDir/<name>.parquet`, reused only while
-  * its key (the stage's inputs and parameters) is unchanged and its
-  * stored schema (`_graft_schema`) is the one the stage writes. Parquet's
-  * `_SUCCESS` commit gives the save-on-interrupt durability
-  * (data_pipeline.py:62-72): a killed stage reruns next time.
+  * its key (the stage's inputs and parameters, and the schema the stage
+  * writes) is unchanged. Parquet's `_SUCCESS` commit gives the
+  * save-on-interrupt durability (data_pipeline.py:62-72): a killed stage
+  * reruns next time.
   *
   *   camera_matrix   <- Zhang intrinsics (Intrinsic.calibrate), the first
   *                      stage when chessboard views are given (S6)
@@ -35,7 +34,7 @@ import graft.ops.{Geometry, Memo, Sinks}
   * world corners from the constant [[PoseGrid.worldCorners]], and the
   * extrinsic solve from the points the match just built (one collect of
   * `matched_corners` when only the extrinsic is rebuilt). A stage is read
-  * back under its stored schema, so no read runs a Spark job: a cold run
+  * back under the schema in its key, so no read runs a Spark job: a cold run
   * with chessboard views runs 7 jobs (the intrinsic collect, the pixel
   * collect, 5 writes), a resume 1 (the camera matrix).
   */
@@ -82,10 +81,12 @@ object DataPipeline {
     lazy val pix = new PixelCorners(pixelCorners)
     val pixField = pixelCorners.schema.apply(_: String)
 
+    // h is nullable, as `solve_homography` is: the schema of the plan the
+    // stage replaced, though the driver warp never writes a null
     val warp = stage(spark, stateDir, "warp_matrices", pixKey,
       StructType(Seq(pixField("pose_id"),
-        StructField("h", ArrayType(DoubleType, containsNull = false),
-          nullable = false))))(pix.warp())
+        StructField("h", ArrayType(DoubleType, containsNull = false)))))(
+      pix.warp())
 
     // no input: the pose grid is fixed, so its key is a constant
     val world = stage(spark, stateDir, "world_corners", "constant",
@@ -129,21 +130,17 @@ object DataPipeline {
   private def xyz(prefix: String): Seq[StructField] =
     Seq("x", "y", "z").map(c => StructField(prefix + c, DoubleType))
 
-  /** Build stage `name` from `rows` unless it is stored under `key` with
+  /** Build stage `name` from `rows` unless it is stored under `key` and
     * `schema`; return its stored table, read under that schema, either
-    * way. The schema file lands before `_graft_key`, so a stage without
-    * it, or with another schema, is rebuilt.
+    * way. The schema is part of the stored key, so a stage written with
+    * another schema is rebuilt.
     */
   private def stage(spark: SparkSession, stateDir: String, name: String,
       key: String, schema: StructType)(rows: => Seq[Row]): DataFrame = {
     val dir = new File(s"$stateDir/$name.parquet")
-    val stored = new File(dir, "_graft_schema")
-    if (!stored.isFile || Files.readString(stored.toPath) != schema.json)
-      Memo.rmTree(dir)
-    Memo.onDisk(dir, key) {
+    Memo.onDisk(dir, Memo.key(key, schema.json)) {
       spark.createDataFrame(rows.asJava, schema)
         .write.mode("overwrite").parquet(dir.getPath)
-      Files.writeString(stored.toPath, schema.json)
     }
     spark.read.schema(schema).parquet(dir.getPath)
   }

@@ -8,9 +8,9 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
-import graft.ops.Multimodal
+import graft.ops.{Memo, Multimodal}
 import graft.pipeline.{DataPipeline, Extrinsic}
 
 /** End-to-end calibration DAG over the reference fixtures with stage
@@ -215,21 +215,27 @@ class DataPipelineSpec extends SparkSpec {
     def run() = DataPipeline.run(spark, pix, stateDir, camK, camDist, maxIter = 1)
     def parts(stage: String) = new File(s"$stateDir/$stage.parquet").listFiles()
       .map(_.getName).filter(_.startsWith("part-")).toSet
-    def schemaFile(stage: String) = new File(s"$stateDir/$stage.parquet/_graft_schema")
+    def keyFile(stage: String) = new File(s"$stateDir/$stage.parquet/_graft_key").toPath
     val stages = Seq("warp_matrices", "world_corners", "matched_corners", "extrinsic")
     val first = run()
     val want = stages.map(n => rowBits(first(n)))
     val before = stages.map(n => n -> parts(n)).toMap
-    val schemas = stages.map(n => n -> Files.readString(schemaFile(n).toPath)).toMap
+    val keys = stages.map(n => n -> Files.readString(keyFile(n))).toMap
+    // matched_corners is keyed by its input and the schema it writes
+    val matchedSchema = StructType(
+      Seq("pose_id", "ord", "corner_idx", "u", "v").map(pix.schema(_)) ++
+        Seq("x", "y", "z").map(StructField(_, DoubleType)))
+    assert(keys("matched_corners") == Memo.key(Memo.of(pix), matchedSchema.json))
 
-    schemaFile("world_corners").delete()
-    val noSchema = DataType.fromJson(schemas("matched_corners")).asInstanceOf[StructType]
-    Files.writeString(schemaFile("matched_corners").toPath,
-      StructType(noSchema.fields.dropRight(1)).json)
+    // world_corners under its key without the schema, matched_corners
+    // under its input with another schema
+    Files.writeString(keyFile("world_corners"), "constant")
+    Files.writeString(keyFile("matched_corners"),
+      Memo.key(Memo.of(pix), StructType(matchedSchema.fields.dropRight(1)).json))
     val again = run()
     Seq("world_corners", "matched_corners").foreach { n =>
       assert(parts(n).intersect(before(n)).isEmpty, s"$n was not rebuilt")
-      assert(Files.readString(schemaFile(n).toPath) == schemas(n), n)
+      assert(Files.readString(keyFile(n)) == keys(n), n)
     }
     Seq("warp_matrices", "extrinsic").foreach(n =>
       assert(parts(n) == before(n), s"$n was rebuilt"))

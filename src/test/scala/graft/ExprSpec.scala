@@ -153,6 +153,20 @@ class ExprSpec extends SparkSpec {
         "array(array(0d,0d), array(1d,0d), array(1d,1d), array(0d,1d)))")
       .collect()(0)
     assert(r.isNullAt(0))
+    // a null coordinate or a null point yields null on either side; as
+    // literals the optimizer folds the call, over `id` the generated code
+    // runs it and must read the result's null bit
+    val quad = "array(array(0d,0d), array(1d,0d), array(1d,1d), array(0d,1d))"
+    def nullCoord(x: String) =
+      s"array(array($x, CAST(NULL AS DOUBLE)), array(1d,0d), array(1d,1d), array(0d,1d))"
+    def nullPoint(x: String) =
+      s"array(array($x, 0d), CAST(NULL AS ARRAY<DOUBLE>), array(1d,1d), array(0d,1d))"
+    for (bad <- Seq(nullCoord _, nullPoint _); x <- Seq("0d", "CAST(id AS DOUBLE)");
+         call <- Seq(s"solve_homography(${bad(x)}, $quad)",
+           s"solve_homography($quad, ${bad(x)})")) {
+      val row = spark.range(1).selectExpr(call).collect()(0)
+      assert(row.isNullAt(0), s"$call gave ${row.get(0)}")
+    }
     val err = intercept[Exception] {
       spark.sql("SELECT solve_homography(array(array(0d,0d)))").collect()
     }

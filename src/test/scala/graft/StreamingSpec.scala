@@ -71,21 +71,32 @@ class StreamingSpec extends SparkSpec {
         .cast("int").as("slot"),
       col("path"), col("modificationTime").as("ts"))
       .as[FileEvent]
-    val q = Sessionize.completeGroups(events).writeStream
-      .format("memory").queryName("ingest")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      q.processAllAvailable()
-      val groups = spark.table("ingest").as[Sessionize.PoseGroup].collect()
-      val full = groups.filter(_.poseId == "0")
-      assert(full.length == 1 && full.head.complete && full.head.n == 5,
-        s"expected pose 0 complete, got ${groups.mkString(";")}")
-      assert(full.head.paths.map(_.split('/').last).sorted ==
-        (0 until 5).map(s => s"0_$s.JPG"))
-      // pose 1 (2 files) must still be held in state, not emitted
-      assert(!groups.exists(_.poseId == "1"))
-    } finally q.stop()
+    // the plain form, and the capture's composed form: the dedup runs
+    // inside the group-assembly operator, one stateful operator in all
+    def run(name: String, groups: Dataset[Sessionize.PoseGroup])
+        : (Seq[Sessionize.PoseGroup], Int) = {
+      val q = groups.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        q.processAllAvailable()
+        (spark.table(name).as[Sessionize.PoseGroup].collect().toSeq
+          .map(g => g.copy(paths = g.paths.sorted)).sortBy(_.poseId),
+          q.lastProgress.stateOperators.length)
+      } finally q.stop()
+    }
+    val (groups, _) = run("ingest", Sessionize.completeGroups(events))
+    val full = groups.filter(_.poseId == "0")
+    assert(full.length == 1 && full.head.complete && full.head.n == 5,
+      s"expected pose 0 complete, got ${groups.mkString(";")}")
+    assert(full.head.paths.map(_.split('/').last) ==
+      (0 until 5).map(s => s"0_$s.JPG"))
+    // pose 1 (2 files) must still be held in state, not emitted
+    assert(!groups.exists(_.poseId == "1"))
+
+    val (composed, stateOps) = run("ingest_composed", Sessionize.completeGroups(
+      Sessionize.dedupedEvents(events, withinSeconds = 60), setWatermark = false))
+    assert(composed == groups)
+    assert(stateOps == 1)
   }
 
   test("streaming dedup drops re-delivered events within the watermark") {
